@@ -13,6 +13,7 @@ this module too (added incrementally). Design rules for 100 TB:
 from __future__ import annotations
 
 import logging
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
@@ -33,82 +34,76 @@ SIMHASH_MAX_HAMMING = 3  # default near-dup budget (Manku et al. use 3 on 64 bit
 
 _LOG = logging.getLogger(__name__)
 
-# DataFrames persisted by operators in this module, so long-lived sessions
-# (bench loops, driver sweeps) can release executor memory between queries.
-# The persists are load-bearing — each cached plan is consumed by both
-# sides of a self-join — but the cache's lifetime is one query, not the
-# session, so callers running many queries call release_caches() after
-# each action completes.
-_LIVE_CACHES: list[DataFrame] = []
+
+class _Scopes(threading.local):
+    """Per-thread stack of open cache scopes, innermost last; each scope
+    is the list of frames `_persist` registered while innermost. The
+    persists are load-bearing — each cached plan is consumed by both
+    sides of a self-join — but a cache lives for one query, not the
+    session."""
+
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
 
 
-def _persist(df: DataFrame) -> DataFrame:
-    _LIVE_CACHES.append(df.persist())
-    return df
+_SCOPES = _Scopes()
 
 
-def _release_one(df: DataFrame) -> None:
-    """Unpersist ONE frame created via _persist and drop it from the
-    registry — for bounded-iteration loops where round i's frame is
-    dead the moment round i+1's cache has materialized (VERDICT r11
-    item 4: at 20+ iterations the dead frames are pure executor-memory
-    pressure). Callers must only release a frame whose successor has
-    actually materialized (an action ran), or the lineage recompute
-    cascades right back through it."""
-    try:
-        _LIVE_CACHES.remove(df)
-    except ValueError:
-        pass  # already released (or never registered) — idempotent
+def _unpersist(df: DataFrame, where: str) -> None:
     try:
         df.unpersist()
     except Exception:
-        _LOG.warning("unpersist failed during _release_one",
-                     exc_info=True)
+        # best-effort (the session may already be stopped), but never
+        # silent: a live-session unpersist failure is a leak
+        _LOG.warning("unpersist failed during %s", where, exc_info=True)
 
 
-def release_caches() -> None:
-    """Unpersist every cache created by this module's operators. Safe to
-    call at any time; blocking=False so it never stalls the caller.
+def _persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it in the calling thread's innermost
+    open `cache_scope()`, which unpersists it on exit. With no scope
+    open nothing is registered: the caller owns the cache."""
+    if _SCOPES.stack:
+        _SCOPES.stack[-1].append(df)
+    return df.persist()
 
-    GLOBAL teardown: it assumes one query runs at a time on the driver
-    (true for the bench/driver/test harnesses here). Callers interleaving
-    queries on one SparkSession should wrap each query in `cache_scope()`
-    instead, which releases only the caches that query created."""
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist()
-        except Exception:
-            # best-effort teardown (session may already be stopped), but
-            # never silent: a live-session unpersist failure is a leak
-            _LOG.warning("unpersist failed during release_caches",
-                         exc_info=True)
+
+def _release_one(df: DataFrame) -> None:
+    """Unpersist ONE frame created via _persist and drop it from
+    whichever of this thread's scopes holds it — for bounded-iteration
+    loops where round i's frame is dead the moment round i+1's cache
+    has materialized (VERDICT r11 item 4: at 20+ iterations the dead
+    frames are pure executor-memory pressure). Callers must only
+    release a frame whose successor has actually materialized (an
+    action ran), or the lineage recompute cascades right back through
+    it."""
+    for owned in _SCOPES.stack:
+        if df in owned:
+            owned.remove(df)
+            break
+    _unpersist(df, "_release_one")
 
 
 @contextmanager
 def cache_scope():
-    """Scoped cache ownership: releases exactly the caches created inside
-    the block, leaving caches owned by other in-flight queries alone.
+    """Own the caches persisted inside the block: yields the list of
+    frames `_persist` registers in it (on this thread, outside any
+    inner scope) and unpersists exactly those on exit, whatever other
+    threads or scopes do. Scopes nest per thread; as a decorator,
+    ``@cache_scope()`` gives each call its own scope.
 
         with cache_scope():
             ngram_jaccard_pairs(df).write...   # caches freed on exit
-
-    Scopes nest (inner scopes release their own tail first). Driver-side
-    registries are not thread-safe; concurrent queries must come from
-    separate driver threads only if each wraps its own scope around a
-    GIL-serialized registry — the practical guidance is one scope per
-    query on the main driver thread."""
-    mark = len(_LIVE_CACHES)
+    """
+    owned: list[DataFrame] = []
+    stack = _SCOPES.stack
+    stack.append(owned)
     try:
-        yield
+        yield owned
     finally:
-        tail = _LIVE_CACHES[mark:]
-        del _LIVE_CACHES[mark:]
-        for df in tail:
-            try:
-                df.unpersist()
-            except Exception:
-                _LOG.warning("unpersist failed during cache_scope exit",
-                             exc_info=True)
+        # by identity: two empty scopes compare equal
+        stack[:] = [s for s in stack if s is not owned]
+        for df in owned:
+            _unpersist(df, "cache_scope exit")
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -248,7 +243,7 @@ def _verified_jaccard_pairs(cand: DataFrame, sh_left: DataFrame,
     before.txt node 58: the full round(...) expression sits in the
     ShuffledHashJoin condition AND the Project). The persisted frame is
     candidate-proportional ids+score only (~24 B/row, memory+disk
-    storage level, freed by release_caches/cache_scope) — traded
+    storage level, owned by the caller's cache_scope) — traded
     against halving the per-candidate verify CPU.
 
     Output: (c1, c2, jaccard) with jaccard = round(|x∩y|/|x∪y|, 6)
@@ -754,6 +749,7 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     return labels.select(F.col("v").alias(id_col), F.col("label").alias("cluster_id"))
 
 
+@cache_scope()
 def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
                         text_col: str = "text", id_col: str = "doc_id",
                         vec_col: str = "embedding",
@@ -808,7 +804,6 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
        .write.mode("overwrite").parquet(os.path.join(store_dir, "shingles")))
     (minhash_band_table(sh, id_col)
        .write.mode("overwrite").parquet(os.path.join(store_dir, "bands")))
-    release_caches()
     ev = (emb.filter(sim._finite_ok(F.col(vec_col)))
              .select(F.col(id_col if id_col in emb.columns else "vec_id")
                      .alias("vec_id"),
@@ -1301,6 +1296,7 @@ def _es_store_fs(spark, store_dir: str):
     return mk, mk("_built").getFileSystem(conf)
 
 
+@cache_scope()
 def exact_substring_store_build(corpus: DataFrame, store_dir: str,
                                 text_col: str = "text",
                                 id_col: str = "doc_id", k: int = 8,
@@ -1397,7 +1393,6 @@ def exact_substring_store_build(corpus: DataFrame, store_dir: str,
     out = fs.create(mk("_built"), True)
     out.write(bytearray(b"ok\n"))
     out.close()
-    release_caches()
 
 
 def _es_store_meta(spark, store_dir: str) -> tuple[int, int, int]:
@@ -1511,6 +1506,7 @@ def exact_substring_spans_store(spark, store_dir: str,
         _token_arrays(increment, text_col, id_col, "inc_id", "_wb"))
 
 
+@cache_scope()
 def exact_substring_store_append(spark, store_dir: str,
                                  increment: DataFrame,
                                  text_col: str = "text",
@@ -1565,7 +1561,6 @@ def exact_substring_store_append(spark, store_dir: str,
         F.count(F.lit(1)).alias("n_occ"))
      .write.mode("append").parquet(str(mk("hashstats"))))
     iw.write.mode("append").parquet(str(mk("windows")))
-    release_caches()
 
 
 def remove_increment_spans_store(spark, store_dir: str,

@@ -26,10 +26,14 @@ so the oracle can unroll it.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.operators.dedup import _persist
+
+_LOG = logging.getLogger(__name__)
 
 
 def _round_barrier(df: DataFrame, prev: DataFrame | None) -> DataFrame:
@@ -59,13 +63,15 @@ def _round_barrier(df: DataFrame, prev: DataFrame | None) -> DataFrame:
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Deterministically free a localCheckpoint'ed frame's RDD blocks
-    (best-effort: the plan root of such a frame is a LogicalRDD whose
-    rdd is the persisted checkpoint). Falls back silently to the
-    ContextCleaner's GC-driven cleanup if the internal accessor moves."""
+    (the plan root of such a frame is a LogicalRDD whose rdd is the
+    persisted checkpoint). On failure — the internal accessor moved, or
+    the root is not a LogicalRDD — logs a warning and leaves the blocks
+    to the ContextCleaner's GC-driven cleanup."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
-        pass
+        _LOG.warning("unpersist failed during _release_checkpoint",
+                     exc_info=True)
 
 
 def _div_halfup(n: Column, d: Column) -> Column:
@@ -144,7 +150,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
         e = edges.select(F.col(src_col).cast("long").alias("src"),
                          F.col(dst_col).cast("long").alias("dst"),
                          F.lit(1).cast("long").alias("w"))
-    # loop-invariant frames are cached ONCE (freed by release_caches):
+    # loop-invariant frames are cached ONCE (caller's cache_scope):
     # every iteration reads e (contribution join), nodes (reassembly)
     # and outw (division) — without the cache each round re-runs the
     # caller's whole edge-building subtree (often a multi-table join)
@@ -384,7 +390,7 @@ def triangle_counts(edges: DataFrame,
     bounded by min(|N+(u)|, |N+(v)|) ≤ O(sqrt(|E|)) — the same
     Suri–Vassilvitskii bound, with the E^1.5 term moved from shuffled
     rows to in-row array scans. Measured at sf0.1: 24.6 s → 9.3 s
-    median-of-5, identical 1000-row output (tools/opt_experiments.py).
+    median-of-5, identical 1000-row output (OPTIMIZATION_r15.md).
 
     Clustering coefficient in integer micro-units (the module's exact
     rule): cc = halfup(2·T·1e12, d·(d−1)) for d ≥ 2, 0 below.

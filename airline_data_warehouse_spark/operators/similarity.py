@@ -21,7 +21,11 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from airline_data_warehouse_spark.operators.dedup import _persist, _release_one
+from airline_data_warehouse_spark.operators.dedup import (
+    _persist,
+    _release_one,
+    cache_scope,
+)
 from airline_data_warehouse_spark.operators.hashing import (
     gaussian_plane_weights, hyperplane_weights)
 
@@ -352,7 +356,7 @@ def _banded_scored_pairs(corpus: DataFrame, id_col: str, vec_col: str,
     # 1-2 tasks and serializes the projection (measured 3.5→<2 s at
     # sf0.1; same fix the shingle family applies before md5)
     cores = corpus.sparkSession.sparkContext.defaultParallelism
-    # persist (dedup's cache registry, freed by dedup.release_caches):
+    # persist (owned by the caller's dedup.cache_scope):
     # the self-join consumes the banded table twice — without the cache
     # the dot products run once per join side
     banded = _persist(
@@ -1058,8 +1062,8 @@ def pq_train(corpus: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
     if dims % m:
         raise ValueError(f"dims={dims} not divisible by m={m}")
     corpus = corpus.filter(_finite_ok(F.col(vec_col)))
-    # persist the exploded subvector frame (dedup's cache registry,
-    # freed by release_caches): it feeds every assignment iteration and
+    # persist the exploded subvector frame (owned by the caller's
+    # cache_scope): it feeds every assignment iteration and
     # the final encode — without it each reference re-reads and
     # re-explodes the corpus (.explain showed 6 full scans for the
     # iters=2 default; at 100 TB this is the difference between one
@@ -1220,8 +1224,8 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     corpus = corpus.filter(_finite_ok(F.col(vec_col)))
     labels = kmeans_assign(corpus, k=n_lists, iters=iters,
                            id_col=id_col, vec_col=vec_col)
-    # persist the assignment and the residual frames (dedup's cache
-    # registry, freed by release_caches): the k-means lineage would
+    # persist the assignment and the residual frames (owned by the
+    # caller's cache_scope): the k-means lineage would
     # otherwise re-execute once per downstream reference — coarse
     # centroids, residual encode, the codes⋈labels join, and each of
     # pq_train's per-iteration scans (measured 2.34× → 1.8× on the 8×
@@ -1288,6 +1292,7 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                           F.col("rank").cast("int").alias("rank")))
 
 
+@cache_scope()
 def ivfpq_index_build(corpus: DataFrame, index_dir: str, n_lists: int = 8,
                       m: int = 4, codes_k: int = 16, iters: int = 2,
                       dims: int = 64, id_col: str = "vec_id",
@@ -1508,6 +1513,7 @@ def ivfpq_index_topk_rerank(spark, index_dir: str, queries: DataFrame,
                          F.col("rank").cast("int").alias("rank")))
 
 
+@cache_scope()
 def ivfpq_index_append(spark, index_dir: str, increment: DataFrame,
                        m: int = 4, dims: int = 64, id_col: str = "vec_id",
                        vec_col: str = "embedding",
@@ -1769,7 +1775,7 @@ def kcenter_select(corpus: DataFrame, k: int = 6, dims: int = 64,
                 .limit(1).collect())
         # this collect materialized `cur`, so the previous round's frame
         # (cur's last reader) is dead — release it instead of letting
-        # k−1 corpus-sized caches pile up until release_caches()
+        # k−1 corpus-sized caches pile up until the scope exits
         # (ADVICE r11-low / VERDICT r11 item 4)
         if prev is not None:
             _release_one(prev)
@@ -1942,7 +1948,7 @@ def _cov_cells(centered: DataFrame, dims: int, round_dp: int = 6) -> DataFrame:
     two 6-dp doubles cast to DECIMAL(38,12) IS the exact 12-dp decimal
     product (the established exactness argument), and integer units
     replicate it exactly — measured identical at sf0.1 and 0.93 s vs
-    7.19 s median-of-5 (tools/opt_experiments.py).
+    7.19 s median-of-5 (OPTIMIZATION_r15.md).
 
     ``round_dp``: output rounding — 6 for the exact covariance
     contract, 9 for the whiten-invariants fit, 3 for its Gram."""

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from airline_data_warehouse_spark.operators.dedup import _persist, cache_scope
+
 WS = r"[ \t\n]+"
 STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -895,6 +897,7 @@ def bpe_vocab(words: DataFrame) -> DataFrame:
                  .groupBy("symbol").agg(F.sum("count").alias("count")))
 
 
+@cache_scope()
 def train_quality_classifier(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id", iters: int = 3,
                              lr: float = 0.5) -> DataFrame:
@@ -947,52 +950,50 @@ def train_quality_classifier(df: DataFrame, text_col: str = "text",
           + F.lit(tw["alpha_ratio"]) * f_alpha
           + F.lit(tw["ln1p_tokens"]) * f_lntok)
     tprob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-tz)), 6)
-    feat = (df.filter(F.length(F.trim(text)) > 0)
-              .select(F.col(id_col), fstop6.alias("fstop6"),
-                      falpha6.alias("falpha6"), flntok6.alias("flntok6"),
-                      F.when(tprob >= 0.5, 1).otherwise(0)
-                       .cast("long").alias("y"))
-              .persist())
-    try:
-        D38 = "decimal(38,0)"
-        w = [0.0, 0.0, 0.0, 0.0]
-        for _ in range(iters):
-            z = (F.lit(w[0])
-                 + F.lit(w[1]) * (F.col("fstop6") / 1000000.0)
-                 + F.lit(w[2]) * (F.col("falpha6") / 1000000.0)
-                 + F.lit(w[3]) * (F.col("flntok6") / 1000000.0))
-            sig6 = (F.round(F.lit(1000000.0) / (F.lit(1.0) + F.exp(-z)))
-                    .cast("long"))
-            err = sig6 - F.col("y") * 1000000
-            agg = feat.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((err * 1000000).cast(D38)).alias("s0"),
-                F.sum((err * F.col("fstop6")).cast(D38)).alias("s1"),
-                F.sum((err * F.col("falpha6")).cast(D38)).alias("s2"),
-                F.sum((err * F.col("flntok6")).cast(D38)).alias("s3"))
-            row = agg.select(*[
-                F.round(F.lit(w[j]) - F.lit(lr)
-                        * (F.col(f"s{j}").cast("double")
-                           / (F.lit(1000000000000.0)
-                              * F.col("n").cast("double"))), 6)
-                 .alias(f"w{j}") for j in range(4)]).collect()[0]
-            w = [row[f"w{j}"] for j in range(4)]
-        zf = (F.lit(w[0])
-              + F.lit(w[1]) * (F.col("fstop6") / 1000000.0)
-              + F.lit(w[2]) * (F.col("falpha6") / 1000000.0)
-              + F.lit(w[3]) * (F.col("flntok6") / 1000000.0))
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-zf)), 6)
-        predicted = F.when(p >= 0.5, "keep").otherwise("filter")
-        teacher = F.when(F.col("y") == 1, "keep").otherwise("filter")
-        out = feat.select(
-            F.col(id_col), p.alias("p_trained"),
-            predicted.alias("predicted"), teacher.alias("teacher_verdict"),
-            (predicted == teacher).alias("agree"))
-        # materialization happens on the caller's action; the persist is
-        # only needed during the training loop's aggregates
-        return out
-    finally:
-        feat.unpersist(blocking=False)
+    feat = _persist(df.filter(F.length(F.trim(text)) > 0)
+                    .select(F.col(id_col), fstop6.alias("fstop6"),
+                            falpha6.alias("falpha6"),
+                            flntok6.alias("flntok6"),
+                            F.when(tprob >= 0.5, 1).otherwise(0)
+                             .cast("long").alias("y")))
+    D38 = "decimal(38,0)"
+    w = [0.0, 0.0, 0.0, 0.0]
+    for _ in range(iters):
+        z = (F.lit(w[0])
+             + F.lit(w[1]) * (F.col("fstop6") / 1000000.0)
+             + F.lit(w[2]) * (F.col("falpha6") / 1000000.0)
+             + F.lit(w[3]) * (F.col("flntok6") / 1000000.0))
+        sig6 = (F.round(F.lit(1000000.0) / (F.lit(1.0) + F.exp(-z)))
+                .cast("long"))
+        err = sig6 - F.col("y") * 1000000
+        agg = feat.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((err * 1000000).cast(D38)).alias("s0"),
+            F.sum((err * F.col("fstop6")).cast(D38)).alias("s1"),
+            F.sum((err * F.col("falpha6")).cast(D38)).alias("s2"),
+            F.sum((err * F.col("flntok6")).cast(D38)).alias("s3"))
+        row = agg.select(*[
+            F.round(F.lit(w[j]) - F.lit(lr)
+                    * (F.col(f"s{j}").cast("double")
+                       / (F.lit(1000000000000.0)
+                          * F.col("n").cast("double"))), 6)
+             .alias(f"w{j}") for j in range(4)]).collect()[0]
+        w = [row[f"w{j}"] for j in range(4)]
+    zf = (F.lit(w[0])
+          + F.lit(w[1]) * (F.col("fstop6") / 1000000.0)
+          + F.lit(w[2]) * (F.col("falpha6") / 1000000.0)
+          + F.lit(w[3]) * (F.col("flntok6") / 1000000.0))
+    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-zf)), 6)
+    predicted = F.when(p >= 0.5, "keep").otherwise("filter")
+    teacher = F.when(F.col("y") == 1, "keep").otherwise("filter")
+    out = feat.select(
+        F.col(id_col), p.alias("p_trained"),
+        predicted.alias("predicted"), teacher.alias("teacher_verdict"),
+        (predicted == teacher).alias("agree"))
+    # materialization happens on the caller's action; the persist is
+    # only needed during the training loop's aggregates, so this
+    # call's scope releases it on return
+    return out
 
 
 def _bigram_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -4154,8 +4154,8 @@ def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = (docs.unionByName(copies).unionByName(trunc).unionByName(para))
 
     # tier 1: exact — md5 group, lowest id keeps. Persist ONLY the
-    # (doc_id, keeper) assignment (ids — signature-sized, freed by
-    # release_caches): three consumers (tier-2 input, tier-3 survivor
+    # (doc_id, keeper) assignment (ids — signature-sized, owned by the
+    # caller's cache_scope): three consumers (tier-2 input, tier-3 survivor
     # set, final verdict) would otherwise each recompute the md5
     # hash+groupBy+join subtree over the full corpus.
     hashed = corpus.select("doc_id", "text", F.md5("text").alias("_h"))

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airline_data_warehouse_spark.streaming import start_foreach_batch
+
 
 def append_log(spark: SparkSession, index_dir: str) -> DataFrame:
     """The per-batch drift log the ingest writes: (batch_id, appended,
@@ -176,7 +178,4 @@ def start_index_ingest(stream: DataFrame, index_dir: str,
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             ivfpq_index_compact(spark, index_dir)
 
-    writer = stream.writeStream.foreachBatch(ingest_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_foreach_batch(stream, ingest_batch, checkpoint_dir)

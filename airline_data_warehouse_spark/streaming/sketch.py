@@ -40,12 +40,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airline_data_warehouse_spark.operators.dedup import _persist
 from airline_data_warehouse_spark.operators.sketches import (
     CMS_DEPTH,
     CMS_WIDTH,
     countmin_build,
     countmin_estimate,
 )
+from airline_data_warehouse_spark.streaming import start_foreach_batch
 
 def _base_dir(store_dir: str) -> str:
     return f"{store_dir}/base"
@@ -280,10 +282,7 @@ def start_countmin_ingest(stream: DataFrame, store_dir: str,
         if fold_every and batch_id > 0 and batch_id % fold_every == 0:
             fold_countmin_store(spark, store_dir, depth, width)
 
-    writer = stream.writeStream.foreachBatch(ingest_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 
 
 def read_bloom_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -348,10 +347,7 @@ def start_bloom_ingest(stream: DataFrame, store_dir: str,
             replace_directory(spark, read_bloom_store(spark, store_dir),
                               bdir)
 
-    writer = stream.writeStream.foreachBatch(ingest_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 
 
 def _plan_dir(store_dir: str) -> str:
@@ -479,37 +475,30 @@ def start_qdigest_ingest(stream: DataFrame, store_dir: str,
         # scan+shuffle per micro-batch on the hot path); the leaf frame
         # derives only from this batch's rows — no mutated-file plan
         # for the CacheManager to substitute against
-        leaves = (batch_df
-                  .select((F.col(value_col).cast("long") - F.lit(off))
-                          .alias("id"))
-                  .filter(F.col("id").isNotNull())
-                  .groupBy("id")
-                  .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-                  .persist())
-        try:
-            bad = leaves.filter((F.col("id") < 0)
-                                | (F.col("id") >= cap)) \
-                        .limit(1).collect()
-            if bad:
-                raise ValueError(
-                    f"start_qdigest_ingest: shifted value "
-                    f"{bad[0]['id']} (offset {off}) outside the "
-                    f"universe [0, {cap}) in batch {int(batch_id)} — "
-                    "rescale/offset values upstream or plan "
-                    "offset/levels from the domain (the batch "
-                    "builder's guard, per micro-batch)")
-            (leaves.coalesce(1).write.mode("overwrite")
-             .parquet(f"{_batches_dir(store_dir)}"
-                      f"/batch_id={int(batch_id)}"))
-        finally:
-            leaves.unpersist()
+        leaves = _persist(
+            batch_df.select((F.col(value_col).cast("long") - F.lit(off))
+                            .alias("id"))
+                    .filter(F.col("id").isNotNull())
+                    .groupBy("id")
+                    .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
+        bad = leaves.filter((F.col("id") < 0)
+                            | (F.col("id") >= cap)) \
+                    .limit(1).collect()
+        if bad:
+            raise ValueError(
+                f"start_qdigest_ingest: shifted value "
+                f"{bad[0]['id']} (offset {off}) outside the "
+                f"universe [0, {cap}) in batch {int(batch_id)} — "
+                "rescale/offset values upstream or plan "
+                "offset/levels from the domain (the batch "
+                "builder's guard, per micro-batch)")
+        (leaves.coalesce(1).write.mode("overwrite")
+         .parquet(f"{_batches_dir(store_dir)}"
+                  f"/batch_id={int(batch_id)}"))
         if fold_every and batch_id > 0 and batch_id % fold_every == 0:
             fold_qdigest_store(spark, store_dir)
 
-    writer = stream.writeStream.foreachBatch(ingest_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 
 
 def qdigest_store_quantiles(spark: SparkSession, store_dir: str,

@@ -224,14 +224,14 @@ def main() -> None:
     # (~6 s of Janino/JIT or pyspark.daemon spin-up on first touch) are
     # per-process artifacts, not plan properties — measuring them just
     # charges whichever query happens to run first.
-    from airline_data_warehouse_spark.operators.dedup import release_caches
+    from airline_data_warehouse_spark.operators.dedup import cache_scope
     warm_sf = "/root/testdata/sf0.001"
     for name in HEADLINE:
         try:
-            registry[name].builder(spark, warm_sf).write.format("noop").mode("overwrite").save()
+            with cache_scope():
+                registry[name].builder(spark, warm_sf).write.format("noop").mode("overwrite").save()
         except Exception:
             pass  # warm-up must never sink the measurement run
-        release_caches()
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
 
@@ -263,15 +263,15 @@ def main() -> None:
         try:
             for _ in range(runs):
                 t0 = time.time()
-                registry[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-                release_caches()  # per-query cache lifetime: no cross-query memory creep
+                # per-query cache lifetime: no cross-query memory creep
+                with cache_scope():
+                    registry[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                    samples.append(time.time() - t0)
             timings[name] = round(statistics.median(samples), 3)
         except Exception as e:  # noqa: BLE001 — one broken query must not
             # sink the whole bench record; the failure is surfaced in the
             # JSON (and the correctness gate fails loudly on its own)
             errors[name] = str(e).splitlines()[0][:200]
-            release_caches()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from airline_data_warehouse_spark.operators.dedup import cache_scope
 from airline_data_warehouse_spark.session import get_spark
 
 
@@ -11,6 +12,14 @@ def spark():
                   extra_conf={"spark.sql.shuffle.partitions": "4",
                               "spark.ui.enabled": "false"})
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _owned_caches():
+    """Each test owns the caches it persists: the ones operators
+    register while it runs are released when it ends."""
+    with cache_scope():
+        yield
 
 
 @pytest.fixture(scope="session")

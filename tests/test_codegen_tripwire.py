@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pytest
 
-from airline_data_warehouse_spark.operators.dedup import release_caches
+from airline_data_warehouse_spark.operators.dedup import cache_scope
 from airline_data_warehouse_spark.plans.registry import all_queries
 
 import bench
@@ -32,11 +32,9 @@ def strict_codegen(spark):
 @pytest.mark.parametrize("name", bench.HEADLINE)
 def test_headline_query_compiles(strict_codegen, sf_dir, name):
     registry = all_queries()
-    df = registry[name].builder(strict_codegen, sf_dir)
-    try:
+    with cache_scope():
+        df = registry[name].builder(strict_codegen, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-    finally:
-        release_caches()
 
 
 @pytest.mark.parametrize("name", ["dedup_ngram_jaccard",
@@ -56,11 +54,9 @@ def test_array_verify_joins_never_broadcast(spark, sf_dir, name):
     Plan-level check: the optimized plan must contain shuffled hash
     join operators for these queries and no broadcast join whose build
     side projects the shingle/vector array column."""
-    df = all_queries()[name].builder(spark, sf_dir)
-    try:
+    with cache_scope():
+        df = all_queries()[name].builder(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        release_caches()
     assert "ShuffledHashJoin" in plan, f"{name}: array verify join lost its shuffle_hash hint"
     for line in plan.splitlines():
         if "BroadcastHashJoin" not in line:

@@ -256,18 +256,19 @@ def test_frame_sampling(spark):
         (1, 0), (1, 1000), (1, 2000), (1, 3000)]
 
 
-def test_release_caches_leaves_no_persistent_rdds(spark, near_dup_docs):
-    """Cache lifetime is one query: after an action + release_caches(),
-    no persisted RDDs beyond the pre-test baseline remain (VERDICT r01
-    leak fix). Delta-based because the session-scoped SparkSession may
-    still hold localCheckpoint blocks from earlier tests (CC/semantic
-    runs) that only the JVM ContextCleaner reclaims — those are outside
-    release_caches' ownership contract."""
+def test_cache_scope_leaves_no_persistent_rdds(spark, near_dup_docs):
+    """Cache lifetime is one query: after an action inside a
+    cache_scope(), no persisted RDDs beyond the pre-test baseline
+    remain once the scope exits (VERDICT r01 leak fix). Delta-based
+    because the session-scoped SparkSession may still hold
+    localCheckpoint blocks from earlier tests (CC/semantic runs) that
+    only the JVM ContextCleaner reclaims — those are outside the
+    scope's ownership contract."""
     spark.catalog.clearCache()
     base = spark.sparkContext._jsc.getPersistentRDDs().size()
-    dd.ngram_jaccard_pairs(near_dup_docs).collect()  # persists shingles + bands
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > base
-    dd.release_caches()
+    with dd.cache_scope():
+        dd.ngram_jaccard_pairs(near_dup_docs).collect()  # shingles + bands
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() > base
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
 
 
@@ -325,9 +326,9 @@ def test_connected_components_transitive(spark):
     a-c edge), singletons keep their own id, and every vertex appears."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "id1 long, id2 long")
     verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 7, 9)], "doc_id long")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dd.connected_components(pairs, verts).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in dd.connected_components(pairs, verts).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 9: 7}
 
 
@@ -337,9 +338,9 @@ def test_connected_components_chain_diameter(spark):
     n = 7
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, n)], "id1 long, id2 long")
     verts = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dd.connected_components(pairs, verts).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in dd.connected_components(pairs, verts).collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
@@ -349,9 +350,9 @@ def test_connected_components_doubling_beats_diameter(spark):
     n = 33
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, n)], "id1 long, id2 long")
     verts = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dd.connected_components(pairs, verts, max_iter=8).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        got = {r["doc_id"]: r["cluster_id"] for r in
+               dd.connected_components(pairs, verts, max_iter=8).collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
@@ -361,27 +362,63 @@ def test_connected_components_nonconvergence_raises(spark):
     n = 40
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, n)], "id1 long, id2 long")
     verts = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with dd.cache_scope(), \
+            pytest.raises(RuntimeError, match="did not converge"):
         dd.connected_components(pairs, verts, max_iter=2)
-    dd.release_caches()
 
 
 def test_cache_scope_releases_only_own_tail(spark):
     """cache_scope frees the caches created inside the block and leaves
-    pre-existing ones alone."""
-    outer = spark.range(3).persist()
-    dd._LIVE_CACHES.append(outer)
-    try:
-        with dd.cache_scope():
+    those of an enclosing scope alone."""
+    with dd.cache_scope() as outer_owned:
+        outer = dd._persist(spark.range(3))
+        with dd.cache_scope() as owned:
             inner = spark.range(5)
             dd._persist(inner)
             inner.count()
             assert inner.storageLevel.useMemory
+            assert owned == [inner]
         assert not inner.storageLevel.useMemory     # released by the scope
-        assert outer in dd._LIVE_CACHES             # untouched
+        assert outer_owned == [outer]               # untouched
         assert outer.storageLevel.useMemory
-    finally:
-        dd.release_caches()
+    assert not outer.storageLevel.useMemory
+
+
+def test_cache_scope_is_per_thread(spark):
+    """Interleaved scopes on two threads own only their own frames: A
+    enters and persists, B enters and persists, A exits — B's frame is
+    still cached until B exits, whatever A releases."""
+    import threading
+
+    step = threading.Barrier(2, timeout=60)
+    frames, seen = {}, {}
+
+    def a():
+        with dd.cache_scope():
+            frames["a"] = dd._persist(spark.range(3))
+            step.wait()                      # 1: A persisted
+            step.wait()                      # 2: B persisted
+        seen["a_released"] = not frames["a"].storageLevel.useMemory
+        step.wait()                          # 3: A exited
+
+    def b():
+        step.wait()                          # 1
+        with dd.cache_scope():
+            frames["b"] = dd._persist(spark.range(4))
+            step.wait()                      # 2
+            step.wait()                      # 3
+            seen["b_cached"] = frames["b"].storageLevel.useMemory
+        seen["b_released"] = not frames["b"].storageLevel.useMemory
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert seen["a_released"]
+    assert seen["b_cached"], "A's exit released B's frame"
+    assert seen["b_released"]
 
 
 def test_simhash_near_pairs_multiprobe(spark, near_dup_docs):
@@ -601,8 +638,9 @@ def test_incremental_minhash_finds_cross_batch_dups(spark, near_dup_docs):
               "statistics that matches nothing in the existing corpus at all"),
         (103, BASE + " tail"),      # duplicate of 101 within the increment
     ], "doc_id long, text string")
-    got = dd.incremental_minhash_pairs(corpus, inc, threshold=0.6).collect()
-    dd.release_caches()
+    with dd.cache_scope():
+        got = dd.incremental_minhash_pairs(corpus, inc,
+                                           threshold=0.6).collect()
     inc_ids = {r["inc_id"] for r in got}
     assert 101 in inc_ids and 103 in inc_ids and 102 not in inc_ids
     assert all(r["corpus_id"] in {1, 2, 3, 5} for r in got)
@@ -643,11 +681,10 @@ def test_semantic_dedup_within_cluster_only(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
     cents = sim.centroid_vectors(df)
-    got = {(r["id1"], r["id2"]): r for r in
-           sim.semantic_dedup_pairs(df.select("vec_id", "embedding"), cents,
-                                    threshold=0.999).collect()}
-    from airline_data_warehouse_spark.operators.dedup import release_caches
-    release_caches()
+    with dd.cache_scope():
+        got = {(r["id1"], r["id2"]): r for r in
+               sim.semantic_dedup_pairs(df.select("vec_id", "embedding"),
+                                        cents, threshold=0.999).collect()}
     assert (1, 2) in got and (5, 6) in got
     assert (3, 4) not in got          # cos(0.02) > 0.999 but split across clusters
     assert all(r["score"] >= 0.999 for r in got.values())
@@ -1805,9 +1842,10 @@ def test_hamming_near_pairs_single_chunk_exact_screen(spark):
     including sign-negative ones."""
     rows = [(1, -42), (2, -42), (3, 42), (4, 41)]
     sigs = spark.createDataFrame(rows, "media_id long, sig long")
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
-             dd.hamming_near_pairs(sigs, "sig", "media_id", 64, 0).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
+                 dd.hamming_near_pairs(sigs, "sig", "media_id", 64,
+                                       0).collect()}
     assert pairs == {(1, 2): 0}
 
 
@@ -1831,9 +1869,9 @@ def test_image_near_dup_average_hash(spark):
     far = bin((hashes[1] ^ hashes[3]) & ((1 << 64) - 1)).count("1")
     assert far > 32                        # inversion flips most bits
 
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
-             mm.image_near_dup_pairs(px, max_hamming=4).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
+                 mm.image_near_dup_pairs(px, max_hamming=4).collect()}
     assert pairs == {(1, 2): 0}
 
 
@@ -1845,9 +1883,10 @@ def test_hamming_near_pairs_full_64bit_sign_range(spark):
     neg = -(1 << 62)                      # bit 63 set (two's complement)
     rows = [(1, neg), (2, neg ^ 0b11), (3, 5), (4, 5 | (1 << 63) - (1 << 64))]
     sigs = spark.createDataFrame(rows, "media_id long, sig long")
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
-             dd.hamming_near_pairs(sigs, "sig", "media_id", 64, 2).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
+                 dd.hamming_near_pairs(sigs, "sig", "media_id", 64,
+                                       2).collect()}
     assert pairs[(1, 2)] == 2
     assert pairs[(3, 4)] == 1
 
@@ -2685,52 +2724,69 @@ def test_graph_loops_release_previous_round_caches(spark):
     def n_rdds() -> int:
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    dedup.release_caches()
     edges = spark.createDataFrame(
         [(i, (i + 1) % 40) for i in range(40)]
         + [(i, (i + 7) % 40) for i in range(40)],
         "src long, dst long")
 
     base = n_rdds()
-    r10 = {r["node_id"]: r["rank_micro"] for r in
-           pagerank(edges, iters=10).collect()}
-    # loop-invariant caches (e, nodes, outw) + the FINAL round's
-    # checkpoint — NOT one block set per round
-    assert n_rdds() - base <= 5, (n_rdds(), base)
-    assert len(dedup._LIVE_CACHES) <= 3, len(dedup._LIVE_CACHES)
-    dedup.release_caches()
-    again = {r["node_id"]: r["rank_micro"] for r in
-             pagerank(edges, iters=10).collect()}
+    with dedup.cache_scope() as owned:
+        r10 = {r["node_id"]: r["rank_micro"] for r in
+               pagerank(edges, iters=10).collect()}
+        # loop-invariant caches (e, nodes, outw) + the FINAL round's
+        # checkpoint — NOT one block set per round
+        assert n_rdds() - base <= 5, (n_rdds(), base)
+        assert len(owned) <= 3, len(owned)
+    with dedup.cache_scope():
+        again = {r["node_id"]: r["rank_micro"] for r in
+                 pagerank(edges, iters=10).collect()}
     assert again == r10                     # release changed nothing
-    dedup.release_caches()
 
     nodes = spark.createDataFrame([(i,) for i in range(40)],
                                   "node_id long")
     seeds = spark.createDataFrame([(0, 10 ** 12)],
                                   "node_id long, seed_micro long")
     base = n_rdds()
-    label_propagation(nodes, edges, seeds, iters=10).collect()
-    assert n_rdds() - base <= 4, (n_rdds(), base)
-    assert len(dedup._LIVE_CACHES) <= 1, len(dedup._LIVE_CACHES)
-    dedup.release_caches()
+    with dedup.cache_scope() as owned:
+        label_propagation(nodes, edges, seeds, iters=10).collect()
+        assert n_rdds() - base <= 4, (n_rdds(), base)
+        assert len(owned) <= 1, len(owned)
 
     base = n_rdds()
-    out = {r["node_id"]: r["core_degree"] for r in
-           kcore(edges, k=2, iters=10).collect()}
-    assert len(out) == 40                   # 2-regular+ graph: all alive
-    assert n_rdds() - base <= 4, (n_rdds(), base)
-    assert len(dedup._LIVE_CACHES) <= 1, len(dedup._LIVE_CACHES)
-    dedup.release_caches()
+    with dedup.cache_scope() as owned:
+        out = {r["node_id"]: r["core_degree"] for r in
+               kcore(edges, k=2, iters=10).collect()}
+        assert len(out) == 40               # 2-regular+ graph: all alive
+        assert n_rdds() - base <= 4, (n_rdds(), base)
+        assert len(owned) <= 1, len(owned)
 
     # hits: the final barrier must release the LAST round's checkpointed
     # hub (prev_hub) too — live after return is e + nodes caches plus
     # the final auth and hub checkpoints only (ADVICE r12-low: prev_hub
     # used to leak to GC)
     base = n_rdds()
-    hits(edges, iters=10).collect()
-    assert n_rdds() - base <= 4, (n_rdds(), base)
-    assert len(dedup._LIVE_CACHES) <= 2, len(dedup._LIVE_CACHES)
-    dedup.release_caches()
+    with dedup.cache_scope() as owned:
+        hits(edges, iters=10).collect()
+        assert n_rdds() - base <= 4, (n_rdds(), base)
+        assert len(owned) <= 2, len(owned)
+
+
+def test_release_checkpoint_logs_failures(spark, caplog):
+    """graph._release_checkpoint never fails silently: a frame whose
+    plan root is not a LogicalRDD (spark.range) has no rdd() to
+    unpersist, and the failure is logged as a warning with its
+    traceback instead of being swallowed."""
+    import logging
+
+    from airline_data_warehouse_spark.operators.graph import (
+        _release_checkpoint,
+    )
+
+    with caplog.at_level(logging.WARNING,
+                         logger="airline_data_warehouse_spark.operators.graph"):
+        _release_checkpoint(spark.range(3))
+    rec = [r for r in caplog.records if "_release_checkpoint" in r.message]
+    assert rec and rec[0].levelno == logging.WARNING and rec[0].exc_info
 
 
 def test_kcenter_batched_m1_equals_exact_and_batches_fold(spark):
@@ -2754,19 +2810,19 @@ def test_kcenter_batched_m1_equals_exact_and_batches_fold(spark):
                 for i in range(80) for d in [0]]
     emb = spark.createDataFrame(rng_rows,
                                 "vec_id long, embedding array<double>")
-    exact = [(r["sel_rank"], r["vec_id"], r["dist"]) for r in
-             kcenter_select(emb, k=7, dims=3).collect()]
-    dedup.release_caches()
-    b1 = [(r["sel_rank"], r["vec_id"], r["dist"]) for r in
-          kcenter_select_batched(emb, k=7, m=1, oversample=1,
-                                 dims=3).collect()]
+    with dedup.cache_scope():
+        exact = [(r["sel_rank"], r["vec_id"], r["dist"]) for r in
+                 kcenter_select(emb, k=7, dims=3).collect()]
+    with dedup.cache_scope():
+        b1 = [(r["sel_rank"], r["vec_id"], r["dist"]) for r in
+              kcenter_select_batched(emb, k=7, m=1, oversample=1,
+                                     dims=3).collect()]
     assert b1 == exact
-    dedup.release_caches()
 
-    rows = kcenter_select_batched(emb, k=7, m=3, oversample=2,
-                                  dims=3).collect()
-    assert len(dedup._LIVE_CACHES) <= 2, len(dedup._LIVE_CACHES)
-    dedup.release_caches()
+    with dedup.cache_scope() as owned:
+        rows = kcenter_select_batched(emb, k=7, m=3, oversample=2,
+                                      dims=3).collect()
+        assert len(owned) <= 2, len(owned)
     assert [r["sel_rank"] for r in rows] == list(range(1, 8))
     # batches are (seed), ranks 2-4, ranks 5-7: within-batch dist is
     # non-increasing
@@ -2791,19 +2847,17 @@ def test_kcenter_select_releases_round_caches_and_validates_dims(spark):
 
     from airline_data_warehouse_spark.operators import dedup
 
-    dedup.release_caches()
     emb = spark.createDataFrame(
         [(i, [float(i % 11), float((i * 3) % 7), float(i % 5)])
          for i in range(60)],
         "vec_id long, embedding array<double>")
-    out = sim.kcenter_select(emb, k=8, dims=3).collect()
-    assert len(out) == 8
-    assert len(dedup._LIVE_CACHES) <= 2, len(dedup._LIVE_CACHES)
-    dedup.release_caches()
+    with dedup.cache_scope() as owned:
+        out = sim.kcenter_select(emb, k=8, dims=3).collect()
+        assert len(out) == 8
+        assert len(owned) <= 2, len(owned)
 
-    with pytest.raises(ValueError, match="dims"):
+    with dedup.cache_scope(), pytest.raises(ValueError, match="dims"):
         sim.kcenter_select(emb, k=3, dims=64)
-    dedup.release_caches()
 
 
 def test_pagerank_empty_seed_set_fails_fast(spark):

@@ -199,7 +199,7 @@ def test_audio_fingerprint_gain_invariant_near_dup(spark):
     far. audio_near_dup_pairs flags exactly the near pairs; a too-short
     clip fingerprints NULL and never pairs."""
     from airline_data_warehouse_spark.operators import multimodal as mm
-    from airline_data_warehouse_spark.operators.dedup import release_caches
+    from airline_data_warehouse_spark.operators.dedup import cache_scope
 
     base = [i % 2 == 0 for i in range(64)]
     edited = list(base)
@@ -221,9 +221,9 @@ def test_audio_fingerprint_gain_invariant_near_dup(spark):
     assert bin((fps[1] ^ fps[4]) & ((1 << 64) - 1)).count("1") == 64
     assert fps[5] is None
 
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
-             mm.audio_near_dup_pairs(media, max_hamming=4).collect()}
-    release_caches()
+    with cache_scope():
+        pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
+                 mm.audio_near_dup_pairs(media, max_hamming=4).collect()}
     assert pairs[(1, 2)] == 0 and pairs[(1, 3)] == 3 and pairs[(2, 3)] == 3
     assert not any(4 in p or 5 in p for p in pairs)
 

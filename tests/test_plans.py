@@ -293,8 +293,6 @@ def test_ann_family_never_broadcasts_corpus(spark, sf_dir, registry):
     # cache substitution rewrites MATCHING subtrees of new plans into
     # InMemoryRelation wrappers — changing the very tree shapes this
     # audit greps (the audit must see the cold-plan shape every run)
-    from airline_data_warehouse_spark.operators.dedup import release_caches
-    release_caches()
     spark.catalog.clearCache()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -414,6 +412,32 @@ def test_no_row_udfs_or_rdd_api_in_package():
             if banned.search(code):
                 hits.append(f"{py.name}:{ln}: {line.strip()[:80]}")
     assert not hits, "slow-path API usage:\n" + "\n".join(hits)
+
+
+def test_cache_lifetime_only_in_dedup_registry():
+    """Source-level ownership tripwire: every cache the package creates
+    goes through operators/dedup.py's `_persist` (registered in the
+    caller's cache_scope) and is released there, so no other module
+    calls .persist( or .unpersist( — a fourth cache-lifetime mechanism
+    cannot creep back. The graph._release_checkpoint JVM chain (the
+    exemption the slow-path scan above documents) is the one
+    exception: it frees localCheckpoint blocks, not a cache."""
+    import pathlib
+    import re
+    pkg = pathlib.Path(__file__).parent.parent / "airline_data_warehouse_spark"
+    banned = re.compile(r"\.(un)?persist\(")
+    exempt = re.compile(
+        r"\._jdf\.queryExecution\(\)\.analyzed\(\)\.rdd\(\)\.unpersist\(")
+    hits = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py.relative_to(pkg).as_posix() == "operators/dedup.py":
+            continue
+        for ln, line in enumerate(py.read_text().splitlines(), 1):
+            code = exempt.sub("", line.split("#")[0])
+            if banned.search(code):
+                hits.append(f"{py.name}:{ln}: {line.strip()[:80]}")
+    assert not hits, "cache lifetime outside operators/dedup.py:\n" + \
+        "\n".join(hits)
 
 
 def test_rolling_features_time_bounds_and_gaps(spark, tmp_path):

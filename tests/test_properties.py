@@ -403,9 +403,10 @@ def test_containment_exactness_property(spark):
                                    "doc_id long, text string")
         sets = {i: set(t) for i, t in enumerate(texts) if t}
         for thr in (0.7, 0.9, 1.0):
-            got = {(r["id_small"], r["id_big"]): r["containment"] for r in
-                   dd.containment_pairs(df, k=1, threshold=thr).collect()}
-            dd.release_caches()
+            with dd.cache_scope():
+                got = {(r["id_small"], r["id_big"]): r["containment"]
+                       for r in dd.containment_pairs(
+                           df, k=1, threshold=thr).collect()}
             want = {}
             for i in sets:
                 for j in sets:
@@ -450,10 +451,10 @@ def test_prefix_filter_exactness_property(spark):
                                    "doc_id long, text string")
         sets = {i: set(t) for i, t in enumerate(texts) if t}
         for thr in (0.3, 0.6, 0.7):
-            got = {(r["id1"], r["id2"]): r["jaccard"] for r in
-                   dd.prefix_filter_jaccard_pairs(df, k=1,
-                                                  threshold=thr).collect()}
-            dd.release_caches()
+            with dd.cache_scope():
+                got = {(r["id1"], r["id2"]): r["jaccard"] for r in
+                       dd.prefix_filter_jaccard_pairs(
+                           df, k=1, threshold=thr).collect()}
             want = {}
             for i in sets:
                 for j in sets:

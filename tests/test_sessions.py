@@ -4,6 +4,7 @@ timelines, and the applyInPandasWithState path across micro-batches."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -105,12 +106,17 @@ def _stream_replay(spark, tmp_path, chunks, tag):
                      [{"event_id": -2, "ts": max_ts + 11 * 86_400_000_000,
                        "user_id": -1, "value": 0.0}]]
         for i, chunk in enumerate(list(chunks) + sentinels):
-            with open(in_dir / f"b{i:03d}.json", "w") as f:
+            # write under a hidden name, then rename into place: the
+            # running stream lists the directory at any moment, and a
+            # file it picks up half-written is never read again
+            tmp = in_dir / f".b{i:03d}.json"
+            with open(tmp, "w") as f:
                 for e in chunk:
                     f.write(json.dumps({
                         "event_id": e["event_id"],
                         "ts": str(__import__("pandas").Timestamp(e["ts"], unit="us")),
                         "user_id": e["user_id"], "value": e["value"]}) + "\n")
+            os.replace(tmp, in_dir / f"b{i:03d}.json")
             q.processAllAvailable()
         return [r for r in spark.sql(f"SELECT * FROM sessions_eq_{tag}").collect()
                 if r["user_id"] != -1]

@@ -852,13 +852,18 @@ def test_stream_index_ingest_appends_and_logs_drift(spark, tmp_path):
         start_index_ingest,
     )
 
+    def n_rdds() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
     rng = random.Random(31)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)]
     corpus = spark.createDataFrame(rows,
                                    "vec_id long, embedding array<double>")
     idx = str(tmp_path / "ivfpq")
+    base = n_rdds()
     sim.ivfpq_index_build(corpus, idx, n_lists=4, m=2, codes_k=4,
                           iters=2, dims=8)
+    assert n_rdds() <= base          # the build releases what it cached
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
@@ -885,6 +890,7 @@ def test_stream_index_ingest_appends_and_logs_drift(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert n_rdds() <= base          # each micro-batch released its caches
 
     codes = spark.read.parquet(f"{idx}/codes.parquet")
     assert codes.select("vec_id").distinct().count() == 30 + 6

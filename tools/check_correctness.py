@@ -78,7 +78,7 @@ def main() -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    from airline_data_warehouse_spark.operators.dedup import release_caches
+    from airline_data_warehouse_spark.operators.dedup import cache_scope
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures, passed, rows_only = [], 0, 0
@@ -87,10 +87,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            release_caches()
+            with cache_scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL  {name}: spark error: {str(e)[:500]}")

@@ -75,9 +75,9 @@ def main() -> None:
             out = []
             for _ in range(runs):
                 t = time.monotonic()
-                n = fn().count()
-                out.append(time.monotonic() - t)
-                dd.release_caches()
+                with dd.cache_scope():
+                    n = fn().count()
+                    out.append(time.monotonic() - t)
             return _median(out), n
 
         t_store1, n1 = timed(lambda: dd.exact_substring_spans_store(

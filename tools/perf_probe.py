@@ -61,7 +61,7 @@ def main() -> None:
     sf = argv[0] if argv else "sf0.1"
     names = argv[1:]
     sf_dir = f"/root/testdata/{sf}"
-    from airline_data_warehouse_spark.operators.dedup import release_caches
+    from airline_data_warehouse_spark.operators.dedup import cache_scope
     from airline_data_warehouse_spark.plans.registry import all_queries
     from airline_data_warehouse_spark.session import get_spark
 
@@ -72,20 +72,20 @@ def main() -> None:
     for name in names:
         # warm-up at tiny sf
         try:
-            registry[name].builder(spark, "/root/testdata/sf0.001") \
-                .write.format("noop").mode("overwrite").save()
+            with cache_scope():
+                registry[name].builder(spark, "/root/testdata/sf0.001") \
+                    .write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001
             print(f"warmup {name}: {exc}")
-        release_caches()
         samples = []
         stage_rows: list[dict] = []
         for i in range(runs):
             t0 = time.time()
-            registry[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
+            with cache_scope():
+                registry[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                samples.append(round(time.time() - t0, 3))
             if want_stages and i == runs - 1:  # stages of the LAST (warmest) run
                 stage_rows = _stage_metrics(spark, t0 * 1000)
-            release_caches()
         print(f"{name}: median={statistics.median(samples)} runs={samples}")
         if want_stages:
             for s in stage_rows[:8]:

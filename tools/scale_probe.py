@@ -234,19 +234,19 @@ def build_scaled(spark, factor: int, out_dir: str,
 
 def time_queries(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, float]:
     from airline_data_warehouse_spark.plans.registry import all_queries
-    from airline_data_warehouse_spark.operators.dedup import release_caches
+    from airline_data_warehouse_spark.operators.dedup import cache_scope
     reg = all_queries()
     out = {}
     for name in names or PROBE_QUERIES:
         samples = []
         for _ in range(3):  # median-of-3: single-run container noise
             t0 = time.time()  # swamped ratios by ±60% in r06 measurements
-            reg[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
             # operators persist signature-sized intermediates for their
-            # own self-joins; release between runs so one measurement
+            # own self-joins; one scope per run so one measurement
             # never pays (or benefits from) another's cache
-            release_caches()
+            with cache_scope():
+                reg[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                samples.append(time.time() - t0)
         out[name] = round(sorted(samples)[1], 2)
     return out
 
@@ -311,9 +311,9 @@ def recall_probe(spark, sf_dir: str, sample_docs: int = 300,
                        ("similarity_topk_ivfpq", "ann_ivfpq_recall_at5"),
                        ("similarity_topk_pq_rerank",
                         "ann_pq_rerank_recall_at5")]:
-        approx = {(r["query_id"], r["neighbor_id"]) for r in
-                  reg[key].builder(spark, sf_dir).collect()}
-        dd.release_caches()
+        with dd.cache_scope():
+            approx = {(r["query_id"], r["neighbor_id"]) for r in
+                      reg[key].builder(spark, sf_dir).collect()}
         out[label] = round(len(approx & l2_truth) / max(len(l2_truth), 1), 3)
     out["l2_truth_pairs"] = len(l2_truth)
 
@@ -337,9 +337,9 @@ def recall_probe(spark, sf_dir: str, sample_docs: int = 300,
                      .withColumn("j", inter.cast("double") / uni)
                      .filter(F.col("j") >= 0.6)
                      .select("id1", "id2")).collect()}
-    got_pairs = {(r["id1"], r["id2"]) for r in
-                 dd.ngram_jaccard_pairs(corpus, threshold=0.6).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        got_pairs = {(r["id1"], r["id2"]) for r in
+                     dd.ngram_jaccard_pairs(corpus, threshold=0.6).collect()}
     out["minhash_pair_recall"] = round(
         len(got_pairs & truth_pairs) / max(len(truth_pairs), 1), 3)
     out["minhash_truth_pairs"] = len(truth_pairs)
@@ -355,10 +355,10 @@ def recall_probe(spark, sf_dir: str, sample_docs: int = 300,
             .select((F.col("doc_id") + 1000000).alias("doc_id"),
                     F.expr("substr(text, 1, (length(text) * 9) div 10)")
                      .alias("text")))
-    exact_n = dd.prefix_filter_jaccard_pairs(full_corpus, threshold=0.6).count()
-    dd.release_caches()
-    lsh_n = dd.ngram_jaccard_pairs(full_corpus, threshold=0.6).count()
-    dd.release_caches()
+    with dd.cache_scope():
+        exact_n = dd.prefix_filter_jaccard_pairs(full_corpus, threshold=0.6).count()
+    with dd.cache_scope():
+        lsh_n = dd.ngram_jaccard_pairs(full_corpus, threshold=0.6).count()
     out["minhash_pair_recall_fullcorpus"] = round(lsh_n / max(exact_n, 1), 3)
     out["minhash_fullcorpus_truth_pairs"] = exact_n
 
@@ -381,9 +381,9 @@ def recall_probe(spark, sf_dir: str, sample_docs: int = 300,
               (va.join(vb, F.col("id1") < F.col("id2"))
                  .withColumn("c", cos).filter(F.col("c") >= 0.99)
                  .select("id1", "id2")).collect()}
-    vgot = {(r["id1"], r["id2"]) for r in
-            sim.embedding_near_dup_pairs(vcorp, threshold=0.99).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        vgot = {(r["id1"], r["id2"]) for r in
+                sim.embedding_near_dup_pairs(vcorp, threshold=0.99).collect()}
     out["embedding_pair_recall"] = round(
         len(vgot & vtruth) / max(len(vtruth), 1), 3)
     out["embedding_truth_pairs"] = len(vtruth)
@@ -393,11 +393,11 @@ def recall_probe(spark, sf_dir: str, sample_docs: int = 300,
     # corpus count via planned_band_params — verifies the planner's
     # expected_recall >= 0.9 promise holds on real data at whatever
     # n the probe corpus has, not just in closed form.
-    vgot_planned = {(r["id1"], r["id2"]) for r in
-                    sim.embedding_near_dup_pairs(
-                        vcorp, threshold=0.99, bands=None,
-                        rows_per_band=None).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        vgot_planned = {(r["id1"], r["id2"]) for r in
+                        sim.embedding_near_dup_pairs(
+                            vcorp, threshold=0.99, bands=None,
+                            rows_per_band=None).collect()}
     out["embedding_pair_recall_planned"] = round(
         len(vgot_planned & vtruth) / max(len(vtruth), 1), 3)
 
@@ -427,9 +427,9 @@ def recall_probe(spark, sf_dir: str, sample_docs: int = 300,
                    .withColumn("rk", F.row_number().over(w))
                    .filter(F.col("rk") <= 5)
                    .select("query_id", "neighbor_id")).collect()}
-    mined = {(r["query_id"], r["neighbor_id"]) for r in
-             reg["hard_negative_mining"].builder(spark, sf_dir).collect()}
-    dd.release_caches()
+    with dd.cache_scope():
+        mined = {(r["query_id"], r["neighbor_id"]) for r in
+                 reg["hard_negative_mining"].builder(spark, sf_dir).collect()}
     out["hard_negative_recall_at5"] = round(
         len(mined & hn_truth) / max(len(hn_truth), 1), 3)
     out["hard_negative_truth_pairs"] = len(hn_truth)
