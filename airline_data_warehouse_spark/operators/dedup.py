@@ -15,6 +15,7 @@ from __future__ import annotations
 import logging
 import threading
 from contextlib import contextmanager
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -263,6 +264,19 @@ def _verified_jaccard_pairs(cand: DataFrame, sh_left: DataFrame,
     return scored.filter(F.col("jaccard") >= threshold)
 
 
+def _threshold_6dp(threshold: float) -> Decimal:
+    """``threshold`` as the exact 6-dp Decimal the exact joins prune
+    with. Their verify compares 6-dp-rounded scores against the raw
+    float, so a threshold carrying more decimals could round UP for
+    pruning and drop pairs the verify keeps: refuse it instead."""
+    t = Decimal(str(threshold))
+    if t.as_tuple().exponent < -6:
+        raise ValueError(f"threshold={threshold!r} has more than 6 "
+                         "decimals; the exact joins compare 6-dp scores "
+                         "— round the threshold to 6 dp")
+    return t.quantize(Decimal("0.000001"))
+
+
 def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
                                 id_col: str = "doc_id",
                                 k: int = DEFAULT_SHINGLE_K,
@@ -313,9 +327,8 @@ def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
     and the verify join shrinks proportionally. The emitted pair
     re-orients to the canonical (lesser id, greater id) afterward.
     """
-    from decimal import Decimal
-
-    t = F.lit(Decimal(str(threshold)).quantize(Decimal("0.000001")))
+    t6 = _threshold_6dp(threshold)
+    t = F.lit(t6)
     sh = _persist(shingled(df, text_col, id_col, k))
     tok = sh.select(F.col(id_col), F.size("hs").alias("n"),
                     F.explode("hs").alias("t"))
@@ -335,13 +348,9 @@ def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # the triangle_counts DECIMAL(38,0) integer-division discipline).
     s_units = 10 ** 6
     p_int = (F.lit(2).cast("decimal(38,0)")
-             * F.lit(int(Decimal(str(threshold))
-                         .quantize(Decimal("0.000001")) * s_units))
-             .cast("decimal(38,0)")
+             * F.lit(int(t6 * s_units)).cast("decimal(38,0)")
              * F.col("n").cast("decimal(38,0)"))
-    q_int = F.lit(int((Decimal("1") + Decimal(str(threshold))
-                       .quantize(Decimal("0.000001"))) * s_units)) \
-        .cast("decimal(38,0)")
+    q_int = F.lit(int((1 + t6) * s_units)).cast("decimal(38,0)")
     num = p_int + q_int - F.lit(1).cast("decimal(38,0)")
     alpha_min = ((num - num % q_int) / q_int).cast("long")
     a = prefix.select(F.col(id_col).alias("id1"), F.col("n").alias("n1"),
@@ -416,9 +425,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     Frequency table joins shuffle_hash (Heaps'-law growth, same rule as
     tf_idf); verify arrays ship as int32.
     """
-    from decimal import Decimal
-
-    t = F.lit(Decimal(str(threshold)).quantize(Decimal("0.000001")))
+    t = F.lit(_threshold_6dp(threshold))
     sh = _persist(shingled(df, text_col, id_col, k))
     tok = sh.select(F.col(id_col), F.size("hs").alias("n"),
                     F.explode("hs").alias("t"))

@@ -59,8 +59,28 @@ def _norm(a: Column) -> Column:
                               lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
+def _cos(a: Column, b: Column, an: Column, bn: Column) -> Column:
+    """Rounded cosine from norms the caller hoisted out of its join
+    fan-out (the same doubles, so the value is the naive form's)."""
+    return F.round(_dot(a, b) / (an * bn), 6)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+    return _cos(a, b, _norm(a), _norm(b))
+
+
+def _rank_topk(df: DataFrame, score: str, k: int,
+               ascending: bool = False) -> DataFrame:
+    """Each query's k best rows by ``score``, neighbor-id tie-break:
+    (query_id, neighbor_id, score, rank INT) — a window per query,
+    never a global sort."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order,
+                                               F.col("neighbor_id").asc())
+    return (df.withColumn("rank", F.row_number().over(w))
+              .filter(F.col("rank") <= k)
+              .select("query_id", "neighbor_id", score,
+                      F.col("rank").cast("int").alias("rank")))
 
 
 def _finite_ok(vec: Column) -> Column:
@@ -96,14 +116,9 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     scored = (F.broadcast(q).crossJoin(c)
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id",
-                      F.round(_dot(F.col("qv"), F.col("cv"))
-                              / (F.col("qn") * F.col("cn")), 6).alias("score")))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "score",
-                          F.col("rank").cast("int").alias("rank")))
+                      _cos(F.col("qv"), F.col("cv"), F.col("qn"),
+                           F.col("cn")).alias("score")))
+    return _rank_topk(scored, "score", k)
 
 
 def hyperplane_bucket(vec: Column | str, n_planes: int = 8, dims: int = 64) -> Column:
@@ -191,12 +206,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                                                 rows_per_band, (8, 4))
     scored = _lsh_scored(corpus, queries, id_col, vec_col,
                          bands, rows_per_band, dims)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "score",
-                          F.col("rank").cast("int").alias("rank")))
+    return _rank_topk(scored, "score", k)
 
 
 def _lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -230,9 +240,8 @@ def _lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
     return (cand.join(F.broadcast(qvec), "query_id")
                 .join(cvec, "neighbor_id")
                 .select("query_id", "neighbor_id",
-                        F.round(_dot(F.col("qv"), F.col("cv"))
-                                / (F.col("qn") * F.col("cn")), 6)
-                         .alias("score")))
+                        _cos(F.col("qv"), F.col("cv"), F.col("qn"),
+                             F.col("cn")).alias("score")))
 
 
 def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -260,12 +269,7 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5,
     scored = _persist(_lsh_scored(corpus, queries, id_col, vec_col,
                                   bands, rows_per_band, dims))
     banded = scored.filter((F.col("score") >= low) & (F.col("score") < high))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (banded.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "score",
-                          F.col("rank").cast("int").alias("rank")))
+    return _rank_topk(banded, "score", k)
 
 
 def hyperplane_band_keys(vec: Column, bands: int = 4, rows_per_band: int = 8,
@@ -385,8 +389,8 @@ def _banded_scored_pairs(corpus: DataFrame, id_col: str, vec_col: str,
                         _norm(F.col(vec_col)).alias("n2")).hint("shuffle_hash"))
     return (cand.join(v1, "id1").join(v2, "id2")
                 .select("id1", "id2",
-                        F.round(_dot(F.col("v1"), F.col("v2"))
-                                / (F.col("n1") * F.col("n2")), 6).alias("score")))
+                        _cos(F.col("v1"), F.col("v2"), F.col("n1"),
+                             F.col("n2")).alias("score")))
 
 
 def mutual_knn_pairs_banded(corpus: DataFrame, k: int = 3,
@@ -427,11 +431,19 @@ def mutual_knn_pairs_banded(corpus: DataFrame, k: int = 3,
                 .unionByName(scored.select(
                     F.col("id2").alias("qid"),
                     F.col("id1").alias("nid"), "score"))
+    return _mutual_edges(sym, k)
+
+
+def _mutual_edges(scored: DataFrame, k: int) -> DataFrame:
+    """Reciprocated top-k edges of a directed (qid, nid, score) frame
+    as canonical (id1 < id2) pairs: per-qid window, score desc with
+    nid tie-break. Top-k is persisted: the reciprocity semi-join reads
+    it as both `topk` and its flipped `rev` — without the cache the
+    scoring subtree + window run once per side (r16, guide §2.4
+    reuse)."""
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(),
                                           F.col("nid").asc())
-    # persist top-k too: the reciprocity semi-join reads it as both
-    # `topk` and its flipped `rev` — two full window passes otherwise
-    topk = _persist(sym.withColumn("rn", F.row_number().over(w))
+    topk = _persist(scored.withColumn("rn", F.row_number().over(w))
                     .filter(F.col("rn") <= k).select("qid", "nid"))
     rev = topk.select(F.col("nid").alias("qid"), F.col("qid").alias("nid"))
     return (topk.join(rev, ["qid", "nid"], "left_semi")
@@ -460,8 +472,8 @@ def semantic_dedup_pairs(corpus: DataFrame, centroids: DataFrame,
     assigned = _persist(ivf_assign(corpus, centroids, id_col, vec_col)
                         .withColumn("_n", _norm(F.col(vec_col))))
     a, b = assigned.alias("a"), assigned.alias("b")
-    score = F.round(_dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-                    / (F.col("a._n") * F.col("b._n")), 6)
+    score = _cos(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"),
+                 F.col("a._n"), F.col("b._n"))
     # compute-once barrier before the threshold filter (r16): pushed
     # into the self-join condition the interpreted-HOF dot product
     # would evaluate twice per within-list pair
@@ -519,24 +531,14 @@ def mutual_knn_pairs(corpus: DataFrame, centroids: DataFrame, k: int = 3,
             "max_list_size deliberately, or use mutual_knn_pairs_banded"
             " (collision-linear, no quantizer needed)")
     a, b = assigned.alias("a"), assigned.alias("b")
-    score = F.round(_dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-                    / (F.col("a._n") * F.col("b._n")), 6)
+    score = _cos(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"),
+                 F.col("a._n"), F.col("b._n"))
     scored = (a.join(b, (F.col("a.list_id") == F.col("b.list_id"))
                      & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")))
               .select(F.col(f"a.{id_col}").alias("qid"),
                       F.col(f"b.{id_col}").alias("nid"),
                       score.alias("score")))
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(),
-                                          F.col("nid").asc())
-    # persist top-k: the reciprocity semi-join reads it as both `topk`
-    # and its flipped `rev` — without the cache the within-list scoring
-    # self-join + window run once per side (r16, guide §2.4 reuse)
-    topk = _persist(scored.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") <= k).select("qid", "nid"))
-    rev = topk.select(F.col("nid").alias("qid"), F.col("qid").alias("nid"))
-    return (topk.join(rev, ["qid", "nid"], "left_semi")
-            .filter(F.col("qid") < F.col("nid"))
-            .select(F.col("qid").alias("id1"), F.col("nid").alias("id2")))
+    return _mutual_edges(scored, k)
 
 
 def label_centroids(corpus: DataFrame, id_col: str = "vec_id",
@@ -578,17 +580,41 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame,
     centroid (rounded score, list_id tie-break). Centroids broadcast; one
     window over the n_centroids-fanout — no shuffle of the corpus beyond
     the per-vector argmax."""
-    scored = (corpus.withColumn("_vn", _norm(F.col(vec_col)))
-              .crossJoin(F.broadcast(centroids.withColumn("_cn", _norm(F.col("centroid")))))
-              .select(F.col(id_col), F.col(vec_col),
-                      F.col("list_id"),
-                      F.round(_dot(F.col(vec_col), F.col("centroid"))
-                              / (F.col("_vn") * F.col("_cn")), 6).alias("cscore")))
-    w = Window.partitionBy(id_col).orderBy(F.col("cscore").desc(),
-                                           F.col("list_id").asc())
+    return (_nearest_centroids(corpus, id_col, vec_col, centroids, 1)
+            .select(id_col, vec_col, "list_id"))
+
+
+def _nearest_centroids(df: DataFrame, key: str, vec: str,
+                       centroids: DataFrame, n: int) -> DataFrame:
+    """The IVF probe: each ``key`` row's ``n`` highest-cosine
+    (list_id, centroid) rows, as df's columns plus list_id, centroid and
+    the rounded score ``cs`` (list_id tie-break). The centroid table
+    (n_lists rows) is broadcast and both norms are hoisted out of the
+    cross join; one window over the n_lists fan-out per key."""
+    scored = (df.withColumn("_qn", _norm(F.col(vec)))
+              .crossJoin(F.broadcast(
+                  centroids.withColumn("_cn", _norm(F.col("centroid")))))
+              .select(*df.columns, "list_id", "centroid",
+                      _cos(F.col(vec), F.col("centroid"), F.col("_qn"),
+                           F.col("_cn")).alias("cs")))
+    w = Window.partitionBy(key).orderBy(F.col("cs").desc(),
+                                        F.col("list_id").asc())
     return (scored.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1)
-                  .select(id_col, vec_col, "list_id"))
+                  .filter(F.col("rn") <= n))
+
+
+def _ivf_search(probes: DataFrame, lists: DataFrame, k: int, id_col: str,
+                vec_col: str) -> DataFrame:
+    """Exact rounded cosine of each probe row (query_id, qv, qn,
+    list_id) against the members (id, vec, list_id) of its probed list,
+    self-matches excluded, ranked top-k."""
+    scored = (probes.join(lists.withColumn("_vn", _norm(F.col(vec_col))),
+                          "list_id")
+              .filter(F.col("query_id") != F.col(id_col))
+              .select("query_id", F.col(id_col).alias("neighbor_id"),
+                      _cos(F.col("qv"), F.col(vec_col), F.col("qn"),
+                           F.col("_vn")).alias("score")))
+    return _rank_topk(scored, "score", k)
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_probe: int = 3,
@@ -602,31 +628,11 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_probe: int = 3
     queries = queries.filter(_finite_ok(F.col(vec_col)))
     cents = centroid_vectors(corpus, label_col, vec_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col)
-
-    qscored = (queries.select(F.col(id_col).alias("query_id"),
-                              F.col(vec_col).alias("qv"),
-                              _norm(F.col(vec_col)).alias("qn"))
-               .crossJoin(F.broadcast(cents.withColumn("_cn", _norm(F.col("centroid")))))
-               .select("query_id", "qv", "qn", "list_id",
-                       F.round(_dot(F.col("qv"), F.col("centroid"))
-                               / (F.col("qn") * F.col("_cn")), 6).alias("cscore")))
-    wq = Window.partitionBy("query_id").orderBy(F.col("cscore").desc(),
-                                                F.col("list_id").asc())
-    probes = (qscored.withColumn("rn", F.row_number().over(wq))
-                     .filter(F.col("rn") <= n_probe)
-                     .select("query_id", "qv", "qn", "list_id"))
-
-    scored = (probes.join(assigned.withColumn("_vn", _norm(F.col(vec_col))), "list_id")
-              .filter(F.col("query_id") != F.col(id_col))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
-                      F.round(_dot(F.col("qv"), F.col(vec_col))
-                              / (F.col("qn") * F.col("_vn")), 6).alias("score")))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "score",
-                          F.col("rank").cast("int").alias("rank")))
+    q = queries.select(F.col(id_col).alias("query_id"),
+                       F.col(vec_col).alias("qv"),
+                       _norm(F.col(vec_col)).alias("qn"))
+    probes = _nearest_centroids(q, "query_id", "qv", cents, n_probe)
+    return _ivf_search(probes, assigned, k, id_col, vec_col)
 
 
 def quantize_embeddings_int8(corpus: DataFrame, id_col: str = "vec_id",
@@ -748,22 +754,13 @@ def kmeans_assign(corpus: DataFrame, k: int = 8, iters: int = 2,
              .select(F.col(id_col).alias("list_id"),
                      F.col(vec_col).cast("array<double>").alias("centroid")))
     vecs = corpus.select(F.col(id_col),
-                         F.col(vec_col).cast("array<double>").alias("_v"),
-                         _norm(F.col(vec_col).cast("array<double>")).alias("_vn"))
+                         F.col(vec_col).cast("array<double>").alias("_v"))
     centroids = seeds
     assigned = None
     for it in range(iters):
-        scored = (vecs.crossJoin(F.broadcast(
-                      centroids.withColumn("_cn", _norm(F.col("centroid")))))
-                  .select(id_col, "_v", "list_id",
-                          F.round(_dot(F.col("_v"), F.col("centroid"))
-                                  / (F.col("_vn") * F.col("_cn")), 6)
-                           .alias("score")))
-        w = Window.partitionBy(id_col).orderBy(F.col("score").desc(),
-                                               F.col("list_id").asc())
-        assigned = (scored.withColumn("rn", F.row_number().over(w))
-                          .filter(F.col("rn") == 1)
-                          .select(id_col, "_v", "list_id", "score"))
+        assigned = (_nearest_centroids(vecs, id_col, "_v", centroids, 1)
+                    .select(id_col, "_v", "list_id",
+                            F.col("cs").alias("score")))
         centroids = centroid_vectors(assigned, label_col="list_id",
                                      vec_col="_v")
         # deep runs: truncate lineage every few rounds, the same lazy
@@ -781,6 +778,53 @@ def kmeans_assign(corpus: DataFrame, k: int = 8, iters: int = 2,
         F.col("score"))
 
 
+def _lowest_id_dims(corpus: DataFrame, id_col: str,
+                    vec_col: str) -> int | None:
+    """Length of the lowest-id vector (None for an empty corpus) — the
+    index builds' dims pin: a 1-row scalar peek, same class as the CC
+    convergence check, so wrong-dimension vectors can't smuggle into an
+    arbitrary list with an all-NULL argmax."""
+    ref = (corpus.select(F.size(F.col(vec_col)).alias("n"),
+                         F.col(id_col).alias("i"))
+                 .orderBy("i").limit(1).collect())
+    return int(ref[0]["n"]) if ref else None
+
+
+def _train_coarse(corpus: DataFrame, n_lists: int, iters: int,
+                  id_col: str, vec_col: str) -> tuple[DataFrame, DataFrame]:
+    """Train the coarse quantizer: (trained, coarse) where trained is
+    (id, _v, list_id) — double vectors with their LAST k-means
+    assignment, persisted (owned by the caller's cache_scope) because
+    the centroid update, the residual encode and the ADD step all read
+    it — and coarse the final centroid update (list_id, centroid),
+    which that assignment lags by one step (Lloyd's, bounded iters)."""
+    labels = kmeans_assign(corpus, k=n_lists, iters=iters,
+                           id_col=id_col, vec_col=vec_col)
+    trained = _persist(
+        corpus.select(F.col(id_col),
+                      F.col(vec_col).cast("array<double>").alias("_v"))
+              .join(labels.select(id_col,
+                                  F.col("cluster_id").alias("list_id")),
+                    id_col))
+    return trained, centroid_vectors(trained, label_col="list_id",
+                                     vec_col="_v")
+
+
+def _train_and_add(corpus: DataFrame, n_lists: int, iters: int,
+                   id_col: str, vec_col: str) -> tuple[DataFrame, DataFrame]:
+    """TRAIN then ADD, the FAISS split both index builds take: after
+    `_train_coarse` every vector is re-assigned against the final
+    centroids (`ivf_assign`), so the stored lists are exactly the
+    stored quantizer's Voronoi partition — what the index queries probe
+    and what appends assign against. Returns (labeled (id, _v,
+    list_id), persisted; coarse (list_id, centroid))."""
+    trained, coarse = _train_coarse(corpus, n_lists, iters, id_col, vec_col)
+    labeled = _persist(ivf_assign(trained.select(id_col, "_v"), coarse,
+                                  id_col=id_col, vec_col="_v"))
+    return labeled, coarse
+
+
+@cache_scope()
 def ivf_index_build(corpus: DataFrame, index_dir: str, k: int = 8,
                     iters: int = 2, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> None:
@@ -792,33 +836,23 @@ def ivf_index_build(corpus: DataFrame, index_dir: str, k: int = 8,
 
     Layout: ``{index_dir}/centroids.parquet`` (k rows) and
     ``{index_dir}/lists.parquet/cluster_id=<id>/`` (the vectors, one
-    directory per list). Writing repartitions BY THE PARTITION COLUMN
-    first so each list directory is written by the tasks owning that
-    key — without it, every task appends a file to every list
+    directory per list). Each vector's list is its nearest stored
+    centroid (`_train_and_add`). Writing repartitions BY THE PARTITION
+    COLUMN first so each list directory is written by the tasks owning
+    that key — without it, every task appends a file to every list
     (tasks × k small files, the classic partitioned-write mistake).
     """
-    # hygiene gate (see finite_vectors): dims pinned to the lowest-id
-    # vector's length — a 1-row scalar peek, same class as the CC
-    # convergence check — so wrong-dimension vectors can't smuggle into
-    # an arbitrary list with an all-NULL argmax
-    ref = (corpus.select(F.size(F.col(vec_col)).alias("n"),
-                         F.col(id_col).alias("i"))
-                 .orderBy("i").limit(1).collect())
-    dims = int(ref[0]["n"]) if ref else None
-    corpus = finite_vectors(corpus, vec_col, dims=dims)
-    assign = kmeans_assign(corpus, k=k, iters=iters, id_col=id_col,
-                           vec_col=vec_col)
-    vecs = corpus.select(F.col(id_col),
-                         F.col(vec_col).cast("array<double>").alias(vec_col))
-    listed = vecs.join(assign.select(id_col, "cluster_id"), id_col)
-    (listed.repartition(F.col("cluster_id"))
-           .write.mode("overwrite").partitionBy("cluster_id")
-           .parquet(f"{index_dir}/lists.parquet"))
-    cents = centroid_vectors(
-        listed.select(id_col, F.col(vec_col).alias("_v"), "cluster_id"),
-        label_col="cluster_id", vec_col="_v")
-    (cents.withColumnRenamed("list_id", "cluster_id")
-          .write.mode("overwrite").parquet(f"{index_dir}/centroids.parquet"))
+    # hygiene gate (see finite_vectors), dims pinned by the lowest id
+    corpus = finite_vectors(corpus, vec_col,
+                            dims=_lowest_id_dims(corpus, id_col, vec_col))
+    labeled, coarse = _train_and_add(corpus, k, iters, id_col, vec_col)
+    (labeled.select(id_col, F.col("_v").alias(vec_col),
+                    F.col("list_id").alias("cluster_id"))
+            .repartition(F.col("cluster_id"))
+            .write.mode("overwrite").partitionBy("cluster_id")
+            .parquet(f"{index_dir}/lists.parquet"))
+    (coarse.withColumnRenamed("list_id", "cluster_id")
+           .write.mode("overwrite").parquet(f"{index_dir}/centroids.parquet"))
 
 
 def ivf_index_topk(spark, index_dir: str, queries: DataFrame, k: int = 5,
@@ -836,43 +870,25 @@ def ivf_index_topk(spark, index_dir: str, queries: DataFrame, k: int = 5,
     never collected, and the pruned scan is visible as PartitionFilters
     in the physical plan (pinned by test_ivf_index_prunes_partitions).
 
-    Results are identical to the in-memory ivf_topk with the same
-    trained centroids: same rounded-cosine probe selection, same
-    tie-breaks, same within-list ranking.
+    Results are identical to the in-memory `ivf_topk` run with
+    ``label_col`` = the `kmeans_assign` cluster_id of the same corpus,
+    k and iters: both take the centroids from those labels, file every
+    vector under its nearest centroid, and share the probe
+    (`_nearest_centroids`) and the within-list ranking (`_ivf_search`).
     """
-    cents = spark.read.parquet(f"{index_dir}/centroids.parquet")
-    queries = queries.filter(_finite_ok(F.col(vec_col)))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    q = q.withColumn("qn", _norm(F.col("qv")))
-    qscored = (q.crossJoin(F.broadcast(
-                   cents.withColumn("_cn", _norm(F.col("centroid")))))
-                .select("query_id", "qv", "qn", "cluster_id",
-                        F.round(_dot(F.col("qv"), F.col("centroid"))
-                                / (F.col("qn") * F.col("_cn")), 6)
-                         .alias("cscore")))
-    wq = Window.partitionBy("query_id").orderBy(F.col("cscore").desc(),
-                                                F.col("cluster_id").asc())
-    probes = (qscored.withColumn("rn", F.row_number().over(wq))
-                     .filter(F.col("rn") <= n_probe)
-                     .select("query_id", "qv", "qn", "cluster_id"))
-    probe_lists = sorted({r["cluster_id"] for r in
-                          probes.select("cluster_id").distinct().collect()})
+    cents = (spark.read.parquet(f"{index_dir}/centroids.parquet")
+             .withColumnRenamed("cluster_id", "list_id"))
+    q = queries.filter(_finite_ok(F.col(vec_col))).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"))
+    probes = _nearest_centroids(q.withColumn("qn", _norm(F.col("qv"))),
+                                "query_id", "qv", cents, n_probe)
+    probe_lists = sorted({r["list_id"] for r in
+                          probes.select("list_id").distinct().collect()})
     lists = (spark.read.parquet(f"{index_dir}/lists.parquet")
-             .filter(F.col("cluster_id").isin(probe_lists)))
-    scored = (probes.join(lists.withColumn("_vn", _norm(F.col(vec_col))),
-                          "cluster_id")
-              .filter(F.col("query_id") != F.col(id_col))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
-                      F.round(_dot(F.col("qv"), F.col(vec_col))
-                              / (F.col("qn") * F.col("_vn")), 6)
-                       .alias("score")))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "score",
-                          F.col("rank").cast("int").alias("rank")))
+             .filter(F.col("cluster_id").isin(probe_lists))
+             .withColumnRenamed("cluster_id", "list_id"))
+    return _ivf_search(probes, lists, k, id_col, vec_col)
 
 
 def finite_vectors(df: DataFrame, vec_col: str = "embedding",
@@ -894,12 +910,9 @@ def finite_vectors(df: DataFrame, vec_col: str = "embedding",
     of a multi-operator pipeline. `ivf_index_build` applies it
     unconditionally — an index must never ingest garbage.
     """
-    v = F.col(vec_col)
-    finite = F.forall(v, lambda x: ~F.isnan(x)
-                      & (x > float("-inf")) & (x < float("inf")))
-    ok = finite & (_norm(v) > 0)
+    ok = _finite_ok(F.col(vec_col))
     if dims is not None:
-        ok = ok & (F.size(v) == dims)
+        ok = ok & (F.size(F.col(vec_col)) == dims)
     return df.filter(ok)
 
 
@@ -1018,18 +1031,60 @@ def _pq_assign(subs: DataFrame, codebook: DataFrame,
     certified convention for raw-vector corpora (pq_train on raw
     embeddings), where inputs aren't 6-dp and the decimal cast could
     not recover exact products anyway."""
-    cb = codebook.withColumn("_cc", _dot(F.col("centroid"), F.col("centroid")))
-    d2 = (_sqdist_exact(F.col("sv"), F.col("centroid")) if exact else
-          _sqdist(F.col("sv"), F.col("centroid"),
-                  aa=F.col("_svv"), bb=F.col("_cc")))
-    scored = (subs.join(F.broadcast(cb), "sub")
-              .select(id_col, "sub", "sv", "_svv", "list_id",
-                      d2.alias("d2")))
+    scored = _pq_dists(subs, codebook,
+                       [id_col, "sub", "sv", "_svv", "list_id"], exact)
     w = Window.partitionBy(id_col, "sub").orderBy(F.col("d2").asc(),
                                                   F.col("list_id").asc())
     return (scored.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1)
-                  .select(id_col, "sub", "sv", "_svv", "list_id", "d2"))
+                  .filter(F.col("rn") == 1).drop("rn"))
+
+
+def _pq_dists(subs: DataFrame, codebook: DataFrame, cols: list,
+              exact: bool = False) -> DataFrame:
+    """``cols`` plus d2, the rounded squared L2 from each subvector
+    (sub, sv, _svv) to every centroid of its subspace — the scoring
+    step of `_pq_assign` and, over query subvectors, the ADC lookup
+    table. The codebook (m × k rows, operator constants) is broadcast.
+    ``exact`` takes `_sqdist_exact`'s decimal path (6-dp inputs);
+    otherwise `_sqdist` with both self-dots hoisted."""
+    if exact:
+        cb, d2 = codebook, _sqdist_exact(F.col("sv"), F.col("centroid"))
+    else:
+        cb = codebook.withColumn("_cc", _dot(F.col("centroid"),
+                                             F.col("centroid")))
+        d2 = _sqdist(F.col("sv"), F.col("centroid"),
+                     aa=F.col("_svv"), bb=F.col("_cc"))
+    return subs.join(F.broadcast(cb), "sub").select(*cols, d2.alias("d2"))
+
+
+def _adc_sum(coded: DataFrame, lut: DataFrame, on: list[str]) -> DataFrame:
+    """ADC scoring: each neighbor's code rows join the broadcast LUT on
+    ``on`` and its m table entries sum as DECIMAL(20,6) (order-
+    independent) to (query_id, neighbor_id, adc_d2); self-matches
+    excluded."""
+    return (coded.join(F.broadcast(lut), on)
+                 .filter(F.col("query_id") != F.col("neighbor_id"))
+                 .groupBy("query_id", "neighbor_id")
+                 .agg(F.round(F.sum(F.col("d2").cast("decimal(20,6)"))
+                               .cast("double"), 6).alias("adc_d2")))
+
+
+def _rerank_exact(short: DataFrame, queries: DataFrame, nv: DataFrame,
+                  k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact squared-L2 re-rank of an ADC shortlist (query_id,
+    neighbor_id): neighbor vectors ``nv`` (neighbor_id, _nv) join the
+    broadcast shortlist (|queries| × shortlist rows), and query vectors
+    are built from the QUERIES parameter — never fetched from the
+    corpus by id (the r9 lesson) — so neither broadcast grows with the
+    corpus. Float `_sqdist`: raw vectors are not 6-dp."""
+    qv = queries.filter(_finite_ok(F.col(vec_col))).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("_qv"))
+    exact = (nv.join(F.broadcast(short), "neighbor_id")
+               .join(F.broadcast(qv), "query_id")
+               .select("query_id", "neighbor_id",
+                       _sqdist(F.col("_qv"), F.col("_nv")).alias("d2")))
+    return _rank_topk(exact, "d2", k, ascending=True)
 
 
 def pq_train(corpus: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
@@ -1118,24 +1173,11 @@ def pq_topk(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
     q = queries.filter(_finite_ok(F.col(vec_col))).select(
         F.col(id_col).alias("query_id"), F.col(vec_col))
     qsubs = _pq_subvectors(q, m, dims // m, "query_id", vec_col)
-    cb = codebook.withColumn("_cc", _dot(F.col("centroid"), F.col("centroid")))
-    lut = (qsubs.join(F.broadcast(cb), "sub")
-           .select("query_id", "sub", "list_id",
-                   _sqdist(F.col("sv"), F.col("centroid"),
-                           aa=F.col("_svv"), bb=F.col("_cc")).alias("d2")))
-    scored = (codes.select(F.col(id_col).alias("neighbor_id"), "sub",
-                           "list_id")
-              .join(F.broadcast(lut), ["sub", "list_id"])
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .groupBy("query_id", "neighbor_id")
-              .agg(F.round(F.sum(F.col("d2").cast("decimal(20,6)"))
-                            .cast("double"), 6).alias("adc_d2")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "adc_d2",
-                          F.col("rank").cast("int").alias("rank")))
+    lut = _pq_dists(qsubs, codebook, ["query_id", "sub", "list_id"])
+    coded = codes.select(F.col(id_col).alias("neighbor_id"), "sub",
+                         "list_id")
+    return _rank_topk(_adc_sum(coded, lut, ["sub", "list_id"]), "adc_d2",
+                      k, ascending=True)
 
 
 def pq_topk_rerank(codes: DataFrame, codebook: DataFrame,
@@ -1165,26 +1207,14 @@ def pq_topk_rerank(codes: DataFrame, codebook: DataFrame,
     vector each) — never from the corpus, so neither broadcast grows
     with corpus size, and query sets not contained in the corpus (or
     colliding with corpus ids) get their own vectors, not a corpus
-    row's."""
+    row's (`_rerank_exact`)."""
     short = pq_topk(codes, codebook, queries, k=shortlist, m=m, dims=dims,
                     id_col=id_col, vec_col=vec_col) \
         .select("query_id", "neighbor_id")
-    qv = queries.filter(_finite_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"))
     nv = corpus.filter(_finite_ok(F.col(vec_col))).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_nv"))
-    exact = (nv.join(F.broadcast(short), "neighbor_id")
-               .join(F.broadcast(qv), "query_id")
-               .select("query_id", "neighbor_id",
-                       _sqdist(F.col("_qv"), F.col("_nv")).alias("d2")))
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(),
-                                               F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id", "d2",
-                         F.col("rank").cast("int").alias("rank")))
+    return _rerank_exact(short, queries, nv, k, id_col, vec_col)
 
 
 def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -1222,74 +1252,70 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     "PQ/IVFADC recall" for the measured plateau on unstructured random
     corpora and when this composition is the right tool."""
     corpus = corpus.filter(_finite_ok(F.col(vec_col)))
-    labels = kmeans_assign(corpus, k=n_lists, iters=iters,
-                           id_col=id_col, vec_col=vec_col)
-    # persist the assignment and the residual frames (owned by the
-    # caller's cache_scope): the k-means lineage would
-    # otherwise re-execute once per downstream reference — coarse
-    # centroids, residual encode, the codes⋈labels join, and each of
-    # pq_train's per-iteration scans (measured 2.34× → 1.8× on the 8×
-    # probe). Both frames are signature-sized: ids + list ids + one
-    # vector per row, the same class the banded tables persist.
-    labeled = _persist(
-        corpus.select(F.col(id_col),
-                      F.col(vec_col).cast("array<double>").alias("_v"))
-              .join(labels.select(id_col,
-                                  F.col("cluster_id").alias("list_id")),
-                    id_col))
-    coarse = centroid_vectors(labeled, label_col="list_id", vec_col="_v")
-    res = _persist(
-        labeled.join(F.broadcast(coarse), "list_id")
-               .select(id_col, "list_id",
-                       F.zip_with("_v", "centroid",
-                                  lambda a, b: F.round(a - b, 6))
-                        .alias("rv")))
+    # lists are the lagged k-means assignment (no ADD step: the lists
+    # this key's oracle certifies); the residual frame is persisted
+    # (owned by the caller's cache_scope) so pq_train's scans reuse it
+    # instead of re-running the encode (measured 2.34× → 1.8× on the 8×
+    # probe together with _train_coarse's cache)
+    labeled, coarse = _train_coarse(corpus, n_lists, iters, id_col, vec_col)
+    res = _persist(_residuals(labeled, coarse, id_col))
     codes, codebook = pq_train(res, m=m, k=codes_k, iters=iters, dims=dims,
                                id_col=id_col, vec_col="rv")
     cb = codebook.select("sub", F.col("list_id").alias("code"),
                          "centroid")
-
-    q = queries.filter(_finite_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"))
-    cscored = (q.withColumn("_qn", _norm(F.col("qv")))
-               .crossJoin(F.broadcast(
-                   coarse.withColumn("_cn", _norm(F.col("centroid")))))
-               .select("query_id", "qv", "list_id", "centroid",
-                       F.round(_dot(F.col("qv"), F.col("centroid"))
-                               / (F.col("_qn") * F.col("_cn")), 6)
-                        .alias("cs")))
-    wp = Window.partitionBy("query_id").orderBy(F.col("cs").desc(),
-                                                F.col("list_id").asc())
-    probes = (cscored.withColumn("rn", F.row_number().over(wp))
-              .filter(F.col("rn") <= n_probe)
-              .select(F.struct("query_id", "list_id").alias("qkey"),
-                      F.zip_with("qv", "centroid",
-                                 lambda a, b: F.round(a - b, 6))
-                       .alias("rq")))
-    qsubs = _pq_subvectors(probes, m, dims // m, "qkey", "rq")
-    cbx = cb.withColumn("_cc", _dot(F.col("centroid"), F.col("centroid")))
-    lut = (qsubs.join(F.broadcast(cbx), "sub")
-           .select(F.col("qkey.query_id").alias("query_id"),
-                   F.col("qkey.list_id").alias("list_id"),
-                   "sub", "code",
-                   _sqdist(F.col("sv"), F.col("centroid"),
-                           aa=F.col("_svv"), bb=F.col("_cc")).alias("d2")))
+    lut = _ivfpq_lut(queries, coarse, cb, n_probe, m, dims, id_col,
+                     vec_col, exact=False)[1]
     coded = (codes.select(F.col(id_col).alias("neighbor_id"), "sub",
                           F.col("list_id").alias("code"))
              .join(labeled.select(F.col(id_col).alias("neighbor_id"),
                                   "list_id"), "neighbor_id"))
-    scored = (coded.join(F.broadcast(lut), ["list_id", "sub", "code"])
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .groupBy("query_id", "neighbor_id")
-              .agg(F.round(F.sum(F.col("d2").cast("decimal(20,6)"))
-                            .cast("double"), 6).alias("adc_d2")))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "adc_d2",
-                          F.col("rank").cast("int").alias("rank")))
+    return _rank_topk(_adc_sum(coded, lut, ["list_id", "sub", "code"]),
+                      "adc_d2", k, ascending=True)
+
+
+def _residual(a: Column, b: Column) -> Column:
+    """v − centroid, ROUNDED 6 dp at creation: a 6-dp double re-rounds
+    to DECIMAL unambiguously in both engines, raw differences would
+    not."""
+    return F.zip_with(a, b, lambda x, y: F.round(x - y, 6))
+
+
+def _residuals(labeled: DataFrame, coarse: DataFrame,
+               id_col: str) -> DataFrame:
+    """Residual encode (id, list_id, rv) of list-labeled vectors (id,
+    _v, list_id) against their list's centroid; the coarse table
+    (n_lists rows) is broadcast."""
+    return (labeled.join(F.broadcast(coarse), "list_id")
+                   .select(id_col, "list_id",
+                           _residual(F.col("_v"), F.col("centroid"))
+                           .alias("rv")))
+
+
+def _ivfpq_lut(queries: DataFrame, coarse: DataFrame, codebook: DataFrame,
+               n_probe: int, m: int, dims: int, id_col: str, vec_col: str,
+               exact: bool) -> tuple[DataFrame, DataFrame]:
+    """The IVFADC query stages shared by `ivfpq_topk` and the index
+    queries: probe each query's ``n_probe`` nearest coarse lists, take
+    its residual against each probed centroid, and build the ADC lookup
+    table (query_id, list_id, sub, code, d2) over the (sub, code,
+    centroid) codebook — |queries| × n_probe × m × codes_k rows.
+    Returns (probes keyed by qkey = (query_id, list_id), lut).
+    ``exact`` as in `_pq_dists`: the index passes True (residual
+    queries and stored centroids are both 6-dp, so its hash-compared
+    result must not ride on cross-engine float-rounding luck)."""
+    q = queries.filter(_finite_ok(F.col(vec_col))).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"))
+    probes = (_nearest_centroids(q, "query_id", "qv", coarse, n_probe)
+              .select(F.struct("query_id", "list_id").alias("qkey"),
+                      _residual(F.col("qv"), F.col("centroid"))
+                      .alias("rq")))
+    qsubs = _pq_subvectors(probes, m, dims // m, "qkey", "rq")
+    lut = _pq_dists(qsubs, codebook,
+                    [F.col("qkey.query_id").alias("query_id"),
+                     F.col("qkey.list_id").alias("list_id"), "sub", "code"],
+                    exact)
+    return probes, lut
 
 
 @cache_scope()
@@ -1339,32 +1365,13 @@ def ivfpq_index_build(corpus: DataFrame, index_dir: str, n_lists: int = 8,
     duplicate appended later gets byte-identical codes to its
     build-time twin. The registry key carries its own fully-unrolled
     DuckDB oracle (train → re-assign → residual PQ → ADC)."""
-    ref = (corpus.select(F.size(F.col(vec_col)).alias("n"),
-                         F.col(id_col).alias("i"))
-                 .orderBy("i").limit(1).collect())
-    ref_dims = int(ref[0]["n"]) if ref else dims
-    if ref_dims != dims:
+    ref_dims = _lowest_id_dims(corpus, id_col, vec_col)
+    if ref_dims not in (None, dims):
         raise ValueError(f"corpus vectors have {ref_dims} dims, "
                          f"index built for {dims}")
     corpus = finite_vectors(corpus, vec_col, dims=dims)
-    labels = kmeans_assign(corpus, k=n_lists, iters=iters,
-                           id_col=id_col, vec_col=vec_col)
-    vecs = _persist(
-        corpus.select(F.col(id_col),
-                      F.col(vec_col).cast("array<double>").alias("_v")))
-    trained = vecs.join(labels.select(id_col,
-                                      F.col("cluster_id").alias("list_id")),
-                        id_col)
-    coarse = centroid_vectors(trained, label_col="list_id", vec_col="_v")
-    # ADD: re-assign every vector against the final (stored) centroids
-    labeled = _persist(ivf_assign(vecs, coarse, id_col=id_col,
-                                  vec_col="_v"))
-    res = _persist(
-        labeled.join(F.broadcast(coarse), "list_id")
-               .select(id_col, "list_id",
-                       F.zip_with("_v", "centroid",
-                                  lambda a, b: F.round(a - b, 6))
-                        .alias("rv")))
+    labeled, coarse = _train_and_add(corpus, n_lists, iters, id_col, vec_col)
+    res = _persist(_residuals(labeled, coarse, id_col))
     codes, codebook = pq_train(res, m=m, k=codes_k, iters=iters, dims=dims,
                                id_col=id_col, vec_col="rv", exact=True)
     coded = (codes.select(F.col(id_col), "sub",
@@ -1404,18 +1411,16 @@ def ivfpq_index_topk(spark, index_dir: str, queries: DataFrame, k: int = 5,
     n_probe/n_lists of the CODE table — never a corpus vector —
     so the whole read is (pruned fraction) × (compressed bytes).
 
-    ADC math is `ivfpq_topk`'s exactly: residual queries rounded 6 dp,
-    broadcast |queries| × n_probe × m × codes_k LUT, DECIMAL(20,6) code
-    sums, id tie-breaks, self-matches excluded — results are identical
-    to the in-memory composition on the same data and constants."""
+    ADC math shares `ivfpq_topk`'s stages (`_ivfpq_lut`, `_adc_sum`):
+    residual queries rounded 6 dp, broadcast |queries| × n_probe × m ×
+    codes_k LUT, DECIMAL(20,6) code sums, id tie-breaks, self-matches
+    excluded. It is not `ivfpq_topk`'s answer: the index lists come
+    from the ADD step and its LUT is decimal-exact (`_sqdist_exact`),
+    where the in-memory form keeps the lagged k-means lists and the
+    float LUT its own oracle certifies."""
     scored = _ivfpq_index_adc(spark, index_dir, queries, n_probe, m,
                               dims, id_col, vec_col)[0]
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("query_id", "neighbor_id", "adc_d2",
-                          F.col("rank").cast("int").alias("rank")))
+    return _rank_topk(scored, "adc_d2", k, ascending=True)
 
 
 def _ivfpq_index_adc(spark, index_dir: str, queries: DataFrame,
@@ -1425,48 +1430,17 @@ def _ivfpq_index_adc(spark, index_dir: str, queries: DataFrame,
     (query_id, neighbor_id, adc_d2) candidate frame over the probed
     lists plus the probed-list ids (for pruning sibling partition
     tables, e.g. the re-rank vector fetch)."""
-    coarse = spark.read.parquet(f"{index_dir}/coarse_centroids.parquet")
-    cb = spark.read.parquet(f"{index_dir}/codebook.parquet")
-    q = queries.filter(_finite_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"))
-    cscored = (q.withColumn("_qn", _norm(F.col("qv")))
-               .crossJoin(F.broadcast(
-                   coarse.withColumn("_cn", _norm(F.col("centroid")))))
-               .select("query_id", "qv", "list_id", "centroid",
-                       F.round(_dot(F.col("qv"), F.col("centroid"))
-                               / (F.col("_qn") * F.col("_cn")), 6)
-                        .alias("cs")))
-    wp = Window.partitionBy("query_id").orderBy(F.col("cs").desc(),
-                                                F.col("list_id").asc())
-    probes = (cscored.withColumn("rn", F.row_number().over(wp))
-              .filter(F.col("rn") <= n_probe)
-              .select(F.struct("query_id", "list_id").alias("qkey"),
-                      F.zip_with("qv", "centroid",
-                                 lambda a, b: F.round(a - b, 6))
-                       .alias("rq")))
+    probes, lut = _ivfpq_lut(
+        queries, spark.read.parquet(f"{index_dir}/coarse_centroids.parquet"),
+        spark.read.parquet(f"{index_dir}/codebook.parquet"), n_probe, m,
+        dims, id_col, vec_col, exact=True)
     probe_lists = sorted({r["qkey"]["list_id"] for r in
                           probes.select("qkey").distinct().collect()})
     coded = (spark.read.parquet(f"{index_dir}/codes.parquet")
              .filter(F.col("list_id").isin(probe_lists))
              .select(F.col(id_col).alias("neighbor_id"), "sub", "code",
                      "list_id"))
-    qsubs = _pq_subvectors(probes, m, dims // m, "qkey", "rq")
-    # exact-decimal LUT distances (residual queries and stored
-    # centroids are both 6-dp — see _sqdist_exact): the hash-compared
-    # result must not ride on cross-engine float-rounding luck
-    lut = (qsubs.join(F.broadcast(cb), "sub")
-           .select(F.col("qkey.query_id").alias("query_id"),
-                   F.col("qkey.list_id").alias("list_id"),
-                   "sub", "code",
-                   _sqdist_exact(F.col("sv"), F.col("centroid"))
-                   .alias("d2")))
-    scored = (coded.join(F.broadcast(lut), ["list_id", "sub", "code"])
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .groupBy("query_id", "neighbor_id")
-              .agg(F.round(F.sum(F.col("d2").cast("decimal(20,6)"))
-                            .cast("double"), 6).alias("adc_d2")))
-    return scored, probe_lists
+    return _adc_sum(coded, lut, ["list_id", "sub", "code"]), probe_lists
 
 
 def ivfpq_index_topk_rerank(spark, index_dir: str, queries: DataFrame,
@@ -1494,23 +1468,11 @@ def ivfpq_index_topk_rerank(spark, index_dir: str, queries: DataFrame,
     short = (scored.withColumn("rn", F.row_number().over(ws))
              .filter(F.col("rn") <= shortlist)
              .select("query_id", "neighbor_id"))
-    qv = queries.filter(_finite_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"))
     nv = (spark.read.parquet(f"{index_dir}/vectors.parquet")
           .filter(F.col("list_id").isin(probe_lists))
           .select(F.col(id_col).alias("neighbor_id"),
                   F.col("v").alias("_nv")))
-    exact = (nv.join(F.broadcast(short), "neighbor_id")
-               .join(F.broadcast(qv), "query_id")
-               .select("query_id", "neighbor_id",
-                       _sqdist(F.col("_qv"), F.col("_nv")).alias("d2")))
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(),
-                                               F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("query_id", "neighbor_id", "d2",
-                         F.col("rank").cast("int").alias("rank")))
+    return _rerank_exact(short, queries, nv, k, id_col, vec_col)
 
 
 @cache_scope()
@@ -1550,12 +1512,7 @@ def ivfpq_index_append(spark, index_dir: str, increment: DataFrame,
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("_v"))
     assigned = ivf_assign(inc, coarse, id_col=id_col, vec_col="_v")
-    res = _persist(
-        assigned.join(F.broadcast(coarse), "list_id")
-                .select(id_col, "list_id",
-                        F.zip_with("_v", "centroid",
-                                   lambda a, b: F.round(a - b, 6))
-                         .alias("rv")))
+    res = _persist(_residuals(assigned, coarse, id_col))
     subs = _pq_subvectors(res, m, dims // m, id_col, "rv")
     enc = _pq_assign(
         subs, cb.select("sub", F.col("code").alias("list_id"), "centroid"),
@@ -1940,10 +1897,11 @@ def _cov_cells(centered: DataFrame, dims: int, round_dp: int = 6) -> DataFrame:
     within ~1e-10·|v| of the decimal it rounds to, so rint(c·1e6) is
     exact; a loud guard raises if a caller ever passes unrounded
     values), one int64 matmul per chunk accumulates the exact
-    1e-12-unit product sums (chunks of 1e6 rows keep |partial| ≤ 4e18
-    < 2^63; chunk totals then accumulate in arbitrary-precision Python
-    ints), and each task emits d(d+1)/2 partial rows as
-    DECIMAL(38,12). The only exchange is that schema-bounded partial
+    1e-12-unit product sums (each chunk's row count is sized from the
+    batch's max|c| so its partial stays < 2^63, and a value too large
+    for even one product raises; chunk totals then accumulate in
+    arbitrary-precision Python ints), and each task emits d(d+1)/2
+    partial rows as DECIMAL(38,12). The only exchange is that schema-bounded partial
     frame. Bit-identical to the decimal-explode path — the product of
     two 6-dp doubles cast to DECIMAL(38,12) IS the exact 12-dp decimal
     product (the established exactness argument), and integer units
@@ -1964,6 +1922,7 @@ def _cov_cells(centered: DataFrame, dims: int, round_dp: int = 6) -> DataFrame:
         import numpy as np
         acc = [0] * n_pairs
         cnt = 0
+        i64 = 2 ** 63 - 1
         iu_a = np.array(iu, dtype=np.int64)
         ju_a = np.array(ju, dtype=np.int64)
         for batch in batches:
@@ -1983,11 +1942,19 @@ def _cov_cells(centered: DataFrame, dims: int, round_dp: int = 6) -> DataFrame:
                     "replicates the DECIMAL(38,12) contract for "
                     "round(x, 6) inputs (round the caller's column "
                     "first)")
+            # chunk so no int64 partial can overflow: with mx = max|c|
+            # in units, each product is ≤ mx² and a chunk of
+            # (2^63−1) // mx² rows sums to ≤ 2^63−1
+            mx = int(np.max(np.abs(ci))) if ci.size else 0
+            if mx * mx > i64:
+                raise ValueError(
+                    f"_cov_cells: |centered value| {mx / 1e6} is past "
+                    "~3037, where one product overflows int64 1e-12 "
+                    "units")
+            rows = i64 // (mx * mx) if mx else max(ci.shape[0], 1)
             ci = ci.astype(np.int64)
-            # chunk so int64 partials cannot overflow: |c| ≤ ~2e6 units
-            # → |product| ≤ 4e12; 1e6 rows/chunk → |chunk sum| ≤ 4e18
-            for lo in range(0, ci.shape[0], 1_000_000):
-                ch = ci[lo:lo + 1_000_000]
+            for lo in range(0, ci.shape[0], rows):
+                ch = ci[lo:lo + rows]
                 tri = (ch.T @ ch)[iu_a, ju_a]
                 for p in range(n_pairs):
                     acc[p] += int(tri[p])

@@ -122,6 +122,21 @@ _REVALIDATE: tuple[str, ...] = (
     # registry corpus has no negative weights so the result is
     # identical, but the physical plan lost the filter node.
     "graph_shortest_paths",           # r12 cert; filter -> guard probe
+    # Shared ANN stages (operators/similarity.py): every probe/assign now
+    # runs through _nearest_centroids (renamed score/norm columns, the
+    # n=1 argmax filters rn <= 1); answers are bit-identical locally.
+    "kmeans_cluster_assign",          # k-means assign via shared probe
+    "similarity_topk_ivf",            # probe + ivf_assign via shared probe
+    "similarity_topk_ivf_trained",    # k-means + IVF probe, shared probe
+    "similarity_topk_ivfpq",          # k-means training via shared probe
+    "dedup_semantic_ivf",             # ivf_assign via shared probe
+    "similarity_topk_pq_rerank",      # _rerank_exact: lambda order only
+    # r16 cohort (prefix/containment rewrite, compute-once barriers):
+    # not re-certified by an oracle sample since r16
+    "dedup_prefix_filter_exact",      # r16 asymmetric prefix + barrier
+    "dedup_ngram_jaccard",            # r16 verify barrier
+    "dedup_embedding_cosine",         # r16 verify barrier
+    "dedup_containment_exact",        # r16 barrier; 6-dp threshold guard
 )
 
 

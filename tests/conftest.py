@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from airline_data_warehouse_spark.operators.dedup import cache_scope
@@ -25,3 +27,14 @@ def _owned_caches():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+def drop_file(directory, name: str, text: str) -> None:
+    """Write ``text`` to ``directory/name`` under a hidden name, then
+    rename it into place. A running file-source stream lists its
+    directory at any moment and never re-reads a file it picked up
+    half-written; names starting with "." are skipped by the listing."""
+    tmp = os.path.join(directory, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, os.path.join(directory, name))

@@ -1229,6 +1229,42 @@ def test_ivf_index_partition_filter_not_post_scan(spark, tmp_path):
     assert m and "cluster_id" in m.group(1), plan
 
 
+def test_ivf_index_lists_are_stored_centroids_voronoi(spark, tmp_path):
+    """ivf_index_build takes the ADD step: every stored vector sits in
+    the list `ivf_assign` picks against the STORED centroids (k-means'
+    last assignment lags its final centroid update by one step, and
+    filing vectors by that lagged label left true members outside the
+    lists a query probes). With those lists, the index query answers
+    exactly what in-memory ivf_topk answers on the corpus labelled by
+    kmeans_assign's cluster_id."""
+    import random
+    rng = random.Random(7)
+    rows = [(i, [round(rng.uniform(-1, 1), 6) for _ in range(8)])
+            for i in range(200)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    idx = str(tmp_path / "ivf")
+    sim.ivf_index_build(corpus, idx, k=4, iters=2)
+    lists = spark.read.parquet(f"{idx}/lists.parquet")
+    cents = (spark.read.parquet(f"{idx}/centroids.parquet")
+             .withColumnRenamed("cluster_id", "list_id"))
+    stored = {r["vec_id"]: r["cluster_id"] for r in lists.collect()}
+    nearest = {r["vec_id"]: r["list_id"] for r in
+               sim.ivf_assign(lists, cents).collect()}
+    assert len(stored) == 200
+    assert stored == nearest
+
+    labeled = corpus.join(sim.kmeans_assign(corpus, k=4, iters=2)
+                          .select("vec_id", "cluster_id"), "vec_id")
+    queries = corpus.filter(F.col("vec_id") < 10)
+    want = sorted(tuple(r) for r in sim.ivf_topk(
+        labeled, queries, k=5, n_probe=2, label_col="cluster_id").collect())
+    got = sorted(tuple(r) for r in
+                 sim.ivf_index_topk(spark, idx, queries, k=5,
+                                    n_probe=2).collect())
+    assert len(got) == 50
+    assert got == want
+
+
 def _rand_corpus(spark, n, dims, seed, id_start=0):
     import random
     rng = random.Random(seed)
@@ -2287,50 +2323,27 @@ def test_operator_broadcast_targets_are_bounded():
             "query vectors: |queries| rows",
         ("similarity.py", "_lsh_scored", "banded_q", "queries"):
             "banded query set: |queries| x bands rows",
-        ("similarity.py", "ivf_assign", "<expr:centroids>", "centroids"):
-            "k-means centroids: k rows",
-        ("similarity.py", "kmeans_assign", "<expr:centroids>", "centroids"):
-            "k-means centroids: k rows (per-iteration update)",
-        ("similarity.py", "ivf_topk", "<expr:cents>", "cents"):
-            "IVF coarse centroids: n_lists rows",
-        ("similarity.py", "ivf_index_topk", "<expr:cents>", "cents"):
-            "persisted-index coarse centroids: n_lists rows",
-        ("similarity.py", "_pq_assign", "cb", "codebook"):
-            "PQ codebook: m x k rows, operator constants",
-        ("similarity.py", "pq_topk", "cb", "codebook"):
-            "PQ codebook: m x k rows",
-        ("similarity.py", "pq_topk", "lut", "qsubs"):
-            "ADC LUT: |queries| x m x k (qsubs is queries exploded by "
-            "the m operator constant)",
-        ("similarity.py", "pq_topk_rerank", "qv", "queries"):
+        ("similarity.py", "_nearest_centroids", "<expr:centroids>",
+         "centroids"):
+            "IVF probe / assign: the k-means or coarse centroid table, "
+            "n_lists rows (ivf_assign, kmeans_assign, ivf_topk, the "
+            "index queries, _ivfpq_lut)",
+        ("similarity.py", "_pq_dists", "cb", "codebook"):
+            "PQ codebook + hoisted self-dots: m x k rows, operator "
+            "constants (_pq_assign and every ADC LUT)",
+        ("similarity.py", "_adc_sum", "lut", "<param>"):
+            "ADC LUT: |queries| x m x k (pq_topk) or |queries| x n_probe "
+            "x m x codes_k (_ivfpq_lut) — query subvectors exploded by "
+            "operator constants",
+        ("similarity.py", "_residuals", "coarse", "<param>"):
+            "IVF coarse centroids: n_lists rows (residual encode in "
+            "ivfpq_topk, ivfpq_index_build, ivfpq_index_append)",
+        ("similarity.py", "_rerank_exact", "qv", "queries"):
             "query vectors BUILT FROM THE QUERIES PARAM (r9 ADVICE-high: "
             "corpus-derived qv here is the OOM class this pin forbids)",
-        ("similarity.py", "pq_topk_rerank", "short", "pq_topk"):
-            "ADC shortlist: |queries| x shortlist rows",
-        ("similarity.py", "ivfpq_topk", "<expr:coarse>", "coarse"):
-            "IVF coarse centroids: n_lists rows",
-        ("similarity.py", "ivfpq_topk", "coarse", "centroid_vectors"):
-            "IVF coarse centroids: n_lists rows",
-        ("similarity.py", "ivfpq_topk", "cbx", "cb"):
-            "residual PQ codebook + hoisted self-dots: m x codes_k rows",
-        ("similarity.py", "ivfpq_topk", "lut", "qsubs"):
-            "ADC LUT: |queries| x n_probe x m x codes_k",
-        ("similarity.py", "ivfpq_index_build", "coarse", "centroid_vectors"):
-            "IVF coarse centroids: n_lists rows (residual encode)",
-        ("similarity.py", "_ivfpq_index_adc", "<expr:coarse>", "coarse"):
-            "persisted coarse centroids: n_lists rows (read from index)",
-        ("similarity.py", "_ivfpq_index_adc", "cb", "spark"):
-            "persisted residual codebook: m x codes_k rows (from index)",
-        ("similarity.py", "_ivfpq_index_adc", "lut", "qsubs"):
-            "ADC LUT: |queries| x n_probe x m x codes_k",
-        ("similarity.py", "ivfpq_index_topk_rerank", "qv", "queries"):
-            "query vectors BUILT FROM THE QUERIES PARAM (the r9 "
-            "pq_topk_rerank contract)",
-        ("similarity.py", "ivfpq_index_topk_rerank", "short", "scored"):
-            "ADC shortlist: |queries| x shortlist rows (rank-filtered "
-            "from the probed-list candidates)",
-        ("similarity.py", "ivfpq_index_append", "coarse", "spark"):
-            "persisted coarse centroids: n_lists rows (frozen assign)",
+        ("similarity.py", "_rerank_exact", "short", "<param>"):
+            "ADC shortlist: |queries| x shortlist rows (pq_topk_rerank, "
+            "ivfpq_index_topk_rerank)",
         ("similarity.py", "embedding_covariance", "mu", "per_dim"):
             "1-row per-dim mean vector (covariance centering)",
         # --- text: scalar / catalog / query-bounded aggregates ---
@@ -2543,6 +2556,33 @@ def test_whiten_invariants_identity_spectrum_and_refusal(spark):
         "vec_id long, embedding array<double>")     # dim 1 constant: λ=0
     with pytest.raises(ValueError, match="near-singular"):
         sim.whiten_invariants(flat, dims=2)
+
+
+def test_cov_cells_sizes_int64_chunks_from_magnitude(spark):
+    """_cov_cells accumulates products in int64 1e-12 units. Centered
+    values near ±100 are 1e8 units, so one squared value is 1e16 and
+    1,000 of them (one task, one Arrow batch) pass 2^63: the chunk size
+    must come from the data's max|c|, matching an exact Decimal
+    covariance. A value whose single square cannot fit raises."""
+    import random
+    from decimal import Decimal
+
+    rng = random.Random(3)
+    rows = [([round(rng.choice((-1, 1)) * (100 + rng.random()), 6),
+              round(rng.uniform(-100, 100), 6)],) for _ in range(1000)]
+    centered = spark.createDataFrame(rows, "c array<double>").coalesce(1)
+    got = {(r["i"], r["j"]): r["cov"]
+           for r in sim._cov_cells(centered, 2).collect()}
+    n = len(rows)
+    for i, j in ((0, 0), (0, 1), (1, 1)):
+        s = sum(Decimal(repr(r[0][i])) * Decimal(repr(r[0][j]))
+                for r in rows)
+        assert abs(got[(i, j)] - float(s) / (n - 1)) <= 1e-6, (i, j)
+
+    huge = spark.createDataFrame([([5000.0, 1.0],), ([-5000.0, 2.0],)],
+                                 "c array<double>")
+    with pytest.raises(Exception, match="_cov_cells"):
+        sim._cov_cells(huge, 2).collect()
 
 
 def test_pagerank_matches_independent_integer_reference(spark):

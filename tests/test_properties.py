@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 from decimal import Decimal
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -466,6 +467,15 @@ def test_prefix_filter_exactness_property(spark):
                             want[(i, j)] = jv
             assert got == want, thr
     check()
+
+    # a 7-dp threshold would prune with its 6-dp rounding (0.6000015 →
+    # 0.600002, half-even) while the verify keeps scores >= the raw
+    # float: both exact joins refuse it rather than drop true pairs
+    df = spark.createDataFrame([(0, "abc"), (1, "abd")],
+                               "doc_id long, text string")
+    for join in (dd.prefix_filter_jaccard_pairs, dd.containment_pairs):
+        with pytest.raises(ValueError, match="threshold"):
+            join(df, k=1, threshold=0.6000015)
 
 
 def _brute_spans(docs: dict, k: int, min_tokens: int) -> set:

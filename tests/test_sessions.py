@@ -4,7 +4,6 @@ timelines, and the applyInPandasWithState path across micro-batches."""
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import functions as F
 
@@ -12,6 +11,7 @@ from airline_data_warehouse_spark.streaming.sessions import (
     sessionize_batch,
     sessionize_stream,
 )
+from tests.conftest import drop_file
 
 EVENTS = [
     # user 1: two sessions separated by a 2-hour gap
@@ -67,10 +67,10 @@ def test_stream_sessionization(spark, tmp_path):
         # nothing closed yet: both users have open sessions in state
         assert spark.sql("SELECT * FROM sessions_out").count() == 0
 
-        with open(in_dir / "b2.json", "w") as f:
-            for e in b2:
-                f.write(json.dumps({"event_id": e[0], "ts": e[1], "user_id": e[2],
-                                    "value": e[3]}) + "\n")
+        drop_file(in_dir, "b2.json", "".join(
+            json.dumps({"event_id": e[0], "ts": e[1], "user_id": e[2],
+                        "value": e[3]}) + "\n"
+            for e in b2))
         q.processAllAvailable()
         rows = {(r["user_id"], str(r["session_start"])): r
                 for r in spark.sql("SELECT * FROM sessions_out").collect()}
@@ -106,17 +106,12 @@ def _stream_replay(spark, tmp_path, chunks, tag):
                      [{"event_id": -2, "ts": max_ts + 11 * 86_400_000_000,
                        "user_id": -1, "value": 0.0}]]
         for i, chunk in enumerate(list(chunks) + sentinels):
-            # write under a hidden name, then rename into place: the
-            # running stream lists the directory at any moment, and a
-            # file it picks up half-written is never read again
-            tmp = in_dir / f".b{i:03d}.json"
-            with open(tmp, "w") as f:
-                for e in chunk:
-                    f.write(json.dumps({
-                        "event_id": e["event_id"],
-                        "ts": str(__import__("pandas").Timestamp(e["ts"], unit="us")),
-                        "user_id": e["user_id"], "value": e["value"]}) + "\n")
-            os.replace(tmp, in_dir / f"b{i:03d}.json")
+            drop_file(in_dir, f"b{i:03d}.json", "".join(
+                json.dumps({
+                    "event_id": e["event_id"],
+                    "ts": str(__import__("pandas").Timestamp(e["ts"], unit="us")),
+                    "user_id": e["user_id"], "value": e["value"]}) + "\n"
+                for e in chunk))
             q.processAllAvailable()
         return [r for r in spark.sql(f"SELECT * FROM sessions_eq_{tag}").collect()
                 if r["user_id"] != -1]

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.streaming import status as st
+from tests.conftest import drop_file
 
 MESSAGES = [
     {"flight_key": "AA100", "status": "delayed", "delay_minutes": 300,
@@ -345,10 +346,10 @@ def test_stream_exact_dedup_across_microbatches(spark, tmp_path):
          .start())
     try:
         for i, batch in enumerate(batches):
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for d, ts, tx_ in batch:
-                    f.write(jsonlib.dumps(
-                        {"doc_id": d, "ts": ts, "text": tx_}) + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                jsonlib.dumps(
+                    {"doc_id": d, "ts": ts, "text": tx_}) + "\n"
+                for d, ts, tx_ in batch))
             q.processAllAvailable()
         got = {r["doc_id"] for r in spark.sql("SELECT * FROM dedup_out").collect()}
     finally:
@@ -393,9 +394,9 @@ def test_stream_neardup_ingest_matches_batch_incremental(spark, tmp_path):
                              checkpoint_dir=str(tmp_path / "nd_ckpt"))
     try:
         for i, batch in enumerate([b1, b2, b3]):
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for d, tx_ in batch:
-                    f.write(jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n"
+                for d, tx_ in batch))
             q.processAllAvailable()
     finally:
         q.stop()
@@ -459,9 +460,9 @@ def test_stream_neardup_retention_and_compaction(spark, tmp_path):
                                        "band_key string, batch_id long")
                  .write.mode("overwrite")
                  .parquet(os.path.join(store, "bands", ".c9_9.staging")))
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for d, tx_ in batch:
-                    f.write(jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n"
+                for d, tx_ in batch))
             q.processAllAvailable()
     finally:
         q.stop()
@@ -513,9 +514,9 @@ def test_stream_neardup_full_corpus_state_by_default(spark, tmp_path):
                              compact_every=2)
     try:
         for i, batch in enumerate(batches):
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for d, tx_ in batch:
-                    f.write(jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n"
+                for d, tx_ in batch))
             q.processAllAvailable()
     finally:
         q.stop()
@@ -553,8 +554,8 @@ def test_stream_neardup_corrupt_store_fails_batch(spark, tmp_path):
     q = start_neardup_ingest(src, store,
                              checkpoint_dir=str(tmp_path / "cr_ckpt"))
     try:
-        with open(in_dir / "b0.json", "w") as f:
-            f.write(jsonlib.dumps({"doc_id": 1, "text": base}) + "\n")
+        drop_file(in_dir, "b0.json",
+                  jsonlib.dumps({"doc_id": 1, "text": base}) + "\n")
         q.processAllAvailable()
     finally:
         q.stop()
@@ -573,9 +574,8 @@ def test_stream_neardup_corrupt_store_fails_batch(spark, tmp_path):
     q2 = start_neardup_ingest(src2, store,
                               checkpoint_dir=str(tmp_path / "cr_ckpt2"))
     try:
-        with open(in_dir / "b1.json", "w") as f:
-            f.write(jsonlib.dumps({"doc_id": 2, "text": base + " tail"})
-                    + "\n")
+        drop_file(in_dir, "b1.json", jsonlib.dumps(
+            {"doc_id": 2, "text": base + " tail"}) + "\n")
         with pytest.raises(StreamingQueryException):
             q2.processAllAvailable()
     finally:
@@ -625,10 +625,9 @@ def test_stream_semantic_ingest_flags_embedding_neardups(spark, tmp_path):
                               checkpoint_dir=str(tmp_path / "sem_ckpt"))
     try:
         for i, batch in enumerate([b1, b2, b3]):
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for vid, v in batch:
-                    f.write(jsonlib.dumps({"vec_id": vid, "embedding": v})
-                            + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                jsonlib.dumps({"vec_id": vid, "embedding": v}) + "\n"
+                for vid, v in batch))
             q.processAllAvailable()
     finally:
         q.stop()
@@ -696,10 +695,10 @@ def test_stream_cascade_ingest_three_tiers_accumulate(spark, tmp_path):
                              checkpoint_dir=str(tmp_path / "casc_ckpt"))
     try:
         for i, batch in enumerate([b1, b2, b3]):
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for d, tx_, v in batch:
-                    f.write(jsonlib.dumps(
-                        {"doc_id": d, "text": tx_, "embedding": v}) + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                jsonlib.dumps(
+                    {"doc_id": d, "text": tx_, "embedding": v}) + "\n"
+                for d, tx_, v in batch))
             q.processAllAvailable()
     finally:
         q.stop()
@@ -742,11 +741,10 @@ def test_stream_cascade_batch0_crash_between_appends_recovers(spark, tmp_path):
             (2, "iota kappa lambda mu nu xi omicron pi rho", -0.7)]
 
     def write_batch(name, rows):
-        with open(in_dir / name, "w") as f:
-            for d, tx, seed in rows:
-                emb = [seed + 0.01 * k for k in range(16)]
-                f.write(jsonlib.dumps(
-                    {"doc_id": d, "text": tx, "embedding": emb}) + "\n")
+        drop_file(in_dir, name, "".join(
+            jsonlib.dumps({"doc_id": d, "text": tx,
+                           "embedding": [seed + 0.01 * k for k in range(16)]})
+            + "\n" for d, tx, seed in rows))
 
     write_batch("b0.json", docs)
     src = (spark.readStream
@@ -801,10 +799,10 @@ def test_stream_semantic_batch0_crash_between_appends_recovers(spark, tmp_path):
     base = [0.9, -0.4, 0.2, 0.8, -0.6, 0.1, 0.5, -0.3]
 
     def write_batch(name, rows):
-        with open(in_dir / name, "w") as f:
-            for vid, vec in rows:
-                f.write(jsonlib.dumps(
-                    {"vec_id": vid, "embedding": vec}) + "\n")
+        drop_file(in_dir, name, "".join(
+            jsonlib.dumps(
+                {"vec_id": vid, "embedding": vec}) + "\n"
+            for vid, vec in rows))
 
     write_batch("b0.json", [(1, base), (2, [-x for x in base])])
     src = (spark.readStream.schema("vec_id long, embedding array<double>")
@@ -869,10 +867,10 @@ def test_stream_index_ingest_appends_and_logs_drift(spark, tmp_path):
     in_dir.mkdir()
 
     def write_batch(name, batch_rows):
-        with open(in_dir / name, "w") as f:
-            for vid, vec in batch_rows:
-                f.write(jsonlib.dumps({"vec_id": vid,
-                                       "embedding": vec}) + "\n")
+        drop_file(in_dir, name, "".join(
+            jsonlib.dumps({"vec_id": vid,
+                           "embedding": vec}) + "\n"
+            for vid, vec in batch_rows))
 
     write_batch("b0.json", [(100, list(rows[5][1]))])      # exact dup
     write_batch("b1.json", [(101 + i,
@@ -951,9 +949,9 @@ def test_stream_countmin_ingest_exact_merge_and_fold(spark, tmp_path):
                ["beta", "gamma"],
                ["alpha", "delta", "delta", "beta"]]
     for i, toks in enumerate(batches):
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for t in toks:
-                f.write(jsonlib.dumps({"token": t}) + "\n")
+        drop_file(in_dir, f"b{i}.json", "".join(
+            jsonlib.dumps({"token": t}) + "\n"
+            for t in toks))
 
     src = (spark.readStream.schema("token string")
            .option("maxFilesPerTrigger", 1).json(str(in_dir)))
@@ -1033,9 +1031,9 @@ def test_stream_qdigest_store_equals_batch_build(spark, tmp_path):
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     for i, vs in enumerate(batches):
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for v in vs:
-                f.write(jsonlib.dumps({"v": v}) + "\n")
+        drop_file(in_dir, f"b{i}.json", "".join(
+            jsonlib.dumps({"v": v}) + "\n"
+            for v in vs))
     store = str(tmp_path / "qd_store")
     src = (spark.readStream.schema("v long")
            .option("maxFilesPerTrigger", 1).json(str(in_dir)))
@@ -1098,9 +1096,9 @@ def test_fold_survives_replace_directory_noop(spark, tmp_path, monkeypatch):
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     for i, toks in enumerate([["a", "b"], ["b", "c"]]):
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for t in toks:
-                f.write(jsonlib.dumps({"token": t}) + "\n")
+        drop_file(in_dir, f"b{i}.json", "".join(
+            jsonlib.dumps({"token": t}) + "\n"
+            for t in toks))
     store = str(tmp_path / "cms")
     src = (spark.readStream.schema("token string")
            .option("maxFilesPerTrigger", 1).json(str(in_dir)))
@@ -1234,10 +1232,10 @@ def test_stream_index_ingest_with_tombstones(spark, tmp_path):
     in_dir.mkdir()
 
     def write_batch(name, batch):
-        with open(in_dir / name, "w") as f:
-            for vid, vec, dead in batch:
-                f.write(jsonlib.dumps({"vec_id": vid, "embedding": vec,
-                                       "deleted": dead}) + "\n")
+        drop_file(in_dir, name, "".join(
+            jsonlib.dumps({"vec_id": vid, "embedding": vec,
+                           "deleted": dead}) + "\n"
+            for vid, vec, dead in batch))
 
     # batches are mutually independent (no id appears in two batches):
     # file-to-batch ORDER is the source's choice, so cross-batch
@@ -1424,9 +1422,9 @@ def test_stream_countmin_fold_every_triggers_in_loop(spark, tmp_path):
     store = str(tmp_path / "cms_store")
     batches = [[f"tok{i}", f"tok{i % 3}"] for i in range(10)]
     for i, toks in enumerate(batches):
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for t in toks:
-                f.write(jsonlib.dumps({"token": t}) + "\n")
+        drop_file(in_dir, f"b{i}.json", "".join(
+            jsonlib.dumps({"token": t}) + "\n"
+            for t in toks))
 
     src = (spark.readStream.schema("token string")
            .option("maxFilesPerTrigger", 1).json(str(in_dir)))
@@ -1471,9 +1469,9 @@ def test_stream_bloom_blocklist_accumulates_and_compacts(spark, tmp_path):
     store = str(tmp_path / "bloom_store")
     members = list(range(1000, 1030))
     for i in range(3):
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for h in members[i * 10:(i + 1) * 10]:
-                f.write(jsonlib.dumps({"sh": h}) + "\n")
+        drop_file(in_dir, f"b{i}.json", "".join(
+            jsonlib.dumps({"sh": h}) + "\n"
+            for h in members[i * 10:(i + 1) * 10]))
 
     src = (spark.readStream.schema("sh long")
            .option("maxFilesPerTrigger", 1).json(str(in_dir)))

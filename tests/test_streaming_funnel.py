@@ -7,6 +7,7 @@ import json
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.streaming.funnel import funnel_stream
+from tests.conftest import drop_file
 
 
 def _replay(spark, tmp_path, chunks, tag):
@@ -23,13 +24,13 @@ def _replay(spark, tmp_path, chunks, tag):
     try:
         import pandas as pd
         for i, chunk in enumerate(chunks):
-            with open(in_dir / f"b{i:03d}.json", "w") as f:
-                for e in chunk:
-                    f.write(json.dumps({
-                        "event_id": e["event_id"],
-                        "ts": str(pd.Timestamp(e["ts"], unit="us")),
-                        "user_id": e["user_id"],
-                        "event_type": e["event_type"]}) + "\n")
+            drop_file(in_dir, f"b{i:03d}.json", "".join(
+                json.dumps({
+                    "event_id": e["event_id"],
+                    "ts": str(pd.Timestamp(e["ts"], unit="us")),
+                    "user_id": e["user_id"],
+                    "event_type": e["event_type"]}) + "\n"
+                for e in chunk))
             q.processAllAvailable()
         return spark.sql(f"SELECT * FROM funnel_{tag}").collect()
     finally:

@@ -11,6 +11,7 @@ from airline_data_warehouse_spark.streaming.monitor import (
     batch_quality_counts,
     start_quality_monitor,
 )
+from tests.conftest import drop_file
 
 
 def test_batch_quality_counts_flags_each_class(spark):
@@ -51,9 +52,9 @@ def test_quality_monitor_appends_per_batch_and_replays_idempotently(
               "value": -5.0}],
         ]
         for i, b in enumerate(batches):
-            with open(in_dir / f"b{i}.json", "w") as f:
-                for e in b:
-                    f.write(json.dumps(e) + "\n")
+            drop_file(in_dir, f"b{i}.json", "".join(
+                json.dumps(e) + "\n"
+                for e in b))
             q.processAllAvailable()
     finally:
         q.stop()
