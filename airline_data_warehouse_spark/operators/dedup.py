@@ -264,6 +264,48 @@ def _verified_jaccard_pairs(cand: DataFrame, sh_left: DataFrame,
     return scored.filter(F.col("jaccard") >= threshold)
 
 
+def _verified_cosine_pairs(cand: DataFrame, vec_left: DataFrame,
+                           vec_right: DataFrame, id_col: str,
+                           threshold: float) -> DataFrame:
+    """The exact-cosine twin of `_verified_jaccard_pairs`, shared by the
+    semantic stream and the cascade's semantic tier: attach both
+    (id, v, n) vector frames (`_vector_frames`) to each (inc_id,
+    corpus_id) candidate, shuffle_hash on both sides, score with
+    similarity._cos from the hoisted norms, and filter ABOVE the same
+    compute-once barrier — pushed into the join condition, the 64-mult
+    interpreted-HOF dot product would run twice per candidate (r16).
+
+    Output: (inc_id, corpus_id, score) with score = round(cos, 6) ≥
+    threshold."""
+    from airline_data_warehouse_spark.operators import similarity as sim
+
+    v1 = (vec_left.select(F.col(id_col).alias("inc_id"),
+                          F.col("v").alias("v1"), F.col("n").alias("n1"))
+          .hint("shuffle_hash"))
+    v2 = (vec_right.select(F.col(id_col).alias("corpus_id"),
+                           F.col("v").alias("v2"), F.col("n").alias("n2"))
+          .hint("shuffle_hash"))
+    scored = _persist(
+        cand.join(v1, "inc_id").join(v2, "corpus_id")
+            .select("inc_id", "corpus_id",
+                    sim._cos(F.col("v1"), F.col("v2"), F.col("n1"),
+                             F.col("n2")).alias("score")))
+    return scored.filter(F.col("score") >= threshold)
+
+
+def _band_candidates(inc: DataFrame, corpus: DataFrame,
+                     id_col: str) -> DataFrame:
+    """Distinct (inc_id, corpus_id) pairs whose (band, band_key) rows
+    collide — the candidate step of every increment-vs-store dedup,
+    MinHash and hyperplane bands alike. The join is band-keyed, so its
+    cost scales with |increment| × collision rate, never corpus²."""
+    i = inc.select(F.col(id_col).alias("inc_id"), "band", "band_key")
+    c = corpus.select(F.col(id_col).alias("corpus_id"), "band", "band_key")
+    return (i.join(c, ["band", "band_key"])
+             .select("inc_id", "corpus_id")
+             .distinct())
+
+
 def _threshold_6dp(threshold: float) -> Decimal:
     """``threshold`` as the exact 6-dp Decimal the exact joins prune
     with. Their verify compares 6-dp-rounded scores against the raw
@@ -486,13 +528,8 @@ def incremental_minhash_pairs(corpus: DataFrame, increment: DataFrame,
     """
     csh = _persist(shingled(corpus, text_col, id_col, k))
     ish = _persist(shingled(increment, text_col, id_col, k))
-    cbands = minhash_band_table(csh, id_col).select(
-        F.col(id_col).alias("corpus_id"), "band", "band_key")
-    ibands = minhash_band_table(ish, id_col).select(
-        F.col(id_col).alias("inc_id"), "band", "band_key")
-    cand = (ibands.join(cbands, ["band", "band_key"])
-                  .select("inc_id", "corpus_id")
-                  .distinct())
+    cand = _band_candidates(minhash_band_table(ish, id_col),
+                            minhash_band_table(csh, id_col), id_col)
     # shared barrier verify (_verified_jaccard_pairs): the shuffle_hash
     # no-driver-side-broadcast rule and the compute-once barrier both
     # live there (the increment side is hinted too because batch sizes
@@ -756,6 +793,53 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     return labels.select(F.col("v").alias(id_col), F.col("label").alias("cluster_id"))
 
 
+# the cascade store's signature dirs, in cascade_classify's argument order
+_CASCADE_STORES = ("hashes", "bands", "shingles", "emb_bands", "vectors")
+
+
+def _vector_frames(emb: DataFrame, id_col: str,
+                   vec_col: str) -> tuple[DataFrame, DataFrame]:
+    """(vectors, bands) signature frames of an embedding frame, in the
+    cascade store's layout: finite, nonzero-norm vectors as (id, v, n)
+    with the norm hoisted for the exact-cosine verify, and their
+    hyperplane band keys (4 bands × 8 Gaussian sign bits, the
+    embedding_near_dup_pairs family) as (id, band int, band_key).
+    Non-finite / zero-norm vectors are excluded here (similarity.
+    _finite_ok): one NaN shard must not poison every later verify."""
+    from airline_data_warehouse_spark.operators import similarity as sim
+
+    ev = (emb.filter(sim._finite_ok(F.col(vec_col)))
+             .select(F.col(id_col),
+                     F.transform(F.col(vec_col), lambda x: x.cast("double"))
+                      .alias("v")))
+    keys = sim.hyperplane_band_keys_sql("v", bands=4, rows_per_band=8)
+    return (ev.select(id_col, "v", sim._norm(F.col("v")).alias("n")),
+            ev.select(id_col, F.posexplode(F.array(*keys))
+                      .alias("band", "band_key"))
+              .select(id_col, F.col("band").cast("int").alias("band"),
+                      "band_key"))
+
+
+def _cascade_frames(docs: DataFrame, emb: DataFrame, text_col: str,
+                    id_col: str, vec_col: str) -> dict[str, DataFrame]:
+    """The cascade store's five signature frames (layout on
+    `cascade_store_build`), keyed by store dir, for ``docs``
+    (id_col, text_col) and ``emb`` (vec_id, vec_col): what the batch
+    build writes and the streaming cascade appends per micro-batch, so
+    the two hand each other the same state."""
+    d = docs.filter(F.col(text_col).isNotNull())
+    sh = _persist(shingled(d, text_col, id_col))
+    vectors, emb_bands = _vector_frames(emb, "vec_id", vec_col)
+    return {"hashes": (d.select(F.md5(text_col).alias("text_md5"),
+                                F.col(id_col))
+                        .groupBy("text_md5")
+                        .agg(F.min(id_col).alias("keeper"))),
+            "bands": minhash_band_table(sh, id_col),
+            "shingles": sh.select(id_col, _i32("hs").alias("hs")),
+            "emb_bands": emb_bands,
+            "vectors": vectors}
+
+
 @cache_scope()
 def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
                         text_col: str = "text", id_col: str = "doc_id",
@@ -777,6 +861,9 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
       vectors with hoisted norms for the semantic-tier exact-cosine
       verify.
 
+    Rows carry no ``batch_id``: a `start_cascade_ingest` stream continuing
+    this store reads them as batch −1, i.e. before its own batch 0.
+
     ``overwrite=False`` (the default used by the registry query) reuses
     an existing store — the daily-ingest contract is that the store is
     an output of YESTERDAY's run, amortized across batches; per-frame
@@ -791,8 +878,6 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
     guard holds for non-local store_dirs too (ADVICE r08)."""
     import os
 
-    from airline_data_warehouse_spark.operators import similarity as sim
-
     spark = docs.sparkSession
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
@@ -802,26 +887,11 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
         if not overwrite:
             return
         fs.delete(marker, False)
-    d = docs.filter(F.col(text_col).isNotNull())
-    (d.select(F.md5(text_col).alias("text_md5"), F.col(id_col))
-      .groupBy("text_md5").agg(F.min(id_col).alias("keeper"))
-      .write.mode("overwrite").parquet(os.path.join(store_dir, "hashes")))
-    sh = _persist(shingled(d, text_col, id_col))
-    (sh.select(id_col, _i32("hs").alias("hs"))
-       .write.mode("overwrite").parquet(os.path.join(store_dir, "shingles")))
-    (minhash_band_table(sh, id_col)
-       .write.mode("overwrite").parquet(os.path.join(store_dir, "bands")))
-    ev = (emb.filter(sim._finite_ok(F.col(vec_col)))
-             .select(F.col(id_col if id_col in emb.columns else "vec_id")
-                     .alias("vec_id"),
-                     F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                      .alias("v")))
-    keys = sim.hyperplane_band_keys_sql("v", bands=4, rows_per_band=8)
-    (ev.select("vec_id", F.posexplode(F.array(*keys)).alias("band", "band_key"))
-       .select("vec_id", F.col("band").cast("int").alias("band"), "band_key")
-       .write.mode("overwrite").parquet(os.path.join(store_dir, "emb_bands")))
-    (ev.select("vec_id", "v", sim._norm(F.col("v")).alias("n"))
-       .write.mode("overwrite").parquet(os.path.join(store_dir, "vectors")))
+    vec_id = F.col(id_col if id_col in emb.columns else "vec_id")
+    frames = _cascade_frames(docs, emb.select(vec_id.alias("vec_id"), vec_col),
+                             text_col, id_col, vec_col)
+    for name, frame in frames.items():
+        frame.write.mode("overwrite").parquet(os.path.join(store_dir, name))
     out = fs.create(marker, True)
     out.write(bytearray(b"ok\n"))
     out.close()
@@ -852,8 +922,9 @@ def incremental_cascade(spark, store_dir: str, inc_docs: DataFrame,
     corpus appears only through its persisted signature stores, joined
     band-keyed or id-keyed, so the per-batch cost scales with
     |increment| × collision rate while corpus state grows append-only
-    (the batch twin of streaming/dedup.start_neardup_ingest, with the
-    semantic tier the stream variant doesn't have). Store-side verify
+    (the batch twin of streaming/dedup.start_cascade_ingest, which runs
+    the same three tiers per micro-batch and appends the same five
+    stores, so either can continue the other's state). Store-side verify
     frames are hinted shuffle_hash — corpus-proportional array payloads
     must never reach a broadcast build (SCALING.md r07).
 
@@ -866,17 +937,10 @@ def incremental_cascade(spark, store_dir: str, inc_docs: DataFrame,
     # ingest is tiered (b{N}/ + c{lo}_{hi}/ subdirs, r15 — the shared-
     # state contract lets a stream and this batch job hand the same
     # dirs to each other); flat batch-built stores read identically
-    def _rd(name: str):
-        return (spark.read.option("recursiveFileLookup", "true")
-                .parquet(os.path.join(store_dir, name)))
-
-    hashes = _rd("hashes")
-    bands = _rd("bands")
-    shingles = _rd("shingles")
-    emb_bands = _rd("emb_bands")
-    vectors = _rd("vectors")
-    return cascade_classify(inc_docs, inc_emb, hashes, bands, shingles,
-                            emb_bands, vectors, threshold=threshold,
+    stores = (spark.read.option("recursiveFileLookup", "true")
+              .parquet(os.path.join(store_dir, name))
+              for name in _CASCADE_STORES)
+    return cascade_classify(inc_docs, inc_emb, *stores, threshold=threshold,
                             cos_threshold=cos_threshold, text_col=text_col,
                             id_col=id_col, vec_col=vec_col)
 
@@ -897,8 +961,6 @@ def cascade_classify(inc_docs: DataFrame, inc_emb: DataFrame,
     reduces to the stored keeper when the table is pre-aggregated (the
     batch store build). Tier plumbing and scale posture as documented
     on `incremental_cascade`."""
-    from airline_data_warehouse_spark.operators import similarity as sim
-
     inc = _persist(inc_docs.select(F.col(id_col), F.col(text_col)))
 
     # hash table is corpus-proportional: shuffle_hash, never broadcast
@@ -911,65 +973,23 @@ def cascade_classify(inc_docs: DataFrame, inc_emb: DataFrame,
                   id_col, "left_anti")
 
     ish = _persist(shingled(s1, text_col, id_col))
-    ibands = minhash_band_table(ish, id_col).select(
-        F.col(id_col).alias("inc_id"), "band", "band_key")
-    cbands = bands.select(F.col(id_col).alias("corpus_id"), "band",
-                          "band_key")
-    cand = (ibands.join(cbands, ["band", "band_key"])
-                  .select("inc_id", "corpus_id").distinct())
-    s_i = (ish.select(F.col(id_col).alias("inc_id"), _i32("hs").alias("sh1"))
-              .hint("shuffle_hash"))
-    s_c = (shingles
-           .select(F.col(id_col).alias("corpus_id"), F.col("hs").alias("sh2"))
-           .hint("shuffle_hash"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    # inner compute-once barrier before the threshold filter (the
-    # _verified_jaccard_pairs rationale, r16) — the outer persist
-    # serves the two downstream consumers as before
-    j_scored = _persist(
-        cand.join(s_i, "inc_id").join(s_c, "corpus_id")
-            .select("inc_id", "corpus_id",
-                    F.round(inter.cast("double") / union, 6)
-                     .alias("jaccard")))
+    cand = _band_candidates(minhash_band_table(ish, id_col), bands, id_col)
+    # the verify's compute-once barrier sits inside the shared helper;
+    # this outer persist serves the two downstream consumers
     near = _persist(
-        j_scored.filter(F.col("jaccard") >= threshold)
+        _verified_jaccard_pairs(cand, ish, shingles, "inc_id", "corpus_id",
+                                id_col, threshold)
             .groupBy(F.col("inc_id").alias(id_col))
             .agg(F.min("corpus_id").alias("n_partner")))
     s2 = s1.select(id_col).join(near.select(id_col), id_col, "left_anti")
 
-    iv = (inc_emb.filter(sim._finite_ok(F.col(vec_col)))
-          .select(F.col("vec_id").alias(id_col),
-                  F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                   .alias("v"))
-          .join(s2, id_col, "left_semi"))
-    keys = sim.hyperplane_band_keys_sql("v", bands=4, rows_per_band=8)
-    ivb = (iv.select(id_col,
-                     F.posexplode(F.array(*keys)).alias("band", "band_key"))
-             .select(id_col, F.col("band").cast("int").alias("band"),
-                     "band_key"))
-    cvb = emb_bands.select(F.col("vec_id").alias("corpus_id"), "band",
-                           "band_key")
-    vcand = (ivb.join(cvb, ["band", "band_key"])
-                .select(id_col, "corpus_id").distinct())
-    v_i = (iv.withColumn("n1", sim._norm(F.col("v")))
-             .select(id_col, F.col("v").alias("v1"), "n1")
-             .hint("shuffle_hash"))
-    v_c = (vectors
-           .select(F.col("vec_id").alias("corpus_id"),
-                   F.col("v").alias("v2"), F.col("n").alias("n2"))
-           .hint("shuffle_hash"))
-    cos = F.round(sim._dot(F.col("v1"), F.col("v2"))
-                  / (F.col("n1") * F.col("n2")), 6)
-    # same compute-once barrier: pushed into the join condition the
-    # 64-mult interpreted-HOF dot product would evaluate twice per
-    # candidate (r16)
-    c_scored = _persist(
-        vcand.join(v_i, id_col).join(v_c, "corpus_id")
-             .select(id_col, "corpus_id", cos.alias("score")))
-    sem = (c_scored.filter(F.col("score") >= cos_threshold)
-                   .groupBy(id_col)
-                   .agg(F.min("corpus_id").alias("s_partner")))
+    iv, ivb = _vector_frames(
+        inc_emb.join(s2.select(F.col(id_col).alias("vec_id")), "vec_id",
+                     "left_semi"), "vec_id", vec_col)
+    vcand = _band_candidates(ivb, emb_bands, "vec_id")
+    sem = (_verified_cosine_pairs(vcand, iv, vectors, "vec_id", cos_threshold)
+           .groupBy(F.col("inc_id").alias(id_col))
+           .agg(F.min("corpus_id").alias("s_partner")))
 
     return (inc.select(id_col)
             .join(t1, id_col, "left")

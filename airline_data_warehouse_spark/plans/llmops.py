@@ -701,12 +701,44 @@ def exact_substring_overlap_clusters(spark: SparkSession,
     return component_profile(labels)
 
 
-@register(
-    "stream_exact_substring_read",
-    oracle=_sql_exact_substr_ctes() + """
+# both streaming keys answer the batch chain's cross-batch pairs: docs
+# stream in by doc_id % 3, so a pair crosses batches iff its ids differ
+# mod 3
+_STREAM_ES_ORACLE = _sql_exact_substr_ctes() + """
 SELECT doc_a, doc_b, start_a, start_b, span_tokens
 FROM spans WHERE (doc_a % 3) <> (doc_b % 3)
-""",
+"""
+
+
+def _stream_exact_substring_store(spark: SparkSession, sf_dir: str,
+                                  prefix: str) -> tuple[DataFrame, str]:
+    """(corpus, store dir): the twin corpus streamed through
+    start_exact_substring_ingest in 3 micro-batch files (docs assigned
+    by doc_id % 3), with compaction every 2 batches."""
+    from airline_data_warehouse_spark.streaming.dedup import (
+        start_exact_substring_ingest,
+    )
+
+    work = _stream_work_dir(prefix)
+    corpus = _text_corpus(spark, sf_dir)
+    for i in range(3):
+        (corpus.filter(F.col("doc_id") % 3 == i).coalesce(1)
+         .write.mode("overwrite").json(f"{work}/in/b{i}"))
+    src = (spark.readStream.schema("doc_id long, text string")
+           .option("maxFilesPerTrigger", 1).json(f"{work}/in/*"))
+    q = start_exact_substring_ingest(src, f"{work}/store",
+                                     checkpoint_dir=f"{work}/ck",
+                                     compact_every=2)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return corpus, f"{work}/store"
+
+
+@register(
+    "stream_exact_substring_read",
+    oracle=_STREAM_ES_ORACLE,
     operators="DEDUP-exact-substring,STREAM-state",
     description="The STREAMING ExactSubstr tier, hash-certified — "
                 "completes the batch/incremental/streaming cascade "
@@ -737,32 +769,16 @@ def stream_exact_substring_read(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     from airline_data_warehouse_spark.streaming.dedup import (
         read_exact_substring_spans,
-        start_exact_substring_ingest,
     )
 
-    work = _stream_work_dir("adw_stream_es_")
-    corpus = _text_corpus(spark, sf_dir)
-    for i in range(3):
-        (corpus.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.mode("overwrite").json(f"{work}/in/b{i}"))
-    src = (spark.readStream.schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 1).json(f"{work}/in/*"))
-    q = start_exact_substring_ingest(src, f"{work}/store",
-                                     checkpoint_dir=f"{work}/ck",
-                                     compact_every=2)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return read_exact_substring_spans(spark, f"{work}/store")
+    _, store = _stream_exact_substring_store(spark, sf_dir,
+                                             "adw_stream_es_")
+    return read_exact_substring_spans(spark, store)
 
 
 @register(
     "stream_exact_substring_verified",
-    oracle=_sql_exact_substr_ctes() + """
-SELECT doc_a, doc_b, start_a, start_b, span_tokens
-FROM spans WHERE (doc_a % 3) <> (doc_b % 3)
-""",
+    oracle=_STREAM_ES_ORACLE,
     operators="DEDUP-exact-substring,STREAM-state",
     description="The streaming→batch VERIFY COMPOSITION, certified "
                 "(VERDICT r14 item 4): the streaming tier's contract "
@@ -785,26 +801,13 @@ def stream_exact_substring_verified(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     from airline_data_warehouse_spark.streaming.dedup import (
         read_exact_substring_spans,
-        start_exact_substring_ingest,
         verify_spans_against_silver,
     )
 
-    work = _stream_work_dir("adw_stream_esv_")
-    corpus = _text_corpus(spark, sf_dir)
-    for i in range(3):
-        (corpus.filter(F.col("doc_id") % 3 == i).coalesce(1)
-         .write.mode("overwrite").json(f"{work}/in/b{i}"))
-    src = (spark.readStream.schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 1).json(f"{work}/in/*"))
-    q = start_exact_substring_ingest(src, f"{work}/store",
-                                     checkpoint_dir=f"{work}/ck",
-                                     compact_every=2)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    corpus, store = _stream_exact_substring_store(spark, sf_dir,
+                                                  "adw_stream_esv_")
     return verify_spans_against_silver(
-        read_exact_substring_spans(spark, f"{work}/store"), corpus)
+        read_exact_substring_spans(spark, store), corpus)
 
 
 def _sql_cms_cells(src: str, width: int, depth: int = 4) -> str:
@@ -4395,8 +4398,8 @@ FROM inc i LEFT JOIN t1 ON i.doc_id = t1.doc_id
                 "equals the from-scratch semantics. Per-batch cost "
                 "scales with increment x collision rate; corpus state "
                 "is append-only parquet (the batch twin of "
-                "streaming/dedup.start_neardup_ingest, plus the "
-                "semantic tier the stream variant lacks).",
+                "streaming/dedup.start_cascade_ingest, which appends "
+                "the same five stores per micro-batch).",
 )
 def incremental_cascade_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")

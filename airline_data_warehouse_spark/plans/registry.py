@@ -137,6 +137,13 @@ _REVALIDATE: tuple[str, ...] = (
     "dedup_ngram_jaccard",            # r16 verify barrier
     "dedup_embedding_cosine",         # r16 verify barrier
     "dedup_containment_exact",        # r16 barrier; 6-dp threshold guard
+    # r16 cascade cohort: not re-certified by an oracle sample since r16
+    "dedup_cascade",                  # r16 cascade plans, never resampled
+    "semantic_cluster_profile",       # r16 cascade plans, never resampled
+    # shared incremental-dedup core (operators/dedup.py): the cascade's
+    # tiers now run through _band_candidates / _verified_*_pairs /
+    # _vector_frames (survivor semi-join before the vector frame)
+    "incremental_cascade_ingest",     # r16 cohort; shared verify helpers
 )
 
 

@@ -76,9 +76,10 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
     """Read ONE signature store dir for classification, independently of
     its siblings. Three contracts in one place:
 
-    * MISSING dir → empty frame with ``empty_like``'s schema. Batch 0's
-      appends are sequential, so a crash between them strands a
-      partially-present store; probing a single representative dir and
+    * MISSING dir → empty frame with ``empty_like``'s schema. Any
+      subset of batch 0's appends may land before a crash
+      (`_append_batch`), stranding a partially-present store; probing
+      a single representative dir and
       then reading all siblings (the pre-r09 shape) made every retry
       fail on the missing-path read before any append could create it —
       permanently wedging the stream (ADVICE r08 medium). A store dir
@@ -95,6 +96,10 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
       so the filter is a no-op there. It also makes retried verdicts
       byte-identical to the crashed attempt's, keeping the
       dedup-on-read story for the verdicts/pairs sinks honest.
+    * rows WITHOUT ``batch_id`` (a `cascade_store_build` store a stream
+      continues) read as batch −1, before batch 0, in both filters — a
+      null would fail both and silently drop the whole batch-built
+      corpus.
 
     ``retention_batches`` applies the same horizon the compactor
     enforces (see start_neardup_ingest).
@@ -110,11 +115,12 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
     # is a no-op on the flat cascade stores; Spark's path filter
     # hides in-flight .c*.staging writes.
     schema = empty_like.withColumn("batch_id", F.lit(int(batch_id))).schema
+    seen = F.coalesce(F.col("batch_id"), F.lit(-1))
     df = (spark.read.schema(schema)
           .option("recursiveFileLookup", "true").parquet(path)
-          .filter(F.col("batch_id") < F.lit(batch_id)))
+          .filter(seen < F.lit(batch_id)))
     if retention_batches is not None:
-        df = df.filter(F.col("batch_id") > batch_id - retention_batches)
+        df = df.filter(seen > batch_id - retention_batches)
     return df
 
 
@@ -275,6 +281,57 @@ def _tier_compact(spark, path: str, batch_id: int,
         fs.delete(hpath(f"{path}/{bname}"), True)
 
 
+def _append_batch(spark, batch_id: int, writes, compact_every: int | None,
+                  retention_batches: int | None = None) -> None:
+    """Append one micro-batch's frames, then run the tiered compaction
+    every ``compact_every`` batches — the per-batch store step every
+    ingest shares. ``writes`` holds ``(frame, dir, n_files, retain)``:
+    each frame gains the ``batch_id`` column and is coalesced to
+    ``n_files`` (None: as computed). ``retain`` None appends flat into
+    ``dir`` (output logs such as pairs and verdicts, never compacted);
+    True/False appends into ``dir/b{N}`` and compacts that store with /
+    without the retention horizon (`_tier_compact`'s ``retain``).
+
+    The appends run CONCURRENTLY (VERDICT r09 item 5): each is a tiny
+    job whose cost is scheduling, not data — run one after another they
+    were ~60% of the measured ~5 s/batch cascade floor; submitted
+    together the wall-clock is max(job), not sum. Ordering is
+    correctness-free by construction: appends commute with each other,
+    and every frame that reads a store does so through `_read_store`'s
+    ``batch_id < current`` filter (its file index was also listed
+    before any append lands). Crash semantics need no ordering either:
+    ANY subset of the appends may land before a crash; the retry
+    re-appends (duplicates dropped at compaction / deduped on read) and
+    re-classifies identically, and a store dir still missing reads as
+    empty. The first failure fails the micro-batch. Each pool thread
+    takes a copy of the caller's Spark local properties (job group,
+    description, SQL execution), so the appends are cancelled and
+    attributed with the stream's own batch."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    bid = int(batch_id)
+    sc = spark.sparkContext
+    props = sc._jsc.sc().getLocalProperties()
+
+    def append(frame: DataFrame, path: str, n_files: int | None) -> None:
+        sc._jsc.sc().setLocalProperties(props.clone())
+        frame = frame.withColumn("batch_id", F.lit(batch_id))
+        if n_files:
+            frame = frame.coalesce(n_files)
+        frame.write.mode("append").parquet(path)
+
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futs = [pool.submit(append, frame, d if retain is None
+                            else f"{d}/b{bid}", n)
+                for frame, d, n, retain in writes]
+        for fut in futs:
+            fut.result()   # propagate the first failure
+    if compact_every and bid > 0 and bid % compact_every == 0:
+        for _, d, _, retain in writes:
+            if retain is not None:
+                _tier_compact(spark, d, bid, retention_batches, retain)
+
+
 def start_neardup_ingest(stream: DataFrame, store_dir: str,
                          text_col: str = "text", id_col: str = "doc_id",
                          checkpoint_dir: str | None = None,
@@ -300,8 +357,10 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
 
     Exactly-once note: foreachBatch gives at-least-once sinks on
     retry; the pairs/bands appends are idempotent-by-content (dedup on
-    read via DISTINCT, or MERGE on a transactional table) and retry
-    duplicates are physically removed at the next compaction. Batch-side
+    read via DISTINCT, or MERGE on a transactional table). Retry
+    duplicates in the bands/shingles stores are physically removed at
+    the next compaction; ``pairs`` is never compacted, so its retry
+    duplicates are only deduped on read. Batch-side
     near-dups WITHIN one micro-batch are reported by the batch
     ``ngram_jaccard_pairs`` over the silver table, matching the batch
     operator's contract.
@@ -330,9 +389,9 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
     """
     import os
 
-    from pyspark.sql import functions as F
-
     from airline_data_warehouse_spark.operators.dedup import (
+        _band_candidates,
+        _verified_jaccard_pairs,
         minhash_band_table,
         shingled,
     )
@@ -345,63 +404,31 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
         spark = batch_df.sparkSession
         sh = _persist(shingled(batch_df, text_col, id_col))
         new_bands = _persist(minhash_band_table(sh, id_col))
-        # each store dir probed INDIVIDUALLY; a dir missing because
-        # batch 0 crashed between the sequential appends reads as
-        # empty instead of wedging every retry (_read_store)
-        # the gate is a cheap FS probe — batch 0 (no store at all)
-        # skips the corpus join; any partially-present sibling on a
-        # retry reads as empty through _read_store instead
-        if _store_dir_exists(spark, bands_dir):
-            corpus_bands = _read_store(spark, bands_dir, new_bands,
-                                       batch_id, retention_batches)
-            cand = (new_bands.alias("i")
-                    .join(corpus_bands.alias("c"), ["band", "band_key"])
-                    .filter(F.col(f"i.{id_col}") != F.col(f"c.{id_col}"))
-                    .select(F.col(f"i.{id_col}").alias("inc_id"),
-                            F.col(f"c.{id_col}").alias("corpus_id"))
-                    .distinct())
-            # 31-bit hashes ride as array<int> through the verify
-            # join (half the shuffle bytes — dedup._i32)
-            s1 = sh.select(F.col(id_col).alias("inc_id"),
-                           F.col("hs").cast("array<int>").alias("sh1"))
-            # corpus shingle store: shuffle_hash, never broadcast —
-            # it grows with the accumulated corpus and its array
-            # payload's in-heap expansion defeats AQE's size check
-            # (same rule as the batch operators, r07)
-            s2 = (_read_store(spark, shingles_dir, sh, batch_id,
-                              retention_batches)
-                  .select(F.col(id_col).alias("corpus_id"),
-                          F.col("hs").cast("array<int>").alias("sh2"))
-                  .hint("shuffle_hash"))
-            inter = F.size(F.array_intersect("sh1", "sh2"))
-            union = F.size("sh1") + F.size("sh2") - inter
-            # compute-once barrier before the threshold filter
-            # (r16, dedup._verified_jaccard_pairs rationale); owned by
-            # the micro-batch's cache scope
-            scored = _persist(
-                cand.join(s1, "inc_id").join(s2, "corpus_id")
-                    .select("inc_id", "corpus_id",
-                            F.round(inter.cast("double") / union, 6)
-                             .alias("jaccard")))
-            verified = scored.filter(F.col("jaccard") >= threshold)
-            (verified.withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("append").parquet(pairs_dir))
         # coalesce the appends: a micro-batch's signatures are small,
         # and writing one file per shuffle partition per batch is
         # where baseline file-count growth (and with it corpus-read
         # latency) came from in the 50-batch probe. The coalesce
-        # reads the PERSISTED frames, so the corpus join above keeps
-        # its full parallelism.
-        bid = int(batch_id)
-        (new_bands.withColumn("batch_id", F.lit(batch_id))
-                  .coalesce(4).write.mode("append")
-                  .parquet(f"{bands_dir}/b{bid}"))
-        (sh.withColumn("batch_id", F.lit(batch_id))
-           .coalesce(4).write.mode("append")
-           .parquet(f"{shingles_dir}/b{bid}"))
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            _tier_compact(spark, bands_dir, bid, retention_batches)
-            _tier_compact(spark, shingles_dir, bid, retention_batches)
+        # reads the PERSISTED frames, so the corpus join keeps its
+        # full parallelism.
+        writes = [(new_bands, bands_dir, 4, True),
+                  (sh, shingles_dir, 4, True)]
+        # the gate is a cheap FS probe — batch 0 (no store at all)
+        # skips the corpus join; each store dir is then read on its
+        # own, so a sibling stranded missing by a crash reads as empty
+        # instead of wedging every retry (_read_store)
+        if _store_dir_exists(spark, bands_dir):
+            # a re-sent id never pairs with its own earlier copy
+            cand = (_band_candidates(
+                new_bands, _read_store(spark, bands_dir, new_bands,
+                                       batch_id, retention_batches), id_col)
+                    .filter(F.col("inc_id") != F.col("corpus_id")))
+            corpus_sh = _read_store(spark, shingles_dir, sh, batch_id,
+                                    retention_batches)
+            writes.append((_verified_jaccard_pairs(
+                cand, sh, corpus_sh, "inc_id", "corpus_id", id_col,
+                threshold), pairs_dir, None, None))
+        _append_batch(spark, batch_id, writes, compact_every,
+                      retention_batches)
 
     return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 
@@ -441,73 +468,39 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
     """
     import os
 
-    from pyspark.sql import functions as F
-
-    from airline_data_warehouse_spark.operators import similarity as sim
+    from airline_data_warehouse_spark.operators.dedup import (
+        _band_candidates,
+        _vector_frames,
+        _verified_cosine_pairs,
+    )
 
     bands_dir = os.path.join(store_dir, "emb_bands")
     vectors_dir = os.path.join(store_dir, "vectors")
     pairs_dir = os.path.join(store_dir, "pairs")
 
-    keys = sim.hyperplane_band_keys_sql("v", bands=4, rows_per_band=8)
-
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ev = (batch_df.filter(sim._finite_ok(F.col(vec_col)))
-              .select(F.col(id_col),
-                      F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                       .alias("v")))
-        new_vecs = _persist(
-            ev.select(id_col, "v", sim._norm(F.col("v")).alias("n")))
-        new_bands = _persist(
-            ev.select(id_col, F.posexplode(F.array(*keys))
-                      .alias("band", "band_key"))
-              .select(id_col, F.col("band").cast("int").alias("band"),
-                      "band_key"))
+        new_vecs, new_bands = map(
+            _persist, _vector_frames(batch_df, id_col, vec_col))
+        writes = [(new_bands, bands_dir, 4, True),
+                  (new_vecs, vectors_dir, 4, True)]
         # cheap FS probe gates batch 0 only; a vectors dir stranded
-        # missing by a crash between the two appends reads as empty
-        # on retry instead of wedging the stream (_read_store,
-        # ADVICE r08 medium)
+        # missing by a crash between the appends reads as empty on
+        # retry instead of wedging the stream (_read_store, ADVICE r08
+        # medium)
         if _store_dir_exists(spark, bands_dir):
-            corpus_bands = _read_store(spark, bands_dir, new_bands,
-                                       batch_id, retention_batches)
-            cand = (new_bands.alias("i")
-                    .join(corpus_bands.alias("c"), ["band", "band_key"])
-                    .filter(F.col(f"i.{id_col}") != F.col(f"c.{id_col}"))
-                    .select(F.col(f"i.{id_col}").alias("inc_id"),
-                            F.col(f"c.{id_col}").alias("corpus_id"))
-                    .distinct())
-            v1 = (new_vecs.select(F.col(id_col).alias("inc_id"),
-                                  F.col("v").alias("v1"),
-                                  F.col("n").alias("n1"))
-                  .hint("shuffle_hash"))
-            v2 = (_read_store(spark, vectors_dir, new_vecs, batch_id,
-                              retention_batches)
-                  .select(F.col(id_col).alias("corpus_id"),
-                          F.col("v").alias("v2"), F.col("n").alias("n2"))
-                  .hint("shuffle_hash"))
-            score = F.round(sim._dot(F.col("v1"), F.col("v2"))
-                            / (F.col("n1") * F.col("n2")), 6)
-            # compute-once barrier (r16): pushed into the join
-            # condition the 64-mult dot would evaluate twice per
-            # candidate; owned by the micro-batch's cache scope
-            scored = _persist(
-                cand.join(v1, "inc_id").join(v2, "corpus_id")
-                    .select("inc_id", "corpus_id",
-                            score.alias("score")))
-            flagged = scored.filter(F.col("score") >= threshold)
-            (flagged.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("append").parquet(pairs_dir))
-        bid = int(batch_id)
-        (new_bands.withColumn("batch_id", F.lit(batch_id))
-                  .coalesce(4).write.mode("append")
-                  .parquet(f"{bands_dir}/b{bid}"))
-        (new_vecs.withColumn("batch_id", F.lit(batch_id))
-                 .coalesce(4).write.mode("append")
-                 .parquet(f"{vectors_dir}/b{bid}"))
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            _tier_compact(spark, bands_dir, bid, retention_batches)
-            _tier_compact(spark, vectors_dir, bid, retention_batches)
+            # a re-sent id never pairs with its own earlier copy
+            cand = (_band_candidates(
+                new_bands, _read_store(spark, bands_dir, new_bands,
+                                       batch_id, retention_batches), id_col)
+                    .filter(F.col("inc_id") != F.col("corpus_id")))
+            corpus_vecs = _read_store(spark, vectors_dir, new_vecs,
+                                      batch_id, retention_batches)
+            writes.append((_verified_cosine_pairs(
+                cand, new_vecs, corpus_vecs, id_col, threshold),
+                pairs_dir, None, None))
+        _append_batch(spark, batch_id, writes, compact_every,
+                      retention_batches)
 
     return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 
@@ -547,112 +540,44 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
     vectors)."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from airline_data_warehouse_spark.operators import similarity as sim
     from airline_data_warehouse_spark.operators.dedup import (
-        _i32,
+        _CASCADE_STORES,
+        _cascade_frames,
         cascade_classify,
-        minhash_band_table,
-        shingled,
     )
 
     dirs = {name: os.path.join(store_dir, name)
-            for name in ("hashes", "bands", "shingles", "emb_bands",
-                         "vectors", "verdicts")}
-
-    emb_keys = sim.hyperplane_band_keys_sql("v", bands=4, rows_per_band=8)
+            for name in _CASCADE_STORES + ("verdicts",)}
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = _persist(batch_df.select(id_col, text_col))
         emb = _persist(batch_df.select(F.col(id_col).alias("vec_id"),
                                        F.col(vec_col)))
-        sh = _persist(shingled(docs.filter(F.col(text_col).isNotNull()),
-                               text_col, id_col))
-        ev = _persist(
-            batch_df.filter(sim._finite_ok(F.col(vec_col)))
-                    .select(F.col(id_col).alias("vec_id"),
-                            F.transform(F.col(vec_col),
-                                        lambda x: x.cast("double"))
-                             .alias("v")))
-        # the batch's own signature frames — appended to the five stores
-        # below, and (as .limit(0)) the schema templates _read_store
-        # substitutes for a sibling dir stranded missing by a crash
-        # between the sequential appends (ADVICE r08 medium)
-        new_hashes = (docs.filter(F.col(text_col).isNotNull())
-                      .select(F.md5(text_col).alias("text_md5"),
-                              F.col(id_col))
-                      .groupBy("text_md5").agg(F.min(id_col).alias("keeper")))
-        new_bands = minhash_band_table(sh, id_col)
-        new_shingles = sh.select(id_col, _i32("hs").alias("hs"))
-        new_emb_bands = (ev.select("vec_id",
-                                   F.posexplode(F.array(*emb_keys))
-                                    .alias("band", "band_key"))
-                         .select("vec_id",
-                                 F.col("band").cast("int").alias("band"),
-                                 "band_key"))
-        new_vectors = ev.select("vec_id", "v", sim._norm(F.col("v")).alias("n"))
-        empty_like = {"hashes": new_hashes, "bands": new_bands,
-                      "shingles": new_shingles, "emb_bands": new_emb_bands,
-                      "vectors": new_vectors}
-        # gate on the FIRST-appended store only to detect a truly
-        # fresh stream; each of the five reads probes its own dir
+        # the batch's own signature frames — appended to the five
+        # stores below, and (as .limit(0)) the schema templates
+        # _read_store substitutes for a store dir a crash left missing
+        frames = _cascade_frames(docs, emb, text_col, id_col, vec_col)
+        # gate on the hashes store only to detect a truly fresh
+        # stream; each of the five reads probes its own dir
         # (crash-stranded siblings → empty, never a wedged retry)
         if _store_dir_exists(spark, dirs["hashes"]):
             verdicts = cascade_classify(
                 docs, emb,
-                *(_read_store(spark, dirs[n], empty_like[n], batch_id,
+                *(_read_store(spark, dirs[n], frames[n], batch_id,
                               retention_batches)
-                  for n in ("hashes", "bands", "shingles", "emb_bands",
-                            "vectors")),
+                  for n in _CASCADE_STORES),
                 threshold=threshold, cos_threshold=cos_threshold,
                 text_col=text_col, id_col=id_col, vec_col=vec_col)
         else:
             verdicts = docs.select(
                 id_col, F.lit("kept").alias("verdict"),
                 F.lit(None).cast("long").alias("partner_id"))
-        # all six writes run CONCURRENTLY (VERDICT r09 item 5): each
-        # is a tiny job whose cost is scheduling, not data — run
-        # sequentially they were ~60% of the measured ~5 s/batch
-        # floor; submitted together the wall-clock is max(job), not
-        # sum. Ordering is correctness-free by construction: the
-        # verdicts plan reads stores through _read_store's
-        # batch_id < current filter (its file index was also listed
-        # before any append lands), and signature appends commute
-        # with each other. Crash semantics are unchanged — ANY
-        # subset of the six may land before a crash, exactly as any
-        # prefix could before; retries re-append (duplicates removed
-        # at compaction / deduped on read) and re-classify
-        # identically. The first failure fails the micro-batch.
-        bid = F.lit(batch_id)
-        bsub = f"b{int(batch_id)}"
-        writes = [
-            (verdicts.withColumn("batch_id", bid), dirs["verdicts"]),
-            (new_hashes.withColumn("batch_id", bid),
-             f"{dirs['hashes']}/{bsub}"),
-            (new_bands.withColumn("batch_id", bid),
-             f"{dirs['bands']}/{bsub}"),
-            (new_shingles.withColumn("batch_id", bid),
-             f"{dirs['shingles']}/{bsub}"),
-            (new_emb_bands.withColumn("batch_id", bid),
-             f"{dirs['emb_bands']}/{bsub}"),
-            (new_vectors.withColumn("batch_id", bid),
-             f"{dirs['vectors']}/{bsub}"),
-        ]
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            futs = [pool.submit(
-                lambda frame, path: frame.coalesce(4).write
-                .mode("append").parquet(path), f, p)
-                for f, p in writes]
-            for fut in futs:
-                fut.result()   # propagate the first failure
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            for name in ("hashes", "bands", "shingles", "emb_bands",
-                         "vectors"):
-                _tier_compact(spark, dirs[name], int(batch_id),
-                              retention_batches)
+        _append_batch(spark, batch_id,
+                      [(verdicts, dirs["verdicts"], 4, None)]
+                      + [(frames[n], dirs[n], 4, True)
+                         for n in _CASCADE_STORES],
+                      compact_every, retention_batches)
 
     return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 
@@ -820,22 +745,13 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
             "start_corpus", "start_inc")
         # per-batch appends land in b{N} subdirs of the tiered
         # layout (append mode: a replayed batch re-appends into
-        # its own b-dir; reads DISTINCT, compaction dropDuplicates)
-        bid = int(batch_id)
-        (spans.withColumn("batch_id", F.lit(batch_id))
-         .coalesce(4).write.mode("append")
-         .parquet(f"{spans_dir}/b{bid}"))
-        (bw.withColumn("batch_id", F.lit(batch_id))
-         .coalesce(4).write.mode("append")
-         .parquet(f"{windows_dir}/b{bid}"))
-        (bstats.withColumn("batch_id", F.lit(batch_id))
-         .coalesce(1).write.mode("append")
-         .parquet(f"{stats_dir}/b{bid}"))
-        if compact_every and batch_id > 0 \
-                and batch_id % compact_every == 0:
-            _tier_compact(spark, windows_dir, bid, retention_batches)
-            _tier_compact(spark, stats_dir, bid, retention_batches)
-            _tier_compact(spark, spans_dir, bid, retain=False)
+        # its own b-dir; reads DISTINCT, compaction dropDuplicates);
+        # spans are findings, compacted without the state horizon
+        _append_batch(spark, batch_id,
+                      [(bw, windows_dir, 4, True),
+                       (bstats, stats_dir, 1, True),
+                       (spans, spans_dir, 4, False)],
+                      compact_every, retention_batches)
 
     return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
 

@@ -440,6 +440,22 @@ def test_cache_lifetime_only_in_dedup_registry():
         "\n".join(hits)
 
 
+def test_stream_dedup_store_appends_only_in_append_batch():
+    """Regrowth tripwire for the shared per-batch store step: the four
+    dedup ingests append through `streaming.dedup._append_batch`, so
+    the module holds exactly one ``mode("append")`` site and one
+    ``ThreadPoolExecutor`` — an ingest cannot grow its own sequential
+    or concurrent append path back."""
+    import pathlib
+    import re
+    py = (pathlib.Path(__file__).parent.parent
+          / "airline_data_warehouse_spark" / "streaming" / "dedup.py")
+    code = "\n".join(line.split("#")[0]
+                     for line in py.read_text().splitlines())
+    assert code.count('mode("append")') == 1
+    assert len(re.findall(r"ThreadPoolExecutor\(", code)) == 1
+
+
 def test_rolling_features_time_bounds_and_gaps(spark, tmp_path):
     """Rolling 24h frame semantics: an event exactly 24h earlier is
     INCLUDED (closed frame), 24h+1us is excluded; the sum is exact

@@ -716,9 +716,148 @@ def test_stream_cascade_ingest_three_tiers_accumulate(spark, tmp_path):
     assert len(out) == 9
 
 
+def test_stream_cascade_ingest_continues_batch_built_store(spark, tmp_path):
+    """A nightly batch build and a live stream hand state to each other
+    through one store: a stream started on a `cascade_store_build`
+    store classifies against it. The build writes no ``batch_id``; the
+    stream reads such rows as batch -1, before its own batch 0 (read as
+    null they failed the ``batch_id < current`` filter and the whole
+    built corpus was ignored — every doc came out ``kept``). Doc 1
+    re-sent under id 1001 is ``exact`` with keeper 1, the verdict the
+    batch `incremental_cascade` gives on the same store."""
+    import json as jsonlib
+    import random
+
+    from airline_data_warehouse_spark.operators.dedup import (
+        cascade_store_build,
+        incremental_cascade,
+    )
+    from airline_data_warehouse_spark.streaming.dedup import (
+        start_cascade_ingest,
+    )
+
+    rng = random.Random(40)
+    words = [f"tok{i}" for i in range(200)]
+    corpus = [(i, " ".join(rng.choice(words) for _ in range(30)),
+               [rng.uniform(-1, 1) for _ in range(64)])
+              for i in range(1, 21)]
+    store = str(tmp_path / "built_store")
+    cascade_store_build(
+        spark.createDataFrame([(i, t) for i, t, _ in corpus],
+                              "doc_id long, text string"),
+        spark.createDataFrame([(i, v) for i, _, v in corpus],
+                              "vec_id long, embedding array<double>"),
+        store)
+    _, text1, vec1 = corpus[0]
+    batch = incremental_cascade(
+        spark, store,
+        spark.createDataFrame([(1001, text1)], "doc_id long, text string"),
+        spark.createDataFrame([(1001, vec1)],
+                              "vec_id long, embedding array<double>"))
+    assert [tuple(r) for r in batch.collect()] == [(1001, "exact", 1)]
+
+    in_dir = tmp_path / "handoff_in"
+    in_dir.mkdir()
+    src = (spark.readStream
+           .schema("doc_id long, text string, embedding array<double>")
+           .option("maxFilesPerTrigger", 1).json(str(in_dir)))
+    q = start_cascade_ingest(src, store,
+                             checkpoint_dir=str(tmp_path / "handoff_ckpt"))
+    try:
+        drop_file(in_dir, "b0.json", jsonlib.dumps(
+            {"doc_id": 1001, "text": text1, "embedding": vec1}) + "\n")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = [(r["doc_id"], r["verdict"], r["partner_id"], r["batch_id"])
+           for r in spark.read.parquet(f"{store}/verdicts").collect()]
+    assert out == [(1001, "exact", 1, 0)]
+
+
+def _run_ingests(spark, root, ingests: dict, batches: list) -> None:
+    """Run every ``name -> (start, schema, rows_of)`` ingest at once on
+    this session, one input file per batch; ``rows_of(batch)`` gives a
+    batch's JSON rows. Each ingest's store lands in ``root/name``."""
+    import json as jsonlib
+
+    queries = {}
+    try:
+        for name, (start, schema, _) in ingests.items():
+            (root / f"{name}_in").mkdir(parents=True)
+            src = (spark.readStream.schema(schema)
+                   .option("maxFilesPerTrigger", 1)
+                   .json(str(root / f"{name}_in")))
+            queries[name] = start(src, str(root / name),
+                                  checkpoint_dir=str(root / f"{name}_ck"),
+                                  compact_every=1)
+        for i, batch in enumerate(batches):
+            for name, (_, _, rows_of) in ingests.items():
+                drop_file(root / f"{name}_in", f"b{i}.json", "".join(
+                    jsonlib.dumps(r) + "\n" for r in rows_of(batch)))
+            for q in queries.values():
+                q.processAllAvailable()
+    finally:
+        for q in queries.values():
+            q.stop()
+
+
+def _store_rows(spark, store_dir) -> dict:
+    """Distinct rows of every dir of a store (tiered or flat)."""
+    import os
+
+    return {name: sorted(map(str, spark.read
+                             .option("recursiveFileLookup", "true")
+                             .parquet(os.path.join(store_dir, name))
+                             .distinct().collect()))
+            for name in sorted(os.listdir(store_dir))}
+
+
+def test_two_concurrent_dedup_ingests_match_solo_runs(spark, tmp_path):
+    """Two dedup ingests running at once on one session (each micro-
+    batch runs a thread pool of appends inside its own cache_scope)
+    leave every store dir exactly as a solo run does: neither stream's
+    scope releases the other's caches, and neither's appends or
+    compactions land in the other's store."""
+    import random
+
+    from airline_data_warehouse_spark.streaming.dedup import (
+        start_exact_substring_ingest,
+        start_neardup_ingest,
+    )
+
+    rng = random.Random(6)
+    words = [f"w{i}" for i in range(40)]
+    first = [" ".join(rng.choice(words) for _ in range(30))
+             for _ in range(4)]
+    batches = [list(enumerate(first, 1)),
+               [(5, first[0]), (6, first[1][:int(len(first[1]) * 0.9)]),
+                (7, " ".join(rng.choice(words) for _ in range(30)))]]
+
+    def text_rows(batch):
+        return [{"doc_id": d, "text": t} for d, t in batch]
+
+    def es_start(src, store, **kw):
+        return start_exact_substring_ingest(src, store, k=4, min_tokens=8,
+                                            **kw)
+
+    schema = "doc_id long, text string"
+    ingests = {"neardup": (start_neardup_ingest, schema, text_rows),
+               "es": (es_start, schema, text_rows)}
+    for name, ingest in ingests.items():
+        _run_ingests(spark, tmp_path / "solo", {name: ingest}, batches)
+    _run_ingests(spark, tmp_path / "both", ingests, batches)
+    for name in ingests:
+        solo = _store_rows(spark, tmp_path / "solo" / name)
+        assert solo == _store_rows(spark, tmp_path / "both" / name), name
+    solo_pairs = _store_rows(spark, tmp_path / "solo" / "neardup")["pairs"]
+    assert any("inc_id=5, corpus_id=1" in r for r in solo_pairs)
+    assert _store_rows(spark, tmp_path / "solo" / "es")["spans"]
+
+
 def test_stream_cascade_batch0_crash_between_appends_recovers(spark, tmp_path):
-    """ADVICE r08 (medium): batch 0's five store appends are sequential,
-    so a crash after the `hashes` append strands the siblings missing
+    """ADVICE r08 (medium): any subset of batch 0's five store appends
+    may land before a crash, so a crash after the `hashes` append
+    strands the siblings missing
     while the old single-dir probe reported the store present — every
     retry then died on the missing-path parquet read, permanently
     wedging the stream. Pin the fix: replay batch 0 against a store
