@@ -30,6 +30,7 @@ from airline_data_warehouse_spark.operators.hashing import (
     minhash_signature,
     rehash60,
 )
+from airline_data_warehouse_spark.sources.atomic import _fs, _write_marker
 
 SIMHASH_MAX_HAMMING = 3  # default near-dup budget (Manku et al. use 3 on 64 bits)
 
@@ -876,25 +877,17 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
     surviving marker would declare complete; the marker goes through
     the Hadoop FileSystem API (not driver-local open()/os.path), so the
     guard holds for non-local store_dirs too (ADVICE r08)."""
-    import os
-
-    spark = docs.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(os.path.join(store_dir, "_built"))
-    fs = marker.getFileSystem(conf)
-    if fs.exists(marker):
+    mk, fs = _store_fs(docs.sparkSession, store_dir)
+    if fs.exists(mk("_built")):
         if not overwrite:
             return
-        fs.delete(marker, False)
+        fs.delete(mk("_built"), False)
     vec_id = F.col(id_col if id_col in emb.columns else "vec_id")
     frames = _cascade_frames(docs, emb.select(vec_id.alias("vec_id"), vec_col),
                              text_col, id_col, vec_col)
     for name, frame in frames.items():
-        frame.write.mode("overwrite").parquet(os.path.join(store_dir, name))
-    out = fs.create(marker, True)
-    out.write(bytearray(b"ok\n"))
-    out.close()
+        frame.write.mode("overwrite").parquet(str(mk(name)))
+    _write_marker(fs, mk("_built"), b"ok\n")
 
 
 def incremental_cascade(spark, store_dir: str, inc_docs: DataFrame,
@@ -1310,17 +1303,12 @@ def exact_substring_spans_incremental(corpus: DataFrame,
         _token_arrays(increment, text_col, id_col, "inc_id", "_wb"))
 
 
-def _es_store_fs(spark, store_dir: str):
-    """(Path-factory, FileSystem) for an ExactSubstr store dir — the
-    Hadoop FileSystem API, so markers hold for non-local stores (the
-    cascade_store_build convention)."""
-    import os
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    mk = lambda *parts: jvm.org.apache.hadoop.fs.Path(  # noqa: E731
-        os.path.join(store_dir, *parts))
-    return mk, mk("_built").getFileSystem(conf)
+def _store_fs(spark, store_dir: str):
+    """(Path factory over the store dir's entries, FileSystem) for a
+    built store (cascade, ExactSubstr) — the Hadoop FileSystem API, so
+    the ``_built`` marker holds for non-local stores."""
+    hpath, fs = _fs(spark, store_dir)
+    return (lambda name: hpath(store_dir, name)), fs
 
 
 @cache_scope()
@@ -1375,7 +1363,7 @@ def exact_substring_store_build(corpus: DataFrame, store_dir: str,
     increment-time decision from hashstats + the batch's own
     counts."""
     spark = corpus.sparkSession
-    mk, fs = _es_store_fs(spark, store_dir)
+    mk, fs = _store_fs(spark, store_dir)
     if fs.exists(mk("_built")):
         if not overwrite:
             kk, kdf, kocc = _es_store_meta(spark, store_dir)
@@ -1417,9 +1405,7 @@ def exact_substring_store_build(corpus: DataFrame, store_dir: str,
     (jvm_local_frame(spark, [(int(k), int(max_df), int(max_occ))],
                      "k int, max_df int, max_occ int")
      .coalesce(1).write.mode("overwrite").parquet(str(mk("meta"))))
-    out = fs.create(mk("_built"), True)
-    out.write(bytearray(b"ok\n"))
-    out.close()
+    _write_marker(fs, mk("_built"), b"ok\n")
 
 
 def _es_store_meta(spark, store_dir: str) -> tuple[int, int, int]:
@@ -1427,7 +1413,7 @@ def _es_store_meta(spark, store_dir: str) -> tuple[int, int, int]:
     store without its `_built` marker (half-built stores are rebuilt,
     never half-read — the cascade marker contract). Reads a pre-fix
     2-column sidecar (k, max_occ) with max_df defaulted to 16."""
-    mk, fs = _es_store_fs(spark, store_dir)
+    mk, fs = _store_fs(spark, store_dir)
     if not fs.exists(mk("_built")):
         raise ValueError(
             f"exact_substring store at {store_dir!r} has no _built "
@@ -1477,7 +1463,7 @@ def exact_substring_spans_store(spark, store_dir: str,
     present in the store RAISES — the df sum would silently
     double-count it."""
     k, max_df, max_occ = _es_store_meta(spark, store_dir)
-    mk, _ = _es_store_fs(spark, store_dir)
+    mk, _ = _store_fs(spark, store_dir)
     # hashstats holds DELTA rows (one per hash per build/append) —
     # readers sum per hash, the linear-state convention; with the
     # disjoint-id contract the summed distinct-doc counts equal the
@@ -1565,7 +1551,7 @@ def exact_substring_store_append(spark, store_dir: str,
     increment. On a raise after a crash, re-id or rebuild the store
     (the error says so)."""
     k, _max_df, _max_occ = _es_store_meta(spark, store_dir)
-    mk, _fs = _es_store_fs(spark, store_dir)
+    mk, _ = _store_fs(spark, store_dir)
     clash = (spark.read.parquet(str(mk("tokens")))
              .join(increment.select(F.col(id_col)).distinct(), id_col,
                    "left_semi").limit(1).count())

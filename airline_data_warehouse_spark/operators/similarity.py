@@ -1653,27 +1653,23 @@ def ivfpq_index_compact(spark, index_dir: str, target_files: int = 1,
     Returns {"codes": [...], "vectors": [...], "append_log": bool} —
     the partition directories rewritten and whether the log was."""
     from airline_data_warehouse_spark.sources.atomic import (
-        _fs,
         compact_directory,
         compact_partitions,
     )
 
-    report = {
+    # an index built with store_vectors=False has no vectors.parquet;
+    # compact_partitions returns [] for a missing dir
+    return {
         "codes": compact_partitions(
             spark, f"{index_dir}/codes.parquet", "list_id",
             target_files=target_files, max_files_ok=max_files_ok),
-        "vectors": [],
+        "vectors": compact_partitions(
+            spark, f"{index_dir}/vectors.parquet", "list_id",
+            target_files=target_files, max_files_ok=max_files_ok),
         "append_log": compact_directory(
             spark, f"{index_dir}/append_log",
             target_files=target_files, max_files_ok=max_files_ok),
     }
-    vec_path = f"{index_dir}/vectors.parquet"
-    hpath, fs = _fs(spark, vec_path)
-    if fs.exists(hpath(vec_path)):
-        report["vectors"] = compact_partitions(
-            spark, vec_path, "list_id",
-            target_files=target_files, max_files_ok=max_files_ok)
-    return report
 
 
 def kcenter_select(corpus: DataFrame, k: int = 6, dims: int = 64,

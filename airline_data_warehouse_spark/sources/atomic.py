@@ -1,16 +1,38 @@
-"""Crash-safe plain-parquet table mutation: partition-scoped
-stage-then-swap, shared by the streaming eligibility merge
-(streaming/status.py) and the generalized batch upsert below.
+"""Crash-safe plain-parquet table mutation. Every partition swap,
+directory replace and crash heal in the package goes through the
+helpers in this module: the batch upsert/MERGE, partition and directory
+compaction, the linear-state folds (streaming/sketch.py) and the
+streaming eligibility merge (streaming/status.py).
 
-Protocol (per partition directory): the replacement is fully written to
-a SIBLING staging directory while the destination is still only being
-read, then swapped in with two renames — dest → hidden
-``.name.replaced`` backup, staging → dest. Renames are atomic on HDFS
-and local filesystems and dot-prefixed directories are invisible to
-Spark's parquet reader, so at every instant each partition is either
-completely-old or completely-new. `recover_partitions` rolls back any
-partition a crash stranded between the two renames; mutation bodies are
-idempotent, so a checkpointed/driver retry after recovery converges.
+Protocol — the rename pair (`_swap_in`): the replacement is fully
+written to a SIBLING staging directory while the destination is still
+only being read, then swapped in with two renames — dest → hidden
+``.name.replaced`` backup, staging → dest — and the backup is deleted.
+Renames are atomic on HDFS and local filesystems and dot-prefixed
+directories are invisible to Spark's parquet reader, so at every
+instant each partition (or directory) is either completely old or
+completely new. A partitioned rewrite (`_rewrite_partitions`) swaps one
+partition at a time; a crash between partitions leaves a mixed but
+internally consistent table.
+
+Heal (`_heal`): a crash between the two renames leaves the ONLY copy
+in the backup. A backup whose destination is missing is renamed back
+(rollback to the old, complete content); a backup whose destination
+exists is a post-swap leftover and is deleted. Rollback is conservative
+for deletions too: a partition the crashed run had emptied comes back
+whole. Every writer heals before it reads, stale staging directories
+are deleted before staging, and mutation bodies are idempotent, so a
+checkpointed or driver retry after a crash converges.
+
+Single writer: an append racing the swap window can land in the backup
+and be deleted with it, so call the writers from the thread that owns
+the table's writes (a foreachBatch loop, a scheduled maintenance job).
+Readers may heal concurrently, and both sides converge: a heal whose
+rename loses to a live swap's second rename deletes the backup, and a
+swap whose second rename loses to a heal drops its staged copy and
+reports no swap (`replace_directory` returns False; a partition
+rewrite, where the contract rules this out, raises).
+
 Object stores without atomic rename (S3) should use a transactional
 format (Delta/Iceberg MERGE) instead — these helpers are the
 plain-parquet path for real filesystems, and a Delta MERGE drops in
@@ -32,84 +54,118 @@ from pyspark.sql import types as T
 
 
 def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    """(Path factory, FileSystem) for ``path`` — the package's one
+    Hadoop FileSystem lookup, so probes and markers hold for non-local
+    paths too."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     return hpath, hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    hpath, fs = _fs(spark, path)
+    return fs.exists(hpath(path))
+
+
+def _write_marker(fs, path, data: bytes) -> None:
+    """Create (or overwrite) the commit-marker file ``path`` holding
+    ``data``. Writers create it after the data it commits, so its
+    presence declares that data complete."""
+    out = fs.create(path, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def _backup(hpath, dest):
+    return hpath(dest.getParent(), f".{dest.getName()}.replaced")
+
+
+def _heal(fs, backup, dest) -> None:
+    """Heal one hidden backup left by a crashed swap (module
+    docstring)."""
+    if fs.exists(dest):
+        fs.delete(backup, True)  # post-swap leftover: dest is new data
+    elif not fs.rename(backup, dest):
+        # a live swap's second rename can land between the check and
+        # this rename: dest now exists and the backup is an ordinary
+        # post-swap leftover. Only a failure with dest STILL missing is
+        # real corruption.
+        if not fs.exists(dest):
+            raise IOError(f"recovery: rename {backup} -> {dest} failed")
+        fs.delete(backup, True)
+
+
+def _swap_in(fs, hpath, staged, dest) -> bool:
+    """The rename pair (module docstring): swap the fully written
+    ``staged`` directory into ``dest``; ``staged`` None removes
+    ``dest``. Returns False when a concurrent heal put the old copy
+    back between the two renames — the staged copy is dropped and
+    ``dest`` holds its old content."""
+    backup = _backup(hpath, dest)
+    if fs.exists(backup):
+        fs.delete(backup, True)  # leftover from a crashed prior swap
+    if fs.exists(dest) and not fs.rename(dest, backup):
+        raise IOError(f"swap: rename {dest} -> {backup} failed")
+    if staged is not None and not fs.rename(staged, dest):
+        if fs.exists(dest) and not fs.exists(backup):
+            fs.delete(staged, True)
+            return False
+        raise IOError(f"swap: rename {staged} -> {dest} failed")
+    fs.delete(backup, True)
+    return True
+
+
+def _stage(spark: SparkSession, writer, staging: str):
+    """Write ``writer`` to the sibling ``staging`` dir, first deleting
+    what a crashed prior attempt left there; returns `_fs`'s pair."""
+    hpath, fs = _fs(spark, staging)
+    if fs.exists(hpath(staging)):
+        fs.delete(hpath(staging), True)
+    writer.mode("overwrite").parquet(staging)
+    return hpath, fs
 
 
 def recover_partitions(spark: SparkSession, dest_root: str,
                        partition_col: str) -> None:
-    """Roll back any partition stranded mid-swap by a crash.
-
-    A crash in the window between `swap_partitions`' two renames leaves
-    the partition's ONLY copy in the hidden backup — invisible to
-    Spark's reader, so a retry that reads the table before recovery
-    would treat those rows as gone. Run this before any read that
-    precedes a swap: a backup whose destination is missing is renamed
-    back (rollback to the old, complete partition); a backup whose
-    destination exists is a leftover from a crash after the second
-    rename and is safely deleted (dest already holds the new data).
-    Rollback is CONSERVATIVE for deletions too: a partition the crashed
-    run had emptied comes back whole, and the idempotent retry
-    re-empties it.
-    """
+    """Heal every partition of ``dest_root`` a crash stranded mid-swap
+    (module docstring). Run it before any read that precedes a swap: a
+    stranded partition's only copy is invisible to Spark's reader, so a
+    retry reading first would treat those rows as gone."""
     hpath, fs = _fs(spark, dest_root)
-    root = hpath(dest_root)
-    if not fs.exists(root):
+    if not fs.exists(hpath(dest_root)):
         return
     prefix = "." + partition_col + "="
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)
+    for st in fs.listStatus(hpath(dest_root)):
+        name = st.getPath().getName()
+        if (st.isDirectory() and name.startswith(prefix)
                 and name.endswith(".replaced")):
-            continue
-        dest = hpath(dest_root, name[1:-len(".replaced")])
-        if fs.exists(dest):
-            fs.delete(status.getPath(), True)  # new data already in place
-        elif not fs.rename(status.getPath(), dest):
-            raise IOError(f"partition recovery: rename {name} -> {dest} failed")
+            _heal(fs, st.getPath(),
+                  hpath(dest_root, name[1:-len(".replaced")]))
 
 
-def swap_partitions(spark: SparkSession, staging: str, dest_root: str,
-                    partition_col: str,
-                    drop_partitions: list[str] | None = None) -> None:
-    """Swap every fully-written staging partition directory into the
-    destination (two atomic renames each, see module docstring), then
-    remove ``drop_partitions`` (directory names like ``col=value``) that
-    the mutation emptied — same backup-then-delete protocol, so a crash
-    mid-removal is rolled back conservatively by `recover_partitions`.
-    A crash between partitions leaves a mixed but internally-consistent
-    table which the idempotent retry converges.
-    """
+def _rewrite_partitions(spark: SparkSession, frame: DataFrame,
+                        dest_root: str, partition_col: str, staging: str,
+                        drop_partitions: list[str] | None = None) -> None:
+    """Stage ``frame`` partitioned by ``partition_col``, then swap each
+    staged partition into ``dest_root`` and remove ``drop_partitions``
+    (directory names like ``col=value``) the mutation emptied — one
+    `_swap_in` each (module docstring) — and delete the staging dir."""
+    hpath, fs = _stage(spark, frame.write.partitionBy(partition_col),
+                       staging)
     recover_partitions(spark, dest_root, partition_col)
-    hpath, fs = _fs(spark, dest_root)
     prefix = partition_col + "="
-    seen = set()
-    for status in fs.listStatus(hpath(staging)):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue  # _SUCCESS and friends
-        seen.add(name)
-        dest = hpath(dest_root, name)
-        backup = hpath(dest_root, f".{name}.replaced")
-        if fs.exists(backup):
-            fs.delete(backup, True)  # leftover from a crashed prior swap
-        if fs.exists(dest) and not fs.rename(dest, backup):
-            raise IOError(f"partition swap: rename {dest} -> {backup} failed")
-        if not fs.rename(status.getPath(), dest):
-            raise IOError(f"partition swap: rename into {dest} failed")
-        fs.delete(backup, True)
-    for name in drop_partitions or []:
-        if name in seen or not name.startswith(prefix):
-            continue
-        dest = hpath(dest_root, name)
-        backup = hpath(dest_root, f".{name}.replaced")
-        if fs.exists(backup):
-            fs.delete(backup, True)
-        if fs.exists(dest):
-            if not fs.rename(dest, backup):
-                raise IOError(f"partition drop: rename {dest} -> {backup} failed")
-            fs.delete(backup, True)
+    staged = {st.getPath().getName(): st.getPath()
+              for st in fs.listStatus(hpath(staging))
+              if st.isDirectory()  # not _SUCCESS and friends
+              and st.getPath().getName().startswith(prefix)}
+    for name in [*staged, *(n for n in drop_partitions or ()
+                            if n.startswith(prefix) and n not in staged)]:
+        if not _swap_in(fs, hpath, staged.get(name),
+                        hpath(dest_root, name)):
+            raise IOError(f"partition swap into {dest_root}/{name} lost "
+                          "to a concurrent heal — single-writer "
+                          "contract broken")
     fs.delete(hpath(staging), True)
 
 
@@ -123,16 +179,13 @@ def upsert_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
 
     Partition-scoped: only partitions that hold a matched key or
     receive a source row are re-derived — (target rows there whose key
-    is NOT in the source) ∪ (all source rows) — staged to a sibling
-    directory, and swapped in per partition. A key whose partition
-    value CHANGES is handled: its old partition is affected (holds the
+    is NOT in the source) ∪ (all source rows) — staged, and swapped in
+    per partition (module docstring). A key whose partition value
+    CHANGES is handled: its old partition is affected (holds the
     matched key, so it is rewritten without the row — or dropped
-    outright if that empties it) and its new partition receives it. A
-    100 TB fact takes a few directory rewrites per delta, not a table
-    rewrite, and the table stays readable and whole at every instant.
-    Crash at any point → `recover_partitions` (run here before reading)
-    rolls the table back to a consistent state and the idempotent retry
-    converges.
+    outright if that empties it) and its new partition receives it.
+    The cost is the affected directories' rewrite, not a table
+    rewrite.
     """
     merge_parquet(spark, source, dest_path, key, partition_col,
                   delete_condition=None, sort_within=sort_within)
@@ -149,8 +202,8 @@ def merge_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
     other source row upserts source-wins. The targeted-delete path is
     the right-to-be-forgotten / tombstone operation a long-lived corpus
     needs: partition-scoped directory rewrites (a partition emptied by
-    deletes is dropped atomically in the swap), never a table rewrite,
-    with the same recover-then-idempotent-retry crash contract.
+    deletes is dropped in the swap), never a table rewrite, under the
+    module's crash protocol.
 
     ``delete_condition``: Column or SQL string evaluated against SOURCE
     rows; None degrades to plain upsert.
@@ -161,13 +214,12 @@ def merge_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
     if isinstance(delete_condition, str):
         delete_condition = F.expr(delete_condition)
 
-    hpath, fs = _fs(spark, dest_path)
     recover_partitions(spark, dest_path, partition_col)
     if delete_condition is not None:
         inserts = source.filter(~F.coalesce(delete_condition, F.lit(False)))
     else:
         inserts = source
-    if not fs.exists(hpath(dest_path)):
+    if not _exists(spark, dest_path):
         # bootstrap guard: a delete-only source against a missing table
         # has nothing to insert — writing it anyway would create a
         # directory holding only _SUCCESS, and every later read of the
@@ -216,14 +268,10 @@ def merge_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
                  .join(F.broadcast(aff_lit), partition_col, "left_semi")
                  .join(keys, key, "left_anti"))
     merged = surviving.unionByName(inserts)
-    staging = f"{dest_path.rstrip('/')}__upsert_staging"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
-    (_sorted(merged).write.mode("overwrite")
-                    .partitionBy(partition_col).parquet(staging))
-    drop = [f"{partition_col}={v}" for v in affected_vals]
-    swap_partitions(spark, staging, dest_path, partition_col,
-                    drop_partitions=drop)
+    _rewrite_partitions(
+        spark, _sorted(merged), dest_path, partition_col,
+        f"{dest_path.rstrip('/')}__upsert_staging",
+        drop_partitions=[f"{partition_col}={v}" for v in affected_vals])
 
 
 # characters Spark writes VERBATIM into a partition directory name —
@@ -280,13 +328,11 @@ def _check_partition_values_droppable(partition_col: str,
 def compact_partitions(spark: SparkSession, dest_path: str,
                        partition_col: str, target_files: int = 1,
                        max_files_ok: int | None = None) -> list[str]:
-    """Small-file compaction with the same crash-safe stage-then-swap:
-    every partition directory holding more parquet files than
-    ``max_files_ok`` (default: ``target_files``) is rewritten to
-    ``target_files`` files and atomically swapped in. Readers see each
-    partition either pre- or post-compaction at every instant; a crash
-    mid-compaction rolls back via `recover_partitions` and the retry is
-    idempotent (compaction changes layout, never rows).
+    """Small-file compaction: every partition directory holding more
+    parquet files than ``max_files_ok`` (default: ``target_files``) is
+    rewritten to ``target_files`` files and swapped in under the
+    module's crash protocol (layout only, rows unchanged, so the retry
+    is idempotent).
 
     This is the maintenance job a 100 TB ingest needs: streaming
     appends and per-delta upserts accrete files per partition, and scan
@@ -298,25 +344,18 @@ def compact_partitions(spark: SparkSession, dest_path: str,
     """
     recover_partitions(spark, dest_path, partition_col)
     hpath, fs = _fs(spark, dest_path)
-    root = hpath(dest_path)
-    if not fs.exists(root):
+    if not fs.exists(hpath(dest_path)):
         return []
     limit = target_files if max_files_ok is None else max_files_ok
-    prefix = partition_col + "="
-    crowded = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue
-        n = sum(1 for f in fs.listStatus(status.getPath())
-                if f.getPath().getName().endswith(".parquet"))
-        if n > limit:
-            crowded.append(name)
+    crowded = [st.getPath().getName()
+               for st in fs.listStatus(hpath(dest_path))
+               if st.isDirectory()
+               and st.getPath().getName().startswith(partition_col + "=")
+               and sum(1 for f in fs.listStatus(st.getPath())
+                       if f.getPath().getName().endswith(".parquet"))
+               > limit]
     if not crowded:
         return []
-    staging = dest_path.rstrip("/") + ".compacting"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)
     # repartition BY THE PARTITION COLUMN (plus a salt when target_files
     # > 1): all rows of one partition value land in exactly target_files
     # tasks, so the partitioned write emits exactly that many files per
@@ -331,40 +370,19 @@ def compact_partitions(spark: SparkSession, dest_path: str,
                 % target_files)
         sub = sub.repartition(len(crowded) * target_files,
                               F.col(partition_col), salt)
-    sub.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    # swap_partitions deletes the staging directory as its last step
-    swap_partitions(spark, staging, dest_path, partition_col)
+    _rewrite_partitions(spark, sub, dest_path, partition_col,
+                        dest_path.rstrip("/") + ".compacting")
     return sorted(crowded)
 
 
 def recover_directory(spark: SparkSession, dest_path: str) -> None:
-    """Heal a directory stranded by a crash between compact_directory's
-    two renames — same hidden-backup convention as the streaming
-    stores' _recover_store_dir, at whole-directory granularity: a
-    backup whose destination is missing is the data's only copy (crash
-    after rename 1) and is renamed back; a backup whose destination
-    exists is a post-swap leftover (crash after rename 2) and is
-    deleted."""
-    import os
-
+    """Heal ``dest_path`` if a crash stranded it mid-replace (module
+    docstring). Readers of a replaced directory call this first."""
     hpath, fs = _fs(spark, dest_path)
-    parent, name = os.path.split(dest_path.rstrip("/"))
-    backup = hpath(parent, f".{name}.replaced")
-    if not fs.exists(backup):
-        return
-    if fs.exists(hpath(dest_path)):
-        fs.delete(backup, True)
-    elif not fs.rename(backup, hpath(dest_path)):
-        # Benign race (ADVICE r11-low): a LIVE compactor's second rename
-        # (staging -> dest) can land between our existence check and
-        # this rename — dest now exists and the backup is an ordinary
-        # post-swap leftover, not a stranded sole copy. Only a rename
-        # failure with dest STILL missing is real corruption.
-        if fs.exists(hpath(dest_path)):
-            fs.delete(backup, True)
-        else:
-            raise IOError(f"directory recovery: rename {backup} -> "
-                          f"{dest_path} failed")
+    dest = hpath(dest_path)
+    backup = _backup(hpath, dest)
+    if fs.exists(backup):
+        _heal(fs, backup, dest)
 
 
 def compact_directory(spark: SparkSession, dest_path: str,
@@ -373,108 +391,43 @@ def compact_directory(spark: SparkSession, dest_path: str,
     """Small-file compaction for an UNPARTITIONED parquet directory —
     the append-log twin of compact_partitions: when the directory holds
     more ``.parquet`` files than ``max_files_ok`` (default:
-    ``target_files``), rewrite its rows to ``target_files`` files in a
-    sibling staging dir and swap the whole directory in with two atomic
-    renames (dest → hidden ``.name.replaced`` backup, staging → dest).
-    Readers see the old or the new directory at every instant; a crash
-    between the renames is healed by `recover_directory` (run here
-    first, and by readers before reads). Layout-only: rows unchanged.
-
-    Single-maintenance-process contract (the cascade-store compactor's):
-    an APPEND racing the swap window can land in the backup and be
-    deleted with it — call from the thread that owns the table's writes
-    (a foreachBatch loop, a scheduled maintenance job), never
-    concurrently with appenders. Returns True when a rewrite happened.
+    ``target_files``), `replace_directory` it with its own rows in
+    ``target_files`` files. Layout-only; same single-writer contract.
+    Returns True when a rewrite happened.
     """
     recover_directory(spark, dest_path)
     hpath, fs = _fs(spark, dest_path)
-    root = hpath(dest_path)
-    if not fs.exists(root):
+    if not fs.exists(hpath(dest_path)):
         return False
     limit = target_files if max_files_ok is None else max_files_ok
-    n = sum(1 for f in fs.listStatus(root)
-            if f.getPath().getName().endswith(".parquet"))
-    if n <= limit:
+    if sum(1 for f in fs.listStatus(hpath(dest_path))
+           if f.getPath().getName().endswith(".parquet")) <= limit:
         return False
-    staging = dest_path.rstrip("/") + ".compacting"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
-    (spark.read.parquet(dest_path).coalesce(target_files)
-          .write.mode("overwrite").parquet(staging))
-    import os
-
-    parent, name = os.path.split(dest_path.rstrip("/"))
-    backup = hpath(parent, f".{name}.replaced")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if not fs.rename(root, backup):
-        raise IOError(f"directory compact: rename {dest_path} -> "
-                      f"{backup} failed")
-    if not fs.rename(hpath(staging), root):
-        # The mirror of recover_directory's benign race: a concurrent
-        # reader's recover saw dest missing mid-swap and renamed the
-        # backup back. The table is then fully restored to its
-        # pre-compaction contents — drop the staged copy and report no
-        # rewrite instead of failing the owning foreachBatch mid-flight.
-        # (The documented contract is still single-maintenance-process;
-        # this just makes the reader-side heal convergent, ADVICE
-        # r11-low.)
-        if fs.exists(root) and not fs.exists(backup):
-            fs.delete(hpath(staging), True)
-            return False
-        raise IOError(f"directory compact: rename {staging} -> "
-                      f"{dest_path} failed")
-    fs.delete(backup, True)
-    return True
+    return replace_directory(spark, spark.read.parquet(dest_path),
+                             dest_path, target_files)
 
 
 def replace_directory(spark: SparkSession, source: DataFrame,
                       dest_path: str, target_files: int = 1) -> bool:
-    """Atomically replace an UNPARTITIONED parquet directory's CONTENT
-    with ``source`` — compact_directory's protocol (stage to a sibling,
-    two renames, recover_directory healing) generalized from
-    layout-only rewrites to new content. The building block for small
-    derived state a maintenance loop folds wholesale (a Count-Min base
-    sketch, a watermark table): the directory is schema-bounded, so a
-    full rewrite is cheap, and readers see the old or the new content
-    at every instant — never a mix, never a torn window.
+    """Replace an UNPARTITIONED parquet directory's CONTENT with
+    ``source`` under the module's crash protocol: staged to the sibling
+    ``.replacing`` dir, then one rename pair. The building block for
+    small derived state a maintenance loop folds wholesale (a Count-Min
+    base sketch, a watermark table): the directory is schema-bounded,
+    so a full rewrite is cheap, and readers see the old or the new
+    content at every instant.
 
     ``source`` is fully materialized into the staging directory BEFORE
     the first rename, so it may (and typically does) read from
-    ``dest_path`` itself. Same single-maintenance-process contract and
-    reader-race convergence as compact_directory.
+    ``dest_path`` itself.
 
-    Returns True when the new content is in place, False when the
-    reader-heal race restored the OLD content instead (the benign
-    no-op branch below). Callers whose follow-up work assumes the swap
-    happened — a fold deleting the batch partitions it just absorbed —
-    MUST check this: treating the no-op as success would destroy the
-    only copy of the unfolded state."""
+    Returns True when the new content is in place, False when a
+    concurrent reader's heal restored the OLD content instead. Callers
+    whose follow-up work assumes the swap happened — a fold deleting
+    the batch partitions it just absorbed — MUST check this: treating
+    the no-op as success would destroy the only copy of the unfolded
+    state."""
     recover_directory(spark, dest_path)
-    hpath, fs = _fs(spark, dest_path)
-    root = hpath(dest_path)
     staging = dest_path.rstrip("/") + ".replacing"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
-    (source.coalesce(target_files)
-           .write.mode("overwrite").parquet(staging))
-    import os
-
-    parent, name = os.path.split(dest_path.rstrip("/"))
-    backup = hpath(parent, f".{name}.replaced")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if fs.exists(root) and not fs.rename(root, backup):
-        raise IOError(f"directory replace: rename {dest_path} -> "
-                      f"{backup} failed")
-    if not fs.rename(hpath(staging), root):
-        if fs.exists(root) and not fs.exists(backup):
-            # reader-heal race (the compact_directory convergence): the
-            # old content is fully back — drop the staged copy; the
-            # idempotent maintenance retry re-derives it
-            fs.delete(hpath(staging), True)
-            return False
-        raise IOError(f"directory replace: rename {staging} -> "
-                      f"{dest_path} failed")
-    fs.delete(backup, True)
-    return True
+    hpath, fs = _stage(spark, source.coalesce(target_files).write, staging)
+    return _swap_in(fs, hpath, hpath(staging), hpath(dest_path))

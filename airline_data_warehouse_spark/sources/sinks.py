@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.schemas import PRIMARY_KEYS
 
-# Durable crash-safe twin of `upsert` for partitioned parquet tables:
-# partition-scoped stage-then-swap MERGE (see sources/atomic.py).
+# Durable crash-safe twin of `upsert` for partitioned parquet tables: a
+# partition-scoped MERGE through sources/atomic.py's shared partition
+# rewrite (the module docstring states the protocol).
 from airline_data_warehouse_spark.sources.atomic import upsert_parquet  # noqa: F401
 
 

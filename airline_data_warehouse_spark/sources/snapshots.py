@@ -41,7 +41,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from airline_data_warehouse_spark.sources.atomic import _fs
+from airline_data_warehouse_spark.sources.atomic import _fs, _write_marker
 
 # 5+ digits: %05d pads but does NOT truncate, so version 100000 writes
 # v100000 — a 5-digit-only regex would make it invisible to _committed,
@@ -92,11 +92,8 @@ def snapshot_commit(spark: SparkSession, df: DataFrame, root: str) -> int:
     meta = {"version": version,
             "rows": spark.read.parquet(vpath).count(),
             "columns": df.columns}
-    out = fs.create(hpath(f"{_marker_dir(root)}/{_vname(version)}"))
-    try:
-        out.write(bytearray(json.dumps(meta).encode()))
-    finally:
-        out.close()
+    _write_marker(fs, hpath(f"{_marker_dir(root)}/{_vname(version)}"),
+                  json.dumps(meta).encode())
     return version
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.operators.dedup import _persist
+from airline_data_warehouse_spark.sources.atomic import _exists, _fs
 from airline_data_warehouse_spark.streaming import start_foreach_batch
 
 
@@ -56,19 +57,6 @@ def dedup_batch_exact(df: DataFrame, text_col: str = "text",
             .filter(F.col("_rn") == 1)
             .drop("_rn"))
 
-
-
-def _store_dir_exists(spark, path: str) -> bool:
-    # Explicit existence probe via the Hadoop FileSystem API, instead of
-    # read-and-swallow: a transient/corrupt-store READ failure must fail
-    # the micro-batch (structured streaming retries it) rather than
-    # silently skipping near-dup detection for the whole batch while
-    # still appending its signatures — which would lose that batch's
-    # pairs permanently (ADVICE r06).
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf).exists(hpath)
 
 
 def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
@@ -104,7 +92,11 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
     ``retention_batches`` applies the same horizon the compactor
     enforces (see start_neardup_ingest).
     """
-    if not _store_dir_exists(spark, path):
+    # explicit existence probe, not read-and-swallow: a transient or
+    # corrupt-store READ failure must fail the micro-batch (structured
+    # streaming retries it) rather than silently skip detection for the
+    # whole batch while still appending its signatures (ADVICE r06)
+    if not _exists(spark, path):
         return empty_like.limit(0)
     # explicit schema (empty_like's plus the batch_id every store row
     # carries): spark.read.parquet() otherwise EAGERLY opens a footer
@@ -127,19 +119,21 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
 
 def _tier_list(spark, path: str):
     """(hpath-factory, fs, {batch_id: b-dir name}, tier watermark,
-    [(lo, hi, c-dir name)]) for a TIERED store dir — the layout
-    `_tier_compact` maintains: per-batch appends land in ``b{N}/``
-    subdirs, consolidated tiers in ``c{lo}_{hi}/``, and readers list
-    both via one recursive scan (Spark hides dot/underscore-prefixed
-    paths, so in-flight ``.c*.staging`` writes are invisible)."""
-    from airline_data_warehouse_spark.sources.atomic import _fs
-
+    [(lo, hi, c-dir name)], [root-level parquet file]) for a TIERED
+    store dir — the layout `_tier_compact` maintains: per-batch appends
+    land in ``b{N}/`` subdirs, consolidated tiers in ``c{lo}_{hi}/``,
+    and readers list both via one recursive scan (Spark hides
+    dot/underscore-prefixed paths, so in-flight ``.c*.staging`` writes
+    are invisible). Root-level part files are a `cascade_store_build`
+    the stream continues (batch −1 rows)."""
     hpath, fs = _fs(spark, path)
-    bdirs, tiers, cmax = {}, [], -1
+    bdirs, tiers, cmax, flat = {}, [], -1, []
     if fs.exists(hpath(path)):
         for st in fs.listStatus(hpath(path)):
             name = st.getPath().getName()
             if not st.isDirectory():
+                if name.endswith(".parquet"):
+                    flat.append(st.getPath())
                 continue
             if name.startswith("b") and name[1:].isdigit():
                 bdirs[int(name[1:])] = name
@@ -148,7 +142,7 @@ def _tier_list(spark, path: str):
                 if lo.isdigit() and hi.isdigit():
                     tiers.append((int(lo), int(hi), name))
                     cmax = max(cmax, int(hi))
-    return hpath, fs, bdirs, cmax, tiers
+    return hpath, fs, bdirs, cmax, tiers, flat
 
 
 def _tier_compact(spark, path: str, batch_id: int,
@@ -188,7 +182,9 @@ def _tier_compact(spark, path: str, batch_id: int,
     tier and WHOLE tiers strictly below it are garbage-collected at
     dir granularity; a tier straddling the horizon stays until it
     falls entirely below (reads filter rows, so overhang is storage,
-    never wrong answers).
+    never wrong answers). The root-level part files of a
+    `cascade_store_build` store hold batch −1 rows and go once the
+    horizon reaches −1.
 
     ``max_tiers`` bounds TIER-COUNT growth (one new tier per
     compact_every batches would otherwise grow the read-side listing
@@ -196,7 +192,7 @@ def _tier_compact(spark, path: str, batch_id: int,
     pair with the smallest combined bytes folds into one — the
     size-tiered LSM trade, amortized O(N log N) total write volume,
     one bounded merge per call. None disables folding."""
-    hpath, fs, bdirs, cmax, tiers = _tier_list(spark, path)
+    hpath, fs, bdirs, cmax, tiers, flat = _tier_list(spark, path)
     if not bdirs and not tiers:
         return
     # sweep crashed staging writes (recreatable — sources intact)
@@ -217,6 +213,11 @@ def _tier_compact(spark, path: str, batch_id: int,
         for lo, hi, name in tiers:
             if hi <= horizon:
                 fs.delete(hpath(f"{path}/{name}"), True)
+        if horizon >= -1:
+            # a batch-built store's rows are batch −1: wholly below the
+            # horizon, like a tier, so reads already filter them out
+            for part in flat:
+                fs.delete(part, False)
     # tiers fully CONTAINED in another tier's range are fold-crash
     # leftovers (the merged tier renamed in, its sources not yet
     # deleted) — their content is in the container; delete, never
@@ -416,7 +417,7 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
         # skips the corpus join; each store dir is then read on its
         # own, so a sibling stranded missing by a crash reads as empty
         # instead of wedging every retry (_read_store)
-        if _store_dir_exists(spark, bands_dir):
+        if _exists(spark, bands_dir):
             # a re-sent id never pairs with its own earlier copy
             cand = (_band_candidates(
                 new_bands, _read_store(spark, bands_dir, new_bands,
@@ -488,7 +489,7 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
         # missing by a crash between the appends reads as empty on
         # retry instead of wedging the stream (_read_store, ADVICE r08
         # medium)
-        if _store_dir_exists(spark, bands_dir):
+        if _exists(spark, bands_dir):
             # a re-sent id never pairs with its own earlier copy
             cand = (_band_candidates(
                 new_bands, _read_store(spark, bands_dir, new_bands,
@@ -561,7 +562,7 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
         # gate on the hashes store only to detect a truly fresh
         # stream; each of the five reads probes its own dir
         # (crash-stranded siblings → empty, never a wedged retry)
-        if _store_dir_exists(spark, dirs["hashes"]):
+        if _exists(spark, dirs["hashes"]):
             verdicts = cascade_classify(
                 docs, emb,
                 *(_read_store(spark, dirs[n], frames[n], batch_id,

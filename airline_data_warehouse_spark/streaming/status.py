@@ -35,11 +35,10 @@ from pyspark.sql import functions as F
 from airline_data_warehouse_spark.functions.cleaning import INSURANCE_DELAY_MINUTES
 from airline_data_warehouse_spark.schemas import STATUS_MESSAGE
 
-# stage-then-swap machinery generalized to sources/atomic.py (r07) —
-# shared with the batch upsert_parquet; aliased for the merge body here
+# the crash-safe partition rewrite the batch upsert_parquet uses too
 from airline_data_warehouse_spark.sources.atomic import (
-    recover_partitions as _recover_partitions,
-    swap_partitions as _swap_partitions,
+    _rewrite_partitions,
+    recover_partitions,
 )
 
 TOPIC = "flight-status-updates"
@@ -196,58 +195,43 @@ def eligibility_merge_batch(fact: DataFrame, status_batch: DataFrame) -> DataFra
                 .drop("_new_delay", "_new_status"))
 
 
-
-
-def start_eligibility_merge(parsed: DataFrame, fact_path: str, checkpoint: str,
-                            out_path: str | None = None,
-                            partition_col: str = "sale_year_month"):
+def start_eligibility_merge(parsed: DataFrame, fact_path: str, checkpoint: str):
     """T5 wiring: per micro-batch, MERGE the eligibility flip into the
-    fact (server.js:166-171 UPDATEs fact rows by flight_key).
+    fact (server.js:166-171 UPDATEs fact rows by flight_key), which
+    must be partitioned by ``sale_year_month``.
 
-    Default path — partition-scoped stage-then-swap merge: the batch's
-    eligible flight keys are semi-joined against the fact to find the
-    partitions holding their rows, only those partitions are re-derived,
-    and the merged result is fully materialized to a SIBLING staging
-    directory while the fact is still only being read. Only after the
-    staging write commits are the partition directories swapped, one
-    atomic rename pair at a time (see `_swap_partitions`) — a failure at
-    any point leaves every partition whole, unlike dynamic partition
-    overwrite which deletes destination directories mid-job. A 100 TB
-    fact with a handful of delayed flights per batch rewrites a few month
-    directories, not the table. Batches with no eligible keys touch
-    nothing. A Delta/Iceberg MERGE drops in transparently here and is the
-    recommended swap on object stores without atomic rename.
-
-    Fallback — ``out_path`` given: the fact is unpartitioned, so the
-    merge rewrites the whole table to ``out_path`` (never in-place).
-    Kept for flat-layout callers; not the scale path.
+    Partition-scoped: the batch's eligible flight keys are semi-joined
+    against the fact to find the months holding their rows, only those
+    months are re-derived, and sources/atomic.py's crash-safe partition
+    rewrite stages and swaps them in (the batch upsert's path) — unlike
+    dynamic partition overwrite, which deletes destination directories
+    mid-job. The scope is every month holding an eligible flight's
+    rows: flights that recur monthly make that most of the table (the
+    perfbench data swaps ~23 of 24 months per batch). Batches with no
+    eligible keys touch nothing. A Delta/Iceberg MERGE drops in here
+    and is the recommended path on object stores without atomic
+    rename.
     """
     def _merge(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        if out_path is None:
-            # make the fact whole before reading it: a crashed prior swap
-            # may have left a partition only in its hidden backup dir
-            _recover_partitions(spark, fact_path, partition_col)
+        # make the fact whole before reading it: a crashed prior swap
+        # may have left a month only in its hidden backup dir
+        recover_partitions(spark, fact_path, "sale_year_month")
         fact = spark.read.parquet(fact_path)
-        if out_path is not None:
-            eligibility_merge_batch(fact, batch).write.mode("overwrite").parquet(out_path)
-            return
-        if partition_col not in fact.columns:
-            raise ValueError(
-                f"in-place merge needs a fact partitioned by {partition_col!r}; "
-                "pass out_path= for unpartitioned facts")
+        if "sale_year_month" not in fact.columns:
+            raise ValueError("the eligibility merge needs a fact "
+                             "partitioned by 'sale_year_month'")
         eligible = (batch.filter(F.col("delay_minutes") > INSURANCE_DELAY_MINUTES)
                     .select("flight_key").distinct())
         months = (fact.join(F.broadcast(eligible), "flight_key", "left_semi")
-                      .select(partition_col).distinct())
+                      .select("sale_year_month").distinct())
         if not months.limit(1).count():
             return  # nothing eligible in this batch — zero writes
-        affected = fact.join(F.broadcast(months), partition_col, "left_semi")
-        merged = eligibility_merge_batch(affected, batch)
-        # stage (fact_path still read-only here), then swap
-        staging = f"{fact_path.rstrip('/')}__merge_staging_epoch={epoch}"
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-        _swap_partitions(spark, staging, fact_path, partition_col)
+        affected = fact.join(F.broadcast(months), "sale_year_month", "left_semi")
+        _rewrite_partitions(
+            spark, eligibility_merge_batch(affected, batch), fact_path,
+            "sale_year_month",
+            f"{fact_path.rstrip('/')}__merge_staging_epoch={epoch}")
 
     return (parsed.writeStream.foreachBatch(_merge)
             .option("checkpointLocation", checkpoint)

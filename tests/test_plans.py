@@ -456,6 +456,32 @@ def test_stream_dedup_store_appends_only_in_append_batch():
     assert len(re.findall(r"ThreadPoolExecutor\(", code)) == 1
 
 
+def test_swaps_and_filesystem_lookups_only_in_atomic():
+    """Regrowth tripwire for the crash-safe replace protocol: every
+    partition swap, directory replace and heal renames through
+    `sources.atomic`'s shared helpers (at most 3 ``.rename(`` sites),
+    the tiered stream-store compaction keeps its one tier rename, and
+    `sources.atomic._fs` is the package's only Hadoop FileSystem
+    lookup — a writer cannot grow its own copy of the rename pair or
+    of the lookup back."""
+    import pathlib
+    pkg = pathlib.Path(__file__).parent.parent / "airline_data_warehouse_spark"
+    renames, lookups = {}, {}
+    for py in sorted(pkg.rglob("*.py")):
+        code = "\n".join(line.split("#")[0]
+                         for line in py.read_text().splitlines())
+        rel = py.relative_to(pkg).as_posix()
+        if code.count(".rename("):
+            renames[rel] = code.count(".rename(")
+        if code.count("getFileSystem("):
+            lookups[rel] = code.count("getFileSystem(")
+    assert set(renames) == {"sources/atomic.py", "streaming/dedup.py"}, \
+        renames
+    assert renames["sources/atomic.py"] <= 3
+    assert renames["streaming/dedup.py"] == 1
+    assert lookups == {"sources/atomic.py": 1}
+
+
 def test_rolling_features_time_bounds_and_gaps(spark, tmp_path):
     """Rolling 24h frame semantics: an event exactly 24h earlier is
     INCLUDED (closed frame), 24h+1us is excluded; the sum is exact

@@ -105,7 +105,7 @@ def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
 
 
 def test_eligibility_merge_recovers_crashed_swap(spark, stream_dir, tmp_path):
-    """A crash between _swap_partitions' two renames leaves a partition's
+    """A crash between a partition swap's two renames leaves a partition's
     only copy in the hidden ``.name.replaced`` backup. The checkpointed
     retry must roll it back BEFORE reading the fact — otherwise the month
     is invisible to discovery and the swap machinery can drop it."""
@@ -134,25 +134,6 @@ def test_eligibility_merge_recovers_crashed_swap(spark, stream_dir, tmp_path):
     assert not out["T9"]["is_eligible_insurance"]
     leftovers = [f for f in os.listdir(fact_path) if f.endswith(".replaced")]
     assert leftovers == []
-
-
-def test_eligibility_merge_flat_fallback(spark, stream_dir, tmp_path):
-    """Unpartitioned fact: explicit out_path keeps the legacy full-rewrite
-    path working."""
-    fact = spark.createDataFrame(
-        [("T1", "AA100", "scheduled", 0, False),
-         ("T3", "AF023", "scheduled", 0, False)],
-        "transaction_id string, flight_key string, flight_status string, "
-        "delay_minutes int, is_eligible_insurance boolean")
-    fact_path = str(tmp_path / "fact_flat")
-    fact.write.parquet(fact_path)
-    parsed = st.parse_status_stream(st.file_status_source(spark, str(stream_dir / "in")))
-    q = st.start_eligibility_merge(parsed, fact_path, str(tmp_path / "ckpt_flat"),
-                                   out_path=str(tmp_path / "fact_out"))
-    assert q.awaitTermination(600)
-    out = {r["transaction_id"]: r for r in
-           spark.read.parquet(str(tmp_path / "fact_out")).collect()}
-    assert out["T1"]["is_eligible_insurance"] and not out["T3"]["is_eligible_insurance"]
 
 
 def test_stream_static_enrichment(spark, stream_dir, tmp_path):
@@ -772,6 +753,74 @@ def test_stream_cascade_ingest_continues_batch_built_store(spark, tmp_path):
     out = [(r["doc_id"], r["verdict"], r["partner_id"], r["batch_id"])
            for r in spark.read.parquet(f"{store}/verdicts").collect()]
     assert out == [(1001, "exact", 1, 0)]
+
+
+def test_stream_retention_collects_batch_built_store_files(
+        spark, tmp_path, monkeypatch):
+    """A stream continuing a `cascade_store_build` store reads the
+    build's rows as batch -1, so once the retention horizon reaches -1
+    the tiered compaction deletes the build's root-level part files, as
+    it deletes a tier wholly below the horizon. Before, they stayed
+    forever. With ``retention_batches=2`` batch 0 still sees the build
+    (doc 1 re-sent as 1001 is ``exact``/1) and the compaction at batch 1
+    collects it; the verdicts equal a run whose compaction never lists
+    the root files (the old behaviour), which keeps them."""
+    import glob
+    import json as jsonlib
+    import random
+
+    from airline_data_warehouse_spark.operators.dedup import (
+        _CASCADE_STORES,
+        cascade_store_build,
+    )
+    from airline_data_warehouse_spark.streaming import dedup as sd
+
+    rng = random.Random(41)
+    words = [f"tok{i}" for i in range(200)]
+    corpus = [(i, " ".join(rng.choice(words) for _ in range(30)),
+               [rng.uniform(-1, 1) for _ in range(64)])
+              for i in range(1, 11)]
+    sends = [(1001, corpus[0]), (1002, corpus[0]), (1003, corpus[1])]
+
+    def run(name: str) -> tuple[list, dict]:
+        store = str(tmp_path / name)
+        cascade_store_build(
+            spark.createDataFrame([(i, t) for i, t, _ in corpus],
+                                  "doc_id long, text string"),
+            spark.createDataFrame([(i, v) for i, _, v in corpus],
+                                  "vec_id long, embedding array<double>"),
+            store)
+        in_dir = tmp_path / f"{name}_in"
+        in_dir.mkdir()
+        src = (spark.readStream
+               .schema("doc_id long, text string, embedding array<double>")
+               .option("maxFilesPerTrigger", 1).json(str(in_dir)))
+        q = sd.start_cascade_ingest(src, store,
+                                    checkpoint_dir=str(tmp_path / f"{name}_ck"),
+                                    retention_batches=2, compact_every=1)
+        try:
+            for i, (doc_id, (_, text, vec)) in enumerate(sends):
+                drop_file(in_dir, f"b{i}.json", jsonlib.dumps(
+                    {"doc_id": doc_id, "text": text, "embedding": vec}) + "\n")
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        verdicts = sorted(
+            (r["doc_id"], r["verdict"], r["partner_id"], r["batch_id"])
+            for r in spark.read.parquet(f"{store}/verdicts").collect())
+        return verdicts, {d: glob.glob(f"{store}/{d}/*.parquet")
+                          for d in _CASCADE_STORES}
+
+    fixed, fixed_files = run("fixed")
+    assert fixed[0] == (1001, "exact", 1, 0)
+    assert fixed_files == {d: [] for d in _CASCADE_STORES}
+
+    real = sd._tier_list
+    monkeypatch.setattr(sd, "_tier_list",
+                        lambda spark_, path: (*real(spark_, path)[:5], []))
+    unfixed, unfixed_files = run("unfixed")
+    assert fixed == unfixed
+    assert all(unfixed_files[d] for d in _CASCADE_STORES)
 
 
 def _run_ingests(spark, root, ingests: dict, batches: list) -> None:

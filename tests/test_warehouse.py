@@ -253,6 +253,86 @@ def test_compact_partitions_crash_recovery(spark, tmp_path):
     assert [f for f in os.listdir(dest) if f.endswith(".replaced")] == []
 
 
+class _RacingFS:
+    """A FileSystem stand-in: delegates to the real one, except that its
+    ``lose``-th rename first runs ``race`` (the concurrent actor) and
+    then reports failure, as a rename that lost the race does."""
+
+    def __init__(self, real, lose: int, race):
+        self.real, self.lose, self.race, self.n = real, lose, race, 0
+
+    def __getattr__(self, name):
+        return getattr(self.real, name)
+
+    def rename(self, src, dst):
+        self.n += 1
+        if self.n == self.lose:
+            self.race()
+            return False
+        return self.real.rename(src, dst)
+
+
+def test_swap_race_branches(spark, tmp_path, monkeypatch):
+    """The convergence branches of sources/atomic.py's swap and heal,
+    driven with a racing FileSystem: (1) a directory replace whose
+    second rename loses to a reader's heal returns False, keeps the old
+    content and leaves no staging or backup; (2) a partition rewrite in
+    the same state raises IOError with the old rows whole; (3) a heal
+    whose rename loses to a live swap's second rename deletes the
+    backup and does not raise."""
+    import os
+
+    import pytest as _pytest
+
+    from airline_data_warehouse_spark.sources import atomic as at
+
+    hpath, real = at._fs(spark, str(tmp_path))
+
+    def racing(lose, race):
+        fs = _RacingFS(real, lose, race)
+        monkeypatch.setattr(at, "_fs", lambda spark_, path: (hpath, fs))
+
+    def heal(dest):  # a reader renames the backup back mid-swap
+        d = hpath(dest)
+        return lambda: real.rename(at._backup(hpath, d), d)
+
+    # (1) directory replace
+    dest = str(tmp_path / "state")
+    at.replace_directory(spark, spark.createDataFrame([(1,)], "k long"),
+                         dest)
+    racing(2, heal(dest))
+    assert at.replace_directory(
+        spark, spark.createDataFrame([(2,)], "k long"), dest) is False
+    monkeypatch.undo()
+    assert [r["k"] for r in spark.read.parquet(dest).collect()] == [1]
+    assert sorted(os.listdir(tmp_path)) == ["state"]
+
+    # (2) partition rewrite
+    table = str(tmp_path / "t")
+    spark.createDataFrame([("K1", 1, "A")], "k string, v int, p string") \
+        .write.partitionBy("p").parquet(table)
+    racing(2, heal(f"{table}/p=A"))
+    with _pytest.raises(IOError, match="concurrent heal"):
+        at.upsert_parquet(spark, spark.createDataFrame(
+            [("K1", 9, "A")], "k string, v int, p string"),
+            table, key="k", partition_col="p")
+    monkeypatch.undo()
+    assert [tuple(r) for r in spark.read.parquet(table).collect()] \
+        == [("K1", 1, "A")]
+    assert [f for f in os.listdir(table) if f.endswith(".replaced")] == []
+
+    # (3) heal losing to a live swap
+    log = tmp_path / "log"
+    backup = tmp_path / ".log.replaced"
+    staged = tmp_path / "log.replacing"
+    backup.mkdir()
+    staged.mkdir()
+    fs = _RacingFS(real, 1, lambda: real.rename(hpath(str(staged)),
+                                                hpath(str(log))))
+    at._heal(fs, hpath(str(backup)), hpath(str(log)))
+    assert log.is_dir() and not backup.exists() and not staged.exists()
+
+
 def test_merge_parquet_with_deletes(spark, tmp_path):
     """MERGE with per-source-row clause semantics: a tombstone row
     deletes its target key (inserting nothing), other rows upsert; a
