@@ -1318,6 +1318,14 @@ def _ivfpq_lut(queries: DataFrame, coarse: DataFrame, codebook: DataFrame,
     return probes, lut
 
 
+# the side tables' schemas as `ivfpq_index_build` writes them, passed on
+# every read so an index query infers none (pinned by
+# test_ivfpq_side_table_schemas_match_build); codes/vectors are not
+# listed, their id type comes from the corpus
+_COARSE_SCHEMA = "list_id bigint, centroid array<double>"
+_CODEBOOK_SCHEMA = "sub int, code bigint, centroid array<double>"
+
+
 @cache_scope()
 def ivfpq_index_build(corpus: DataFrame, index_dir: str, n_lists: int = 8,
                       m: int = 4, codes_k: int = 16, iters: int = 2,
@@ -1423,6 +1431,15 @@ def ivfpq_index_topk(spark, index_dir: str, queries: DataFrame, k: int = 5,
     return _rank_topk(scored, "adc_d2", k, ascending=True)
 
 
+def _ivfpq_side_tables(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(coarse centroids, codebook) of a built index, read with their
+    fixed schemas."""
+    return (spark.read.schema(_COARSE_SCHEMA)
+            .parquet(f"{index_dir}/coarse_centroids.parquet"),
+            spark.read.schema(_CODEBOOK_SCHEMA)
+            .parquet(f"{index_dir}/codebook.parquet"))
+
+
 def _ivfpq_index_adc(spark, index_dir: str, queries: DataFrame,
                      n_probe: int, m: int, dims: int, id_col: str,
                      vec_col: str) -> tuple[DataFrame, list[int]]:
@@ -1430,10 +1447,9 @@ def _ivfpq_index_adc(spark, index_dir: str, queries: DataFrame,
     (query_id, neighbor_id, adc_d2) candidate frame over the probed
     lists plus the probed-list ids (for pruning sibling partition
     tables, e.g. the re-rank vector fetch)."""
-    probes, lut = _ivfpq_lut(
-        queries, spark.read.parquet(f"{index_dir}/coarse_centroids.parquet"),
-        spark.read.parquet(f"{index_dir}/codebook.parquet"), n_probe, m,
-        dims, id_col, vec_col, exact=True)
+    coarse, cb = _ivfpq_side_tables(spark, index_dir)
+    probes, lut = _ivfpq_lut(queries, coarse, cb, n_probe, m, dims, id_col,
+                             vec_col, exact=True)
     probe_lists = sorted({r["qkey"]["list_id"] for r in
                           probes.select("qkey").distinct().collect()})
     coded = (spark.read.parquet(f"{index_dir}/codes.parquet")
@@ -1506,8 +1522,7 @@ def ivfpq_index_append(spark, index_dir: str, increment: DataFrame,
     degrades, which is recall loss, not wrong-answer risk."""
     from airline_data_warehouse_spark.sources.atomic import upsert_parquet
 
-    coarse = spark.read.parquet(f"{index_dir}/coarse_centroids.parquet")
-    cb = spark.read.parquet(f"{index_dir}/codebook.parquet")
+    coarse, cb = _ivfpq_side_tables(spark, index_dir)
     inc = finite_vectors(increment, vec_col, dims=dims).select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("_v"))

@@ -89,8 +89,10 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
       null would fail both and silently drop the whole batch-built
       corpus.
 
-    ``retention_batches`` applies the same horizon the compactor
-    enforces (see start_neardup_ingest).
+    ``retention_batches=N`` keeps the N batches before this one
+    (``batch_id >= b − N``, see start_neardup_ingest); the compactor's
+    horizon (`_tier_compact`) sits one below, so it never deletes a
+    batch a reader still matches.
     """
     # explicit existence probe, not read-and-swallow: a transient or
     # corrupt-store READ failure must fail the micro-batch (structured
@@ -112,7 +114,7 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
           .option("recursiveFileLookup", "true").parquet(path)
           .filter(seen < F.lit(batch_id)))
     if retention_batches is not None:
-        df = df.filter(seen > batch_id - retention_batches)
+        df = df.filter(seen >= batch_id - retention_batches)
     return df
 
 
@@ -207,7 +209,9 @@ def _tier_compact(spark, path: str, batch_id: int,
         if i <= cmax:
             fs.delete(hpath(f"{path}/{name}"), True)
             del bdirs[i]
-    horizon = (batch_id - retention_batches
+    # batch b reads batches >= b - N (`_read_store`), a retry of this
+    # batch included, so only batches below b - N may go
+    horizon = (batch_id - retention_batches - 1
                if retain and retention_batches is not None else None)
     if horizon is not None:
         for lo, hi, name in tiers:

@@ -17,6 +17,17 @@ Layout:
 Sort-within-partitions on the join key before writing the fact gives
 row-group locality for the point-lookup shapes (transaction_id ranges,
 flight_key equality) — parquet min/max stats then prune row groups.
+
+Schema contract: a ``Warehouse`` resolves each table's schema once.
+The first open of a table infers it (``spark.read.parquet``'s
+footer-reading job) and records it, partition columns and their
+inferred types included; every later open passes the recorded schema,
+so it only lists files (appends and new partitions stay visible) and
+launches no Spark job. Every writer on this ``Warehouse`` forgets its
+table's schema. A writer outside it that changes a table's COLUMNS
+needs a fresh ``Warehouse`` — as a Spark catalog table needs
+``refreshTable`` — while writers that keep the columns (the status
+sink's appends, the eligibility merge's partition swaps) need nothing.
 """
 
 from __future__ import annotations
@@ -25,13 +36,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class Warehouse:
-    """Thin path-addressed warehouse over parquet directories."""
+    """Thin path-addressed warehouse over parquet directories. The
+    recorded schemas (module docstring) are per instance, never shared:
+    two warehouses over one root resolve them independently."""
 
     def __init__(self, root: str):
         self.root = root
+        self._schemas: dict[str, StructType] = {}
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -39,9 +54,11 @@ class Warehouse:
     # -- writers ----------------------------------------------------------
 
     def write_dim(self, name: str, df: DataFrame) -> None:
+        self._schemas.pop(name, None)
         df.write.mode("overwrite").parquet(self.path(name))
 
     def write_fact_sales(self, fact: DataFrame) -> None:
+        self._schemas.pop("fact_sales", None)
         (fact
          .withColumn("sale_year_month", (F.col("date_key") / 100).cast("int"))
          .sortWithinPartitions("flight_key", "transaction_id")
@@ -65,6 +82,7 @@ class Warehouse:
         without it).
         """
         from airline_data_warehouse_spark.sources.atomic import upsert_parquet
+        self._schemas.pop("fact_sales", None)
         staged = new_rows.withColumn(
             "sale_year_month", (F.col("date_key") / 100).cast("int"))
         upsert_parquet(spark, staged, self.path("fact_sales"),
@@ -72,6 +90,7 @@ class Warehouse:
                        sort_within=["flight_key", "transaction_id"])
 
     def append_status_updates(self, updates: DataFrame) -> None:
+        self._schemas.pop("flight_status_updates", None)
         (updates
          .withColumn("update_date", F.to_date("update_timestamp"))
          .write.mode("append")
@@ -79,14 +98,25 @@ class Warehouse:
          .parquet(self.path("flight_status_updates")))
 
     def append_dirty(self, dirty: DataFrame) -> None:
+        self._schemas.pop("dirty_data", None)
         (dirty.write.mode("append")
               .partitionBy("source_table")
               .parquet(self.path("dirty_data")))
 
     # -- readers ----------------------------------------------------------
 
-    def table(self, spark: SparkSession, name: str) -> DataFrame:
+    def _read(self, spark: SparkSession, name: str) -> DataFrame:
+        """The one table reader: infer and record the schema on the
+        first open, read with the recorded schema after that."""
+        schema = self._schemas.get(name)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(self.path(name))
         df = spark.read.parquet(self.path(name))
+        self._schemas[name] = df.schema
+        return df
+
+    def table(self, spark: SparkSession, name: str) -> DataFrame:
+        df = self._read(spark, name)
         if name == "fact_sales" and "sale_year_month" in df.columns:
             df = df.drop("sale_year_month")  # derived partition column
         return df
@@ -96,7 +126,7 @@ class Warehouse:
         """Time-sliced fact read: the partition predicate on
         sale_year_month prunes directories BEFORE any file is opened;
         the residual date_key predicate prunes row groups via stats."""
-        raw = spark.read.parquet(self.path("fact_sales"))
+        raw = self._read(spark, "fact_sales")
         return (raw.filter((F.col("sale_year_month") >= date_key_from // 100)
                            & (F.col("sale_year_month") <= date_key_to // 100))
                    .filter((F.col("date_key") >= date_key_from)

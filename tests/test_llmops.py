@@ -1319,6 +1319,22 @@ def test_ivfpq_index_build_deterministic_and_voronoi_consistent(
     assert 100 in {r["neighbor_id"] for r in out}
 
 
+def test_ivfpq_side_table_schemas_match_build(spark, tmp_path):
+    """The index query and append read the coarse centroids and the
+    codebook with fixed schemas (no inference job); they must equal
+    what a build writes, as inferred from its files."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    _, corpus = _rand_corpus(spark, 20, 8, seed=5)
+    idx = str(tmp_path / "ivfpq")
+    sim.ivfpq_index_build(corpus, idx, n_lists=2, m=2, codes_k=4,
+                          iters=1, dims=8)
+    for name, ddl in (("coarse_centroids", sim._COARSE_SCHEMA),
+                      ("codebook", sim._CODEBOOK_SCHEMA)):
+        inferred = spark.read.parquet(f"{idx}/{name}.parquet").schema
+        assert inferred == _parse_datatype_string(ddl), name
+
+
 def test_ivfpq_index_prunes_partitions(spark, tmp_path):
     """The index query's code scan carries a PartitionFilters entry on
     list_id (directory-level pruning — the property that makes the

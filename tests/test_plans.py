@@ -482,6 +482,35 @@ def test_swaps_and_filesystem_lookups_only_in_atomic():
     assert lookups == {"sources/atomic.py": 1}
 
 
+def test_warehouse_reads_only_through_schema_reader():
+    """Regrowth tripwire for the recorded-schema contract: every
+    ``spark.read`` in `warehouse.py` sits in ``Warehouse._read`` (the
+    inferring first open and the recorded-schema reopen), so no later
+    reader can bypass the recorded schema and bring the per-open
+    inference job back."""
+    import ast
+    import pathlib
+    src = (pathlib.Path(__file__).parent.parent
+           / "airline_data_warehouse_spark" / "warehouse.py").read_text()
+    reads: dict[str, int] = {}
+
+    class Scan(ast.NodeVisitor):
+        fn = "<module>"
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Attribute(self, node):
+            if node.attr == "read":
+                reads[self.fn] = reads.get(self.fn, 0) + 1
+            self.generic_visit(node)
+
+    Scan().visit(ast.parse(src))
+    assert reads == {"_read": 2}, reads
+
+
 def test_rolling_features_time_bounds_and_gaps(spark, tmp_path):
     """Rolling 24h frame semantics: an event exactly 24h earlier is
     INCLUDED (closed frame), 24h+1us is excluded; the sum is exact

@@ -451,14 +451,17 @@ def test_stream_neardup_retention_and_compaction(spark, tmp_path):
     pairs = {(r["inc_id"], r["corpus_id"])
              for r in spark.read.parquet(f"{store}/pairs").collect()}
     assert pairs == set()  # doc 1 fell outside the 2-batch horizon
-    # compaction at batch 2 dropped batch-0 state (retention filter)
-    bands = (spark.read.option("recursiveFileLookup", "true")
-             .parquet(f"{store}/bands"))
-    assert bands.filter("doc_id = 1").count() == 0
-    assert bands.filter("doc_id = 4").count() > 0
+
+    def bands():
+        return (spark.read.option("recursiveFileLookup", "true")
+                .parquet(f"{store}/bands"))
+
+    # compaction at batch 2 keeps batch 0: a retry of batch 2 still
+    # matches it, so it folds into tier c0_2
+    assert bands().filter("doc_id = 1").count() > 0
     # the stranded staging's planted row never reached any read (doc 0
     # appears nowhere in the recursive read)
-    assert bands.filter("doc_id = 0").count() == 0
+    assert bands().filter("doc_id = 0").count() == 0
     # ... and the next compaction sweeps the crashed staging dir
     from airline_data_warehouse_spark.streaming.dedup import (
         _tier_compact,
@@ -467,6 +470,33 @@ def test_stream_neardup_retention_and_compaction(spark, tmp_path):
     _tier_compact(spark, f"{store}/bands", 3, retention_batches=2)
     assert not os.path.exists(
         os.path.join(store, "bands", ".c9_9.staging"))
+    # batch-0 state goes once the horizon passes the whole c0_2 tier
+    # (a tier straddling it stays); batch 3's doc 4 stays
+    assert bands().filter("doc_id = 1").count() > 0
+    _tier_compact(spark, f"{store}/bands", 5, retention_batches=2)
+    assert bands().filter("doc_id = 1").count() == 0
+    assert bands().filter("doc_id = 4").count() > 0
+
+
+def test_read_store_retention_keeps_last_n_batches(spark, tmp_path):
+    """``retention_batches=N`` matches batch b against exactly the N
+    batches before it: on a store holding batches 0-2, a read at batch
+    3 with retention 1 returns batch 2, with retention 2 batches 1-2."""
+    from airline_data_warehouse_spark.streaming.dedup import _read_store
+
+    store = str(tmp_path / "store")
+    (spark.createDataFrame([(b * 10, b) for b in range(3)],
+                           "doc_id long, batch_id int")
+     .write.parquet(store))
+    like = spark.createDataFrame([], "doc_id long")
+
+    def batches(n):
+        return sorted(r["batch_id"] for r in
+                      _read_store(spark, store, like, 3, n).collect())
+
+    assert batches(1) == [2]
+    assert batches(2) == [1, 2]
+    assert batches(None) == [0, 1, 2]
 
 
 def test_stream_neardup_full_corpus_state_by_default(spark, tmp_path):
@@ -761,9 +791,9 @@ def test_stream_retention_collects_batch_built_store_files(
     build's rows as batch -1, so once the retention horizon reaches -1
     the tiered compaction deletes the build's root-level part files, as
     it deletes a tier wholly below the horizon. Before, they stayed
-    forever. With ``retention_batches=2`` batch 0 still sees the build
-    (doc 1 re-sent as 1001 is ``exact``/1) and the compaction at batch 1
-    collects it; the verdicts equal a run whose compaction never lists
+    forever. With ``retention_batches=2`` batches 0 and 1 still see the
+    build (doc 1 re-sent as 1001 is ``exact``/1) and the compaction at
+    batch 2 collects it; the verdicts equal a run whose compaction never lists
     the root files (the old behaviour), which keeps them."""
     import glob
     import json as jsonlib
@@ -1975,7 +2005,7 @@ def test_stream_exact_substring_max_occ_guard_is_batch_scoped(
     q = start_exact_substring_ingest(src, f"{tmp_path}/store",
                                      checkpoint_dir=f"{tmp_path}/ck",
                                      k=4, min_tokens=4, max_df=1,
-                                     max_occ=8, retention_batches=2)
+                                     max_occ=8, retention_batches=1)
     try:
         q.processAllAvailable()
         # batch 1: doc 2 repeats W 9 times — but accumulated df=2 >
@@ -1983,7 +2013,7 @@ def test_stream_exact_substring_max_occ_guard_is_batch_scoped(
         # so the batch passes (boilerplate exclusion, not a wedge)
         stage(1, [(2, " ".join(["w"] * 12))])
         q.processAllAvailable()
-        # batch 2: retention (2) has aged batch 0 out, so W re-enters
+        # batch 2: retention (1) has aged batch 0 out, so W re-enters
         # the good set at df=1 with occ=9 > max_occ — but this batch
         # never touches W, and a batch-scoped guard must let it through
         # (the old accumulated-scan guard wedged here, permanently)

@@ -45,6 +45,110 @@ def test_partition_pruning_in_plan(spark, tmp_path):
     assert "sale_year_month" in seg
 
 
+def _jobs_launched(spark, fn):
+    """(fn(), the number of Spark jobs fn launched): fn runs under a
+    job group of its own, counted in the status store once the
+    listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"wh-open-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    groups = [jobs.apply(i).jobGroup() for i in range(jobs.size())]
+    return out, sum(1 for g in groups if g.isDefined() and g.get() == group)
+
+
+def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
+    """The first open of a table infers its schema (one footer-reading
+    job); later opens pass the recorded schema and launch none, yet
+    still list the files: a month partition written outside the
+    Warehouse shows on the next open, partition pruning included."""
+    wh = Warehouse(str(tmp_path))
+    wh.write_fact_sales(_mk_fact(spark))
+    first, n_first = _jobs_launched(
+        spark, lambda: wh.table(spark, "fact_sales"))
+    assert n_first >= 1
+    again, n_again = _jobs_launched(
+        spark, lambda: wh.table(spark, "fact_sales"))
+    assert n_again == 0
+    assert again.schema == first.schema and again.count() == 3
+
+    (spark.createDataFrame(
+        [("TA000010", 20240515, "P010", "AA100")],
+        "transaction_id string, date_key int, passenger_key string, "
+        "flight_key string")
+     .withColumn("total_amount", F.lit(50.0).cast("decimal(10,2)"))
+     .withColumn("sale_year_month", F.lit(202405))
+     .write.mode("append").partitionBy("sale_year_month")
+     .parquet(wh.path("fact_sales")))
+    sliced, n_slice = _jobs_launched(
+        spark, lambda: wh.fact_sales_for_range(spark, 20240501, 20240531))
+    assert n_slice == 0
+    assert [r["transaction_id"] for r in sliced.collect()] == ["TA000010"]
+    assert wh.table(spark, "fact_sales").count() == 4
+    # a second Warehouse over the same root resolves on its own
+    _, n_fresh = _jobs_launched(
+        spark, lambda: Warehouse(str(tmp_path)).table(spark, "fact_sales"))
+    assert n_fresh >= 1
+
+
+def test_reopen_sees_status_sink_appends(spark, tmp_path):
+    """Rows the status feed's append sink commits after a table's schema
+    was recorded are visible on the next open (the sink's file log is
+    read per open), with no inference job."""
+    import json
+
+    from airline_data_warehouse_spark.streaming import status as st
+    from tests.conftest import drop_file
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    landing = tmp_path / "landing"
+    landing.mkdir()
+
+    def land(name: str, fk: str, delay: int) -> None:
+        msg = {"flight_key": fk, "status": "delayed", "delay_minutes": delay,
+               "update_timestamp": "2023-06-01T10:00:00Z"}
+        drop_file(landing, name, json.dumps(
+            {"key": fk, "value": json.dumps(msg)}) + "\n")
+        q = st.append_status_sink(
+            st.parse_status_stream(st.file_status_source(spark, str(landing))),
+            wh.path("flight_status_updates"), str(tmp_path / "ck"))
+        assert q.awaitTermination(600)
+
+    land("b0.json", "AA100", 300)
+    assert wh.table(spark, "flight_status_updates").count() == 1
+    land("b1.json", "AF023", 30)
+    table, n = _jobs_launched(
+        spark, lambda: wh.table(spark, "flight_status_updates"))
+    assert n == 0
+    assert st.check_insurance(table, "AF023").collect()[0]["delay_minutes"] == 30
+
+
+def test_writer_refreshes_recorded_schema(spark, tmp_path):
+    """A Warehouse writer forgets its table's recorded schema, so a
+    dimension rewritten with an added column opens with it; a writer
+    outside the Warehouse that changes columns needs a fresh one."""
+    wh = Warehouse(str(tmp_path))
+    wh.write_dim("dim_x", spark.createDataFrame([(1, "a")], "k int, v string"))
+    assert wh.table(spark, "dim_x").columns == ["k", "v"]
+    wh.write_dim("dim_x", spark.createDataFrame(
+        [(1, "a", 2.0)], "k int, v string, w double"))
+    assert wh.table(spark, "dim_x").collect() == [(1, "a", 2.0)]
+
+    (spark.createDataFrame([(1, "a", 2.0, True)],
+                           "k int, v string, w double, z boolean")
+     .write.mode("overwrite").parquet(wh.path("dim_x")))
+    assert wh.table(spark, "dim_x").columns == ["k", "v", "w"]
+    assert Warehouse(str(tmp_path)).table(spark, "dim_x").columns == \
+        ["k", "v", "w", "z"]
+
+
 def test_incremental_fact_upsert_touches_only_affected_partitions(spark, tmp_path):
     import time
     wh = Warehouse(str(tmp_path))
