@@ -4,18 +4,25 @@ processAirportData / processAirlineData / processFlightData /
 processSalesData; scripts/upload*.js) re-expressed as single-pass
 DataFrame plans:
 
-    raw strings → one `error_reason` CASE chain → filter split into
-    (clean, dirty) → keep-first dedup by standardized key → upsert.
+    raw strings → one tagging pass (`error_reason`: the rule CASE chain,
+    then keep-first by standardized key) → two filters, clean and dirty
+    → upsert.
 
-Each processor returns ``(clean, dirty)`` where dirty carries
-``error_reason`` plus the raw input columns (for the quarantine JSON
-payload). No per-row network calls: the reference's row-wise country /
-airport lookups become broadcast joins (E1 lifecycle, SURVEY §3).
+Each processor returns a `Tagged`: every input row tagged once, and its
+two filters — clean (shaped to the target table) and dirty (the raw
+input columns plus ``error_reason``, for the quarantine JSON payload).
+It unpacks as ``(clean, dirty)``. No per-row network calls: the
+reference's row-wise country / airport lookups become broadcast joins
+(E1 lifecycle, SURVEY §3).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Iterator
+from dataclasses import dataclass
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.functions import cleaning as C
@@ -24,85 +31,118 @@ from airline_data_warehouse_spark.schemas import MONEY
 DIRTY_COLS = ["error_reason"]
 
 
-def _split(df: DataFrame, reason: F.Column) -> tuple[DataFrame, DataFrame]:
+#: the `error_reason` of a row the reference drops without quarantining it
+#: (an airline without a key): neither clean nor dirty, but counted in
+#: the file's total
+_DROPPED = "dropped"
+
+
+def _is_clean() -> Column:
+    return F.col("error_reason").isNull()
+
+
+def _is_dirty() -> Column:
+    return F.col("error_reason") != _DROPPED
+
+
+@dataclass(frozen=True)
+class Tagged:
+    """One file after its one tagging pass: ``rows`` is every input row
+    with its ``error_reason`` (NULL when clean, else why it was rejected
+    or dropped), and ``clean`` / ``dirty`` are its two filters. Unpacks
+    as ``(clean, dirty)``."""
+    rows: DataFrame
+    clean: DataFrame
+    dirty: DataFrame
+
+    def __iter__(self) -> Iterator[DataFrame]:
+        return iter((self.clean, self.dirty))
+
+    def counts(self) -> tuple[int, int, int]:
+        """``(total, clean, dirty)`` from one aggregate action."""
+        return tuple(self.rows.agg(
+            F.count(F.lit(1)), F.count_if(_is_clean()), F.count_if(_is_dirty())).first())
+
+
+def _tag(df: DataFrame, reason: Column, key: str | None = None,
+         dup_reason: str | None = None,
+         order: tuple[str, ...] = ("_line_no",)) -> DataFrame:
+    """Tag every row once with ``error_reason``: the rule ``reason``
+    first; then, among rows that pass the rules, W2 keep-first — the
+    first occurrence of ``key`` in input order (``order``) wins and later
+    ones get ``dup_reason``. One window over (key, passes-rules), so
+    rejected rows never shadow a later clean one."""
     tagged = df.withColumn("error_reason", reason)
-    clean = tagged.filter(F.col("error_reason").isNull()).drop("error_reason")
-    dirty = tagged.filter(F.col("error_reason").isNotNull())
-    return clean, dirty
+    if key is None:
+        return tagged
+    w = Window.partitionBy(F.col(key), _is_clean()).orderBy(*order)
+    dup = F.when(F.row_number().over(w) > 1, F.lit(dup_reason))
+    return tagged.withColumn("error_reason", F.coalesce(F.col("error_reason"), dup))
 
 
-def _keep_first(df: DataFrame, key: str, dup_reason: str) -> tuple[DataFrame, DataFrame]:
-    """W2 — first occurrence (by input order) wins; later dups → dirty."""
-    w = Window.partitionBy(key).orderBy("_line_no")
-    ranked = df.withColumn("_rn", F.row_number().over(w))
-    firsts = ranked.filter(F.col("_rn") == 1).drop("_rn")
-    dups = (ranked.filter(F.col("_rn") > 1).drop("_rn")
-                  .withColumn("error_reason", F.lit(dup_reason)))
-    return firsts, dups
+def _filters(rows: DataFrame, clean_cols: list[Column | str],
+             helpers: list[str]) -> Tagged:
+    return Tagged(rows, rows.filter(_is_clean()).select(*clean_cols),
+                  rows.filter(_is_dirty()).drop(*helpers))
 
 
-def process_passengers(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+def process_passengers(raw: DataFrame) -> Tagged:
     """smartFileProcessor.js:225-253 + keep-first dedup by standardized key
     (scripts/uploadPassengers.js:120-170). Rejects: unstandardizable key;
     duplicates of an already-seen standardized key."""
     std_key = C.standardize_passenger_key(F.col("PassengerKey"))
-    reason = F.when(std_key.isNull(), "Invalid passenger key")
-    clean0, dirty0 = _split(raw.withColumn("_std_key", std_key), reason)
-    firsts, dups = _keep_first(clean0, "_std_key", "Duplicate passenger key")
-    clean = firsts.select(
+    rows = _tag(raw.withColumn("_std_key", std_key),
+                F.when(std_key.isNull(), "Invalid passenger key"),
+                "_std_key", "Duplicate passenger key")
+    return _filters(rows, [
         F.col("_std_key").alias("passenger_key"),
         F.trim("FullName").alias("full_name"),
         C.standardize_email(F.col("FullName"), F.col("Email")).alias("email"),
         C.standardize_loyalty_status(F.col("LoyaltyStatus")).alias("loyalty_status"),
-    )
-    return clean, dirty0.unionByName(dups).drop("_std_key")
+    ], ["_std_key"])
 
 
-def process_airports(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+def process_airports(raw: DataFrame) -> Tagged:
     """smartFileProcessor.js:256-292: 3-char key or reject; standardized
     country; keep-first on key (the KEF/MDW dup rule)."""
     key = F.upper(F.trim(F.col("AirportKey")))
-    reason = F.when(key.isNull() | (F.length(key) != 3), "Invalid airport key")
-    clean0, dirty0 = _split(raw.withColumn("_key", key), reason)
-    firsts, dups = _keep_first(clean0, "_key", "Duplicate airport key")
-    clean = firsts.select(
+    rows = _tag(raw.withColumn("_key", key),
+                F.when(key.isNull() | (F.length(key) != 3), "Invalid airport key"),
+                "_key", "Duplicate airport key")
+    return _filters(rows, [
         F.col("_key").alias("airport_key"),
         F.trim("AirportName").alias("airport_name"),
         F.trim("City").alias("city"),
         C.standardize_country(F.col("Country")).alias("country"),
-    )
-    return clean, dirty0.unionByName(dups).drop("_key")
+    ], ["_key"])
 
 
-def process_airlines(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+def process_airlines(raw: DataFrame) -> Tagged:
     """smartFileProcessor.js:444-452: rows without a key are silently
     dropped (the reference returns dirtyData: [] here — parity kept)."""
-    clean = (raw.filter(F.trim(F.col("AirlineKey")) != "")
-                .select(
-                    F.upper(F.trim("AirlineKey")).alias("airline_key"),
-                    F.trim("AirlineName").alias("airline_name"),
-                    C.na_to_null(F.col("Alliance")).alias("alliance")))
-    dirty = raw.filter(F.col("AirlineKey").isNull() | (F.trim(F.col("AirlineKey")) == "")) \
-               .withColumn("error_reason", F.lit(None).cast("string")).limit(0)
-    return clean, dirty
+    key = F.trim(F.col("AirlineKey"))
+    rows = _tag(raw, F.when(F.coalesce(key, F.lit("")) == "", _DROPPED))
+    return _filters(rows, [
+        F.upper(key).alias("airline_key"),
+        F.trim("AirlineName").alias("airline_name"),
+        C.na_to_null(F.col("Alliance")).alias("alliance"),
+    ], [])
 
 
-def process_flights(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+def process_flights(raw: DataFrame) -> Tagged:
     """smartFileProcessor.js:455-482: key+origin+dest all required."""
     key = F.trim(F.col("FlightKey"))
     origin = F.upper(F.trim(F.col("OriginAirportKey")))
     dest = F.upper(F.trim(F.col("DestinationAirportKey")))
     missing = (key.isNull() | (key == "") | origin.isNull() | (origin == "")
                | dest.isNull() | (dest == ""))
-    reason = F.when(missing, "Missing required flight data")
-    clean0, dirty = _split(raw, reason)
-    clean = clean0.select(
+    rows = _tag(raw, F.when(missing, "Missing required flight data"))
+    return _filters(rows, [
         key.alias("flight_key"),
         origin.alias("origin_airport_key"),
         dest.alias("destination_airport_key"),
         F.trim("AircraftType").alias("aircraft_type"),
-    )
-    return clean, dirty
+    ], [])
 
 
 def repair_airport_dim(dim_airport: DataFrame, flights: DataFrame) -> DataFrame:
@@ -125,7 +165,7 @@ def repair_airport_dim(dim_airport: DataFrame, flights: DataFrame) -> DataFrame:
     return dim_airport.unionByName(placeholders)
 
 
-def process_sales(raw: DataFrame, source_type: str) -> tuple[DataFrame, DataFrame]:
+def process_sales(raw: DataFrame, source_type: str) -> Tagged:
     """smartFileProcessor.js:353-414 / scripts/uploadAllSales.js: coalesce
     the two sales schemas (P6), standardize key/date/amounts, synthesize
     the prefixed transaction id, reject in the JS rule order (passenger
@@ -148,9 +188,8 @@ def process_sales(raw: DataFrame, source_type: str) -> tuple[DataFrame, DataFram
               .withColumn("_flight", flight)
               .withColumn("_date", date)
               .withColumn("_txn", C.synth_transaction_id(pick("TransactionID"), prefix)))
-    clean0, dirty0 = _split(staged, reason)
-    firsts, dups = _keep_first(clean0, "_txn", "Duplicate transaction ID")
-    clean = firsts.select(
+    rows = _tag(staged, reason, "_txn", "Duplicate transaction ID")
+    return _filters(rows, [
         F.col("_txn").alias("transaction_id"),
         C.date_key_of(F.col("_date")).alias("date_key"),
         F.col("_pax").alias("passenger_key"),
@@ -168,28 +207,24 @@ def process_sales(raw: DataFrame, source_type: str) -> tuple[DataFrame, DataFram
         # cross-file ties deterministically (first occurrence wins);
         # dropped from the final fact there
         F.col("_line_no"),
-    )
-    helper = ["_pax", "_flight", "_date", "_txn"]
-    return clean, dirty0.unionByName(dups).drop(*helper)
+    ], ["_pax", "_flight", "_date", "_txn"])
 
 
-def union_sales_dedup(ta: DataFrame, co: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """U1 + cross-file dedup (scripts/uploadAllSales.js:164-188): union the
-    two cleaned sources, then keep-first again on transaction_id across
-    files. Order: travel-agency before corporate (mirrors the reference's
-    array order), then `_line_no` (file path, byte offset, sequence) so
-    duplicates from two files of the SAME source type also resolve
-    first-occurrence-wins deterministically — `created_at` is
-    current_timestamp() and therefore query-constant, useless as a tie-break.
-    """
-    tagged = (ta.withColumn("_file_order", F.lit(0))
-                .unionByName(co.withColumn("_file_order", F.lit(1))))
-    w = Window.partitionBy("transaction_id").orderBy("_file_order", "_line_no")
-    ranked = tagged.withColumn("_rn", F.row_number().over(w))
-    clean = ranked.filter(F.col("_rn") == 1).drop("_rn", "_file_order", "_line_no")
-    dups = (ranked.filter(F.col("_rn") > 1).drop("_rn", "_file_order", "_line_no")
-                  .withColumn("error_reason", F.lit("Duplicate transaction ID (cross-file)")))
-    return clean, dups
+def union_sales_dedup(*sales: DataFrame) -> Tagged:
+    """U1 + cross-file dedup (scripts/uploadAllSales.js:164-188): union
+    the cleaned sales frames — one source type or both, any number of
+    files — then keep-first again on transaction_id across files. Order:
+    travel-agency before corporate (mirrors the reference's array order),
+    then `_line_no` (file path, byte offset, sequence) so duplicates from
+    two files of the SAME source type also resolve first-occurrence-wins
+    deterministically — `created_at` is current_timestamp() and therefore
+    query-constant, useless as a tie-break. Unpacks as ``(fact, dups)``."""
+    fact_cols = [c for c in sales[0].columns if c != "_line_no"]
+    rows = _tag(reduce(DataFrame.unionByName, sales)
+                .withColumn("_file_order", F.col("sales_source") != "travel_agency"),
+                F.lit(None).cast("string"), "transaction_id",
+                "Duplicate transaction ID (cross-file)", ("_file_order", "_line_no"))
+    return _filters(rows, fact_cols, ["_file_order", "_line_no"])
 
 
 PROCESSORS = {

@@ -1,6 +1,8 @@
 """The E1 lifecycle end-to-end (SURVEY §3): a directory of arbitrary
-CSVs → detect → clean/dirty split → dedup → upsert into the warehouse →
-dimension repair → quarantine → analytics view.
+CSVs → detect → one tagging pass per file (rule reasons, then keep-first
+dedup) → clean/dirty filters and one count aggregate → cross-file sales
+dedup → upsert into the warehouse → dimension repair → quarantine →
+analytics view.
 
 This is the reference's upload flow (`processMultipleFiles`,
 smartFileProcessor.js:485-500 + processFile :124-200) as one callable:
@@ -14,6 +16,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,12 +53,14 @@ class PipelineResult:
 
 def process_files(spark: SparkSession, csv_paths: list[str]) -> PipelineResult:
     """Detect + process every file; accumulate per-table clean frames
-    (upserted in path order, source-wins) and quarantine rows."""
+    (upserted in path order, source-wins) and quarantine rows. Each
+    file's (total, clean, dirty) comes from one aggregate over its tagged
+    rows; nothing after the file loop runs a Spark job."""
     # null-on-failure cleaning semantics under any caller session
     spark.conf.set("spark.sql.ansi.enabled", "false")
     result = PipelineResult()
     dirty_frames: list[DataFrame] = []
-    sales_clean: dict[str, DataFrame] = {}
+    sales: list[DataFrame] = []
 
     for path in csv_paths:
         name = os.path.basename(path)
@@ -64,41 +69,28 @@ def process_files(spark: SparkSession, csv_paths: list[str]) -> PipelineResult:
             result.files.append(FileResult(name, None, None, success=False,
                                            error="Cannot detect file type"))
             continue
-        clean, dirty = etl.PROCESSORS[sig.file_type](raw)
-        total = raw.count()
-        n_dirty = dirty.count()
+        tagged = etl.PROCESSORS[sig.file_type](raw)
+        total, n_clean, n_dirty = tagged.counts()
         result.files.append(FileResult(
-            name, sig.file_type, sig.target_table,
-            total_records=total, clean_records=total - n_dirty
-            if sig.file_type != "airlines" else clean.count(),
-            dirty_records=n_dirty))
+            name, sig.file_type, sig.target_table, total_records=total,
+            clean_records=n_clean, dirty_records=n_dirty))
         raw_cols = [c for c in raw.columns if not c.startswith("_")]
         if n_dirty:
-            dirty_frames.append(sinks.quarantine(dirty, sig.file_type, raw_cols))
-        if sig.target_table == "fact_sales":
-            src_type = "travel_agency" if sig.file_type == "travel_agency_sales" else "corporate"
-            sales_clean[src_type] = (
-                sales_clean[src_type].unionByName(clean)
-                if src_type in sales_clean else clean)
+            dirty_frames.append(sinks.quarantine(tagged.dirty, sig.file_type, raw_cols))
+        table = sig.target_table
+        if table == "fact_sales":
+            sales.append(tagged.clean)
+        elif table in result.tables:
+            result.tables[table] = sinks.upsert_table(
+                result.tables[table], tagged.clean, table)
         else:
-            table = sig.target_table
-            if table in result.tables:
-                result.tables[table] = sinks.upsert_table(
-                    result.tables[table], clean, table)
-            else:
-                result.tables[table] = clean
+            result.tables[table] = tagged.clean
 
-    # two-source fact union + cross-file dedup (scripts/uploadAllSales.js)
-    if sales_clean:
-        ta = sales_clean.get("travel_agency")
-        co = sales_clean.get("corporate")
-        if ta is not None and co is not None:
-            fact, cross_dups = etl.union_sales_dedup(ta, co)
-            if cross_dups.limit(1).count():
-                dirty_frames.append(sinks.quarantine(
-                    cross_dups, "fact_sales", ["transaction_id"]))
-        else:
-            fact = (ta if ta is not None else co).drop("_line_no")
+    # fact union + cross-file dedup (scripts/uploadAllSales.js), for one
+    # sales file or many; an empty dups frame quarantines nothing
+    if sales:
+        fact, cross_dups = etl.union_sales_dedup(*sales)
+        dirty_frames.append(sinks.quarantine(cross_dups, "fact_sales", ["transaction_id"]))
         result.tables["fact_sales"] = fact
 
     # FK repair: referenced airports missing from the dimension get
@@ -114,10 +106,7 @@ def process_files(spark: SparkSession, csv_paths: list[str]) -> PipelineResult:
             result.tables["dim_airport"])
 
     if dirty_frames:
-        q = dirty_frames[0]
-        for d in dirty_frames[1:]:
-            q = q.unionByName(d)
-        result.quarantine = q
+        result.quarantine = reduce(DataFrame.unionByName, dirty_frames)
 
     result.tables["dim_date"] = build_dim_date(spark)
     needed = {"fact_sales", "dim_date", "dim_passenger", "dim_flight",

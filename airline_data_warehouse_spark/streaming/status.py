@@ -29,7 +29,7 @@ merge broadcasts the per-batch eligible-key set against the fact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.functions.cleaning import INSURANCE_DELAY_MINUTES
@@ -154,20 +154,27 @@ def enrich_stream_with_dims(parsed: DataFrame, dim_flight: DataFrame,
                     F.col("ap.country").alias("origin_country")))
 
 
+def _latest_first() -> list[Column]:
+    """The one "latest update" order, shared by the view and the lookup:
+    newest first; ties broken by delay then status for determinism under
+    at-least-once duplicate delivery."""
+    return [F.col("update_timestamp").desc(), F.col("delay_minutes").desc(),
+            F.col("status")]
+
+
 def latest_status_per_flight(status_table: DataFrame) -> DataFrame:
-    """T4/W1 — newest update per flight_key; ties broken by delay then
-    status for determinism under at-least-once duplicate delivery."""
-    w = Window.partitionBy("flight_key").orderBy(
-        F.col("update_timestamp").desc(), F.col("delay_minutes").desc(), F.col("status"))
+    """T4/W1 — newest update per flight_key, in `_latest_first` order."""
+    w = Window.partitionBy("flight_key").orderBy(*_latest_first())
     return (status_table.withColumn("_rn", F.row_number().over(w))
                         .filter(F.col("_rn") == 1).drop("_rn"))
 
 
 def check_insurance(status_table: DataFrame, flight_key: str) -> DataFrame:
     """E2 — the /check-insurance verdict for one flight (server.js:144-184):
-    latest update, delay>240 → eligible."""
+    latest update (the row `latest_status_per_flight` keeps), delay>240 →
+    eligible."""
     latest = (status_table.filter(F.col("flight_key") == flight_key)
-              .orderBy(F.col("update_timestamp").desc()).limit(1))
+              .orderBy(*_latest_first()).limit(1))
     return latest.select(
         "flight_key", "status", "delay_minutes", "update_timestamp",
         (F.col("delay_minutes") > INSURANCE_DELAY_MINUTES).alias("is_eligible"),

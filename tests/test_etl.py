@@ -1,7 +1,8 @@
 """End-to-end ETL tests: synthesized dirty CSVs (FIXTURES.md corruption
 patterns — truncating keys, mixed date formats, currency junk, dup keys,
 garbage marker lines, headerless positional file) through detection →
-clean/dirty split → dedup → dimension repair → analytics view."""
+one tagging pass (clean/dirty filters, keep-first dedup) → dimension
+repair → analytics view."""
 
 from __future__ import annotations
 
@@ -255,8 +256,9 @@ def test_keep_first_order_stable_across_splits_and_files(spark, tmp_path):
     try:
         raw = read_csv(spark, str(tmp_path), header.split(","))
         assert raw.rdd.getNumPartitions() > 4, "input did not split; test is vacuous"
-        firsts, dups = etl._keep_first(
-            raw.withColumn("_std_key", F.col("PassengerKey")), "_std_key", "dup")
+        rows = etl._tag(raw, F.lit(None).cast("string"), "PassengerKey", "dup")
+        firsts = rows.filter(F.col("error_reason").isNull())
+        dups = rows.filter(F.col("error_reason").isNotNull())
         winners = firsts.select("PassengerKey", "FullName").collect()
         assert len(winners) == 250
         assert all(r["FullName"] == "occ0_of_a" for r in winners), \

@@ -75,3 +75,57 @@ def test_new_countries_review_table(spark):
     rows = {r["country_name"]: r["notice"]
             for r in unknown_country_reviews(dim).collect()}
     assert rows == {"Iceland": "New country added: Iceland"}
+
+
+def test_single_type_sales_dedup_across_files(spark, tmp_path):
+    """Two travel-agency files sharing TransactionID 40001 and no
+    corporate file: the fact keeps the first occurrence only and the
+    later row is quarantined as a cross-file duplicate — one sales path
+    whether one source type is present or two."""
+    header = TA_SALES.splitlines()[0]
+    a, b = tmp_path / "a_ta.csv", tmp_path / "b_ta.csv"
+    a.write_text(f"{header}\n40001,2023-01-10,P00101,AA100,1,1,1,3\n"
+                 "40002,2023-01-10,P00102,AA100,1,1,1,3\n")
+    b.write_text(f"{header}\n40001,2023-01-11,P00103,AA100,2,2,2,6\n")
+    result = process_files(spark, [str(a), str(b)])
+    fact = {r["transaction_id"]: r for r in result.tables["fact_sales"].collect()}
+    assert result.tables["fact_sales"].count() == len(fact) == 2
+    assert fact["TA040001"]["passenger_key"] == "P101"  # first occurrence wins
+    assert [(r["source_table"], r["original_data"], r["error_reason"])
+            for r in result.quarantine.collect()] == [
+        ("fact_sales", '{"transaction_id":"TA040001"}',
+         "Duplicate transaction ID (cross-file)")]
+
+
+def test_process_files_job_budget(spark, csv_dir, monkeypatch):
+    """One tagging pass per file: process_files launches at most 4 Spark
+    jobs per file (the header peek, then one aggregate over the tagged
+    rows for the file's three counts) and none after the file loop. A
+    file's jobs are those launched before its FileResult is built."""
+    import uuid
+
+    from airline_data_warehouse_spark import pipeline
+    from tests.test_warehouse import _group_jobs
+
+    names = ["passengers.csv", "airports.csv", "airlines.csv", "flights.csv",
+             "ta_sales.csv", "corporate.csv"]
+    group = f"process-files-{uuid.uuid4().hex}"
+    marks: list[int] = []
+    file_result = pipeline.FileResult
+
+    def counted(*args, **kwargs):
+        marks.append(_group_jobs(spark, group))
+        return file_result(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "FileResult", counted)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = process_files(spark, [str(csv_dir / n) for n in names])
+    finally:
+        sc._jsc.clearJobGroup()
+    total = _group_jobs(spark, group)
+    assert [f.success for f in result.files] == [True] * len(names)
+    per_file = [b - a for a, b in zip([0] + marks[:-1], marks)]
+    assert max(per_file) <= 4, per_file
+    assert total - marks[-1] == 0, f"{total - marks[-1]} jobs after the file loop"

@@ -71,6 +71,24 @@ def test_latest_and_insurance_verdict(spark, stream_dir):
     assert st.check_insurance(table, "AF023").collect()[0]["is_eligible"] is False
 
 
+def test_insurance_lookup_and_latest_view_agree_on_timestamp_ties(spark):
+    """Two updates of one flight at one timestamp: the lookup and the
+    latest-status view pick the same row (the larger delay) whichever
+    arrives first — they share one "latest" order."""
+    from datetime import datetime
+
+    ts = datetime(2023, 6, 1, 10)
+    rows = [("AA1", "delayed", 100, ts), ("AA1", "delayed", 300, ts)]
+    for ordered in (rows, rows[::-1]):
+        table = spark.createDataFrame(
+            ordered, "flight_key string, status string, delay_minutes int, "
+                     "update_timestamp timestamp").coalesce(1)
+        verdict = st.check_insurance(table, "AA1").collect()[0]
+        latest = st.latest_status_per_flight(table).collect()[0]
+        assert (verdict["delay_minutes"], verdict["is_eligible"]) == (300, True), ordered
+        assert latest["delay_minutes"] == 300, ordered
+
+
 def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
     """T5 in-place merge rewrites ONLY the partitions holding the eligible
     flights' rows — the untouched month's files keep their mtimes

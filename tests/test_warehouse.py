@@ -58,10 +58,16 @@ def _jobs_launched(spark, fn):
         out = fn()
     finally:
         sc._jsc.clearJobGroup()
+    return out, _group_jobs(spark, group)
+
+
+def _group_jobs(spark, group: str) -> int:
+    """The number of Spark jobs launched so far under job group `group`."""
+    sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc._jsc.sc().statusStore().jobsList(None)
     groups = [jobs.apply(i).jobGroup() for i in range(jobs.size())]
-    return out, sum(1 for g in groups if g.isDefined() and g.get() == group)
+    return sum(1 for g in groups if g.isDefined() and g.get() == group)
 
 
 def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
