@@ -28,8 +28,6 @@ from pyspark.sql import functions as F
 from airline_data_warehouse_spark.functions import cleaning as C
 from airline_data_warehouse_spark.schemas import MONEY
 
-DIRTY_COLS = ["error_reason"]
-
 
 #: the `error_reason` of a row the reference drops without quarantining it
 #: (an airline without a key): neither clean nor dirty, but counted in

@@ -28,6 +28,12 @@ from airline_data_warehouse_spark.operators.dedup import (
 )
 from airline_data_warehouse_spark.operators.hashing import (
     gaussian_plane_weights, hyperplane_weights)
+from airline_data_warehouse_spark.sources.atomic import (
+    _commit,
+    _exists,
+    read_table,
+    upsert_parquet,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1345,15 +1351,15 @@ def ivfpq_index_build(corpus: DataFrame, index_dir: str, n_lists: int = 8,
       the final-iteration k-means update (kmeans_assign lineage).
     * ``codebook.parquet`` — (sub, code, centroid): m × codes_k rows,
       the residual product-quantizer `pq_train` returned.
-    * ``codes.parquet/list_id=<id>/`` — (vec_id, sub, code, d2)
-      PARTITIONED BY coarse list: m small ints + the per-subvector
-      reconstruction error per vector. Written repartitioned BY the
+    * ``codes.parquet`` — (vec_id, sub, code, d2) PARTITIONED BY coarse
+      list, a managed table (sources/atomic.py): m small ints + the
+      per-subvector reconstruction error per vector. Written repartitioned BY the
       partition column (the ivf_index_build file-count discipline).
     * ``stats.parquet`` — (list_id, n_vectors, mean_d2): the build-time
       reconstruction-error baseline `ivfpq_index_append` checks drift
       against.
-    * ``vectors.parquet/list_id=<id>/`` (``store_vectors=True``, the
-      default) — (vec_id, v) full vectors, list-partitioned, for
+    * ``vectors.parquet`` (``store_vectors=True``, the default) —
+      (vec_id, v) full vectors, a list-partitioned managed table, for
       `ivfpq_index_topk_rerank`'s exact re-rank: the fetch prunes to
       the SAME probed lists as the code scan, so re-ranking never
       touches unprobed vector partitions. Pass False for a codes-only
@@ -1385,20 +1391,19 @@ def ivfpq_index_build(corpus: DataFrame, index_dir: str, n_lists: int = 8,
     coded = (codes.select(F.col(id_col), "sub",
                           F.col("list_id").alias("code"), "d2")
              .join(res.select(id_col, "list_id"), id_col))
-    (coded.repartition(F.col("list_id"))
-          .write.mode("overwrite").partitionBy("list_id")
-          .parquet(f"{index_dir}/codes.parquet"))
+    spark = coded.sparkSession
+    _commit(spark, f"{index_dir}/codes.parquet",
+            coded.repartition(F.col("list_id")), "list_id")
     (coarse.write.mode("overwrite")
            .parquet(f"{index_dir}/coarse_centroids.parquet"))
     (codebook.select("sub", F.col("list_id").alias("code"), "centroid")
              .write.mode("overwrite")
              .parquet(f"{index_dir}/codebook.parquet"))
     if store_vectors:
-        (labeled.select(id_col, F.col("_v").alias("v"), "list_id")
-                .repartition(F.col("list_id"))
-                .write.mode("overwrite").partitionBy("list_id")
-                .parquet(f"{index_dir}/vectors.parquet"))
-    built = coded.sparkSession.read.parquet(f"{index_dir}/codes.parquet")
+        _commit(spark, f"{index_dir}/vectors.parquet",
+                labeled.select(id_col, F.col("_v").alias("v"), "list_id")
+                .repartition(F.col("list_id")), "list_id")
+    built = read_table(spark, f"{index_dir}/codes.parquet")
     (built.groupBy("list_id")
           .agg((F.count(F.lit(1)) / m).cast("long").alias("n_vectors"),
                F.round(F.avg("d2"), 6).alias("mean_d2"))
@@ -1452,7 +1457,7 @@ def _ivfpq_index_adc(spark, index_dir: str, queries: DataFrame,
                              vec_col, exact=True)
     probe_lists = sorted({r["qkey"]["list_id"] for r in
                           probes.select("qkey").distinct().collect()})
-    coded = (spark.read.parquet(f"{index_dir}/codes.parquet")
+    coded = (read_table(spark, f"{index_dir}/codes.parquet")
              .filter(F.col("list_id").isin(probe_lists))
              .select(F.col(id_col).alias("neighbor_id"), "sub", "code",
                      "list_id"))
@@ -1484,7 +1489,7 @@ def ivfpq_index_topk_rerank(spark, index_dir: str, queries: DataFrame,
     short = (scored.withColumn("rn", F.row_number().over(ws))
              .filter(F.col("rn") <= shortlist)
              .select("query_id", "neighbor_id"))
-    nv = (spark.read.parquet(f"{index_dir}/vectors.parquet")
+    nv = (read_table(spark, f"{index_dir}/vectors.parquet")
           .filter(F.col("list_id").isin(probe_lists))
           .select(F.col(id_col).alias("neighbor_id"),
                   F.col("v").alias("_nv")))
@@ -1503,7 +1508,7 @@ def ivfpq_index_append(spark, index_dir: str, increment: DataFrame,
     rule the build's kmeans_assign used), encode its 6-dp residual with
     the EXISTING codebook (`_pq_assign` — the same rounded-L2 argmin),
     and MERGE the code rows into their list partitions through
-    sources/atomic.py's crash-safe stage-then-swap (key = vec id, so a
+    sources/atomic.py's partition commit (key = vec id, so a
     crashed/retried append converges idempotently instead of
     duplicating rows, and only touched list directories rewrite).
 
@@ -1520,8 +1525,6 @@ def ivfpq_index_append(spark, index_dir: str, increment: DataFrame,
     schedules an `ivfpq_index_build` rebuild; appends stay correct
     (codes are exact under the frozen quantizers) but ADC resolution
     degrades, which is recall loss, not wrong-answer risk."""
-    from airline_data_warehouse_spark.sources.atomic import upsert_parquet
-
     coarse, cb = _ivfpq_side_tables(spark, index_dir)
     inc = finite_vectors(increment, vec_col, dims=dims).select(
         F.col(id_col),
@@ -1548,10 +1551,8 @@ def ivfpq_index_append(spark, index_dir: str, increment: DataFrame,
     # complete for appended ids (same keyed MERGE, same idempotency);
     # existence goes through the Hadoop FS API so non-local index
     # stores behave the same (the r9 store-probe convention)
-    from airline_data_warehouse_spark.sources.atomic import _fs
     vec_path = f"{index_dir}/vectors.parquet"
-    hpath, fs = _fs(spark, vec_path)
-    if fs.exists(hpath(vec_path)):
+    if _exists(spark, vec_path):
         upsert_parquet(spark,
                        assigned.select(id_col, F.col("_v").alias("v"),
                                        "list_id"),
@@ -1584,11 +1585,11 @@ def ivfpq_index_delete(spark, index_dir: str, ids: DataFrame,
     been inserted — every downstream query (ADC, rerank) is then
     automatically correct with no filter bolted onto the read path.
     Implementation rides sources/atomic.merge_parquet's WHEN MATCHED
-    DELETE clause: partition-scoped stage-then-swap directory rewrites
-    (a partition emptied by the delete is dropped atomically), readers
-    see each partition either pre- or post-delete at every instant,
-    crash → recover_partitions rollback + idempotent retry. A second
-    delete of the same ids is a no-op.
+    DELETE clause: one partition-scoped commit (a partition emptied by
+    the delete leaves the manifest), readers see the index either pre-
+    or post-delete, a crash leaves the previous version committed and
+    the retry is idempotent. A second delete of the same ids is a
+    no-op.
 
     ``stats.parquet`` (the build-time drift baseline) is left as
     built: it describes the TRAINING distribution the quantizers were
@@ -1598,11 +1599,7 @@ def ivfpq_index_delete(spark, index_dir: str, ids: DataFrame,
     Returns {"deleted": <distinct ids actually present>, "codes":
     True, "vectors": <bool — table existed>}. Same single-maintenance-
     process contract as append/compact."""
-    from airline_data_warehouse_spark.sources.atomic import (
-        _fs,
-        merge_parquet,
-        recover_partitions,
-    )
+    from airline_data_warehouse_spark.sources.atomic import merge_parquet
 
     # no broadcast hint on the delete-key set: a routine takedown is a
     # handful of ids but a bulk purge (expired source, licensing sweep)
@@ -1610,15 +1607,13 @@ def ivfpq_index_delete(spark, index_dir: str, ids: DataFrame,
     # set is actually small (the merge_parquet convention)
     keys = ids.select(F.col(id_col)).distinct()
     codes_path = f"{index_dir}/codes.parquet"
-    recover_partitions(spark, codes_path, "list_id")
-    target = spark.read.parquet(codes_path)
+    target = read_table(spark, codes_path)
     # NOT persisted: CacheManager matches canonicalized plans, so a
     # cached victims frame from THIS call would be substituted into the
     # structurally-identical semi-join of a LATER delete against the
     # same index and serve stale pre-delete rows (the retry would
     # "find" the ids it already removed). Evaluated twice (count +
-    # merge staging), both against pre-swap files — cheap, and the
-    # merge stages fully before any rename.
+    # merge write), both against the same committed version — cheap.
     victims = target.join(keys, id_col, "left_semi")
     n = victims.select(id_col).distinct().count()
     if n:
@@ -1626,11 +1621,9 @@ def ivfpq_index_delete(spark, index_dir: str, ids: DataFrame,
                       partition_col="list_id",
                       delete_condition=F.lit(True))
     vec_path = f"{index_dir}/vectors.parquet"
-    hpath, fs = _fs(spark, vec_path)
-    has_vectors = fs.exists(hpath(vec_path))
+    has_vectors = _exists(spark, vec_path)
     if has_vectors and n:
-        recover_partitions(spark, vec_path, "list_id")
-        vtarget = spark.read.parquet(vec_path)
+        vtarget = read_table(spark, vec_path)
         vvictims = vtarget.join(keys, id_col, "left_semi")
         merge_parquet(spark, vvictims, vec_path, key=id_col,
                       partition_col="list_id",
@@ -1651,12 +1644,11 @@ def ivfpq_index_compact(spark, index_dir: str, target_files: int = 1,
     quarter of uptime without compaction turns the probed-partition
     read into a small-file storm.
 
-    Every rewrite goes through sources/atomic.py's crash-safe
-    stage-then-swap (`compact_partitions` per list directory,
-    `compact_directory` for the unpartitioned log): readers see each
-    partition/log either pre- or post-compaction at every instant,
-    a crash mid-swap rolls back via the recover helpers already run by
-    the append/read paths, and the retry is idempotent. Layout-only —
+    Every rewrite is one sources/atomic.py commit (`compact_partitions`
+    for the list partitions, `compact_directory` for the unpartitioned
+    log): readers see each table either pre- or post-compaction, a
+    crash leaves the previous version committed, and the retry is
+    idempotent. Layout-only —
     query results are byte-identical pre/post (pinned by
     test_ivfpq_index_compact_bounds_files_and_preserves_results).
 

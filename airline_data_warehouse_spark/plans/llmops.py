@@ -3635,8 +3635,8 @@ SELECT token, est_count FROM cms_est
                 "split into 3 micro-batch files "
                 "(streaming/sketch.start_countmin_ingest — per-batch "
                 "sketches in their own batch_id partitions, one "
-                "watermarked fold mid-stream exercising the "
-                "replace_directory swap), then reads the store "
+                "watermarked fold mid-stream exercising the base's "
+                "manifest commit), then reads the store "
                 "(read_countmin_store: base + above-watermark "
                 "partitions) and probes it with the every-97th-doc "
                 "token set. Because CMS is a LINEAR sketch, the "
@@ -3701,7 +3701,7 @@ SELECT DISTINCT bit FROM ({_sql_bloom_bits('sh', 4, 65536)
                 "streaming/sketch.start_bloom_ingest (per-batch bit "
                 "appends — idempotent under at-least-once replay "
                 "because bit-set union absorbs duplicates — with one "
-                "mid-stream compaction exercising the stage-then-swap "
+                "mid-stream compaction exercising the manifest-commit "
                 "rewrite), then emits read_bloom_store's accumulated "
                 "DISTINCT bit set. A bit set is order-independent by "
                 "construction, so the batch-built DuckDB twin "
@@ -4269,7 +4269,10 @@ def _content_keyed_store(sf_dir: str, prefix: str) -> str:
     import shutil as _sh
     import tempfile as _tf
 
-    h = _hl.md5()
+    # the on-disk layout version keys the fingerprint too: a store
+    # written before the manifest-commit layout (sources/atomic.py) is
+    # stale even over the same source files
+    h = _hl.md5(b"manifest-commit layout;")
     for table in ("documents", "embeddings"):
         p = _os.path.join(sf_dir, f"{table}.parquet")
         entries = ([(p, _os.stat(p))] if _os.path.isfile(p) else
@@ -5334,8 +5337,8 @@ WHERE rn <= 5
     description="Index-lifecycle DELETION (right-to-be-forgotten): a "
                 "persisted IVFADC index with every vec_id ≡ 7 (mod 10) "
                 "removed via ivfpq_index_delete — partition-scoped "
-                "WHEN-MATCHED-DELETE directory rewrites through the "
-                "crash-safe stage-then-swap — then queried exactly like "
+                "WHEN-MATCHED-DELETE rewrites committed as one "
+                "manifest version — then queried exactly like "
                 "similarity_topk_ivfpq_index. Deletion is EXACT under "
                 "the frozen quantizers (a vector's codes are a pure "
                 "function of the vector), so the oracle is the full "

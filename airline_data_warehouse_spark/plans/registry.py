@@ -144,6 +144,14 @@ _REVALIDATE: tuple[str, ...] = (
     # tiers now run through _band_candidates / _verified_*_pairs /
     # _vector_frames (survivor semi-join before the vector frame)
     "incremental_cascade_ingest",     # r16 cohort; shared verify helpers
+    # manifest-commit protocol (sources/atomic.py): these builders now
+    # write and read their stores through manifests, not renames
+    "stream_countmin_read",           # CMS base: manifest fold, no retry
+    "stream_quantile_read",           # q-digest base: manifest fold
+    "stream_bloom_read",              # Bloom bits: committed appends
+    "similarity_topk_ivfpq_index",    # codes/vectors via read_table
+    "similarity_topk_ivfpq_index_rerank",  # vectors via read_table
+    "similarity_topk_after_delete",   # delete = one partition commit
 )
 
 

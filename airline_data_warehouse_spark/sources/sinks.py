@@ -17,11 +17,6 @@ from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.schemas import PRIMARY_KEYS
 
-# Durable crash-safe twin of `upsert` for partitioned parquet tables: a
-# partition-scoped MERGE through sources/atomic.py's shared partition
-# rewrite (the module docstring states the protocol).
-from airline_data_warehouse_spark.sources.atomic import upsert_parquet  # noqa: F401
-
 
 def upsert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
     """S7 — insert-or-update by key, source wins on conflict.
@@ -29,9 +24,9 @@ def upsert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
     target rows whose key collides are dropped via a single anti-join
     (broadcast when the source is small, AQE decides), then the source is
     appended. One shuffle max; no driver-side row handling. This returns
-    the merged plan and leaves persistence to the caller; `upsert_parquet`
-    is the durable stage-then-swap twin that writes the merge
-    crash-safely into a partitioned parquet table.
+    the merged plan and leaves persistence to the caller;
+    `sources.atomic.upsert_parquet` is the durable twin that commits the
+    merge into a partitioned managed table.
     """
     source = source.select(*target.columns)
     kept = target.join(source.select(key), on=key, how="left_anti")
@@ -54,10 +49,11 @@ def conditional_update(target: DataFrame, predicate, assignments: dict[str, F.Co
 def quarantine(dirty: DataFrame, source_table: str, raw_columns: list[str]) -> DataFrame:
     """S6 (dirty sink) — shape rejected rows into the dirty_data schema:
     the raw row serialized as a JSON payload (the JSONB analog,
-    smartFileProcessor.js:428-441) + error_reason + created_at."""
+    smartFileProcessor.js:428-441) + error_reason + created_at. The
+    ``id`` is assigned once per table write (`Warehouse.append_dirty`),
+    where every file's rejects are numbered together."""
     payload = F.to_json(F.struct(*[F.col(c) for c in raw_columns]))
     return dirty.select(
-        F.monotonically_increasing_id().alias("id"),
         F.lit(source_table).alias("source_table"),
         payload.alias("original_data"),
         F.col("error_reason"),

@@ -1,33 +1,26 @@
 """Snapshot-versioned plain-parquet tables: multi-version commits,
 as-of reads (time travel), and retention — the plain-parquet skeleton
-of what a transactional table format's log provides, built on one
-filesystem invariant: a version is visible iff its COMMIT MARKER
-exists.
+of what a transactional table format's log provides. A snapshot
+version IS a manifest version of sources/atomic.py's commit protocol:
+each commit replaces the whole table, and a version is visible iff its
+manifest exists.
 
-Layout::
+Commit protocol (sources/atomic.py): ``vN``'s data is written
+completely into its own ``commit=N`` directory, then its manifest is
+created. Readers resolve "latest" as the highest version WITH a
+manifest, so a crash mid-data-write leaves an invisible orphan
+directory and the table still reads as the previous version; the
+orphan's number is never reused. Committed directories are immutable,
+which is what makes concurrent readers safe during a commit and makes
+as-of reads reproducible (the property a training pipeline needs: "the
+run used snapshot 17" stays true forever, until retention expires 17).
+Unlike the package's other managed tables, a snapshot commit expires
+nothing on its own: retention is the caller's `expire_snapshots` call.
 
-    table_root/
-        v00001/           immutable parquet data, written fully first
-        v00002/
-        _commits/v00001   marker file (JSON: row count, schema fields)
-        _commits/v00002
-
-Commit protocol: write ``vN``'s data completely, then create the
-marker. Readers resolve "latest" as the highest version WITH a marker,
-so a crash mid-data-write leaves an invisible orphan directory and the
-table still reads as the previous version — no rename-overwrite needed
-(HDFS rename can't atomically replace, so pointer-file designs have a
-torn window; marker-creation does not). Version directories are
-immutable after commit, which is what makes concurrent readers safe
-during a commit and makes as-of reads reproducible (the property a
-training pipeline needs: "the run used snapshot 17" stays true
-forever, until retention expires 17).
-
-Single-writer, like the upsert path (sources/atomic.py): two
-concurrent committers could allocate the same version; serialize
-commits per table at the orchestrator. On object stores, swap the
-marker check for the table format's transaction log — the call sites
-keep the same shape.
+Single-writer, like every managed table: two concurrent committers
+could allocate the same version; serialize commits per table at the
+orchestrator. On object stores, swap the manifest for the table
+format's transaction log — the call sites keep the same shape.
 
 Reference parity: the reference has no versioning at all (Postgres
 tables mutate in place); this is the reproducibility layer a 100 TB
@@ -36,70 +29,31 @@ corpus build adds on top.
 
 from __future__ import annotations
 
-import json
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
-from airline_data_warehouse_spark.sources.atomic import _fs, _write_marker
-
-# 5+ digits: %05d pads but does NOT truncate, so version 100000 writes
-# v100000 — a 5-digit-only regex would make it invisible to _committed,
-# the allocator would re-pick 100000, and every later commit would fail
-# on mode('error'), wedging the table permanently (ADVICE r07). Sorting
-# is numeric (int keys), so 6-digit versions order correctly too.
-_VDIR = re.compile(r"^v(\d{5,})$")
-
-
-def _marker_dir(root: str) -> str:
-    return f"{root.rstrip('/')}/_commits"
-
-
-def _vname(version: int) -> str:
-    return f"v{version:05d}"
-
-
-def _committed(spark: SparkSession, root: str) -> dict[int, str]:
-    """version -> marker path, for every committed version."""
-    hpath, fs = _fs(spark, root)
-    mdir = hpath(_marker_dir(root))
-    if not fs.exists(mdir):
-        return {}
-    out = {}
-    for st in fs.listStatus(mdir):
-        m = _VDIR.match(st.getPath().getName())
-        if m:
-            out[int(m.group(1))] = st.getPath().toString()
-    return out
+from airline_data_warehouse_spark.sources.atomic import (
+    _expire,
+    _history,
+    _publish,
+    _write_version,
+    read_table,
+)
 
 
 def snapshot_commit(spark: SparkSession, df: DataFrame, root: str) -> int:
     """Write ``df`` as the next snapshot version; returns the version.
-    Data lands fully before the marker is created, so a crash anywhere
+    Data lands fully before the manifest is created, so a crash anywhere
     in between leaves the table readable at the previous version."""
-    hpath, fs = _fs(spark, root)
-    existing = set(_committed(spark, root))
-    # orphan dirs from crashed commits also reserve their number, so a
-    # retry never writes into a half-written directory
-    if fs.exists(hpath(root)):
-        for st in fs.listStatus(hpath(root)):
-            m = _VDIR.match(st.getPath().getName())
-            if m:
-                existing.add(int(m.group(1)))
-    version = max(existing, default=0) + 1
-    vpath = f"{root.rstrip('/')}/{_vname(version)}"
-    df.write.mode("error").parquet(vpath)
-    meta = {"version": version,
-            "rows": spark.read.parquet(vpath).count(),
-            "columns": df.columns}
-    _write_marker(fs, hpath(f"{_marker_dir(root)}/{_vname(version)}"),
-                  json.dumps(meta).encode())
-    return version
+    root = root.rstrip("/")
+    version, units = _write_version(spark, root, df)
+    rows = spark.read.parquet(f"{root}/{units[0]}").count()
+    return _publish(spark, root, version, units, df.schema,
+                    meta={"rows": rows, "columns": df.columns}, retain=None)
 
 
 def latest_version(spark: SparkSession, root: str) -> int | None:
-    committed = _committed(spark, root)
-    return max(committed) if committed else None
+    history = _history(spark, root)
+    return history[-1]["version"] if history else None
 
 
 def snapshot_read(spark: SparkSession, root: str,
@@ -107,55 +61,23 @@ def snapshot_read(spark: SparkSession, root: str,
     """Read the latest committed snapshot, or an explicit as-of version.
     Raises ValueError (never a half-read) for uncommitted, expired, or
     unknown versions."""
-    committed = _committed(spark, root)
-    if not committed:
-        raise ValueError(f"no committed snapshots under {root}")
-    if version is None:
-        version = max(committed)
-    if version not in committed:
-        raise ValueError(
-            f"snapshot v{version} is not committed (have "
-            f"{sorted(committed)}) — expired or never landed")
-    return spark.read.parquet(f"{root.rstrip('/')}/{_vname(version)}")
+    return read_table(spark, root, version)
 
 
 def snapshot_history(spark: SparkSession, root: str) -> list[dict]:
     """Commit metadata (version, rows, columns), oldest first."""
-    hpath, fs = _fs(spark, root)
-    out = []
-    for version, mpath in sorted(_committed(spark, root).items()):
-        stream = fs.open(hpath(mpath))
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        out.append(json.loads(raw.decode()))
-    return out
+    return [{k: m[k] for k in ("version", "rows", "columns")}
+            for m in _history(spark, root)]
 
 
 def expire_snapshots(spark: SparkSession, root: str, keep: int = 2) -> list[int]:
     """Retention: drop all but the newest ``keep`` committed versions
-    (marker first, then data — a crash in between leaves an orphan dir
-    that a later commit's allocator still respects). Also removes orphan
-    data dirs older than the retention floor. Returns expired versions."""
+    (data first, then manifest — a crash in between is finished by the
+    next expire), plus every orphan directory a crashed commit left.
+    Returns expired versions."""
     if keep < 1:
         raise ValueError("keep must be >= 1")
-    hpath, fs = _fs(spark, root)
-    committed = _committed(spark, root)
-    keep_set = set(sorted(committed)[-keep:])
-    floor = min(keep_set, default=0)
-    expired = []
-    for version in sorted(committed):
-        if version in keep_set:
-            continue
-        fs.delete(hpath(committed[version]), False)
-        fs.delete(hpath(f"{root.rstrip('/')}/{_vname(version)}"), True)
-        expired.append(version)
-    for st in fs.listStatus(hpath(root)):
-        m = _VDIR.match(st.getPath().getName())
-        if m and int(m.group(1)) < floor and int(m.group(1)) not in committed:
-            fs.delete(st.getPath(), True)  # orphan from a crashed commit
-    return expired
+    return _expire(spark, root.rstrip("/"), keep)
 
 
 def snapshot_diff(spark: SparkSession, root: str, key: str,
@@ -171,7 +93,7 @@ def snapshot_diff(spark: SparkSession, root: str, key: str,
     generalized over arbitrary schemas. At 100 TB both sides shuffle
     once on the key; nothing is collected.
     """
-    committed = sorted(_committed(spark, root))
+    committed = [m["version"] for m in _history(spark, root)]
     if v_to is None:
         v_to = committed[-1] if committed else None
     if v_from is None and committed:

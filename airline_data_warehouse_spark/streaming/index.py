@@ -8,7 +8,7 @@ ingest completes the dedup cascade's.
 Every micro-batch is frozen-quantizer encoded (assign to the stored
 coarse centroids, residual-PQ against the stored codebook — NO
 retraining on the hot path) and MERGEd into its list partitions
-through sources/atomic.py's crash-safe stage-then-swap; foreachBatch's
+through sources/atomic.py's manifest commits; foreachBatch's
 at-least-once retries converge because the MERGE is keyed on the
 vector id. Each batch's drift report (increment reconstruction error
 vs the build-time baseline) is appended to ``{index_dir}/append_log``
@@ -35,23 +35,10 @@ from airline_data_warehouse_spark.streaming import start_foreach_batch
 def append_log(spark: SparkSession, index_dir: str) -> DataFrame:
     """The per-batch drift log the ingest writes: (batch_id, appended,
     mean_d2, baseline_mean_d2, retrain_recommended). The retrain
-    scheduler's input. Heals a log stranded mid-compaction-swap before
-    reading (the store-reader convention).
+    scheduler's input: the log's latest committed version, so calling
+    this while an ingest appends or compacts is safe."""
+    from airline_data_warehouse_spark.sources.atomic import read_table
 
-    Concurrency: the heal step is itself a (rare) mutator, so a reader
-    racing the ingest thread's compaction swap could historically
-    rename the backup back mid-swap and fail the compactor
-    (ADVICE r11-low). Both sides now converge — recover_directory
-    treats a rename that loses to the swap's second rename as benign,
-    and compact_directory treats a reader-restored directory as a
-    no-op compaction — so calling this while an ingest is live is safe;
-    the read still observes the log either pre- or post-compaction
-    atomically."""
-    from airline_data_warehouse_spark.sources.atomic import (
-        recover_directory,
-    )
-
-    recover_directory(spark, f"{index_dir}/append_log")
     # One row per batch_id: the log row is written with a blind
     # append, so an at-least-once foreachBatch REPLAY appends a second
     # row for the same batch_id. Dedup by KEY, not full-row equality —
@@ -63,7 +50,7 @@ def append_log(spark: SparkSession, index_dir: str) -> DataFrame:
     # could pair one replay's mean_d2 with the other's
     # retrain_recommended, a composite row neither replay wrote
     # (review r14).
-    log = spark.read.parquet(f"{index_dir}/append_log")
+    log = read_table(spark, f"{index_dir}/append_log")
     others = [c for c in log.columns if c != "batch_id"]
     if not others:
         return log.distinct()
@@ -90,7 +77,7 @@ def start_index_ingest(stream: DataFrame, index_dir: str,
 
     ``compact_every``: every N batches the index's list partitions and
     the drift log are small-file-compacted (`ivfpq_index_compact` —
-    crash-safe stage-then-swap), bounding file count under sustained
+    one commit each), bounding file count under sustained
     ingest; without it the log grows one file per micro-batch forever
     and every touched list partition accretes per-delta files
     (VERDICT r10 item 2 / "what's wrong" 3). Runs inside the
@@ -167,14 +154,14 @@ def start_index_ingest(stream: DataFrame, index_dir: str,
         from airline_data_warehouse_spark.operators.frames import (
             jvm_local_frame,
         )
-        (jvm_local_frame(
+        from airline_data_warehouse_spark.sources.atomic import _commit
+        _commit(spark, f"{index_dir}/append_log", jvm_local_frame(
             spark,
             [(int(batch_id), rep["appended"], rep["mean_d2"],
               rep["baseline_mean_d2"], rep["retrain_recommended"])],
             "batch_id long, appended long, mean_d2 double, "
             "baseline_mean_d2 double, retrain_recommended boolean")
-         .coalesce(1).write.mode("append")
-         .parquet(f"{index_dir}/append_log"))
+            .coalesce(1), mode="append")
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             ivfpq_index_compact(spark, index_dir)
 

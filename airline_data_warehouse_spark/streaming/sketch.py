@@ -24,12 +24,17 @@ on a blind retry):
 * A maintenance fold (every ``fold_every`` batches, inside the
   foreachBatch thread — single-maintenance-process, the index-ingest
   convention) aggregates base + new batch partitions into a fresh base
-  carrying a ``folded_through`` WATERMARK column, swapped in atomically
-  (sources/atomic.replace_directory). Batch partitions ≤ the watermark
-  are garbage from that instant: readers IGNORE them (the watermark,
-  not directory presence, is truth), so the post-swap cleanup can crash
-  or race a retry re-creating a folded partition without ever
-  double-counting.
+  version, committed under sources/atomic.py's manifest protocol with
+  a ``folded_through`` WATERMARK in its manifest. Batch partitions ≤
+  the watermark are ignored by every reader of that base version (the
+  watermark, not directory presence, is truth), so a retry re-creating
+  a folded partition never double-counts.
+* Deferred batch cleanup: a fold deletes a batch partition only once
+  no retained base version still needs it — once it is at or below the
+  OLDEST retained version's watermark. A read that resolved an older
+  base version keeps its batch partitions for as long as that version
+  is retained, so a fold racing a reader deletes nothing the reader
+  lists, and the read needs no retry.
 * Read = base rows + batch partitions ABOVE the watermark, keyed
   sum — bounded by the state's own size class (d·w cells for CMS,
   the value domain for q-digest leaves), never the stream length.
@@ -61,140 +66,59 @@ def _read_linear_state(spark: SparkSession, store_dir: str,
                        cols: str, keys: list[str],
                        val: str) -> DataFrame:
     """Shared read path for every LINEAR keyed sketch state (Count-Min
-    cells, q-digest leaf counts): base rows + the batch partitions the
-    watermark says are NOT yet folded, summed per key. Heals a base
-    stranded mid-swap first (the store-reader convention). Partitions
-    at/below the watermark are ignored even when their directories
-    exist — they are either post-fold garbage awaiting cleanup or a
-    replayed batch's re-creation; counting them would double-add.
-    ``cols``: the state schema ("k type, …, val type"); ``keys``/
-    ``val``: its key columns and the summed value column.
-
-    The result is materialized EAGERLY (localCheckpoint) inside this
-    call, with one retry: a fold racing a reader deletes the old base
-    files and the folded batch partitions AFTER its atomic swap, so a
-    lazily-returned plan could hit FileNotFound at action time — by
-    materializing here, the failure (if any) surfaces where the
-    re-listed second attempt sees the post-fold state, which holds the
-    same counts (the fold is content-preserving). The state is
-    sketch-bounded, so the snapshot is cheap."""
+    cells, q-digest leaf counts): the latest base version + the batch
+    partitions its watermark says are NOT yet folded, summed per key.
+    Partitions at/below the watermark are ignored even when their
+    directories exist — they await deferred cleanup or are a replayed
+    batch's re-creation; counting them would double-add. ``cols``: the
+    state schema ("k type, …, val type"); ``keys``/``val``: its key
+    columns and the summed value column."""
     from airline_data_warehouse_spark.sources.atomic import (
-        _fs,
-        recover_directory,
+        _exists,
+        _read,
+        manifest,
     )
 
-    last_err = None
-    for attempt in range(2):
-        base_path = _base_dir(store_dir)
-        recover_directory(spark, base_path)
-        hpath, fs = _fs(spark, store_dir)  # Hadoop FS: non-local stores
-        watermark = -1
-        parts = []
-        try:
-            if fs.exists(hpath(base_path)):
-                base = spark.read.schema(f"{cols}, folded_through long") \
-                                 .parquet(base_path)
-                head = base.select("folded_through").first()
-                if head is not None:
-                    watermark = head["folded_through"]
-                parts.append(base.select(*keys, val))
-            bdir = _batches_dir(store_dir)
-            if fs.exists(hpath(bdir)):
-                # explicit schema: a post-fold batches dir is EMPTY
-                # (every partition swept), where inference would throw;
-                # batch_id is the directory-derived partition column
-                inc = (spark.read.schema(f"{cols}, batch_id long")
-                       .parquet(bdir)
-                       .filter(F.col("batch_id") > watermark)
-                       .select(*keys, val))
-                parts.append(inc)
-            if not parts:
-                return spark.createDataFrame([], cols)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return (out.groupBy(*keys).agg(F.sum(val).alias(val))
-                    .localCheckpoint(eager=True))
-        except Exception as e:  # noqa: BLE001 — classified below
-            # Retry ONLY the fold-race file-missing classes: a fold
-            # racing this reader deletes old base files / folded batch
-            # partitions after its atomic swap, so the eager action can
-            # hit FileNotFound; anything else (schema mismatch, genuine
-            # analysis bug) is deterministic and must surface on the
-            # FIRST attempt with its original diagnostics
-            # (ADVICE r13-low / VERDICT r13 item 6).
-            if not _is_fold_race_error(e):
-                raise
-            last_err = e
-    raise last_err
-
-
-def _is_fold_race_error(e: Exception) -> bool:
-    """True only for the file-missing error shapes a fold racing a
-    reader produces: Python FileNotFoundError, Spark's path-not-found
-    AnalysisException, or a JVM FileNotFoundException surfacing
-    through Py4J at action time. The JVM case walks the exception's
-    REAL cause chain (py4j objects), never the rendered message — a
-    message that merely QUOTES an earlier failure's
-    FileNotFoundException text must not reclassify a deterministic
-    error as a race (ADVICE r14-low); the only string check left is a
-    prefix match on the exception's OWN first line (the shape py4j
-    gives an uncaused raw java.io.FileNotFoundException)."""
-    if isinstance(e, FileNotFoundError):
-        return True
-    try:
-        from pyspark.errors import AnalysisException
-        if isinstance(e, AnalysisException):
-            cond = ""
-            get_cond = getattr(e, "getCondition",
-                               getattr(e, "getErrorClass", None))
-            if callable(get_cond):
-                try:
-                    cond = get_cond() or ""
-                except Exception:  # noqa: BLE001 — best-effort probe
-                    cond = ""
-            return ("PATH_NOT_FOUND" in cond
-                    or "PATH_NOT_FOUND" in str(e))
-    except ImportError:
-        pass
-    jexc = getattr(e, "java_exception", None)
-    if jexc is None:
-        jexc = getattr(e, "_origin", None)  # CapturedException's JVM side
-    try:
-        while jexc is not None:
-            if jexc.getClass().getName() == "java.io.FileNotFoundException":
-                return True
-            jexc = jexc.getCause()
-    except Exception:  # noqa: BLE001 — a dead JVM probe is not a race
-        pass
-    return str(e).lstrip().startswith("java.io.FileNotFoundException")
+    base_path = _base_dir(store_dir)
+    base = manifest(spark, base_path)
+    watermark = -1 if base is None else base["folded_through"]
+    parts = [] if base is None else [
+        _read(spark, base_path, base).select(*keys, val)]
+    bdir = _batches_dir(store_dir)
+    if _exists(spark, bdir):
+        # explicit schema: a swept batches dir is EMPTY, where
+        # inference would throw; batch_id is the directory-derived
+        # partition column
+        parts.append(spark.read.schema(f"{cols}, batch_id long")
+                     .parquet(bdir)
+                     .filter(F.col("batch_id") > watermark)
+                     .select(*keys, val))
+    if not parts:
+        return spark.createDataFrame([], cols)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.groupBy(*keys).agg(F.sum(val).alias(val))
 
 
 def _fold_linear_state(spark: SparkSession, store_dir: str,
                        cols: str, keys: list[str], val: str) -> int:
     """Shared fold for the linear stores: aggregate (base ∪ new batch
-    partitions) per key, stamp folded_through = max folded batch_id,
-    swap the base directory in atomically, THEN delete the folded
-    partitions (safe at any point — readers trust the watermark, not
-    directory presence; a crash between swap and cleanup leaves
-    ignorable garbage the next fold's cleanup sweeps). Returns the new
-    watermark (-1 if nothing to fold)."""
+    partitions) per key and commit it as the next base version with
+    folded_through = max folded batch_id, THEN delete the batch
+    partitions no retained base version needs (module docstring).
+    Returns the new watermark (-1 if nothing to fold)."""
     from airline_data_warehouse_spark.sources.atomic import (
+        _commit,
         _fs,
-        recover_directory,
-        replace_directory,
+        _history,
+        manifest,
     )
 
     base_path = _base_dir(store_dir)
-    recover_directory(spark, base_path)
+    base = manifest(spark, base_path)
+    watermark = -1 if base is None else base["folded_through"]
     hpath, fs = _fs(spark, store_dir)  # Hadoop FS API: non-local stores
-    watermark = -1
-    if fs.exists(hpath(base_path)):
-        head = (spark.read.schema(f"{cols}, folded_through long")
-                .parquet(base_path)
-                .select("folded_through").first())
-        if head is not None:
-            watermark = head["folded_through"]
     bdir = _batches_dir(store_dir)
     if not fs.exists(hpath(bdir)):
         return watermark
@@ -203,27 +127,20 @@ def _fold_linear_state(spark: SparkSession, store_dir: str,
                  if st.isDirectory()
                  and st.getPath().getName().startswith("batch_id=")]
     new_ids = [b for b in batch_ids if b > watermark]
-    if not new_ids:
-        # nothing to fold, but sweep pre-watermark garbage (a replayed
-        # batch re-created after its fold, or a crash between a prior
-        # fold's swap and cleanup) — readers already ignore it
-        for b in batch_ids:
+    if new_ids:
+        watermark = max(new_ids)
+        _commit(spark, base_path,
+                _read_linear_state(spark, store_dir, cols, keys, val)
+                .coalesce(1),
+                meta={"folded_through": watermark})
+    # includes pre-watermark garbage (a replayed batch re-created
+    # after its fold), which readers already ignore
+    floor = min((m["folded_through"] for m in _history(spark, base_path)),
+                default=-1)
+    for b in batch_ids:
+        if b <= floor:
             fs.delete(hpath(f"{bdir}/batch_id={b}"), True)
-        return watermark
-    new_mark = max(new_ids)
-    merged = (_read_linear_state(spark, store_dir, cols, keys, val)
-              .withColumn("folded_through", F.lit(new_mark).cast("long")))
-    if not replace_directory(spark, merged, base_path):
-        # reader-heal race: the swap did NOT happen — the OLD base with
-        # the OLD watermark is in place. The batch partitions above it
-        # are still the ONLY copy of their counts; deleting them here
-        # would silently and permanently undercount every later read.
-        # Leave everything; the next fold retries.
-        return watermark
-    for b in batch_ids:          # includes pre-watermark garbage
-        if b <= new_mark:
-            fs.delete(hpath(f"{bdir}/batch_id={b}"), True)
-    return new_mark
+    return watermark
 
 
 def read_countmin_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -286,21 +203,16 @@ def start_countmin_ingest(stream: DataFrame, store_dir: str,
 
 
 def read_bloom_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The accumulated Bloom bit set (bit int, distinct) — heals a
-    store stranded mid-compaction first (the store-reader convention),
-    then de-duplicates across batch appends at read time."""
-    from airline_data_warehouse_spark.sources.atomic import (
-        _fs,
-        recover_directory,
-    )
+    """The accumulated Bloom bit set (bit int, distinct): the bits
+    store's latest committed version, de-duplicated across batch
+    appends at read time."""
+    from airline_data_warehouse_spark.sources.atomic import _read, manifest
 
     bdir = f"{store_dir}/bits"
-    recover_directory(spark, bdir)
-    hpath, fs = _fs(spark, bdir)
-    if not fs.exists(hpath(bdir)):
+    bits = manifest(spark, bdir)
+    if bits is None:
         return spark.createDataFrame([], "bit int")
-    return (spark.read.schema("bit int").parquet(bdir)
-            .select("bit").distinct())
+    return _read(spark, bdir, bits).select("bit").distinct()
 
 
 def start_bloom_ingest(stream: DataFrame, store_dir: str,
@@ -319,14 +231,15 @@ def start_bloom_ingest(stream: DataFrame, store_dir: str,
     appending the same bits twice changes nothing the read-time
     DISTINCT doesn't absorb. Every ``compact_every`` batches the
     accumulated appends are rewritten as one de-duplicated file
-    (replace_directory stage-then-swap) — bounding both file count
-    and row count at ≤ ``bits`` (the r10 unbounded-log lesson)."""
+    (replace_directory, one commit) — bounding both file count and row
+    count at ≤ ``bits`` (the r10 unbounded-log lesson)."""
     from airline_data_warehouse_spark.operators.sketches import (
         BLOOM_BITS,
         BLOOM_HASHES,
         bloom_build,
     )
     from airline_data_warehouse_spark.sources.atomic import (
+        _commit,
         replace_directory,
     )
 
@@ -336,14 +249,10 @@ def start_bloom_ingest(stream: DataFrame, store_dir: str,
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        (bloom_build(batch_df, hash_col, hashes=k, bits=m)
-         .coalesce(1).write.mode("append").parquet(bdir))
+        _commit(spark, bdir,
+                bloom_build(batch_df, hash_col, hashes=k, bits=m).coalesce(1),
+                mode="append")
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # return value deliberately unchecked: a reader-heal no-op
-            # restores the directory's OWN old content (every append
-            # file still present, just un-compacted) — nothing outside
-            # the directory is deleted afterward, so unlike the fold
-            # there is no state to lose; the next compaction retries
             replace_directory(spark, read_bloom_store(spark, store_dir),
                               bdir)
 
@@ -405,7 +314,7 @@ def read_qdigest_leaves(spark: SparkSession, store_dir: str) -> DataFrame:
     """The accumulated LEAF-COUNT state (id, cnt): base + the batch
     partitions above the watermark, summed per value
     (_read_linear_state — leaf counts are linear like CMS cells, so
-    the fold/retry reasoning transfers verbatim).
+    the fold and replay reasoning transfers verbatim).
 
     The store keeps LEAF COUNTS, not compressed digests, on purpose:
     a compressed q-digest depends on the batch split (compression

@@ -35,11 +35,8 @@ from pyspark.sql import functions as F
 from airline_data_warehouse_spark.functions.cleaning import INSURANCE_DELAY_MINUTES
 from airline_data_warehouse_spark.schemas import STATUS_MESSAGE
 
-# the crash-safe partition rewrite the batch upsert_parquet uses too
-from airline_data_warehouse_spark.sources.atomic import (
-    _rewrite_partitions,
-    recover_partitions,
-)
+# the partition commit the batch upsert_parquet uses too
+from airline_data_warehouse_spark.sources.atomic import _commit, read_table
 
 TOPIC = "flight-status-updates"
 GROUP_ID = "flight-status-group"
@@ -209,22 +206,18 @@ def start_eligibility_merge(parsed: DataFrame, fact_path: str, checkpoint: str):
 
     Partition-scoped: the batch's eligible flight keys are semi-joined
     against the fact to find the months holding their rows, only those
-    months are re-derived, and sources/atomic.py's crash-safe partition
-    rewrite stages and swaps them in (the batch upsert's path) — unlike
-    dynamic partition overwrite, which deletes destination directories
-    mid-job. The scope is every month holding an eligible flight's
-    rows: flights that recur monthly make that most of the table (the
-    perfbench data swaps ~23 of 24 months per batch). Batches with no
-    eligible keys touch nothing. A Delta/Iceberg MERGE drops in here
-    and is the recommended path on object stores without atomic
-    rename.
+    months are re-derived, and sources/atomic.py commits them as new
+    partition units (the batch upsert's path) — unlike dynamic
+    partition overwrite, which deletes destination directories mid-job,
+    so a reader holding the fact keeps reading its snapshot. The scope
+    is every month holding an eligible flight's rows: flights that
+    recur monthly make that most of the table (the perfbench data
+    rewrites ~23 of 24 months per batch). Batches with no eligible keys
+    touch nothing. A Delta/Iceberg MERGE drops in here.
     """
     def _merge(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        # make the fact whole before reading it: a crashed prior swap
-        # may have left a month only in its hidden backup dir
-        recover_partitions(spark, fact_path, "sale_year_month")
-        fact = spark.read.parquet(fact_path)
+        fact = read_table(spark, fact_path)
         if "sale_year_month" not in fact.columns:
             raise ValueError("the eligibility merge needs a fact "
                              "partitioned by 'sale_year_month'")
@@ -235,10 +228,8 @@ def start_eligibility_merge(parsed: DataFrame, fact_path: str, checkpoint: str):
         if not months.limit(1).count():
             return  # nothing eligible in this batch — zero writes
         affected = fact.join(F.broadcast(months), "sale_year_month", "left_semi")
-        _rewrite_partitions(
-            spark, eligibility_merge_batch(affected, batch), fact_path,
-            "sale_year_month",
-            f"{fact_path.rstrip('/')}__merge_staging_epoch={epoch}")
+        _commit(spark, fact_path, eligibility_merge_batch(affected, batch),
+                "sale_year_month", mode="partitions")
 
     return (parsed.writeStream.foreachBatch(_merge)
             .option("checkpointLocation", checkpoint)

@@ -5,7 +5,11 @@ views (BI clients on ``v_airline_analytics``, the monitor endpoint's
 latest-status query; reference ``for supabase/denorm view:2-41``,
 ``server.js:153-163``). This module closes that last interface gap: a
 user switching from the reference keeps their SQL verbatim via
-``spark.sql(...)`` after one ``register_views`` call.
+``spark.sql(...)`` after one ``register_views`` call. That promise
+holds across the fact's upserts and eligibility merges: the fact is a
+managed table (sources/atomic.py), so a registered view keeps reading
+the version it was opened on — never a deleted file — for the
+retention window; re-registering picks up the newest version.
 
 Spark-first mechanics: views are registered FROM the DataFrame builders
 (``createOrReplaceTempView``), not re-authored as SQL strings — so the

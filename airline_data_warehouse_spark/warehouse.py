@@ -18,16 +18,23 @@ Sort-within-partitions on the join key before writing the fact gives
 row-group locality for the point-lookup shapes (transaction_id ranges,
 flight_key equality) — parquet min/max stats then prune row groups.
 
-Schema contract: a ``Warehouse`` resolves each table's schema once.
-The first open of a table infers it (``spark.read.parquet``'s
+Schema contract: ``fact_sales`` is a managed table
+(sources/atomic.py): every writer of it — the load, the incremental
+upsert, the streaming eligibility merge — commits a manifest naming
+its live partition directories and its schema, so every open, first or
+later, reads the latest committed version with that schema and
+launches no Spark job, and a DataFrame or view opened before a later
+commit keeps reading its snapshot for the module's retention window.
+Every other table is a plain directory whose schema a ``Warehouse``
+resolves once: the first open infers it (``spark.read.parquet``'s
 footer-reading job) and records it, partition columns and their
 inferred types included; every later open passes the recorded schema,
 so it only lists files (appends and new partitions stay visible) and
 launches no Spark job. Every writer on this ``Warehouse`` forgets its
-table's schema. A writer outside it that changes a table's COLUMNS
-needs a fresh ``Warehouse`` — as a Spark catalog table needs
+table's schema. A writer outside it that changes a plain table's
+COLUMNS needs a fresh ``Warehouse`` — as a Spark catalog table needs
 ``refreshTable`` — while writers that keep the columns (the status
-sink's appends, the eligibility merge's partition swaps) need nothing.
+sink's appends) need nothing.
 """
 
 from __future__ import annotations
@@ -37,6 +44,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from airline_data_warehouse_spark.sources.atomic import (
+    _commit,
+    _exists,
+    read_table,
+    upsert_parquet,
+)
 
 
 class Warehouse:
@@ -58,31 +72,26 @@ class Warehouse:
         df.write.mode("overwrite").parquet(self.path(name))
 
     def write_fact_sales(self, fact: DataFrame) -> None:
-        self._schemas.pop("fact_sales", None)
-        (fact
-         .withColumn("sale_year_month", (F.col("date_key") / 100).cast("int"))
-         .sortWithinPartitions("flight_key", "transaction_id")
-         .write.mode("overwrite")
-         .partitionBy("sale_year_month")
-         .parquet(self.path("fact_sales")))
+        _commit(fact.sparkSession, self.path("fact_sales"),
+                fact.withColumn("sale_year_month",
+                                (F.col("date_key") / 100).cast("int"))
+                    .sortWithinPartitions("flight_key", "transaction_id"),
+                "sale_year_month")
 
     def upsert_fact_incremental(self, spark: SparkSession, new_rows: DataFrame) -> None:
         """Incremental fact maintenance: merge new/changed rows into ONLY
         the months they touch, leaving every other partition untouched.
 
-        Crash-safe stage-then-swap (sources/atomic.py upsert_parquet,
-        r07 — previously dynamic partition overwrite, which deletes
-        destination directories mid-job): affected months are re-derived
-        to a sibling staging dir while the fact stays readable and
-        whole, then swapped in one atomic rename pair per partition. At
-        100 TB a daily load touches a handful of month directories, not
-        the table, and a crash at any point leaves every month either
-        completely-old or completely-new. A transaction whose month
-        CHANGES is migrated, not duplicated (its old month is rewritten
-        without it).
+        One partition commit (sources/atomic.py upsert_parquet):
+        affected months are re-derived into new partition directories
+        while the fact stays readable and whole, then one manifest
+        swaps them in. At 100 TB a daily load touches a handful of
+        month directories, not the table; a crash at any point leaves
+        the previous version committed, and a reader holding the fact
+        keeps its snapshot. A transaction whose month CHANGES is
+        migrated, not duplicated (its old month is rewritten without
+        it).
         """
-        from airline_data_warehouse_spark.sources.atomic import upsert_parquet
-        self._schemas.pop("fact_sales", None)
         staged = new_rows.withColumn(
             "sale_year_month", (F.col("date_key") / 100).cast("int"))
         upsert_parquet(spark, staged, self.path("fact_sales"),
@@ -98,16 +107,30 @@ class Warehouse:
          .parquet(self.path("flight_status_updates")))
 
     def append_dirty(self, dirty: DataFrame) -> None:
+        """Append quarantine rows, numbering them once here: the ``id``
+        continues past the table's current max id (a fresh table reads
+        nothing), so ids stay unique across files and loads."""
+        path = self.path("dirty_data")
+        first = 0
+        if _exists(dirty.sparkSession, path):
+            top = (self._read(dirty.sparkSession, "dirty_data")
+                   .agg(F.max("id")).first()[0])
+            first = 0 if top is None else top + 1
         self._schemas.pop("dirty_data", None)
-        (dirty.write.mode("append")
+        (dirty.select((F.monotonically_increasing_id() + first).alias("id"),
+                      *[c for c in dirty.columns if c != "id"])
+              .write.mode("append")
               .partitionBy("source_table")
-              .parquet(self.path("dirty_data")))
+              .parquet(path))
 
     # -- readers ----------------------------------------------------------
 
     def _read(self, spark: SparkSession, name: str) -> DataFrame:
-        """The one table reader: infer and record the schema on the
-        first open, read with the recorded schema after that."""
+        """The one table reader: the latest committed version of the
+        managed fact; for a plain table, infer and record the schema on
+        the first open, read with the recorded schema after that."""
+        if name == "fact_sales":
+            return read_table(spark, self.path(name))
         schema = self._schemas.get(name)
         if schema is not None:
             return spark.read.schema(schema).parquet(self.path(name))

@@ -1,6 +1,6 @@
 """Incremental materialized-rollup maintenance: a stream of order
 batches keeps a (priority, year)-grain revenue rollup current through
-the crash-safe partition-swap upsert — the foreachBatch pattern a
+the crash-safe partition-commit upsert — the foreachBatch pattern a
 warehouse uses so the 100 TB rollup is never recomputed from scratch."""
 
 from __future__ import annotations
@@ -8,7 +8,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.plans.registry import load
-from airline_data_warehouse_spark.sources.atomic import upsert_parquet
+from airline_data_warehouse_spark.sources.atomic import (
+    manifest,
+    read_table,
+    upsert_parquet,
+)
 
 
 def _rollup(df):
@@ -31,7 +35,7 @@ def test_incremental_rollup_equals_batch(spark, tmp_path):
     for inc in chunks:
         delta = _rollup(inc)
         try:
-            current = spark.read.parquet(dest)
+            current = read_table(spark, dest)
             merged = (delta.alias("d")
                       .join(current.alias("c"),
                             ["o_orderpriority", "order_year"], "left")
@@ -53,12 +57,12 @@ def test_incremental_rollup_equals_batch(spark, tmp_path):
 
     got = {(r["o_orderpriority"], r["order_year"]):
            (str(r["revenue_d"]), r["n_orders"])
-           for r in spark.read.parquet(dest).collect()}
+           for r in read_table(spark, dest).collect()}
     expect = {(r["o_orderpriority"], r["order_year"]):
               (str(r["revenue_d"]), r["n_orders"])
               for r in _rollup(orders).collect()}
     assert got == expect
     # incremental path touched only the partitions with deltas, and the
     # final table is partition-laid-out by year
-    import os
-    assert any(d.startswith("order_year=") for d in os.listdir(dest))
+    assert any(u.rsplit("/", 1)[-1].startswith("order_year=")
+               for u in manifest(spark, dest)["units"])

@@ -11,6 +11,8 @@ from airline_data_warehouse_spark.operators import multimodal as mm
 from airline_data_warehouse_spark.operators import sampling as sp
 from airline_data_warehouse_spark.operators import similarity as sim
 from airline_data_warehouse_spark.operators import text as tx
+from airline_data_warehouse_spark.sources import atomic as at
+from airline_data_warehouse_spark.sources.atomic import read_table
 
 BASE = ("the quick brown fox jumps over the lazy dog while the market data "
         "pipeline keeps shuffling partitions across the cluster nodes")
@@ -1294,7 +1296,7 @@ def test_ivfpq_index_build_deterministic_and_voronoi_consistent(
         sim.ivfpq_index_build(corpus, d, n_lists=4, m=2, codes_k=4,
                               iters=2, dims=8)
     snap = lambda d: sorted(  # noqa: E731
-        tuple(r) for r in spark.read.parquet(f"{d}/codes.parquet").collect())
+        tuple(r) for r in read_table(spark, f"{d}/codes.parquet").collect())
     assert snap(idx) == snap(idx2)
 
     # Voronoi consistency: stored list == frozen argmax assignment
@@ -1304,7 +1306,7 @@ def test_ivfpq_index_build_deterministic_and_voronoi_consistent(
     want = {(r["vec_id"], r["list_id"]) for r in
             sim.ivf_assign(vecs, coarse, vec_col="_v").collect()}
     got = {(r["vec_id"], r["list_id"]) for r in
-           spark.read.parquet(f"{idx}/codes.parquet")
+           read_table(spark, f"{idx}/codes.parquet")
                 .select("vec_id", "list_id").distinct().collect()}
     assert got == want
 
@@ -1349,7 +1351,7 @@ def test_ivfpq_index_prunes_partitions(spark, tmp_path):
     idx = str(tmp_path / "ivfpq")
     sim.ivfpq_index_build(corpus, idx, n_lists=4, m=2, codes_k=4,
                           iters=2, dims=8)
-    codes = spark.read.parquet(f"{idx}/codes.parquet")
+    codes = read_table(spark, f"{idx}/codes.parquet")
     assert codes.count() == 40 * 2
     assert codes.select("vec_id").distinct().count() == 40
     assert spark.read.parquet(f"{idx}/coarse_centroids.parquet").count() == 4
@@ -1426,7 +1428,7 @@ def test_ivfpq_index_append_maintains_vector_partitions(spark, tmp_path):
     inc = spark.createDataFrame([(200, list(rows[3][1]))],
                                 "vec_id long, embedding array<double>")
     sim.ivfpq_index_append(spark, idx, inc, m=2, dims=8)
-    assert (spark.read.parquet(f"{idx}/vectors.parquet")
+    assert (read_table(spark, f"{idx}/vectors.parquet")
             .filter(F.col("vec_id") == 200).count()) == 1
     top = sim.ivfpq_index_topk_rerank(
         spark, idx, corpus.filter(F.col("vec_id") == 3), k=3,
@@ -1450,7 +1452,7 @@ def test_ivfpq_index_append_matches_frozen_rebuild(spark, tmp_path):
     sim.ivfpq_index_build(corpus, idx, n_lists=4, m=2, codes_k=4,
                           iters=2, dims=8)
     base = sorted(tuple(r) for r in
-                  spark.read.parquet(f"{idx}/codes.parquet").collect())
+                  read_table(spark, f"{idx}/codes.parquet").collect())
 
     inc_rows = [(100, list(rows[4][1]))]          # exact dup of vec 4
     inc_rows += [(101 + i, [v * 0.9 for v in rows[i][1]])
@@ -1462,7 +1464,7 @@ def test_ivfpq_index_append_matches_frozen_rebuild(spark, tmp_path):
     assert rep["baseline_mean_d2"] > 0
     assert not rep["retrain_recommended"]          # in-distribution
 
-    after = spark.read.parquet(f"{idx}/codes.parquet")
+    after = read_table(spark, f"{idx}/codes.parquet")
     got = sorted(tuple(r) for r in after.collect())
     # (a) base rows unchanged
     assert [t for t in got if t[0] < 100] == base
@@ -1473,10 +1475,10 @@ def test_ivfpq_index_append_matches_frozen_rebuild(spark, tmp_path):
         by_id.setdefault(t[0], set()).add(t[1:])
     assert by_id[100] == by_id[4]
     # (c) idempotent retry: same increment again, nothing duplicates
-    # (fresh reads — the swap replaced files under the old listing)
+    # (a fresh read resolves the newest version)
     rep2 = sim.ivfpq_index_append(spark, idx, inc, m=2, dims=8)
     assert rep2["appended"] == 4
-    fresh = spark.read.parquet(f"{idx}/codes.parquet")
+    fresh = read_table(spark, f"{idx}/codes.parquet")
     assert fresh.count() == (30 + 4) * 2
     assert sorted(tuple(r) for r in fresh.collect()) == got
     # (d) queries see the increment: vec 4's top ADC hit ties with its
@@ -1506,9 +1508,8 @@ def test_ivfpq_index_delete_exact_rows_and_query_promotion(
     (2) queries never return a deleted id and survivors are promoted
     into the freed rank slots (deletion before ranking, not a filter
     after top-k); (3) a second delete of the same ids is a no-op;
-    (4) deleting every id of a list drops its partition directory."""
-    import os
-
+    (4) deleting every id of a list drops its partition from the
+    manifest."""
     rows, corpus = _rand_corpus(spark, 30, 8, seed=31)
     idx = str(tmp_path / "ivfpq_del")
     sim.ivfpq_index_build(corpus, idx, n_lists=2, m=2, codes_k=4,
@@ -1517,20 +1518,20 @@ def test_ivfpq_index_delete_exact_rows_and_query_promotion(
     pre = sim.ivfpq_index_topk(spark, idx, queries, k=29, n_probe=2,
                                m=2, dims=8).collect()
     pre_codes = {tuple(r) for r in
-                 spark.read.parquet(f"{idx}/codes.parquet").collect()}
+                 read_table(spark, f"{idx}/codes.parquet").collect()}
     pre_vecs = {(r["vec_id"],) for r in
-                spark.read.parquet(f"{idx}/vectors.parquet").collect()}
+                read_table(spark, f"{idx}/vectors.parquet").collect()}
     victims = {5, 6, 7}
     ids = spark.createDataFrame([(v,) for v in victims], "vec_id long")
     report = sim.ivfpq_index_delete(spark, idx, ids)
     assert report == {"deleted": 3, "codes": True, "vectors": True}
 
     post_codes = {tuple(r) for r in
-                  spark.read.parquet(f"{idx}/codes.parquet").collect()}
+                  read_table(spark, f"{idx}/codes.parquet").collect()}
     assert post_codes == {t for t in pre_codes
                           if t[0] not in victims}  # vec_id is col 0
     post_vecs = {(r["vec_id"],) for r in
-                 spark.read.parquet(f"{idx}/vectors.parquet").collect()}
+                 read_table(spark, f"{idx}/vectors.parquet").collect()}
     assert post_vecs == {t for t in pre_vecs if t[0] not in victims}
 
     # deep-k query over everything: survivors keep relative order and
@@ -1552,20 +1553,19 @@ def test_ivfpq_index_delete_exact_rows_and_query_promotion(
     # idempotent retry
     assert sim.ivfpq_index_delete(spark, idx, ids)["deleted"] == 0
 
-    # purge an entire list: its partition directory must vanish
-    # (materialize the id list BEFORE the delete — a lazy frame would
-    # pin the pre-delete file listing and fail to re-collect after the
-    # swap removes those files)
-    a_list = spark.read.parquet(f"{idx}/codes.parquet") \
+    # purge an entire list: its partition must leave the manifest
+    a_list = read_table(spark, f"{idx}/codes.parquet") \
         .select("list_id").first()["list_id"]
     whole_ids = sorted(r["vec_id"] for r in
-                       spark.read.parquet(f"{idx}/codes.parquet")
+                       read_table(spark, f"{idx}/codes.parquet")
                        .filter(F.col("list_id") == a_list)
                        .select("vec_id").distinct().collect())
     sim.ivfpq_index_delete(
         spark, idx,
         spark.createDataFrame([(v,) for v in whole_ids], "vec_id long"))
-    assert f"list_id={a_list}" not in os.listdir(f"{idx}/codes.parquet")
+    assert f"list_id={a_list}" not in {
+        u.rsplit("/", 1)[-1]
+        for u in at.manifest(spark, f"{idx}/codes.parquet")["units"]}
     left = sim.ivfpq_index_topk(spark, idx, queries, k=29, n_probe=2,
                                 m=2, dims=8)
     assert left.filter(F.col("neighbor_id").isin(whole_ids)).count() == 0
@@ -1576,12 +1576,16 @@ def test_ivfpq_index_compact_bounds_files_and_preserves_results(
     """Index-lifecycle compaction (VERDICT r10 item 2): N appends
     fragment the list partitions and a per-batch drift log grows one
     file per batch; ivfpq_index_compact must bound both file counts and
-    leave query results BYTE-identical — and a crash stranding the log
-    in its hidden backup must heal on the next read."""
+    leave query results BYTE-identical — and a crashed log compaction's
+    orphan (data written, no manifest) stays invisible."""
     import os
 
-    def count_files(d):
-        return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+    def count_files(root, part=None):
+        """parquet files of the live units (of partition ``part``)."""
+        return sum(1 for u in at.manifest(spark, root)["units"]
+                   if part is None or u.rsplit("/", 1)[-1] == part
+                   for f in os.listdir(f"{root}/{u}")
+                   if f.endswith(".parquet"))
 
     rows, corpus = _rand_corpus(spark, 30, 8, seed=23)
     idx = str(tmp_path / "ivfpq")
@@ -1594,44 +1598,44 @@ def test_ivfpq_index_compact_bounds_files_and_preserves_results(
              for i in range(2)],
             "vec_id long, embedding array<double>")
         sim.ivfpq_index_append(spark, idx, inc, m=2, dims=8)
-        (spark.createDataFrame([(b,)], "batch_id long")
-         .coalesce(1).write.mode("append").parquet(log_dir))
+        at._commit(spark, log_dir, spark.createDataFrame(
+            [(b,)], "batch_id long").coalesce(1), mode="append")
 
-    codes_parts = [f"{idx}/codes.parquet/{p}"
-                   for p in os.listdir(f"{idx}/codes.parquet")
-                   if p.startswith("list_id=")]
-    assert max(count_files(p) for p in codes_parts) > 1   # fragmented
+    codes = f"{idx}/codes.parquet"
+    codes_parts = sorted({u.rsplit("/", 1)[-1]
+                          for u in at.manifest(spark, codes)["units"]})
+    assert max(count_files(codes, p) for p in codes_parts) > 1  # fragmented
     assert count_files(log_dir) == 6                      # 1/batch
 
     queries = corpus.filter(F.col("vec_id") < 5)
     pre = sorted(tuple(r) for r in sim.ivfpq_index_topk(
         spark, idx, queries, k=5, n_probe=2, m=2, dims=8).collect())
     pre_log = sorted(r["batch_id"] for r in
-                     spark.read.parquet(log_dir).collect())
+                     read_table(spark, log_dir).collect())
 
     report = sim.ivfpq_index_compact(spark, idx, target_files=1,
                                      max_files_ok=1)
     assert report["codes"] and report["append_log"]
-    assert all(count_files(p) == 1 for p in codes_parts)
+    assert all(count_files(codes, p) == 1 for p in codes_parts)
     assert count_files(log_dir) == 1
     post = sorted(tuple(r) for r in sim.ivfpq_index_topk(
         spark, idx, queries, k=5, n_probe=2, m=2, dims=8).collect())
     assert post == pre                                    # byte-identical
     assert sorted(r["batch_id"] for r in
-                  spark.read.parquet(log_dir).collect()) == pre_log
+                  read_table(spark, log_dir).collect()) == pre_log
 
     # idempotent: already-compacted index is a no-op
     again = sim.ivfpq_index_compact(spark, idx, target_files=1,
                                     max_files_ok=1)
     assert not again["codes"] and not again["append_log"]
 
-    # crash between the log swap's two renames: only copy lives in the
-    # hidden backup — the reader-side recovery restores it
-    os.rename(log_dir, f"{idx}/.append_log.replaced")
+    # a crashed log compaction: its data landed, no manifest did — the
+    # drift log still reads the committed version
+    (spark.createDataFrame([(99,)], "batch_id long")
+     .write.parquet(f"{log_dir}/commit=99999"))
     from airline_data_warehouse_spark.streaming.index import append_log
     healed = append_log(spark, idx)
     assert sorted(r["batch_id"] for r in healed.collect()) == pre_log
-    assert os.path.isdir(log_dir)
 
 
 def test_remove_repeated_spans_cuts_only_flagged(spark):

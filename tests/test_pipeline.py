@@ -51,6 +51,20 @@ def test_full_pipeline(spark, csv_dir, tmp_path):
     assert fact.count() == 5 and "sale_year_month" in fact.columns
 
 
+def test_dirty_ids_unique_across_files_and_loads(spark, csv_dir, tmp_path):
+    """dirty_data.id is unique within one load's rejects from several
+    files, and still unique after a second load into the same root."""
+    from airline_data_warehouse_spark.warehouse import Warehouse
+
+    root = str(tmp_path / "wh")
+    n = 0
+    for _ in range(2):
+        n += run_full_pipeline(spark, str(csv_dir), root).quarantine.count()
+        ids = [r["id"] for r in
+               Warehouse(root).table(spark, "dirty_data").collect()]
+        assert len(ids) == n and len(set(ids)) == n
+
+
 def test_pipeline_upsert_across_files(spark, csv_dir, tmp_path):
     extra = tmp_path / "drop2"
     extra.mkdir()

@@ -1,5 +1,5 @@
 """Snapshot-versioned tables (sources/snapshots.py): a version is
-visible iff its commit marker exists — as-of reads, crash invisibility,
+visible iff its manifest exists — as-of reads, crash invisibility,
 retention, and orphan handling."""
 
 from __future__ import annotations
@@ -30,19 +30,22 @@ def test_commit_read_asof_and_history(spark, tmp_path):
 
 def test_version_100000_stays_visible_and_allocates_past(spark, tmp_path):
     """%05d pads but does not truncate, so version 100000 writes a
-    6-digit v100000 dir — a 5-digit-only matcher made it invisible, the
-    allocator re-picked 100000, and every later commit failed on
-    mode('error'): the table wedged permanently (ADVICE r07). The
-    matcher accepts 5+ digits and sorts numerically."""
+    6-digit commit=100000 dir and v100000 manifest — a 5-digit-only
+    matcher made it invisible, the allocator re-picked 100000, and
+    every later commit failed on mode('error'): the table wedged
+    permanently (ADVICE r07). The matcher accepts 5+ digits and sorts
+    numerically."""
     import json
 
     root = str(tmp_path / "tbl")
     sn.snapshot_commit(spark, _df(spark, 3), root)
-    # fabricate a committed 6-digit version (data + marker)
-    _df(spark, 9).write.parquet(f"{root}/v100000")
-    with open(os.path.join(root, "_commits", "v100000"), "w") as f:
+    # fabricate a committed 6-digit version (data + manifest)
+    df = _df(spark, 9)
+    df.write.parquet(f"{root}/commit=100000")
+    with open(os.path.join(root, "_manifests", "v100000"), "w") as f:
         json.dump({"version": 100000, "rows": 9,
-                   "columns": ["id", "value"]}, f)
+                   "columns": ["id", "value"], "units": ["commit=100000"],
+                   "schema": json.loads(df.schema.json())}, f)
     assert sn.latest_version(spark, root) == 100000
     assert sn.snapshot_read(spark, root).count() == 9
     # the allocator sees it and moves past — no re-pick, no wedge
@@ -56,8 +59,9 @@ def test_version_100000_stays_visible_and_allocates_past(spark, tmp_path):
 def test_crashed_commit_is_invisible_and_number_not_reused(spark, tmp_path):
     root = str(tmp_path / "tbl")
     sn.snapshot_commit(spark, _df(spark, 3), root)
-    # simulate a crash mid-commit: v00002 data lands, marker never does
-    _df(spark, 99).write.parquet(f"{root}/v00002")
+    # simulate a crash mid-commit: v2's data lands, its manifest never
+    # does
+    _df(spark, 99).write.parquet(f"{root}/commit=00002")
     assert sn.latest_version(spark, root) == 1
     assert sn.snapshot_read(spark, root).count() == 3
     with pytest.raises(ValueError, match="not committed"):
@@ -71,15 +75,16 @@ def test_expire_keeps_newest_and_sweeps_orphans(spark, tmp_path):
     root = str(tmp_path / "tbl")
     for n in (3, 5, 7, 9):
         sn.snapshot_commit(spark, _df(spark, n), root)
-    _df(spark, 1).write.parquet(f"{root}/v00001b")  # not a version dir: ignored
+    _df(spark, 1).write.parquet(f"{root}/commit=00001b")  # not a version dir: ignored
     assert sn.expire_snapshots(spark, root, keep=2) == [1, 2]
     assert sn.snapshot_read(spark, root, version=3).count() == 7
     assert sn.snapshot_read(spark, root).count() == 9
     with pytest.raises(ValueError, match="expired or never landed"):
         sn.snapshot_read(spark, root, version=1)
-    assert not os.path.isdir(f"{root}/v00001")
+    assert not os.path.isdir(f"{root}/commit=00001")
     # immutability of survivors: the files of kept versions are untouched
-    assert os.path.isdir(f"{root}/v00004")
+    assert os.path.isdir(f"{root}/commit=00004")
+    assert os.path.isdir(f"{root}/commit=00001b")
 
 
 def test_snapshot_diff_change_feed(spark, tmp_path):

@@ -8,6 +8,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from airline_data_warehouse_spark.sources import atomic as at
+from airline_data_warehouse_spark.sources.atomic import read_table
 from airline_data_warehouse_spark.streaming import status as st
 from tests.conftest import drop_file
 
@@ -102,8 +104,9 @@ def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
         "transaction_id string, flight_key string, flight_status string, "
         "delay_minutes int, is_eligible_insurance boolean, sale_year_month int")
     fact_path = str(tmp_path / "fact")
-    fact.write.partitionBy("sale_year_month").parquet(fact_path)
-    untouched = os.path.join(fact_path, "sale_year_month=202401")
+    at.upsert_parquet(spark, fact, fact_path, key="transaction_id",
+                      partition_col="sale_year_month")
+    untouched = _unit(spark, fact_path, "sale_year_month=202401")
     before = {f: os.path.getmtime(os.path.join(untouched, f))
               for f in os.listdir(untouched)}
 
@@ -111,22 +114,33 @@ def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
     q = st.start_eligibility_merge(parsed, fact_path, str(tmp_path / "ckpt_merge"))
     assert q.awaitTermination(600)
 
-    out = {r["transaction_id"]: r for r in spark.read.parquet(fact_path).collect()}
+    out = {r["transaction_id"]: r for r in read_table(spark, fact_path).collect()}
     assert len(out) == 4
     assert out["T1"]["is_eligible_insurance"] and out["T2"]["is_eligible_insurance"]
     assert out["T1"]["delay_minutes"] == 300 and out["T1"]["flight_status"] == "delayed"
     assert not out["T3"]["is_eligible_insurance"]
     assert out["T3"]["flight_status"] == "scheduled"
+    assert _unit(spark, fact_path, "sale_year_month=202401") == untouched
     after = {f: os.path.getmtime(os.path.join(untouched, f))
              for f in os.listdir(untouched)}
     assert after == before  # 202401 directory never rewritten
 
 
+def _unit(spark, root, part):
+    """The live unit (directory) holding partition ``part`` of the
+    managed table at ``root``."""
+    import os
+    units = [u for u in at.manifest(spark, root)["units"]
+             if u.rsplit("/", 1)[-1] == part]
+    assert len(units) == 1, units
+    return os.path.join(root, units[0])
+
+
 def test_eligibility_merge_recovers_crashed_swap(spark, stream_dir, tmp_path):
-    """A crash between a partition swap's two renames leaves a partition's
-    only copy in the hidden ``.name.replaced`` backup. The checkpointed
-    retry must roll it back BEFORE reading the fact — otherwise the month
-    is invisible to discovery and the swap machinery can drop it."""
+    """A merge that crashed after writing its months but before its
+    manifest leaves an orphan commit directory. The fact still reads
+    its previous version, the checkpointed retry merges it, and the
+    retry's expire deletes the orphan."""
     import os
     fact = spark.createDataFrame(
         [("T1", "AA100", "scheduled", 0, False, 202306),
@@ -134,24 +148,62 @@ def test_eligibility_merge_recovers_crashed_swap(spark, stream_dir, tmp_path):
         "transaction_id string, flight_key string, flight_status string, "
         "delay_minutes int, is_eligible_insurance boolean, sale_year_month int")
     fact_path = str(tmp_path / "fact_crash")
-    fact.write.partitionBy("sale_year_month").parquet(fact_path)
-    # simulate the crash window: dest renamed to backup, staging never landed
-    os.rename(os.path.join(fact_path, "sale_year_month=202306"),
-              os.path.join(fact_path, ".sale_year_month=202306.replaced"))
-    # plus a stale backup whose destination DOES exist (crash after second
-    # rename, before backup delete) — recovery must delete, not roll back
-    os.makedirs(os.path.join(fact_path, ".sale_year_month=202401.replaced"))
+    at.upsert_parquet(spark, fact, fact_path, key="transaction_id",
+                      partition_col="sale_year_month")
+    # the crashed attempt: a half-merged 202306 landed, no manifest did
+    orphan = os.path.join(fact_path, "commit=00002")
+    (fact.filter("sale_year_month = 202306")
+     .withColumn("delay_minutes", F.lit(-1))
+     .write.partitionBy("sale_year_month").parquet(orphan))
+    assert read_table(spark, fact_path).count() == 2
 
     parsed = st.parse_status_stream(st.file_status_source(spark, str(stream_dir / "in")))
     q = st.start_eligibility_merge(parsed, fact_path, str(tmp_path / "ckpt_crash"))
     assert q.awaitTermination(600)
 
-    out = {r["transaction_id"]: r for r in spark.read.parquet(fact_path).collect()}
+    out = {r["transaction_id"]: r for r in read_table(spark, fact_path).collect()}
     assert len(out) == 2  # the 202306 partition came back, nothing lost
     assert out["T1"]["is_eligible_insurance"] and out["T1"]["delay_minutes"] == 300
     assert not out["T9"]["is_eligible_insurance"]
-    leftovers = [f for f in os.listdir(fact_path) if f.endswith(".replaced")]
-    assert leftovers == []
+    assert not os.path.exists(orphan)
+
+
+def test_held_fact_reads_its_snapshot_across_upsert_and_merge(
+        spark, stream_dir, tmp_path):
+    """Snapshot reads: a fact DataFrame and a temp view opened before an
+    incremental upsert and an eligibility-merge batch keep counting the
+    version they opened (the upsert and the merge commit new files and
+    delete none), while a fresh open sees the new rows."""
+    from airline_data_warehouse_spark.warehouse import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    cols = ("transaction_id string, date_key int, flight_key string, "
+            "flight_status string, delay_minutes int, "
+            "is_eligible_insurance boolean")
+    wh.write_fact_sales(spark.createDataFrame(
+        [("T1", 20230601, "AA100", "scheduled", 0, False),
+         ("T2", 20230715, "AF023", "scheduled", 0, False)], cols))
+    held = wh.table(spark, "fact_sales")
+    held.createOrReplaceTempView("held_fact")
+
+    def held_counts():
+        return (held.count(),
+                spark.sql("SELECT count(*) FROM held_fact").first()[0])
+
+    wh.upsert_fact_incremental(spark, spark.createDataFrame(
+        [("T3", 20230602, "AA100", "scheduled", 0, False)], cols))
+    assert held_counts() == (2, 2)
+    parsed = st.parse_status_stream(
+        st.file_status_source(spark, str(stream_dir / "in")))
+    q = st.start_eligibility_merge(parsed, wh.path("fact_sales"),
+                                   str(tmp_path / "ckpt_held"))
+    assert q.awaitTermination(600)
+    assert held_counts() == (2, 2)
+
+    fresh = {r["transaction_id"]: r["is_eligible_insurance"]
+             for r in wh.table(spark, "fact_sales").collect()}
+    assert fresh == {"T1": True, "T2": False, "T3": True}
+    spark.catalog.dropTempView("held_fact")
 
 
 def test_stream_static_enrichment(spark, stream_dir, tmp_path):
@@ -1126,7 +1178,7 @@ def test_stream_index_ingest_appends_and_logs_drift(spark, tmp_path):
         q.stop()
     assert n_rdds() <= base          # each micro-batch released its caches
 
-    codes = spark.read.parquet(f"{idx}/codes.parquet")
+    codes = read_table(spark, f"{idx}/codes.parquet")
     assert codes.select("vec_id").distinct().count() == 30 + 6
     log = sorted(((r["appended"], r["retrain_recommended"]) for r in
                   append_log(spark, idx).collect()))
@@ -1317,58 +1369,6 @@ def test_stream_qdigest_store_equals_batch_build(spark, tmp_path):
     assert empty.count() == 0
 
 
-def test_fold_survives_replace_directory_noop(spark, tmp_path, monkeypatch):
-    """The fold's follow-up deletes assume the base swap HAPPENED —
-    when replace_directory reports the reader-heal no-op (old base
-    restored, new content dropped), the fold must leave the batch
-    partitions alone and return the OLD watermark: deleting them would
-    destroy the only copy of the unfolded counts (self-review r13
-    finding). Simulated by forcing the no-op return."""
-    import json as jsonlib
-    import os
-
-    from airline_data_warehouse_spark.streaming import sketch as sks
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    for i, toks in enumerate([["a", "b"], ["b", "c"]]):
-        drop_file(in_dir, f"b{i}.json", "".join(
-            jsonlib.dumps({"token": t}) + "\n"
-            for t in toks))
-    store = str(tmp_path / "cms")
-    src = (spark.readStream.schema("token string")
-           .option("maxFilesPerTrigger", 1).json(str(in_dir)))
-    q = sks.start_countmin_ingest(src, store,
-                                  checkpoint_dir=str(tmp_path / "ck"),
-                                  fold_every=None)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    before = {(r["row"], r["bucket"]): r["counter"] for r in
-              sks.read_countmin_store(spark, store).collect()}
-
-    # _fold_linear_state imports replace_directory from sources.atomic
-    # inside the function body; patch it at the source module
-    from airline_data_warehouse_spark.sources import atomic as at
-    real = at.replace_directory
-    monkeypatch.setattr(at, "replace_directory", lambda *a, **k: False)
-    assert sks.fold_countmin_store(spark, store) == -1  # old watermark
-    # batch partitions untouched, state unchanged
-    assert sorted(d for d in os.listdir(f"{store}/batches")
-                  if d.startswith("batch_id=")) \
-        == ["batch_id=0", "batch_id=1"]
-    after = {(r["row"], r["bucket"]): r["counter"] for r in
-             sks.read_countmin_store(spark, store).collect()}
-    assert after == before
-    # the real fold afterwards converges
-    monkeypatch.setattr(at, "replace_directory", real)
-    assert sks.fold_countmin_store(spark, store) == 1
-    final = {(r["row"], r["bucket"]): r["counter"] for r in
-             sks.read_countmin_store(spark, store).collect()}
-    assert final == before
-
-
 def test_append_log_deduplicates_replayed_rows(spark, tmp_path):
     """append_log: a foreachBatch replay appends a bit-identical row
     for the same batch_id (the drift stats are deterministic functions
@@ -1387,8 +1387,9 @@ def test_append_log_deduplicates_replayed_rows(spark, tmp_path):
             (0, 5, 0.1, 0.1, False),
             (0, 5, 0.100001, 0.1, False)]
     for row in rows:
-        (spark.createDataFrame([row], schema).coalesce(1)
-         .write.mode("append").parquet(f"{idx}/append_log"))
+        at._commit(spark, f"{idx}/append_log",
+                   spark.createDataFrame([row], schema).coalesce(1),
+                   mode="append")
     got = append_log(spark, idx).collect()
     assert len(got) == 1 and got[0]["appended"] == 5
     assert got[0]["mean_d2"] == 0.100001   # deterministic max, not any()
@@ -1498,7 +1499,7 @@ def test_stream_index_ingest_with_tombstones(spark, tmp_path):
         q.stop()
 
     ids = {r["vec_id"] for r in
-           spark.read.parquet(f"{idx}/codes.parquet")
+           read_table(spark, f"{idx}/codes.parquet")
            .select("vec_id").distinct().collect()}
     want = (set(range(30)) - {5, 7, 200}) | {100, 101, 102}
     # 5 and 7 were base ids tombstoned mid-stream; 200 was
@@ -1572,7 +1573,7 @@ def test_stream_index_ingest_ordered_cdc_last_event_wins(spark, tmp_path):
         q.stop()
 
     ids = {r["vec_id"] for r in
-           spark.read.parquet(f"{idx}/codes.parquet")
+           read_table(spark, f"{idx}/codes.parquet")
            .select("vec_id").distinct().collect()}
     assert ids == (set(range(30)) - {7}) | {300}
     # id 5 must carry the RE-INSERTED vector's code, not the original's:
@@ -1585,9 +1586,9 @@ def test_stream_index_ingest_ordered_cdc_last_event_wins(spark, tmp_path):
     sim.ivfpq_index_delete(spark, fresh,
                            probe.select("vec_id"), id_col="vec_id")
     sim.ivfpq_index_append(spark, fresh, probe, m=2, dims=8)
-    want_code = (spark.read.parquet(f"{fresh}/codes.parquet")
+    want_code = (read_table(spark, f"{fresh}/codes.parquet")
                  .filter(F.col("vec_id") == 5).collect())
-    got_code = (spark.read.parquet(f"{idx}/codes.parquet")
+    got_code = (read_table(spark, f"{idx}/codes.parquet")
                 .filter(F.col("vec_id") == 5).collect())
     key = lambda r: (r["sub"], r["code"], r["list_id"])  # noqa: E731
     assert sorted(map(key, got_code)) == sorted(map(key, want_code))
@@ -1598,17 +1599,14 @@ def test_stream_index_ingest_ordered_cdc_last_event_wins(spark, tmp_path):
 
 
 def test_replace_directory_crash_windows(spark, tmp_path):
-    """sources/atomic.replace_directory crash contract: (1) a crash
-    AFTER rename 1 (content only in the hidden backup) heals on the
-    next recover_directory — the old content comes back whole; (2) a
-    crashed pre-swap attempt's staging directory is deleted and
-    re-staged by the retry; (3) a completed replace leaves no backup
-    and the new content."""
+    """sources/atomic.replace_directory crash contract: a replace that
+    crashed after writing its data but before its manifest leaves an
+    orphan commit directory the table never shows — it reads its
+    previous version — and the next commit's expire deletes the orphan;
+    a completed replace reads the new content."""
     import os
-    import shutil
 
     from airline_data_warehouse_spark.sources.atomic import (
-        recover_directory,
         replace_directory,
     )
 
@@ -1616,25 +1614,88 @@ def test_replace_directory_crash_windows(spark, tmp_path):
     v1 = spark.createDataFrame([(1, 10)], "k long, v long")
     v2 = spark.createDataFrame([(2, 20)], "k long, v long")
     replace_directory(spark, v1, dest)
-    assert [tuple(r) for r in spark.read.parquet(dest).collect()] \
+    assert [tuple(r) for r in read_table(spark, dest).collect()] \
         == [(1, 10)]
 
-    # crash after rename 1: dest gone, only the backup remains
-    shutil.move(dest, str(tmp_path / ".state.replaced"))
-    recover_directory(spark, dest)
-    assert [tuple(r) for r in spark.read.parquet(dest).collect()] \
+    orphan = os.path.join(dest, "commit=00002")
+    spark.createDataFrame([(9, 90)], "k long, v long").write.parquet(orphan)
+    assert [tuple(r) for r in read_table(spark, dest).collect()] \
         == [(1, 10)]
-    assert not os.path.exists(str(tmp_path / ".state.replaced"))
 
-    # crashed pre-swap attempt: stale staging must not poison the retry
-    os.makedirs(dest + ".replacing")
-    with open(dest + ".replacing/garbage.txt", "w") as f:
-        f.write("stale")
     replace_directory(spark, v2, dest)
-    assert [tuple(r) for r in spark.read.parquet(dest).collect()] \
+    assert [tuple(r) for r in read_table(spark, dest).collect()] \
         == [(2, 20)]
-    assert not os.path.exists(dest + ".replacing")
-    assert not os.path.exists(str(tmp_path / ".state.replaced"))
+    assert not os.path.exists(orphan)
+
+
+def test_managed_tables_read_each_row_once(spark, tmp_path):
+    """Every table sources/atomic.py manages keeps a rewritten
+    version's files for the retention window; its public reader still
+    returns each row exactly once, where a reader listing the
+    directory counts the retained copies again."""
+    import random
+
+    from airline_data_warehouse_spark.operators import similarity as sim
+    from airline_data_warehouse_spark.operators import sketches as sk
+    from airline_data_warehouse_spark.streaming import sketch as sks
+    from airline_data_warehouse_spark.streaming.index import append_log
+    from airline_data_warehouse_spark.warehouse import Warehouse
+
+    def once(root, public, want):
+        assert public.count() == want, root
+        assert spark.read.parquet(root).count() > want, root
+
+    # the fact: an upsert rewrites its month
+    wh = Warehouse(str(tmp_path / "wh"))
+    cols = "transaction_id string, date_key int, flight_key string"
+    wh.write_fact_sales(spark.createDataFrame(
+        [("T1", 20230601, "AA1"), ("T2", 20230602, "AA1")], cols))
+    wh.upsert_fact_incremental(
+        spark, spark.createDataFrame([("T3", 20230603, "AA1")], cols))
+    once(wh.path("fact_sales"), wh.table(spark, "fact_sales"), 3)
+
+    # the IVF-PQ codes and vectors: an append rewrites its lists, a
+    # compaction rewrites the drift log
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(20)]
+    schema = "vec_id long, embedding array<double>"
+    idx = str(tmp_path / "idx")
+    sim.ivfpq_index_build(spark.createDataFrame(rows, schema), idx,
+                          n_lists=2, m=2, codes_k=4, iters=1, dims=8)
+    sim.ivfpq_index_append(spark, idx, spark.createDataFrame(
+        [(100, rows[3][1])], schema), m=2, dims=8)
+    once(f"{idx}/codes.parquet",
+         read_table(spark, f"{idx}/codes.parquet"), 21 * 2)
+    once(f"{idx}/vectors.parquet",
+         read_table(spark, f"{idx}/vectors.parquet"), 21)
+    for b in range(3):
+        at._commit(spark, f"{idx}/append_log", spark.createDataFrame(
+            [(b, 1)], "batch_id long, appended long"), mode="append")
+    assert at.compact_directory(spark, f"{idx}/append_log")
+    once(f"{idx}/append_log", append_log(spark, idx), 3)
+
+    # a linear sketch base: a second fold rewrites it
+    store = str(tmp_path / "cms")
+    for b, toks in enumerate([["a", "b"], ["b", "c"]]):
+        (sk.countmin_build(spark.createDataFrame(
+            [(t,) for t in toks], "token string"))
+         .coalesce(1).write.mode("overwrite")
+         .parquet(f"{store}/batches/batch_id={b}"))
+        sks.fold_countmin_store(spark, store)
+    cells = sks.read_countmin_store(spark, store).count()
+    once(sks._base_dir(store), read_table(spark, sks._base_dir(store)),
+         cells)
+
+    # the Bloom bits: a compaction rewrites them
+    bloom = str(tmp_path / "bloom")
+    for h in (7, 8):
+        at._commit(spark, f"{bloom}/bits", sk.bloom_build(
+            spark.createDataFrame([(h,)], "sh long"), "sh", hashes=2,
+            bits=64), mode="append")
+    bits = sks.read_bloom_store(spark, bloom).count()
+    at.replace_directory(spark, sks.read_bloom_store(spark, bloom),
+                         f"{bloom}/bits")
+    once(f"{bloom}/bits", read_table(spark, f"{bloom}/bits"), bits)
 
 
 def test_stream_countmin_fold_every_triggers_in_loop(spark, tmp_path):
@@ -1673,9 +1734,14 @@ def test_stream_countmin_fold_every_triggers_in_loop(spark, tmp_path):
         q.stop()
 
     assert os.path.exists(f"{store}/base")
-    leftover = [d for d in os.listdir(f"{store}/batches")
-                if d.startswith("batch_id=")]
-    assert len(leftover) <= 1          # only post-fold batches remain
+    leftover = sorted(int(d.split("=")[1])
+                      for d in os.listdir(f"{store}/batches")
+                      if d.startswith("batch_id="))
+    # folds at 4 and 8; a batch partition is deleted once the OLDEST
+    # retained base version (watermark 4) has folded it
+    assert [m["folded_through"] for m in
+            at._history(spark, f"{store}/base")] == [4, 8]
+    assert leftover == [5, 6, 7, 8, 9]
     all_tokens = spark.createDataFrame(
         [(t,) for b in batches for t in b], "token string")
     want = {(r["row"], r["bucket"]): r["counter"]
@@ -1730,8 +1796,9 @@ def test_stream_bloom_blocklist_accumulates_and_compacts(spark, tmp_path):
     pre_bits = {r["bit"] for r in bloom.collect()}
     # simulated at-least-once replay: verbatim re-append of batch 0
     b0 = spark.createDataFrame([(h,) for h in members[:10]], "sh long")
-    (sk.bloom_build(b0, "sh", hashes=4, bits=4096)
-     .coalesce(1).write.mode("append").parquet(f"{store}/bits"))
+    at._commit(spark, f"{store}/bits",
+               sk.bloom_build(b0, "sh", hashes=4, bits=4096).coalesce(1),
+               mode="append")
     assert {r["bit"] for r in
             read_bloom_store(spark, store).collect()} == pre_bits
 
@@ -1741,71 +1808,12 @@ def test_stream_bloom_blocklist_accumulates_and_compacts(spark, tmp_path):
     )
     replace_directory(spark, read_bloom_store(spark, store),
                       f"{store}/bits")
-    files = [f for f in os.listdir(f"{store}/bits")
+    files = [f for u in at.manifest(spark, f"{store}/bits")["units"]
+             for f in os.listdir(f"{store}/bits/{u}")
              if f.endswith(".parquet")]
     assert len(files) == 1
     assert {r["bit"] for r in
             read_bloom_store(spark, store).collect()} == pre_bits
-
-
-def test_fold_race_error_classifier():
-    """_is_fold_race_error: only the file-missing shapes a fold racing
-    a reader produces qualify for the one-shot retry; deterministic
-    bugs (schema, analysis, arithmetic) must not."""
-    from airline_data_warehouse_spark.streaming.sketch import (
-        _is_fold_race_error,
-    )
-
-    assert _is_fold_race_error(FileNotFoundError("gone"))
-    assert _is_fold_race_error(
-        RuntimeError("java.io.FileNotFoundException: part-0000 gone"))
-    assert not _is_fold_race_error(ValueError("boom"))
-    # a message that merely QUOTES an earlier failure's text must not
-    # qualify — only the exception's own class / message prefix does
-    # (ADVICE r14-low: the substring fallback re-masked deterministic
-    # errors whose diagnostics happened to mention FileNotFoundException)
-    assert not _is_fold_race_error(RuntimeError(
-        "[CANNOT_READ_FILE_FOOTER] while retrying after "
-        "java.io.FileNotFoundException was observed upstream"))
-    assert not _is_fold_race_error(
-        RuntimeError("[CANNOT_READ_FILE_FOOTER] corrupt"))
-    from pyspark.errors import AnalysisException
-    path_err = AnalysisException("[PATH_NOT_FOUND] Path does not exist")
-    assert _is_fold_race_error(path_err)
-    assert not _is_fold_race_error(
-        AnalysisException("[UNRESOLVED_COLUMN] no such column"))
-
-
-def test_read_linear_state_deterministic_error_raises_first_attempt(
-        spark, tmp_path, monkeypatch):
-    """A genuine (non-file-missing) failure inside the linear-store
-    read surfaces on the FIRST attempt with its original diagnostics —
-    the retry exists only for the fold-race FileNotFound classes
-    (ADVICE r13-low / VERDICT r13 item 6)."""
-    import os
-
-    from airline_data_warehouse_spark.sources import atomic as at
-    from airline_data_warehouse_spark.streaming import sketch as sks
-
-    store = str(tmp_path / "store")
-    base = sks._base_dir(store)
-    os.makedirs(base)
-    # a garbage file where a parquet part is expected: deterministic
-    # CANNOT_READ/corrupt-footer failure, NOT a missing path
-    with open(f"{base}/part-00000.parquet", "wb") as fh:
-        fh.write(b"this is not a parquet file")
-    attempts = {"n": 0}
-    real = at.recover_directory
-
-    def counting(spark_, path):
-        attempts["n"] += 1
-        return real(spark_, path)
-
-    monkeypatch.setattr(at, "recover_directory", counting)
-    with pytest.raises(Exception) as ei:
-        sks.read_countmin_store(spark, store)
-    assert "FileNotFoundException" not in str(ei.value)
-    assert attempts["n"] == 1, "deterministic error must not retry"
 
 
 def test_stream_qdigest_general_universe(spark, tmp_path):

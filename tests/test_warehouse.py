@@ -7,8 +7,22 @@ import os
 
 from pyspark.sql import functions as F
 
+from airline_data_warehouse_spark.sources import atomic as at
+from airline_data_warehouse_spark.sources.atomic import read_table
 from airline_data_warehouse_spark.warehouse import Warehouse
 from tests.test_plans import detailed_plan_of
+
+
+def _units(spark, root) -> dict[str, str]:
+    """partition directory name -> the live unit holding it, from the
+    table's latest manifest."""
+    return {u.rsplit("/", 1)[-1]: os.path.join(root, u)
+            for u in at.manifest(spark, root)["units"]}
+
+
+def _bootstrap(spark, df, dest, key="k", partition_col="p"):
+    """A table's first committed version (a MERGE into nothing)."""
+    at.upsert_parquet(spark, df, dest, key=key, partition_col=partition_col)
 
 
 def _mk_fact(spark):
@@ -25,8 +39,7 @@ def _mk_fact(spark):
 def test_fact_partition_layout(spark, tmp_path):
     wh = Warehouse(str(tmp_path))
     wh.write_fact_sales(_mk_fact(spark))
-    parts = sorted(d for d in os.listdir(wh.path("fact_sales"))
-                   if d.startswith("sale_year_month="))
+    parts = sorted(_units(spark, wh.path("fact_sales")))
     assert parts == ["sale_year_month=202301", "sale_year_month=202302",
                      "sale_year_month=202403"]
     assert wh.table(spark, "fact_sales").count() == 3
@@ -71,28 +84,25 @@ def _group_jobs(spark, group: str) -> int:
 
 
 def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
-    """The first open of a table infers its schema (one footer-reading
-    job); later opens pass the recorded schema and launch none, yet
-    still list the files: a month partition written outside the
-    Warehouse shows on the next open, partition pruning included."""
+    """The managed fact's manifest carries its schema, so no open —
+    first or later — launches a job, yet every open resolves the latest
+    version: a month partition an upsert commits shows on the next
+    open, partition pruning included."""
     wh = Warehouse(str(tmp_path))
     wh.write_fact_sales(_mk_fact(spark))
     first, n_first = _jobs_launched(
         spark, lambda: wh.table(spark, "fact_sales"))
-    assert n_first >= 1
+    assert n_first == 0
     again, n_again = _jobs_launched(
         spark, lambda: wh.table(spark, "fact_sales"))
     assert n_again == 0
     assert again.schema == first.schema and again.count() == 3
 
-    (spark.createDataFrame(
+    wh.upsert_fact_incremental(spark, spark.createDataFrame(
         [("TA000010", 20240515, "P010", "AA100")],
         "transaction_id string, date_key int, passenger_key string, "
         "flight_key string")
-     .withColumn("total_amount", F.lit(50.0).cast("decimal(10,2)"))
-     .withColumn("sale_year_month", F.lit(202405))
-     .write.mode("append").partitionBy("sale_year_month")
-     .parquet(wh.path("fact_sales")))
+        .withColumn("total_amount", F.lit(50.0).cast("decimal(10,2)")))
     sliced, n_slice = _jobs_launched(
         spark, lambda: wh.fact_sales_for_range(spark, 20240501, 20240531))
     assert n_slice == 0
@@ -101,7 +111,7 @@ def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
     # a second Warehouse over the same root resolves on its own
     _, n_fresh = _jobs_launched(
         spark, lambda: Warehouse(str(tmp_path)).table(spark, "fact_sales"))
-    assert n_fresh >= 1
+    assert n_fresh == 0
 
 
 def test_reopen_sees_status_sink_appends(spark, tmp_path):
@@ -159,7 +169,7 @@ def test_incremental_fact_upsert_touches_only_affected_partitions(spark, tmp_pat
     import time
     wh = Warehouse(str(tmp_path))
     wh.write_fact_sales(_mk_fact(spark))
-    untouched = os.path.join(wh.path("fact_sales"), "sale_year_month=202403")
+    untouched = _units(spark, wh.path("fact_sales"))["sale_year_month=202403"]
     before_mtime = max(os.path.getmtime(os.path.join(untouched, f))
                        for f in os.listdir(untouched))
     time.sleep(1.1)
@@ -171,24 +181,25 @@ def test_incremental_fact_upsert_touches_only_affected_partitions(spark, tmp_pat
         .withColumn("total_amount", F.lit(999.0).cast("decimal(10,2)")))
     wh.upsert_fact_incremental(spark, new_rows)
 
-    table = spark.read.parquet(wh.path("fact_sales"))
+    table = read_table(spark, wh.path("fact_sales"))
     assert table.count() == 4  # 3 original + 1 new, TA000001 replaced
     rows = {r["transaction_id"]: r for r in table.collect()}
     assert rows["TA000001"]["total_amount"] == 999.0
     assert rows["CO000003"]["total_amount"] == 100.0  # other month untouched
     # the 2024-03 partition files were not rewritten
+    assert _units(spark, wh.path("fact_sales"))["sale_year_month=202403"] \
+        == untouched
     after_mtime = max(os.path.getmtime(os.path.join(untouched, f))
                       for f in os.listdir(untouched))
     assert after_mtime == before_mtime
 
 
 def test_upsert_parquet_crash_recovery(spark, tmp_path):
-    """Generalized crash-safe upsert (r07): every crash window the
-    stage-then-swap protocol can leave behind — a partition stranded in
-    its hidden backup (crash between the two renames), a stale backup
-    whose destination exists (crash after the second rename), and an
-    orphaned staging directory (crash mid-staging-write) — must be
-    healed by the retry, which then converges to the merged table."""
+    """Generalized crash-safe upsert: a partitioned rewrite that crashed
+    after writing its data but before its manifest leaves an orphan
+    commit directory. The table still reads its previous version, the
+    retry converges to the merged table, and the retry's expire deletes
+    the orphan."""
     import os
 
     from airline_data_warehouse_spark.sources.atomic import upsert_parquet
@@ -197,24 +208,25 @@ def test_upsert_parquet_crash_recovery(spark, tmp_path):
         [("K1", 10, "A"), ("K2", 20, "A"), ("K3", 30, "B")],
         "k string, v int, p string")
     dest = str(tmp_path / "t")
-    base.write.partitionBy("p").parquet(dest)
+    _bootstrap(spark, base, dest)
+    before = sorted(tuple(r) for r in read_table(spark, dest).collect())
 
-    # crash window 1: partition p=A's only copy is in the hidden backup
-    os.rename(os.path.join(dest, "p=A"), os.path.join(dest, ".p=A.replaced"))
-    # crash window 2: stale backup whose destination DOES exist
-    os.makedirs(os.path.join(dest, ".p=B.replaced"))
-    # crash window 3: orphaned staging dir from a crashed pre-swap attempt
-    os.makedirs(os.path.join(dest + "__upsert_staging", "p=Z"))
+    # the crashed attempt: its rewrite of p=A landed, no manifest did
+    orphan = os.path.join(dest, "commit=00002")
+    (spark.createDataFrame([("K2", 99, "A"), ("K9", -1, "A")],
+                           "k string, v int, p string")
+     .write.partitionBy("p").parquet(orphan))
+    assert sorted(tuple(r) for r in read_table(spark, dest).collect()) \
+        == before
 
     src = spark.createDataFrame([("K2", 99, "A"), ("K4", 40, "B")],
                                 "k string, v int, p string")
     upsert_parquet(spark, src, dest, key="k", partition_col="p")
 
-    rows = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(dest).collect()}
+    rows = {r["k"]: (r["v"], r["p"]) for r in read_table(spark, dest).collect()}
     assert rows == {"K1": (10, "A"), "K2": (99, "A"),
                     "K3": (30, "B"), "K4": (40, "B")}
-    assert [f for f in os.listdir(str(tmp_path)) if "staging" in f] == []
-    assert [f for f in os.listdir(dest) if f.endswith(".replaced")] == []
+    assert not os.path.exists(orphan)
 
 
 def test_upsert_parquet_migrates_key_across_partitions(spark, tmp_path):
@@ -229,16 +241,16 @@ def test_upsert_parquet_migrates_key_across_partitions(spark, tmp_path):
         [("K1", 1, "A"), ("K2", 2, "B"), ("K3", 3, "B")],
         "k string, v int, p string")
     dest = str(tmp_path / "t")
-    base.write.partitionBy("p").parquet(dest)
+    _bootstrap(spark, base, dest)
 
     src = spark.createDataFrame([("K1", 11, "C")], "k string, v int, p string")
     upsert_parquet(spark, src, dest, key="k", partition_col="p")
 
-    rows = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(dest).collect()}
+    rows = {r["k"]: (r["v"], r["p"]) for r in read_table(spark, dest).collect()}
     assert rows == {"K1": (11, "C"), "K2": (2, "B"), "K3": (3, "B")}
-    # p=A held only K1 -> emptied -> its directory is gone, not stale
-    assert not os.path.isdir(os.path.join(dest, "p=A"))
-    assert os.path.isdir(os.path.join(dest, "p=C"))
+    # p=A held only K1 -> emptied -> it left the manifest, not stale
+    assert "p=A" not in _units(spark, dest)
+    assert os.path.isdir(_units(spark, dest)["p=C"])
 
 
 def test_upsert_parquet_retry_is_idempotent(spark, tmp_path):
@@ -250,13 +262,13 @@ def test_upsert_parquet_retry_is_idempotent(spark, tmp_path):
     base = spark.createDataFrame([("K1", 1, "A"), ("K2", 2, "B")],
                                  "k string, v int, p string")
     dest = str(tmp_path / "t")
-    base.write.partitionBy("p").parquet(dest)
+    _bootstrap(spark, base, dest)
     src = spark.createDataFrame([("K1", 9, "A"), ("K9", 90, "B")],
                                 "k string, v int, p string")
     upsert_parquet(spark, src, dest, key="k", partition_col="p")
-    first = sorted(tuple(r) for r in spark.read.parquet(dest).collect())
+    first = sorted(tuple(r) for r in read_table(spark, dest).collect())
     upsert_parquet(spark, src, dest, key="k", partition_col="p")
-    assert sorted(tuple(r) for r in spark.read.parquet(dest).collect()) == first
+    assert sorted(tuple(r) for r in read_table(spark, dest).collect()) == first
 
 
 def test_jsonl_fallback_sink(spark, tmp_path):
@@ -287,6 +299,14 @@ def test_status_append_and_dirty_partitioning(spark, tmp_path):
     assert os.path.isdir(os.path.join(wh.path("dirty_data"), "source_table=passengers"))
 
 
+def _files(spark, root, part) -> set[str]:
+    """The parquet files of partition ``part``'s live units."""
+    import glob
+    return {f for u in at.manifest(spark, root)["units"]
+            if u.rsplit("/", 1)[-1] == part
+            for f in glob.glob(os.path.join(root, u, "*.parquet"))}
+
+
 def test_compact_partitions_bounds_files_and_preserves_rows(spark, tmp_path):
     """Compaction: a partition accreted to many files collapses to one,
     an already-compact partition is left untouched (not rewritten), and
@@ -296,21 +316,20 @@ def test_compact_partitions_bounds_files_and_preserves_rows(spark, tmp_path):
     dest = str(tmp_path / "t")
     # partition a: 6 appends -> >=6 files; partition b: single write
     for i in range(6):
-        (spark.createDataFrame([(i, "a")], "id long, p string")
-         .write.mode("append").partitionBy("p").parquet(dest))
-    (spark.createDataFrame([(100, "b")], "id long, p string")
-     .write.mode("append").partitionBy("p").parquet(dest))
+        at._commit(spark, dest, spark.createDataFrame(
+            [(i, "a")], "id long, p string"), "p", mode="append")
+    at._commit(spark, dest, spark.createDataFrame(
+        [(100, "b")], "id long, p string"), "p", mode="append")
 
-    import glob
-    before = sorted(r["id"] for r in spark.read.parquet(dest).collect())
-    assert len(glob.glob(f"{dest}/p=a/*.parquet")) >= 6
-    b_files = set(glob.glob(f"{dest}/p=b/*.parquet"))
+    before = sorted(r["id"] for r in read_table(spark, dest).collect())
+    assert len(_files(spark, dest, "p=a")) >= 6
+    b_files = _files(spark, dest, "p=b")
 
     rewritten = compact_partitions(spark, dest, "p", target_files=1)
     assert rewritten == ["p=a"]
-    assert len(glob.glob(f"{dest}/p=a/*.parquet")) == 1
-    assert set(glob.glob(f"{dest}/p=b/*.parquet")) == b_files  # untouched
-    after = sorted(r["id"] for r in spark.read.parquet(dest).collect())
+    assert len(_files(spark, dest, "p=a")) == 1
+    assert _files(spark, dest, "p=b") == b_files  # untouched
+    after = sorted(r["id"] for r in read_table(spark, dest).collect())
     assert after == before
     # idempotent: second run is a no-op
     assert compact_partitions(spark, dest, "p", target_files=1) == []
@@ -334,113 +353,33 @@ def test_schema_evolution_merge_read(spark, tmp_path):
 
 
 def test_compact_partitions_crash_recovery(spark, tmp_path):
-    """Compaction inherits the swap protocol's crash windows: a
-    partition stranded in its hidden backup and a leftover .compacting
-    staging dir are both healed on the next run, which converges to the
-    compacted table with identical rows."""
-    import glob
+    """Compaction inherits the commit protocol's crash window: a
+    crashed prior compaction's orphan commit directory is invisible,
+    and the next run converges to the compacted table with identical
+    rows and collects the orphan."""
     import os
 
     from airline_data_warehouse_spark.sources.atomic import compact_partitions
 
     dest = str(tmp_path / "t")
     for i in range(5):
-        (spark.createDataFrame([(i, "a")], "id long, p string")
-         .write.mode("append").partitionBy("p").parquet(dest))
-    before = sorted(r["id"] for r in spark.read.parquet(dest).collect())
+        at._commit(spark, dest, spark.createDataFrame(
+            [(i, "a")], "id long, p string"), "p", mode="append")
+    before = sorted(r["id"] for r in read_table(spark, dest).collect())
 
-    # crash window 1: p=a stranded in its hidden backup mid-swap
-    os.rename(os.path.join(dest, "p=a"), os.path.join(dest, ".p=a.replaced"))
-    # crash window 2: orphaned staging dir from a crashed prior attempt
-    os.makedirs(dest + ".compacting/p=zz")
+    # the crashed attempt: its compacted p=a landed, no manifest did
+    orphan = os.path.join(dest, "commit=00006")
+    (spark.createDataFrame([(i, "a") for i in range(5)], "id long, p string")
+     .coalesce(1).write.partitionBy("p").parquet(orphan))
+    assert sorted(r["id"] for r in read_table(spark, dest).collect()) \
+        == before
 
     rewritten = compact_partitions(spark, dest, "p", target_files=1)
     assert rewritten == ["p=a"]
-    assert len(glob.glob(f"{dest}/p=a/*.parquet")) == 1
-    after = sorted(r["id"] for r in spark.read.parquet(dest).collect())
+    assert len(_files(spark, dest, "p=a")) == 1
+    after = sorted(r["id"] for r in read_table(spark, dest).collect())
     assert after == before
-    assert not os.path.exists(dest + ".compacting")
-    assert [f for f in os.listdir(dest) if f.endswith(".replaced")] == []
-
-
-class _RacingFS:
-    """A FileSystem stand-in: delegates to the real one, except that its
-    ``lose``-th rename first runs ``race`` (the concurrent actor) and
-    then reports failure, as a rename that lost the race does."""
-
-    def __init__(self, real, lose: int, race):
-        self.real, self.lose, self.race, self.n = real, lose, race, 0
-
-    def __getattr__(self, name):
-        return getattr(self.real, name)
-
-    def rename(self, src, dst):
-        self.n += 1
-        if self.n == self.lose:
-            self.race()
-            return False
-        return self.real.rename(src, dst)
-
-
-def test_swap_race_branches(spark, tmp_path, monkeypatch):
-    """The convergence branches of sources/atomic.py's swap and heal,
-    driven with a racing FileSystem: (1) a directory replace whose
-    second rename loses to a reader's heal returns False, keeps the old
-    content and leaves no staging or backup; (2) a partition rewrite in
-    the same state raises IOError with the old rows whole; (3) a heal
-    whose rename loses to a live swap's second rename deletes the
-    backup and does not raise."""
-    import os
-
-    import pytest as _pytest
-
-    from airline_data_warehouse_spark.sources import atomic as at
-
-    hpath, real = at._fs(spark, str(tmp_path))
-
-    def racing(lose, race):
-        fs = _RacingFS(real, lose, race)
-        monkeypatch.setattr(at, "_fs", lambda spark_, path: (hpath, fs))
-
-    def heal(dest):  # a reader renames the backup back mid-swap
-        d = hpath(dest)
-        return lambda: real.rename(at._backup(hpath, d), d)
-
-    # (1) directory replace
-    dest = str(tmp_path / "state")
-    at.replace_directory(spark, spark.createDataFrame([(1,)], "k long"),
-                         dest)
-    racing(2, heal(dest))
-    assert at.replace_directory(
-        spark, spark.createDataFrame([(2,)], "k long"), dest) is False
-    monkeypatch.undo()
-    assert [r["k"] for r in spark.read.parquet(dest).collect()] == [1]
-    assert sorted(os.listdir(tmp_path)) == ["state"]
-
-    # (2) partition rewrite
-    table = str(tmp_path / "t")
-    spark.createDataFrame([("K1", 1, "A")], "k string, v int, p string") \
-        .write.partitionBy("p").parquet(table)
-    racing(2, heal(f"{table}/p=A"))
-    with _pytest.raises(IOError, match="concurrent heal"):
-        at.upsert_parquet(spark, spark.createDataFrame(
-            [("K1", 9, "A")], "k string, v int, p string"),
-            table, key="k", partition_col="p")
-    monkeypatch.undo()
-    assert [tuple(r) for r in spark.read.parquet(table).collect()] \
-        == [("K1", 1, "A")]
-    assert [f for f in os.listdir(table) if f.endswith(".replaced")] == []
-
-    # (3) heal losing to a live swap
-    log = tmp_path / "log"
-    backup = tmp_path / ".log.replaced"
-    staged = tmp_path / "log.replacing"
-    backup.mkdir()
-    staged.mkdir()
-    fs = _RacingFS(real, 1, lambda: real.rename(hpath(str(staged)),
-                                                hpath(str(log))))
-    at._heal(fs, hpath(str(backup)), hpath(str(log)))
-    assert log.is_dir() and not backup.exists() and not staged.exists()
+    assert not os.path.exists(orphan)
 
 
 def test_merge_parquet_with_deletes(spark, tmp_path):
@@ -456,8 +395,9 @@ def test_merge_parquet_with_deletes(spark, tmp_path):
         [("K1", 10, "A"), ("K2", 20, "A"), ("K3", 30, "B"), ("K4", 40, "C")],
         "k string, v int, p string")
     dest = str(tmp_path / "t")
-    base.write.partitionBy("p").parquet(dest)
-    before_c = set(os.listdir(os.path.join(dest, "p=C")))
+    _bootstrap(spark, base, dest)
+    unit_c = _units(spark, dest)["p=C"]
+    before_c = set(os.listdir(unit_c))
 
     src = spark.createDataFrame(
         [("K2", -1, "A", True),    # tombstone: delete K2
@@ -471,15 +411,16 @@ def test_merge_parquet_with_deletes(spark, tmp_path):
     # NOTE: delete_condition must be evaluable on the projected source;
     # pass it as a string when the flag column is dropped — re-run the
     # same merge via the SQL-string form to pin both entry points
-    rows = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(dest).collect()}
+    rows = {r["k"]: (r["v"], r["p"]) for r in read_table(spark, dest).collect()}
     assert rows == {"K1": (11, "A"), "K4": (40, "C"), "K5": (50, "A")}
-    assert not os.path.isdir(os.path.join(dest, "p=B"))   # emptied -> dropped
-    assert set(os.listdir(os.path.join(dest, "p=C"))) == before_c  # untouched
+    assert "p=B" not in _units(spark, dest)   # emptied -> dropped
+    assert _units(spark, dest)["p=C"] == unit_c  # untouched
+    assert set(os.listdir(unit_c)) == before_c
 
     # idempotent retry: replaying the same merge converges to the same table
     merge_parquet(spark, src.select("k", "v", "p"), dest,
                   key="k", partition_col="p", delete_condition=src["forget"])
-    rows2 = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(dest).collect()}
+    rows2 = {r["k"]: (r["v"], r["p"]) for r in read_table(spark, dest).collect()}
     assert rows2 == rows
 
 
@@ -489,16 +430,15 @@ def test_merge_parquet_string_condition_and_null_handling(spark, tmp_path):
     from airline_data_warehouse_spark.sources.atomic import merge_parquet
 
     dest = str(tmp_path / "t")
-    spark.createDataFrame([("K1", 1, "A"), ("K2", 2, "A")],
-                          "k string, v int, p string") \
-        .write.partitionBy("p").parquet(dest)
+    _bootstrap(spark, spark.createDataFrame([("K1", 1, "A"), ("K2", 2, "A")],
+                                            "k string, v int, p string"), dest)
     src = spark.createDataFrame(
         [("K1", 0, "A"), ("K2", 9, "A"), ("K3", 3, "A")],
         "k string, v int, p string")
     merge_parquet(spark, src, dest, key="k", partition_col="p",
                   delete_condition="CASE WHEN v = 0 THEN true "
                                    "WHEN v = 9 THEN NULL ELSE false END")
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(dest).collect()}
+    rows = {r["k"]: r["v"] for r in read_table(spark, dest).collect()}
     assert rows == {"K2": 9, "K3": 3}  # K1 deleted; NULL-cond K2 upserted
 
 
@@ -513,7 +453,7 @@ def test_merge_parquet_fresh_table_filters_tombstones(spark, tmp_path):
         "k string, v int, p string")
     merge_parquet(spark, src, dest, key="k", partition_col="p",
                   delete_condition="v = 0")
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(dest).collect()}
+    rows = {r["k"]: r["v"] for r in read_table(spark, dest).collect()}
     assert rows == {"K1": 1, "K3": 3}
 
 
@@ -536,7 +476,7 @@ def test_merge_parquet_all_tombstone_bootstrap_is_noop(spark, tmp_path):
     src = spark.createDataFrame([("K2", 5, "B")], "k string, v int, p string")
     merge_parquet(spark, src, dest, key="k", partition_col="p",
                   delete_condition="v = 0")
-    assert {r["k"] for r in spark.read.parquet(dest).collect()} == {"K2"}
+    assert {r["k"] for r in read_table(spark, dest).collect()} == {"K2"}
 
 
 def test_merge_parquet_rejects_undroppable_partition_values(spark, tmp_path):
@@ -552,7 +492,7 @@ def test_merge_parquet_rejects_undroppable_partition_values(spark, tmp_path):
     dest = str(tmp_path / "esc")
     base = spark.createDataFrame([("K1", 1, "2024/01")],
                                  "k string, v int, p string")
-    base.write.partitionBy("p").parquet(dest)
+    _bootstrap(spark, base, dest)
     src = spark.createDataFrame([("K1", 0, "2024/01")],
                                 "k string, v int, p string")
     with pytest.raises(ValueError, match="Hive-escapes"):
@@ -560,7 +500,7 @@ def test_merge_parquet_rejects_undroppable_partition_values(spark, tmp_path):
                       delete_condition="v = 0")
     ndest = str(tmp_path / "nul")
     nbase = spark.createDataFrame([("K1", 1, "A")], "k string, v int, p string")
-    nbase.write.partitionBy("p").parquet(ndest)
+    _bootstrap(spark, nbase, ndest)
     nsrc = spark.createDataFrame([("K2", 2, None)], "k string, v int, p string")
     with pytest.raises(ValueError, match="NULL p value"):
         merge_parquet(spark, nsrc, ndest, key="k", partition_col="p")
@@ -592,14 +532,14 @@ def test_merge_parquet_date_partition_values(spark, tmp_path):
         [("K1", 10, datetime.date(2024, 1, 3)),
          ("K2", 20, datetime.date(2024, 1, 4))],
         "k string, v int, d date")
-    base.write.partitionBy("d").parquet(dest)
+    _bootstrap(spark, base, dest, partition_col="d")
     src = spark.createDataFrame(
         [("K1", 11, datetime.date(2024, 1, 3)),
          ("K3", 30, datetime.date(2024, 1, 5))],
         "k string, v int, d date")
     merge_parquet(spark, src, dest, key="k", partition_col="d")
     rows = {r["k"]: (r["v"], str(r["d"]))
-            for r in spark.read.parquet(dest).collect()}
+            for r in read_table(spark, dest).collect()}
     assert rows == {"K1": (11, "2024-01-03"), "K2": (20, "2024-01-04"),
                     "K3": (30, "2024-01-05")}
-    assert os.path.isdir(os.path.join(dest, "d=2024-01-05"))
+    assert os.path.isdir(_units(spark, dest)["d=2024-01-05"])

@@ -166,13 +166,25 @@ def unpartitioned_window_specs(plan: str) -> list[str]:
     return bad
 
 
-def window_violations(spark, sf_dir: str, registry) -> dict[str, list[str]]:
-    """name → offending specs, for every non-allowlisted registry query."""
+def registry_plans(spark, sf_dir: str, registry) -> dict[str, str]:
+    """name → formatted physical plan, for every registry query: built
+    once, then shared by the registry-wide audits below. The caches the
+    builders persist are released once the plans are printed."""
+    from airline_data_warehouse_spark.operators.dedup import cache_scope
+
+    with cache_scope():
+        return {name: plan_of(qd.builder(spark, sf_dir))
+                for name, qd in registry.items()}
+
+
+def window_violations(plans: dict[str, str]) -> dict[str, list[str]]:
+    """name → offending specs, for every non-allowlisted query of
+    ``plans`` (`registry_plans`)."""
     violations: dict[str, list[str]] = {}
-    for name, qd in registry.items():
+    for name, plan in plans.items():
         if name in WINDOW_ALLOWLIST:
             continue
-        bad = unpartitioned_window_specs(plan_of(qd.builder(spark, sf_dir)))
+        bad = unpartitioned_window_specs(plan)
         if bad:
             violations[name] = bad
     return violations
@@ -283,15 +295,16 @@ def broadcast_corpus_violations(
     return out
 
 
-def cartesian_violations(spark, sf_dir: str, registry) -> list[str]:
-    """Queries whose physical plan contains a CartesianProduct — the
+def cartesian_violations(plans: dict[str, str]) -> list[str]:
+    """Queries of ``plans`` (`registry_plans`) whose physical plan
+    contains a CartesianProduct — the
     shuffle-free all-pairs join that is quadratic at any scale. Every
     intended cross join in this codebase is against a broadcast 1-row /
     centroid / query-set frame and therefore compiles to
     BroadcastNestedLoopJoin, so the allowlist is EMPTY by design; a
     CartesianProduct appearing means a broadcast hint was lost."""
-    return [name for name, qd in registry.items()
-            if "CartesianProduct" in plan_of(qd.builder(spark, sf_dir))]
+    return [name for name, plan in plans.items()
+            if "CartesianProduct" in plan]
 
 
 def main() -> None:
@@ -302,7 +315,8 @@ def main() -> None:
         from airline_data_warehouse_spark.session import get_spark
         spark = get_spark(app_name="window-audit")
         spark.sparkContext.setLogLevel("ERROR")
-        violations = window_violations(spark, sf_dir, all_queries())
+        violations = window_violations(
+            registry_plans(spark, sf_dir, all_queries()))
         for name, specs in violations.items():
             print(f"VIOLATION {name}:")
             for s in specs:
