@@ -1,10 +1,10 @@
 """Snapshot-consistent plain-parquet tables: one manifest-commit
 protocol for every table the package mutates — the warehouse fact (its
-batch upsert and the streaming eligibility merge,
-streaming/status.py), the IVF-PQ index's code and vector tables and
-drift log, the linear sketch stores' base and the Bloom bit store
-(streaming/sketch.py), and the snapshot-versioned tables
-(sources/snapshots.py).
+load, batch upsert and eligibility fold) and its eligibility table (the
+streaming eligibility merge, streaming/status.py), the IVF-PQ index's
+code and vector tables and drift log, the linear sketch stores' base
+and the Bloom bit store (streaming/sketch.py), and the
+snapshot-versioned tables (sources/snapshots.py).
 
 Layout::
 

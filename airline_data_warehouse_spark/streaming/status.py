@@ -15,8 +15,10 @@ Spark mapping:
 * T2  parse_status_stream: from_json → typed columns.
 * T3  append_status_sink: append-mode writeStream.
 * T4  latest_status_per_flight: batch window over the accumulated table.
-* T5  eligibility_merge_batch: the foreachBatch MERGE body (delay>240 →
-  flip the flag) — pure DataFrame function so it is unit-testable.
+* T5  eligibility_merge_batch: the MERGE body (delay>240 → flip the
+  flag) — pure DataFrame function so it is unit-testable;
+  start_eligibility_merge upserts the fact's flight-keyed eligibility
+  table per micro-batch, and the fact's reader applies it on read.
 * T6  windowed_delay_stats: watermark + tumbling window (labeled
   extension; the reference has no late-data handling — at-least-once
   replay duplicates are tolerated exactly as the reference tolerates
@@ -24,7 +26,9 @@ Spark mapping:
 
 At scale: the stream shuffles only for the windowed aggregate (keyed by
 window × flight), state is bounded by the watermark; the eligibility
-merge broadcasts the per-batch eligible-key set against the fact.
+merge writes only the eligibility table (one row per delayed flight),
+never the fact, and the fact's reader broadcasts that table against the
+fact scan.
 """
 
 from __future__ import annotations
@@ -35,8 +39,7 @@ from pyspark.sql import functions as F
 from airline_data_warehouse_spark.functions.cleaning import INSURANCE_DELAY_MINUTES
 from airline_data_warehouse_spark.schemas import STATUS_MESSAGE
 
-# the partition commit the batch upsert_parquet uses too
-from airline_data_warehouse_spark.sources.atomic import _commit, read_table
+from airline_data_warehouse_spark.sources.atomic import _commit, _read, manifest
 
 TOPIC = "flight-status-updates"
 GROUP_ID = "flight-status-group"
@@ -199,37 +202,66 @@ def eligibility_merge_batch(fact: DataFrame, status_batch: DataFrame) -> DataFra
                 .drop("_new_delay", "_new_status"))
 
 
+def eligibility_path(fact_path: str) -> str:
+    """Where the fact at ``fact_path`` keeps its eligibility table: a
+    sibling managed table ``<fact>_eligibility``."""
+    return fact_path.rstrip("/") + "_eligibility"
+
+
+def eligibility_table(spark: SparkSession, fact_path: str) -> DataFrame | None:
+    """The committed eligibility table of the fact at ``fact_path`` —
+    ``(flight_key, delay_minutes)``, the latest eligible delay per
+    flight — resolved to its latest version now; None when it has no
+    committed version or its latest version is a clear. Read as the one
+    partition its one file is, so an aggregate over it by flight_key
+    (`eligibility_merge_batch`'s) needs no shuffle."""
+    path = eligibility_path(fact_path)
+    m = manifest(spark, path)
+    if m is None or m.get("cleared"):
+        return None
+    return _read(spark, path, m).coalesce(1)
+
+
+def clear_eligibility(spark: SparkSession, fact_path: str) -> None:
+    """Commit an empty version of the live eligibility table of the
+    fact at ``fact_path``, marked cleared so the fact reads bare; older
+    versions stay readable for held snapshots."""
+    eligible = eligibility_table(spark, fact_path)
+    if eligible is not None:
+        _commit(spark, eligibility_path(fact_path), eligible.limit(0),
+                meta={"cleared": True})
+
+
 def start_eligibility_merge(parsed: DataFrame, fact_path: str, checkpoint: str):
     """T5 wiring: per micro-batch, MERGE the eligibility flip into the
-    fact (server.js:166-171 UPDATEs fact rows by flight_key), which
-    must be partitioned by ``sale_year_month``.
+    fact (server.js:166-171 UPDATEs fact rows by flight_key).
 
-    Partition-scoped: the batch's eligible flight keys are semi-joined
-    against the fact to find the months holding their rows, only those
-    months are re-derived, and sources/atomic.py commits them as new
-    partition units (the batch upsert's path) — unlike dynamic
-    partition overwrite, which deletes destination directories mid-job,
-    so a reader holding the fact keeps reading its snapshot. The scope
-    is every month holding an eligible flight's rows: flights that
-    recur monthly make that most of the table (the perfbench data
-    rewrites ~23 of 24 months per batch). Batches with no eligible keys
-    touch nothing. A Delta/Iceberg MERGE drops in here.
+    The fact itself is not rewritten: each batch upserts the fact's
+    flight-keyed eligibility table (`eligibility_path`) — the batch's
+    max eligible delay per flight replaces that flight's row — as one
+    one-file manifest commit (sources/atomic.py), and the fact's reader
+    (`warehouse.read_fact`) applies the table on read through
+    `eligibility_merge_batch`. A write is the size of that table (one
+    row per delayed flight), not of the months holding the flights'
+    rows. Batches with no eligible keys touch nothing. A Delta/Iceberg
+    MERGE drops in here.
     """
+    path = eligibility_path(fact_path)
+
     def _merge(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        fact = read_table(spark, fact_path)
-        if "sale_year_month" not in fact.columns:
-            raise ValueError("the eligibility merge needs a fact "
-                             "partitioned by 'sale_year_month'")
-        eligible = (batch.filter(F.col("delay_minutes") > INSURANCE_DELAY_MINUTES)
-                    .select("flight_key").distinct())
-        months = (fact.join(F.broadcast(eligible), "flight_key", "left_semi")
-                      .select("sale_year_month").distinct())
-        if not months.limit(1).count():
+        delayed = batch.filter(F.col("delay_minutes") > INSURANCE_DELAY_MINUTES)
+        if not delayed.limit(1).count():
             return  # nothing eligible in this batch — zero writes
-        affected = fact.join(F.broadcast(months), "sale_year_month", "left_semi")
-        _commit(spark, fact_path, eligibility_merge_batch(affected, batch),
-                "sale_year_month", mode="partitions")
+        batch_max = (delayed.groupBy("flight_key")
+                     .agg(F.max("delay_minutes").alias("delay_minutes")))
+        table = batch_max
+        current = eligibility_table(spark, fact_path)
+        if current is not None:
+            table = (current.join(F.broadcast(batch_max), "flight_key",
+                                  "left_anti")
+                     .unionByName(batch_max))
+        _commit(spark, path, table.coalesce(1))
 
     return (parsed.writeStream.foreachBatch(_merge)
             .option("checkpointLocation", checkpoint)

@@ -6,10 +6,12 @@ latest-status query; reference ``for supabase/denorm view:2-41``,
 ``server.js:153-163``). This module closes that last interface gap: a
 user switching from the reference keeps their SQL verbatim via
 ``spark.sql(...)`` after one ``register_views`` call. That promise
-holds across the fact's upserts and eligibility merges: the fact is a
-managed table (sources/atomic.py), so a registered view keeps reading
-the version it was opened on — never a deleted file — for the
-retention window; re-registering picks up the newest version.
+holds across the fact's upserts and eligibility merges: the fact and
+its eligibility table are managed tables (sources/atomic.py) and the
+fact's reader resolves both versions at open (warehouse.read_fact), so
+a registered view keeps reading the base and eligibility versions it
+was opened on — never a deleted file — for the retention window;
+re-registering picks up the newest versions.
 
 Spark-first mechanics: views are registered FROM the DataFrame builders
 (``createOrReplaceTempView``), not re-authored as SQL strings — so the

@@ -38,3 +38,29 @@ def drop_file(directory, name: str, text: str) -> None:
     with open(tmp, "w") as f:
         f.write(text)
     os.replace(tmp, os.path.join(directory, name))
+
+
+def jobs_launched(spark, fn):
+    """(fn(), the number of Spark jobs fn launched): fn runs under a
+    job group of its own, counted in the status store once the
+    listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, group_jobs(spark, group)
+
+
+def group_jobs(spark, group: str) -> int:
+    """The number of Spark jobs launched so far under job group `group`
+    (a streaming query runs its jobs under ``str(query.runId)``)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    groups = [jobs.apply(i).jobGroup() for i in range(jobs.size())]
+    return sum(1 for g in groups if g.isDefined() and g.get() == group)

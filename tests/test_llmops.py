@@ -2415,15 +2415,13 @@ def test_operator_broadcast_targets_are_bounded():
         ("status.py", "enrich_stream_with_dims", "<expr:dim_airport>",
          "dim_airport"): "reference star dims",
         ("status.py", "eligibility_merge_batch", "eligible",
-         "status_batch"): "per-micro-batch eligible keys",
-        ("status.py", "start_eligibility_merge", "months", "fact"):
-            "months touched by one micro-batch (distinct month keys)",
-        ("status.py", "start_eligibility_merge", "eligible", "batch"):
-            "per-micro-batch eligible keys",
-        ("status.py", "_merge", "months", "fact"):
-            "months touched by one micro-batch",
-        ("status.py", "_merge", "eligible", "batch"):
-            "per-micro-batch eligible keys",
+         "status_batch"):
+            "eligible keys of one micro-batch, or of the fact's "
+            "eligibility table on read: one row per flight at most",
+        ("status.py", "start_eligibility_merge", "batch_max", "delayed"):
+            "per-micro-batch eligible keys: one row per flight at most",
+        ("status.py", "_merge", "batch_max", "delayed"):
+            "per-micro-batch eligible keys: one row per flight at most",
         ("sketches.py", "countmin_estimate", "sketch", "<param>"):
             "CMS cell table: <= depth*width rows by construction (the "
             "sketch's entire point), corpus-independent",

@@ -119,7 +119,7 @@ def test_process_files_job_budget(spark, csv_dir, monkeypatch):
     import uuid
 
     from airline_data_warehouse_spark import pipeline
-    from tests.test_warehouse import _group_jobs
+    from tests.conftest import group_jobs
 
     names = ["passengers.csv", "airports.csv", "airlines.csv", "flights.csv",
              "ta_sales.csv", "corporate.csv"]
@@ -128,7 +128,7 @@ def test_process_files_job_budget(spark, csv_dir, monkeypatch):
     file_result = pipeline.FileResult
 
     def counted(*args, **kwargs):
-        marks.append(_group_jobs(spark, group))
+        marks.append(group_jobs(spark, group))
         return file_result(*args, **kwargs)
 
     monkeypatch.setattr(pipeline, "FileResult", counted)
@@ -138,7 +138,7 @@ def test_process_files_job_budget(spark, csv_dir, monkeypatch):
         result = process_files(spark, [str(csv_dir / n) for n in names])
     finally:
         sc._jsc.clearJobGroup()
-    total = _group_jobs(spark, group)
+    total = group_jobs(spark, group)
     assert [f.success for f in result.files] == [True] * len(names)
     per_file = [b - a for a, b in zip([0] + marks[:-1], marks)]
     assert max(per_file) <= 4, per_file

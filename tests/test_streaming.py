@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from airline_data_warehouse_spark.sources import atomic as at
 from airline_data_warehouse_spark.sources.atomic import read_table
 from airline_data_warehouse_spark.streaming import status as st
+from airline_data_warehouse_spark.warehouse import read_fact
 from tests.conftest import drop_file
 
 MESSAGES = [
@@ -92,9 +93,11 @@ def test_insurance_lookup_and_latest_view_agree_on_timestamp_ties(spark):
 
 
 def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
-    """T5 in-place merge rewrites ONLY the partitions holding the eligible
-    flights' rows — the untouched month's files keep their mtimes
-    (VERDICT r01: no full-fact rewrite per micro-batch)."""
+    """T5 merge: the eligible flights' rows read flipped through the
+    fact's reader, the others read as loaded — and the merge rewrites
+    no fact unit: the untouched month's files keep their mtimes
+    (VERDICT r01: no full-fact rewrite per micro-batch) and the fact's
+    manifest names the same units."""
     import os
     fact = spark.createDataFrame(
         [("T1", "AA100", "scheduled", 0, False, 202306),
@@ -106,6 +109,7 @@ def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
     fact_path = str(tmp_path / "fact")
     at.upsert_parquet(spark, fact, fact_path, key="transaction_id",
                       partition_col="sale_year_month")
+    units = at.manifest(spark, fact_path)["units"]
     untouched = _unit(spark, fact_path, "sale_year_month=202401")
     before = {f: os.path.getmtime(os.path.join(untouched, f))
               for f in os.listdir(untouched)}
@@ -114,7 +118,7 @@ def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
     q = st.start_eligibility_merge(parsed, fact_path, str(tmp_path / "ckpt_merge"))
     assert q.awaitTermination(600)
 
-    out = {r["transaction_id"]: r for r in read_table(spark, fact_path).collect()}
+    out = {r["transaction_id"]: r for r in read_fact(spark, fact_path).collect()}
     assert len(out) == 4
     assert out["T1"]["is_eligible_insurance"] and out["T2"]["is_eligible_insurance"]
     assert out["T1"]["delay_minutes"] == 300 and out["T1"]["flight_status"] == "delayed"
@@ -124,6 +128,7 @@ def test_eligibility_merge_partition_scoped(spark, stream_dir, tmp_path):
     after = {f: os.path.getmtime(os.path.join(untouched, f))
              for f in os.listdir(untouched)}
     assert after == before  # 202401 directory never rewritten
+    assert at.manifest(spark, fact_path)["units"] == units  # no unit changed
 
 
 def _unit(spark, root, part):
@@ -137,10 +142,11 @@ def _unit(spark, root, part):
 
 
 def test_eligibility_merge_recovers_crashed_swap(spark, stream_dir, tmp_path):
-    """A merge that crashed after writing its months but before its
-    manifest leaves an orphan commit directory. The fact still reads
-    its previous version, the checkpointed retry merges it, and the
-    retry's expire deletes the orphan."""
+    """A merge that crashed after writing its eligibility table but
+    before its manifest leaves an orphan commit directory. The fact
+    still reads the table's previous version, the checkpointed retry
+    merges the batch into it, and the retry's expire deletes the
+    orphan."""
     import os
     fact = spark.createDataFrame(
         [("T1", "AA100", "scheduled", 0, False, 202306),
@@ -150,21 +156,25 @@ def test_eligibility_merge_recovers_crashed_swap(spark, stream_dir, tmp_path):
     fact_path = str(tmp_path / "fact_crash")
     at.upsert_parquet(spark, fact, fact_path, key="transaction_id",
                       partition_col="sale_year_month")
-    # the crashed attempt: a half-merged 202306 landed, no manifest did
-    orphan = os.path.join(fact_path, "commit=00002")
-    (fact.filter("sale_year_month = 202306")
-     .withColumn("delay_minutes", F.lit(-1))
-     .write.partitionBy("sale_year_month").parquet(orphan))
-    assert read_table(spark, fact_path).count() == 2
+    elig = st.eligibility_path(fact_path)
+    cols = "flight_key string, delay_minutes int"
+    at._commit(spark, elig, spark.createDataFrame([("ZZ999", 500)], cols))
+    # the crashed attempt: its table landed, no manifest did
+    orphan = os.path.join(elig, "commit=00002")
+    spark.createDataFrame([("AA100", -1)], cols).write.parquet(orphan)
+
+    def rows():
+        return {r["transaction_id"]: (r["is_eligible_insurance"],
+                                      r["delay_minutes"])
+                for r in read_fact(spark, fact_path).collect()}
+
+    assert rows() == {"T1": (False, 0), "T9": (True, 500)}
 
     parsed = st.parse_status_stream(st.file_status_source(spark, str(stream_dir / "in")))
     q = st.start_eligibility_merge(parsed, fact_path, str(tmp_path / "ckpt_crash"))
     assert q.awaitTermination(600)
 
-    out = {r["transaction_id"]: r for r in read_table(spark, fact_path).collect()}
-    assert len(out) == 2  # the 202306 partition came back, nothing lost
-    assert out["T1"]["is_eligible_insurance"] and out["T1"]["delay_minutes"] == 300
-    assert not out["T9"]["is_eligible_insurance"]
+    assert rows() == {"T1": (True, 300), "T9": (True, 500)}
     assert not os.path.exists(orphan)
 
 
@@ -204,6 +214,140 @@ def test_held_fact_reads_its_snapshot_across_upsert_and_merge(
              for r in wh.table(spark, "fact_sales").collect()}
     assert fresh == {"T1": True, "T2": False, "T3": True}
     spark.catalog.dropTempView("held_fact")
+
+
+# -- the eligibility rules, read through Warehouse.table -------------------
+
+_FACT_COLS = ("transaction_id string, date_key int, flight_key string, "
+              "flight_status string, delay_minutes int, "
+              "is_eligible_insurance boolean")
+
+
+def _rules_warehouse(spark, tmp_path):
+    """A warehouse whose fact holds AA100 in two months and AF023 in one,
+    and a ``merge(*updates)`` that lands ``(flight_key, delay)`` updates
+    as one status file and runs one eligibility-merge micro-batch."""
+    from airline_data_warehouse_spark.warehouse import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.write_fact_sales(spark.createDataFrame(
+        [("T1", 20230601, "AA100", "scheduled", 0, False),
+         ("T2", 20230715, "AA100", "scheduled", 0, False),
+         ("T3", 20230601, "AF023", "scheduled", 0, False)], _FACT_COLS))
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    batches = []
+
+    def merge(*updates):
+        batches.append(updates)
+        lines = []
+        for i, (fk, delay) in enumerate(updates):
+            msg = {"flight_key": fk, "status": "delayed",
+                   "delay_minutes": delay,
+                   "update_timestamp": f"2023-06-0{len(batches)}T1{i}:00:00Z"}
+            lines.append(json.dumps({"key": fk, "value": json.dumps(msg)}))
+        drop_file(landing, f"b{len(batches)}.json", "\n".join(lines) + "\n")
+        q = st.start_eligibility_merge(
+            st.parse_status_stream(st.file_status_source(spark, str(landing))),
+            wh.path("fact_sales"), str(tmp_path / "ckpt"))
+        assert q.awaitTermination(600)
+        return q
+
+    return wh, merge
+
+
+def _fact_rows(spark, wh) -> dict:
+    return {r["transaction_id"]: (r["is_eligible_insurance"],
+                                  r["delay_minutes"], r["flight_status"])
+            for r in wh.table(spark, "fact_sales").collect()}
+
+
+def test_eligibility_rules_batch_max_sticky_and_latest_eligible(
+        spark, tmp_path):
+    """Within one batch the max eligible delay wins; a later batch with
+    delay <= 240 leaves the flag and the delay; a later eligible batch
+    replaces the delay with its own value (not the running max)."""
+    wh, merge = _rules_warehouse(spark, tmp_path)
+    merge(("AA100", 250), ("AA100", 400), ("AA100", 300), ("AF023", 240))
+    want_af = (False, 0, "scheduled")
+    assert _fact_rows(spark, wh) == {
+        "T1": (True, 400, "delayed"), "T2": (True, 400, "delayed"),
+        "T3": want_af}
+    merge(("AA100", 100), ("AF023", 30))
+    assert _fact_rows(spark, wh) == {
+        "T1": (True, 400, "delayed"), "T2": (True, 400, "delayed"),
+        "T3": want_af}
+    merge(("AA100", 260))
+    assert _fact_rows(spark, wh) == {
+        "T1": (True, 260, "delayed"), "T2": (True, 260, "delayed"),
+        "T3": want_af}
+
+
+def test_eligibility_then_upsert_and_reload(spark, tmp_path):
+    """A row upserted after a merge for an eligible flight reads as the
+    upsert wrote it (not eligible) while the older rows stay eligible;
+    a reload after a merge reads no eligibility."""
+    wh, merge = _rules_warehouse(spark, tmp_path)
+    merge(("AA100", 300))
+    wh.upsert_fact_incremental(spark, spark.createDataFrame(
+        [("T4", 20230801, "AA100", "scheduled", 0, False)], _FACT_COLS))
+    assert _fact_rows(spark, wh) == {
+        "T1": (True, 300, "delayed"), "T2": (True, 300, "delayed"),
+        "T3": (False, 0, "scheduled"), "T4": (False, 0, "scheduled")}
+    wh.write_fact_sales(spark.createDataFrame(
+        [("T1", 20230601, "AA100", "scheduled", 0, False),
+         ("T5", 20230901, "AA100", "scheduled", 0, False)], _FACT_COLS))
+    assert _fact_rows(spark, wh) == {
+        "T1": (False, 0, "scheduled"), "T5": (False, 0, "scheduled")}
+
+
+# Spark jobs one eligibility-merge micro-batch may launch (measured at 6;
+# rewriting the fact's months instead took 11)
+MERGE_JOBS = 6
+
+
+def test_eligibility_merge_job_budget(spark, tmp_path):
+    """One status micro-batch with eligible flights, merged into a live
+    eligibility table, launches at most MERGE_JOBS Spark jobs (counted
+    under the query's run id): the eligible-row probe, the batch
+    maximum and the table's one-file commit — no fact scan, no fact
+    write."""
+    from tests.conftest import group_jobs
+
+    wh, merge = _rules_warehouse(spark, tmp_path)
+    merge(("AA100", 300))
+    q = merge(("AA100", 400), ("AF023", 500), ("AF023", 100))
+    n = group_jobs(spark, str(q.runId))
+    assert n <= MERGE_JOBS, n
+    assert _fact_rows(spark, wh) == {
+        "T1": (True, 400, "delayed"), "T2": (True, 400, "delayed"),
+        "T3": (True, 500, "delayed")}
+
+
+def test_eligibility_fold_crash_before_clear(spark, tmp_path):
+    """An incremental upsert that crashed after folding the eligibility
+    table into the base but before clearing it: the fact reads the same
+    rows (re-applying the table to a folded row changes nothing), and
+    the retried upsert folds again, clears the table and lands its row
+    as written."""
+    from airline_data_warehouse_spark import warehouse as W
+
+    wh, merge = _rules_warehouse(spark, tmp_path)
+    merge(("AA100", 300))
+    merged = _fact_rows(spark, wh)
+    fact_path = wh.path("fact_sales")
+    W._fold_eligibility(spark, fact_path)        # the crashed attempt
+    assert st.eligibility_table(spark, fact_path) is not None
+    assert _fact_rows(spark, wh) == merged
+    base = {r["transaction_id"]: r["is_eligible_insurance"]
+            for r in read_table(spark, fact_path).collect()}
+    assert base == {"T1": True, "T2": True, "T3": False}
+
+    wh.upsert_fact_incremental(spark, spark.createDataFrame(
+        [("T4", 20230801, "AA100", "scheduled", 0, False)], _FACT_COLS))
+    assert st.eligibility_table(spark, fact_path) is None
+    assert _fact_rows(spark, wh) == {
+        **merged, "T4": (False, 0, "scheduled")}
 
 
 def test_stream_static_enrichment(spark, stream_dir, tmp_path):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from airline_data_warehouse_spark.sources import atomic as at
 from airline_data_warehouse_spark.sources.atomic import read_table
 from airline_data_warehouse_spark.warehouse import Warehouse
+from tests.conftest import jobs_launched
 from tests.test_plans import detailed_plan_of
 
 
@@ -58,29 +59,31 @@ def test_partition_pruning_in_plan(spark, tmp_path):
     assert "sale_year_month" in seg
 
 
-def _jobs_launched(spark, fn):
-    """(fn(), the number of Spark jobs fn launched): fn runs under a
-    job group of its own, counted in the status store once the
-    listener bus has delivered every event."""
-    import uuid
+def test_partition_pruning_with_eligibility_applied(spark, tmp_path):
+    """With an eligibility table live, the fact's reader still opens
+    without a Spark job, the month predicate still prunes the base
+    scan's directories, and the sliced rows carry the eligibility."""
+    from airline_data_warehouse_spark.streaming.status import eligibility_path
 
-    sc = spark.sparkContext
-    group = f"wh-open-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, _group_jobs(spark, group)
-
-
-def _group_jobs(spark, group: str) -> int:
-    """The number of Spark jobs launched so far under job group `group`."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc._jsc.sc().statusStore().jobsList(None)
-    groups = [jobs.apply(i).jobGroup() for i in range(jobs.size())]
-    return sum(1 for g in groups if g.isDefined() and g.get() == group)
+    wh = Warehouse(str(tmp_path))
+    wh.write_fact_sales(_mk_fact(spark)
+                        .withColumn("flight_status", F.lit("scheduled"))
+                        .withColumn("delay_minutes", F.lit(0))
+                        .withColumn("is_eligible_insurance", F.lit(False)))
+    at._commit(spark, eligibility_path(wh.path("fact_sales")),
+               spark.createDataFrame([("AA100", 300)],
+                                     "flight_key string, delay_minutes int"))
+    sliced, n = jobs_launched(
+        spark, lambda: wh.fact_sales_for_range(spark, 20230101, 20230131))
+    assert n == 0
+    assert [(r["transaction_id"], r["is_eligible_insurance"],
+             r["delay_minutes"]) for r in sliced.collect()] == \
+        [("TA000001", True, 300)]
+    plan = detailed_plan_of(sliced)
+    seg = plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert "sale_year_month" in seg
+    assert wh.table(spark, "fact_sales").columns == \
+        read_table(spark, wh.path("fact_sales")).drop("sale_year_month").columns
 
 
 def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
@@ -90,10 +93,10 @@ def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
     open, partition pruning included."""
     wh = Warehouse(str(tmp_path))
     wh.write_fact_sales(_mk_fact(spark))
-    first, n_first = _jobs_launched(
+    first, n_first = jobs_launched(
         spark, lambda: wh.table(spark, "fact_sales"))
     assert n_first == 0
-    again, n_again = _jobs_launched(
+    again, n_again = jobs_launched(
         spark, lambda: wh.table(spark, "fact_sales"))
     assert n_again == 0
     assert again.schema == first.schema and again.count() == 3
@@ -103,13 +106,13 @@ def test_reopen_reuses_schema_and_sees_new_partitions(spark, tmp_path):
         "transaction_id string, date_key int, passenger_key string, "
         "flight_key string")
         .withColumn("total_amount", F.lit(50.0).cast("decimal(10,2)")))
-    sliced, n_slice = _jobs_launched(
+    sliced, n_slice = jobs_launched(
         spark, lambda: wh.fact_sales_for_range(spark, 20240501, 20240531))
     assert n_slice == 0
     assert [r["transaction_id"] for r in sliced.collect()] == ["TA000010"]
     assert wh.table(spark, "fact_sales").count() == 4
     # a second Warehouse over the same root resolves on its own
-    _, n_fresh = _jobs_launched(
+    _, n_fresh = jobs_launched(
         spark, lambda: Warehouse(str(tmp_path)).table(spark, "fact_sales"))
     assert n_fresh == 0
 
@@ -140,7 +143,7 @@ def test_reopen_sees_status_sink_appends(spark, tmp_path):
     land("b0.json", "AA100", 300)
     assert wh.table(spark, "flight_status_updates").count() == 1
     land("b1.json", "AF023", 30)
-    table, n = _jobs_launched(
+    table, n = jobs_launched(
         spark, lambda: wh.table(spark, "flight_status_updates"))
     assert n == 0
     assert st.check_insurance(table, "AF023").collect()[0]["delay_minutes"] == 30
