@@ -572,14 +572,6 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     return votes.select(F.col(id_col), sig.alias("simhash"))
 
 
-def simhash_buckets(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", k: int = DEFAULT_SHINGLE_K) -> DataFrame:
-    """SimHash bucket report: signature → member count + representative."""
-    return (simhash_signatures(df, text_col, id_col, k)
-            .groupBy("simhash")
-            .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("representative")))
-
-
 def simhash_chunks(bits: int, parts: int) -> list[tuple[int, int]]:
     """(offset, width) per chunk, splitting `bits` into `parts` contiguous
     bit-ranges as evenly as possible (widths differ by at most 1)."""
@@ -862,15 +854,17 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
       vectors with hoisted norms for the semantic-tier exact-cosine
       verify.
 
-    Rows carry no ``batch_id``: a `start_cascade_ingest` stream continuing
-    this store reads them as batch −1, i.e. before its own batch 0.
+    Each frame is committed as one managed table (sources/atomic.py)
+    holding one unit of batch −1 (``batch_id = -1``): a
+    `start_cascade_ingest` stream continuing this store reads its rows
+    before its own batch 0.
 
     ``overwrite=False`` (the default used by the registry query) reuses
     an existing store — the daily-ingest contract is that the store is
-    an output of YESTERDAY's run, amortized across batches; per-frame
-    parquet writes go to the final paths in one action each, and the
-    ``_built`` marker lands last, so a crashed build is rebuilt rather
-    than half-read (the snapshot-commit marker convention). An
+    an output of YESTERDAY's run, amortized across batches; each frame
+    is one commit that replaces its table, and the ``_built`` marker
+    lands last, so a crashed build is rebuilt rather than half-read
+    (the snapshot-commit marker convention). An
     ``overwrite=True`` rebuild DELETES the stale marker before touching
     any frame, so a mid-rebuild crash leaves a markerless —
     i.e. rebuildable — store instead of a half-new/half-old one the
@@ -885,8 +879,12 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
     vec_id = F.col(id_col if id_col in emb.columns else "vec_id")
     frames = _cascade_frames(docs, emb.select(vec_id.alias("vec_id"), vec_col),
                              text_col, id_col, vec_col)
+    from airline_data_warehouse_spark.streaming.dedup import _commit_store
+
     for name, frame in frames.items():
-        frame.write.mode("overwrite").parquet(str(mk(name)))
+        _commit_store(docs.sparkSession, str(mk(name)),
+                      frame.withColumn("batch_id", F.lit(-1).cast("long")),
+                      -1, -1, None)
     _write_marker(fs, mk("_built"), b"ok\n")
 
 
@@ -926,12 +924,12 @@ def incremental_cascade(spark, store_dir: str, inc_docs: DataFrame,
     store-mediated answer equals DuckDB recomputing from raw tables."""
     import os
 
-    # recursiveFileLookup: a store written by the STREAMING cascade
-    # ingest is tiered (b{N}/ + c{lo}_{hi}/ subdirs, r15 — the shared-
-    # state contract lets a stream and this batch job hand the same
-    # dirs to each other); flat batch-built stores read identically
-    stores = (spark.read.option("recursiveFileLookup", "true")
-              .parquet(os.path.join(store_dir, name))
+    from airline_data_warehouse_spark.sources.atomic import read_table
+
+    # a batch-built store and one the STREAMING cascade ingest wrote
+    # are the same managed tables (the shared-state contract lets a
+    # stream and this batch job hand them to each other)
+    stores = (read_table(spark, os.path.join(store_dir, name))
               for name in _CASCADE_STORES)
     return cascade_classify(inc_docs, inc_emb, *stores, threshold=threshold,
                             cos_threshold=cos_threshold, text_col=text_col,

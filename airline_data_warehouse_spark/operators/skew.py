@@ -51,13 +51,3 @@ def salted_join(skewed: DataFrame, small: DataFrame, key: str,
     small_s = small.withColumn("_salt", F.explode(salts))
     out = skewed_s.join(small_s, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def skew_profile(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
-    """Diagnostic: per-key row share of the heaviest keys — the number
-    you look at before deciding to salt."""
-    total = df.count()
-    return (df.groupBy(key).agg(F.count("*").alias("n_rows"))
-              .withColumn("share", F.col("n_rows") / F.lit(total))
-              .orderBy(F.col("n_rows").desc(), F.col(key))
-              .limit(top_n))

@@ -1016,16 +1016,6 @@ def _vec_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orig.unionByName(pert)
 
 
-def _sql_bucket(vec: str, n_planes: int = 8, dims: int = 64) -> str:
-    planes = gaussian_plane_weights(n_planes, dims)
-    terms = []
-    for j, w in enumerate(planes):
-        lit = "[" + ", ".join(f"{x!r}" for x in w) + "]::DOUBLE[]"
-        terms.append(f"(CASE WHEN round(list_dot_product({vec}, {lit}), 9) > 0 "
-                     f"THEN {1 << j} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
 _SQL_COS = ("round(list_dot_product({a}, {b}) / "
             "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)")
 
@@ -1367,10 +1357,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Multimodal plumbing
 # ---------------------------------------------------------------------------
-
-_MAGIC_BY_MOD = [("\\x89PNG", "image", 4), ("\\xFF\\xD8\\xFF", "image", 3),
-                 ("RIFF", "audio", 4), ("\\x1AE\\xDF\\xA3", None, 4)]
-
 
 @register(
     "multimodal_sniff_metadata",
@@ -4270,9 +4256,10 @@ def _content_keyed_store(sf_dir: str, prefix: str) -> str:
     import tempfile as _tf
 
     # the on-disk layout version keys the fingerprint too: a store
-    # written before the manifest-commit layout (sources/atomic.py) is
-    # stale even over the same source files
-    h = _hl.md5(b"manifest-commit layout;")
+    # written before the manifest-commit layout (sources/atomic.py) —
+    # for the cascade store, before its frames became managed tables —
+    # is stale even over the same source files
+    h = _hl.md5(b"manifest-commit layout; managed cascade stores;")
     for table in ("documents", "embeddings"):
         p = _os.path.join(sf_dir, f"{table}.parquet")
         entries = ([(p, _os.stat(p))] if _os.path.isfile(p) else

@@ -48,9 +48,6 @@ from pyspark.sql.types import DecimalType
 from airline_data_warehouse_spark.plans.registry import load, register
 from airline_data_warehouse_spark.plans.relational import dec2
 
-_REVENUE = None  # computed per-query: dec2(price) * (1 - dec2(discount))
-
-
 def _disc_price() -> F.Column:
     return dec2("l_extendedprice") * (F.lit(1) - dec2("l_discount"))
 

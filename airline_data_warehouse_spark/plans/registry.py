@@ -152,6 +152,12 @@ _REVALIDATE: tuple[str, ...] = (
     "similarity_topk_ivfpq_index",    # codes/vectors via read_table
     "similarity_topk_ivfpq_index_rerank",  # vectors via read_table
     "similarity_topk_after_delete",   # delete = one partition commit
+    # stream dedup stores commit through the same manifests: appends
+    # idempotent per batch, compaction one commit, reads without the
+    # replay DISTINCTs (incremental_cascade_ingest above reads the
+    # batch-built store through read_table)
+    "stream_exact_substring_read",    # spans/windows/hashstats manifests
+    "stream_exact_substring_verified",  # same ingest, verified read
 )
 
 

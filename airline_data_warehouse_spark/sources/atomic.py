@@ -3,7 +3,9 @@ protocol for every table the package mutates — the warehouse fact (its
 load, batch upsert and eligibility fold) and its eligibility table (the
 streaming eligibility merge, streaming/status.py), the IVF-PQ index's
 code and vector tables and drift log, the linear sketch stores' base
-and the Bloom bit store (streaming/sketch.py), and the
+and the Bloom bit store (streaming/sketch.py), the stream dedup
+ingests' signature and span stores and the batch-built cascade store
+(streaming/dedup.py: each unit's batch range in the manifest), and the
 snapshot-versioned tables (sources/snapshots.py).
 
 Layout::

@@ -24,9 +24,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from airline_data_warehouse_spark.operators.dedup import _persist
-from airline_data_warehouse_spark.sources.atomic import _exists, _fs
+from airline_data_warehouse_spark.sources.atomic import (
+    _fs,
+    _publish,
+    _read,
+    _write_version,
+    manifest,
+    read_table,
+)
 from airline_data_warehouse_spark.streaming import start_foreach_batch
 
 
@@ -59,243 +67,178 @@ def dedup_batch_exact(df: DataFrame, text_col: str = "text",
 
 
 
-def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
-                retention_batches: int | None) -> DataFrame:
-    """Read ONE signature store dir for classification, independently of
-    its siblings. Three contracts in one place:
+def _newest(m: dict | None) -> int | None:
+    """The newest batch a store manifest's units hold (None: no store
+    yet)."""
+    return max((hi for _, hi in m["batches"].values()), default=None) \
+        if m else None
 
-    * MISSING dir → empty frame with ``empty_like``'s schema. Any
-      subset of batch 0's appends may land before a crash
-      (`_append_batch`), stranding a partially-present store; probing
-      a single representative dir and
-      then reading all siblings (the pre-r09 shape) made every retry
-      fail on the missing-path read before any append could create it —
-      permanently wedging the stream (ADVICE r08 medium). A store dir
-      is only ever absent before its first successful append, so empty
-      IS its true content.
-    * EXISTING-but-corrupt dir → the read raises and the micro-batch
-      fails; structured streaming retries it (test
+
+def _open_stores(spark, dirs, batch_id: int,
+                 checkpoint_dir: str | None) -> dict:
+    """dir -> latest manifest (None before its first commit) of every
+    signature/span store one micro-batch reads or appends: one lookup
+    per store, shared by the first-batch gate, `_read_store` and
+    `_append_batch`. A store already holding a batch AFTER ``batch_id``
+    is ahead of the query's checkpoint (a fresh or rolled-back
+    checkpoint on a live store): matching against it would read the
+    future and appending would hold a batch twice, so it raises."""
+    out = {}
+    for d in dirs:
+        out[d] = manifest(spark, d)
+        newest = _newest(out[d])
+        if newest is not None and newest > batch_id:
+            raise ValueError(
+                f"store {d} already holds batch {newest}, past batch "
+                f"{batch_id} of the query checkpointed at "
+                f"{checkpoint_dir} — the checkpoint is behind the store; "
+                "restore the checkpoint that wrote it or start the query "
+                "on an empty store_dir")
+    return out
+
+
+def _read_store(spark, path: str, m: dict | None, empty_like: DataFrame,
+                batch_id: int, retention_batches: int | None) -> DataFrame:
+    """Read ONE signature store for classification, independently of
+    its siblings, as of its manifest ``m`` (`_open_stores`):
+
+    * no manifest → empty frame with ``empty_like``'s schema. Any
+      subset of batch 0's store commits may land before a crash
+      (`_append_batch`), so a sibling can be missing while another
+      store exists; empty IS its true content.
+    * a corrupt store → the read raises and the micro-batch fails;
+      structured streaming retries it (test
       test_stream_neardup_corrupt_store_fails_batch pins this).
-    * rows with ``batch_id >= `` the current batch are excluded: under
-      foreachBatch's at-least-once retry they can only be a crashed
-      attempt of THIS batch, and matching a batch against its own
-      partial appends would flag every retried doc as a duplicate of
-      itself. Normal operation appends strictly after classification,
-      so the filter is a no-op there. It also makes retried verdicts
-      byte-identical to the crashed attempt's, keeping the
-      dedup-on-read story for the verdicts/pairs sinks honest.
-    * rows WITHOUT ``batch_id`` (a `cascade_store_build` store a stream
-      continues) read as batch −1, before batch 0, in both filters — a
-      null would fail both and silently drop the whole batch-built
-      corpus.
+    * rows with ``batch_id >=`` the current batch are excluded: they
+      can only be a crashed attempt of THIS batch (its replay skips the
+      committed append), and matching a batch against its own rows
+      would flag every retried doc as a duplicate of itself. It also
+      makes retried verdicts byte-identical to the crashed attempt's.
 
-    ``retention_batches=N`` keeps the N batches before this one
-    (``batch_id >= b − N``, see start_neardup_ingest); the compactor's
-    horizon (`_tier_compact`) sits one below, so it never deletes a
-    batch a reader still matches.
+    A `cascade_store_build` store's rows carry batch −1, before a
+    stream's batch 0. ``retention_batches=N`` keeps the N batches
+    before this one (``batch_id >= b − N``, see start_neardup_ingest);
+    the compactor's horizon (`_tier_compact`) sits one below, so it
+    never drops a batch a reader still matches.
     """
-    # explicit existence probe, not read-and-swallow: a transient or
-    # corrupt-store READ failure must fail the micro-batch (structured
-    # streaming retries it) rather than silently skip detection for the
-    # whole batch while still appending its signatures (ADVICE r06)
-    if not _exists(spark, path):
+    if m is None:
         return empty_like.limit(0)
-    # explicit schema (empty_like's plus the batch_id every store row
-    # carries): spark.read.parquet() otherwise EAGERLY opens a footer
-    # per call for schema inference — five driver-side reads per
-    # micro-batch that were part of the measured ~5 s/batch cascade
-    # floor (VERDICT r09 item 5). recursiveFileLookup serves the
-    # TIERED layout (_tier_compact: b{N}/ + c{lo}_{hi}/ subdirs) and
-    # is a no-op on the flat cascade stores; Spark's path filter
-    # hides in-flight .c*.staging writes.
-    schema = empty_like.withColumn("batch_id", F.lit(int(batch_id))).schema
-    seen = F.coalesce(F.col("batch_id"), F.lit(-1))
-    df = (spark.read.schema(schema)
-          .option("recursiveFileLookup", "true").parquet(path)
-          .filter(seen < F.lit(batch_id)))
+    df = _read(spark, path, m).filter(F.col("batch_id") < F.lit(batch_id))
     if retention_batches is not None:
-        df = df.filter(seen >= batch_id - retention_batches)
+        df = df.filter(F.col("batch_id") >= batch_id - retention_batches)
     return df
 
 
-
-def _tier_list(spark, path: str):
-    """(hpath-factory, fs, {batch_id: b-dir name}, tier watermark,
-    [(lo, hi, c-dir name)], [root-level parquet file]) for a TIERED
-    store dir — the layout `_tier_compact` maintains: per-batch appends
-    land in ``b{N}/`` subdirs, consolidated tiers in ``c{lo}_{hi}/``,
-    and readers list both via one recursive scan (Spark hides
-    dot/underscore-prefixed paths, so in-flight ``.c*.staging`` writes
-    are invisible). Root-level part files are a `cascade_store_build`
-    the stream continues (batch −1 rows)."""
-    hpath, fs = _fs(spark, path)
-    bdirs, tiers, cmax, flat = {}, [], -1, []
-    if fs.exists(hpath(path)):
-        for st in fs.listStatus(hpath(path)):
-            name = st.getPath().getName()
-            if not st.isDirectory():
-                if name.endswith(".parquet"):
-                    flat.append(st.getPath())
-                continue
-            if name.startswith("b") and name[1:].isdigit():
-                bdirs[int(name[1:])] = name
-            elif name.startswith("c") and "_" in name:
-                lo, _, hi = name[1:].partition("_")
-                if lo.isdigit() and hi.isdigit():
-                    tiers.append((int(lo), int(hi), name))
-                    cmax = max(cmax, int(hi))
-    return hpath, fs, bdirs, cmax, tiers, flat
+def _commit_store(spark, path: str, frame: DataFrame, lo: int, hi: int,
+                  base: dict | None, drop=(),
+                  through: int | None = None) -> None:
+    """Commit ``frame`` as the one unit holding batches ``lo..hi`` of
+    the store at ``path`` — a manifest commit (sources/atomic.py) whose
+    units are ``base``'s minus ``drop`` plus the new one. Its meta maps
+    every live unit to its batch range and carries
+    ``compacted_through``, the tier watermark (default: ``base``'s, −1
+    for a new store)."""
+    version, units = _write_version(spark, path, frame)
+    base = base or {"batches": {}, "compacted_through": -1}
+    batches = {u: r for u, r in base["batches"].items() if u not in drop}
+    batches.update(dict.fromkeys(units, [lo, hi]))
+    schema = (T.StructType.fromJson(base["schema"]) if "schema" in base
+              else frame.schema)
+    _publish(spark, path, version, list(batches), schema,
+             {"batches": batches, "compacted_through": base[
+                 "compacted_through"] if through is None else through})
 
 
 def _tier_compact(spark, path: str, batch_id: int,
                   retention_batches: int | None = None,
                   retain: bool = True,
                   max_tiers: int | None = 8) -> None:
-    """TIERED compaction for the streaming signature/span stores —
-    ExactSubstr (VERDICT r14 item 2), and since r15 the neardup,
-    semantic, and cascade stores too: consolidate ONLY the per-batch
-    ``b{N}`` appends above
-    the tier watermark into one new ``c{lo}_{hi}`` tier dir — existing
-    tiers are never re-read and never rewritten, so bytes rewritten
-    per compaction are proportional to the ACTIVE tier (the appends
-    since the last compaction), not the accumulated store. The old
-    protocol re-read and re-wrote the WHOLE dir every compact_every
-    batches: O(N²/compact_every) cumulative write volume on an
-    unbounded-retention stream whose state is itself O(corpus tokens).
+    """TIERED compaction of one streaming signature/span store: the
+    units appended since the last compaction (``lo >
+    compacted_through``) merge into one new tier unit, in ONE commit
+    that also drops them — existing tiers are never re-read or
+    rewritten, so bytes rewritten per compaction are proportional to
+    the ACTIVE tier, not the accumulated store. A crash before the
+    manifest leaves an orphan ``commit=N`` directory no reader sees;
+    the next commit's expire collects it, and consumed units go once
+    no retained version names them (sources/atomic.py).
 
-    Crash story (simpler than the swap protocol it replaces — no
-    rename ever hides the only copy of anything):
-    * staging writes go to a dot-prefixed ``.c{lo}_{hi}.staging`` dir
-      Spark's reader-side path filter hides; a crash mid-write leaves
-      hidden garbage this function deletes on the next call (its
-      source b-dirs are still intact);
-    * the finished tier lands with ONE rename; a crash between that
-      rename and the b-dir deletes leaves rows duplicated between the
-      new tier and its consumed b-dirs — reads dedup (DISTINCT, the
-      at-least-once convention), and the next call sweeps b-dirs at or
-      below the watermark WITHOUT merging them (their content is in a
-      tier; merging would re-duplicate it);
-    * replayed batches re-creating an already-folded ``b{N}`` are the
-      same sweep case.
-
-    ``retain=False`` (the spans OUTPUT): no retention filtering — the
-    horizon applies to STATE, findings stand (review r14). With
-    ``retain=True`` and a horizon, rows below it drop from the new
-    tier and WHOLE tiers strictly below it are garbage-collected at
-    dir granularity; a tier straddling the horizon stays until it
+    ``retain=False`` (the spans OUTPUT): no retention — the horizon
+    applies to STATE, findings stand. With ``retain=True`` and a
+    horizon, rows below it drop from the new tier and the same commit
+    drops every unit wholly below it (a `cascade_store_build` unit,
+    batch −1, included); a tier straddling the horizon stays until it
     falls entirely below (reads filter rows, so overhang is storage,
-    never wrong answers). The root-level part files of a
-    `cascade_store_build` store hold batch −1 rows and go once the
-    horizon reaches −1.
+    never wrong answers).
 
     ``max_tiers`` bounds TIER-COUNT growth (one new tier per
     compact_every batches would otherwise grow the read-side listing
     linearly in stream lifetime): above the bound, the adjacent tier
-    pair with the smallest combined bytes folds into one — the
-    size-tiered LSM trade, amortized O(N log N) total write volume,
-    one bounded merge per call. None disables folding."""
-    hpath, fs, bdirs, cmax, tiers, flat = _tier_list(spark, path)
-    if not bdirs and not tiers:
+    pair with the smallest combined bytes folds into one, in one more
+    commit — the size-tiered LSM trade, amortized O(N log N) total
+    write volume, one bounded merge per call. None disables folding."""
+    m = manifest(spark, path)
+    if m is None:
         return
-    # sweep crashed staging writes (recreatable — sources intact)
-    for st in fs.listStatus(hpath(path)):
-        name = st.getPath().getName()
-        if name.startswith(".c") and name.endswith(".staging"):
-            fs.delete(st.getPath(), True)
-    # b-dirs at/below the watermark: replay re-creations or the
-    # tail of a crashed previous compaction — content already in a
-    # tier, so delete without merging
-    for i, name in list(bdirs.items()):
-        if i <= cmax:
-            fs.delete(hpath(f"{path}/{name}"), True)
-            del bdirs[i]
     # batch b reads batches >= b - N (`_read_store`), a retry of this
     # batch included, so only batches below b - N may go
     horizon = (batch_id - retention_batches - 1
                if retain and retention_batches is not None else None)
-    if horizon is not None:
-        for lo, hi, name in tiers:
-            if hi <= horizon:
-                fs.delete(hpath(f"{path}/{name}"), True)
-        if horizon >= -1:
-            # a batch-built store's rows are batch −1: wholly below the
-            # horizon, like a tier, so reads already filter them out
-            for part in flat:
-                fs.delete(part, False)
-    # tiers fully CONTAINED in another tier's range are fold-crash
-    # leftovers (the merged tier renamed in, its sources not yet
-    # deleted) — their content is in the container; delete, never
-    # re-merge (reads deduped the overlap meanwhile)
-    tiers = sorted(t for t in tiers
-                   if horizon is None or t[1] > horizon)
-    contained = [t for t in tiers
-                 if any(o[0] <= t[0] and t[1] <= o[1] and o != t
-                        for o in tiers)]
-    for lo, hi, name in contained:
-        fs.delete(hpath(f"{path}/{name}"), True)
-    tiers = [t for t in tiers if t not in contained]
+    n_files = max(1, spark.sparkContext.defaultParallelism // 4)
 
-    def _write_tier(df, lo: int, hi: int) -> None:
-        n_files = max(1, spark.sparkContext.defaultParallelism // 4)
-        staging = f"{path}/.c{lo}_{hi}.staging"
-        df.coalesce(n_files).write.mode("overwrite").parquet(staging)
-        if not fs.rename(hpath(staging), hpath(f"{path}/c{lo}_{hi}")):
-            raise IOError(
-                f"tier compaction: rename {staging} -> c{lo}_{hi} failed")
-
-    active = sorted(i for i in bdirs if i <= batch_id)
-    if active:
-        lo, hi = active[0], active[-1]
-        df = (spark.read.option("recursiveFileLookup", "true")
-              .parquet(*[f"{path}/{bdirs[i]}" for i in active])
-              .dropDuplicates())
+    def merged(units):
+        df = _read(spark, path, {**m, "units": units})
         if horizon is not None:
             df = df.filter(F.col("batch_id") > horizon)
-        _write_tier(df, lo, hi)
-        for i in active:
-            fs.delete(hpath(f"{path}/{bdirs[i]}"), True)
-        tiers.append((lo, hi, f"c{lo}_{hi}"))
+        return df.coalesce(n_files)
 
-    # SIZE-TIERED FOLD (the LSM completion of the tiered protocol):
-    # single-level tiering caps per-compaction I/O but lets the TIER
-    # COUNT grow one per compact_every batches — at stream lifetimes
-    # the read-side listing and per-tier open costs grow linearly.
-    # When the count exceeds max_tiers, merge the ADJACENT pair with
-    # the smallest combined bytes — one merge per call, so each call's
-    # extra I/O is bounded by the smallest pair while repeated folds
-    # give the geometric tier-size ladder (amortized O(N log N) total
-    # write volume, the classic size-tiered trade; a full fold-to-one
-    # would be the O(N²) rewrite this protocol replaced). Same
-    # staging/rename crash story; a crash between the merged tier's
-    # rename and the source deletes leaves CONTAINED tiers the next
-    # call sweeps (above).
+    active = sorted((lo, hi, u) for u, (lo, hi) in m["batches"].items()
+                    if lo > m["compacted_through"])
+    if active:
+        gone = [u for u, (_, hi) in m["batches"].items()
+                if horizon is not None and hi <= horizon]
+        lo, hi = active[0][0], max(t[1] for t in active)
+        units = [u for _, _, u in active]
+        _commit_store(spark, path, merged(units), lo, hi, m,
+                      drop=units + gone, through=hi)
+        m = manifest(spark, path)
+    # SIZE-TIERED FOLD: when the tier count exceeds max_tiers, merge
+    # the ADJACENT pair with the smallest combined bytes — one merge
+    # per call, so each call's extra I/O is bounded by the smallest
+    # pair while repeated folds give the geometric tier-size ladder (a
+    # full fold-to-one would be the O(N²) rewrite tiering replaced)
+    tiers = sorted((lo, hi, u) for u, (lo, hi) in m["batches"].items())
     if max_tiers is not None and len(tiers) > max_tiers:
-        tiers.sort()
-        sizes = [fs.getContentSummary(hpath(f"{path}/{name}")).getLength()
-                 for _, _, name in tiers]
+        hpath, fs = _fs(spark, path)
+        sizes = [fs.getContentSummary(hpath(f"{path}/{u}")).getLength()
+                 for _, _, u in tiers]
         j = min(range(len(tiers) - 1),
                 key=lambda i: sizes[i] + sizes[i + 1])
-        (alo, _ahi, aname), (_blo, bhi, bname) = tiers[j], tiers[j + 1]
-        merged = (spark.read.option("recursiveFileLookup", "true")
-                  .parquet(f"{path}/{aname}", f"{path}/{bname}")
-                  .dropDuplicates())
-        if horizon is not None:
-            merged = merged.filter(F.col("batch_id") > horizon)
-        _write_tier(merged, alo, bhi)
-        fs.delete(hpath(f"{path}/{aname}"), True)
-        fs.delete(hpath(f"{path}/{bname}"), True)
+        (alo, _, a), (_, bhi, b) = tiers[j], tiers[j + 1]
+        _commit_store(spark, path, merged([a, b]), alo, bhi, m,
+                      drop=[a, b])
 
 
-def _append_batch(spark, batch_id: int, writes, compact_every: int | None,
+def _append_batch(spark, batch_id: int, stores: dict, writes,
+                  compact_every: int | None,
                   retention_batches: int | None = None) -> None:
     """Append one micro-batch's frames, then run the tiered compaction
     every ``compact_every`` batches — the per-batch store step every
-    ingest shares. ``writes`` holds ``(frame, dir, n_files, retain)``:
+    ingest shares. ``stores`` maps each store dir to the manifest
+    `_open_stores` resolved. ``writes`` holds
+    ``(frame, dir, n_files, retain)``:
     each frame gains the ``batch_id`` column and is coalesced to
     ``n_files`` (None: as computed). ``retain`` None appends flat into
     ``dir`` (output logs such as pairs and verdicts, never compacted);
-    True/False appends into ``dir/b{N}`` and compacts that store with /
-    without the retention horizon (`_tier_compact`'s ``retain``).
+    True/False commits the frame as one unit of the managed store
+    ``dir`` (`_commit_store`) and compacts that store with / without the
+    retention horizon (`_tier_compact`'s ``retain``).
+
+    Idempotent per batch: a store whose newest committed batch is
+    already this one is skipped — the replay of an attempt that
+    committed it and then failed on a sibling. foreachBatch replays the
+    same input and every store frame derives from it deterministically,
+    so the skip is exact.
 
     The appends run CONCURRENTLY (VERDICT r09 item 5): each is a tiny
     job whose cost is scheduling, not data — run one after another they
@@ -303,32 +246,32 @@ def _append_batch(spark, batch_id: int, writes, compact_every: int | None,
     together the wall-clock is max(job), not sum. Ordering is
     correctness-free by construction: appends commute with each other,
     and every frame that reads a store does so through `_read_store`'s
-    ``batch_id < current`` filter (its file index was also listed
-    before any append lands). Crash semantics need no ordering either:
-    ANY subset of the appends may land before a crash; the retry
-    re-appends (duplicates dropped at compaction / deduped on read) and
-    re-classifies identically, and a store dir still missing reads as
-    empty. The first failure fails the micro-batch. Each pool thread
-    takes a copy of the caller's Spark local properties (job group,
-    description, SQL execution), so the appends are cancelled and
-    attributed with the stream's own batch."""
+    ``batch_id < current`` filter on the manifest resolved before any
+    append lands. The first failure fails the micro-batch. Each pool
+    thread takes a copy of the caller's Spark local properties (job
+    group, description, SQL execution), so the appends are cancelled
+    and attributed with the stream's own batch."""
     from concurrent.futures import ThreadPoolExecutor
 
     bid = int(batch_id)
     sc = spark.sparkContext
     props = sc._jsc.sc().getLocalProperties()
 
-    def append(frame: DataFrame, path: str, n_files: int | None) -> None:
+    def append(frame: DataFrame, path: str, n_files: int | None,
+               retain: bool | None) -> None:
         sc._jsc.sc().setLocalProperties(props.clone())
+        if retain is not None and _newest(stores[path]) == bid:
+            return
         frame = frame.withColumn("batch_id", F.lit(batch_id))
         if n_files:
             frame = frame.coalesce(n_files)
-        frame.write.mode("append").parquet(path)
+        if retain is None:
+            frame.write.mode("append").parquet(path)
+        else:
+            _commit_store(spark, path, frame, bid, bid, stores[path])
 
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futs = [pool.submit(append, frame, d if retain is None
-                            else f"{d}/b{bid}", n)
-                for frame, d, n, retain in writes]
+        futs = [pool.submit(append, *w) for w in writes]
         for fut in futs:
             fut.result()   # propagate the first failure
     if compact_every and bid > 0 and bid % compact_every == 0:
@@ -361,11 +304,11 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
     ever touch the shingle sets.
 
     Exactly-once note: foreachBatch gives at-least-once sinks on
-    retry; the pairs/bands appends are idempotent-by-content (dedup on
-    read via DISTINCT, or MERGE on a transactional table). Retry
-    duplicates in the bands/shingles stores are physically removed at
-    the next compaction; ``pairs`` is never compacted, so its retry
-    duplicates are only deduped on read. Batch-side
+    retry. The bands/shingles stores are managed tables whose
+    manifests record each unit's batch range, so a replayed batch
+    skips a store it already committed (`_append_batch`) and no store
+    holds a retry duplicate; ``pairs`` is a plain append log, so its
+    retry duplicates are deduped on read. Batch-side
     near-dups WITHIN one micro-batch are reported by the batch
     ``ngram_jaccard_pairs`` over the silver table, matching the batch
     operator's contract.
@@ -384,11 +327,10 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
       trade; the real per-batch latency driver is file count, which
       compaction bounds independently.
     * ``compact_every``: every N batches the bands/shingles appends
-      since the LAST compaction consolidate into a new tier
-      (`_tier_compact`, r15 — existing tiers are never rewritten, so
-      compaction I/O ∝ the active tier, and the crash story is one
-      rename of a dot-hidden staging dir instead of the old
-      whole-store swap). Without it, one parquet file per partition
+      since the LAST compaction consolidate into a new tier in one
+      commit (`_tier_compact` — existing tiers are never rewritten, so
+      compaction I/O ∝ the active tier). Without it, one parquet file
+      per partition
       per batch makes the corpus-side read cost grow linearly in
       BATCH COUNT even when state bytes are flat.
     """
@@ -417,22 +359,25 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
         # full parallelism.
         writes = [(new_bands, bands_dir, 4, True),
                   (sh, shingles_dir, 4, True)]
-        # the gate is a cheap FS probe — batch 0 (no store at all)
-        # skips the corpus join; each store dir is then read on its
-        # own, so a sibling stranded missing by a crash reads as empty
-        # instead of wedging every retry (_read_store)
-        if _exists(spark, bands_dir):
+        stores = _open_stores(spark, [bands_dir, shingles_dir], batch_id,
+                              checkpoint_dir)
+        # batch 0 (no store at all) skips the corpus join; each store
+        # is then read on its own, so a sibling a crash left missing
+        # reads as empty (_read_store)
+        if stores[bands_dir] is not None:
             # a re-sent id never pairs with its own earlier copy
             cand = (_band_candidates(
-                new_bands, _read_store(spark, bands_dir, new_bands,
-                                       batch_id, retention_batches), id_col)
+                new_bands, _read_store(spark, bands_dir, stores[bands_dir],
+                                       new_bands, batch_id,
+                                       retention_batches), id_col)
                     .filter(F.col("inc_id") != F.col("corpus_id")))
-            corpus_sh = _read_store(spark, shingles_dir, sh, batch_id,
+            corpus_sh = _read_store(spark, shingles_dir,
+                                    stores[shingles_dir], sh, batch_id,
                                     retention_batches)
             writes.append((_verified_jaccard_pairs(
                 cand, sh, corpus_sh, "inc_id", "corpus_id", id_col,
                 threshold), pairs_dir, None, None))
-        _append_batch(spark, batch_id, writes, compact_every,
+        _append_batch(spark, batch_id, stores, writes, compact_every,
                       retention_batches)
 
     return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
@@ -467,7 +412,7 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
     or id-keyed joins. ``retention_batches`` / ``compact_every`` bound
     the state and file-count growth axes exactly as documented on
     `start_neardup_ingest`, via the same tiered compaction
-    (`_tier_compact`, r15); a corrupt store READ fails the micro-batch
+    (`_tier_compact`); a corrupt store READ fails the micro-batch
     (structured streaming retries) rather than being mistaken for the
     first batch.
     """
@@ -489,22 +434,24 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
             _persist, _vector_frames(batch_df, id_col, vec_col))
         writes = [(new_bands, bands_dir, 4, True),
                   (new_vecs, vectors_dir, 4, True)]
-        # cheap FS probe gates batch 0 only; a vectors dir stranded
-        # missing by a crash between the appends reads as empty on
-        # retry instead of wedging the stream (_read_store, ADVICE r08
-        # medium)
-        if _exists(spark, bands_dir):
+        stores = _open_stores(spark, [bands_dir, vectors_dir], batch_id,
+                              checkpoint_dir)
+        # the bands manifest gates batch 0 only; a vectors store a
+        # crash left missing reads as empty (_read_store)
+        if stores[bands_dir] is not None:
             # a re-sent id never pairs with its own earlier copy
             cand = (_band_candidates(
-                new_bands, _read_store(spark, bands_dir, new_bands,
-                                       batch_id, retention_batches), id_col)
+                new_bands, _read_store(spark, bands_dir, stores[bands_dir],
+                                       new_bands, batch_id,
+                                       retention_batches), id_col)
                     .filter(F.col("inc_id") != F.col("corpus_id")))
-            corpus_vecs = _read_store(spark, vectors_dir, new_vecs,
+            corpus_vecs = _read_store(spark, vectors_dir,
+                                      stores[vectors_dir], new_vecs,
                                       batch_id, retention_batches)
             writes.append((_verified_cosine_pairs(
                 cand, new_vecs, corpus_vecs, id_col, threshold),
                 pairs_dir, None, None))
-        _append_batch(spark, batch_id, writes, compact_every,
+        _append_batch(spark, batch_id, stores, writes, compact_every,
                       retention_batches)
 
     return start_foreach_batch(stream, ingest_batch, checkpoint_dir)
@@ -540,7 +487,7 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
 
     Scale/state posture identical to `start_neardup_ingest` /
     `start_semantic_ingest` (shared retention/compaction knobs, tiered
-    compaction — `_tier_compact`, r15 — corrupt-read-fails-the-batch,
+    compaction — `_tier_compact` — corrupt-read-fails-the-batch,
     shuffle_hash on every corpus-proportional side, finite-guarded
     vectors)."""
     import os
@@ -563,14 +510,15 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
         # stores below, and (as .limit(0)) the schema templates
         # _read_store substitutes for a store dir a crash left missing
         frames = _cascade_frames(docs, emb, text_col, id_col, vec_col)
+        stores = _open_stores(spark, [dirs[n] for n in _CASCADE_STORES],
+                              batch_id, checkpoint_dir)
         # gate on the hashes store only to detect a truly fresh
-        # stream; each of the five reads probes its own dir
-        # (crash-stranded siblings → empty, never a wedged retry)
-        if _exists(spark, dirs["hashes"]):
+        # stream; a sibling a crash left missing reads as empty
+        if stores[dirs["hashes"]] is not None:
             verdicts = cascade_classify(
                 docs, emb,
-                *(_read_store(spark, dirs[n], frames[n], batch_id,
-                              retention_batches)
+                *(_read_store(spark, dirs[n], stores[dirs[n]], frames[n],
+                              batch_id, retention_batches)
                   for n in _CASCADE_STORES),
                 threshold=threshold, cos_threshold=cos_threshold,
                 text_col=text_col, id_col=id_col, vec_col=vec_col)
@@ -578,7 +526,7 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
             verdicts = docs.select(
                 id_col, F.lit("kept").alias("verdict"),
                 F.lit(None).cast("long").alias("partner_id"))
-        _append_batch(spark, batch_id,
+        _append_batch(spark, batch_id, stores,
                       [(verdicts, dirs["verdicts"], 4, None)]
                       + [(frames[n], dirs[n], 4, True)
                          for n in _CASCADE_STORES],
@@ -640,14 +588,12 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
     builds, and the honest price of exact spans (signatures cannot
     answer substring questions). ``retention_batches`` bounds it to a
     horizon (the dedup_stream_exact watermark trade);
-    ``compact_every`` bounds file count and drops retry duplicates
-    (reads dedup via DISTINCT meanwhile) via TIERED compaction
-    (`_tier_compact`, VERDICT r14 item 2): each compaction
-    consolidates only the b{N} appends since the last one into a new
-    c{lo}_{hi} tier — bytes rewritten per compaction ∝ the active
-    tier, never the accumulated store (the old whole-dir rewrite was
-    O(N²/compact_every) cumulative write volume on an
-    unbounded-retention stream)."""
+    ``compact_every`` bounds file count via TIERED compaction
+    (`_tier_compact`): each compaction consolidates only the units
+    appended since the last one into a new tier — bytes rewritten per
+    compaction ∝ the active tier, never the accumulated store. A
+    replayed batch skips every store it already committed
+    (`_append_batch`), so no store holds a retry duplicate."""
     import os
 
     from airline_data_warehouse_spark.operators.dedup import (
@@ -666,16 +612,11 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
             bw.groupBy("wh")
               .agg(F.count_distinct(F.col(id_col)).alias("n_docs"),
                    F.count(F.lit(1)).alias("n_occ")))
-        # no up-front recovery pass: the tiered protocol
-        # (_tier_compact) never renames an existing dir away, so
-        # there is no crash window in which the only copy of prior
-        # state sits in a hidden backup — the failure mode the old
-        # whole-dir swap needed _recover_store_dir for (review
-        # r14). Crashed staging writes are dot-hidden from readers
-        # and swept at the next compaction.
-        prior = (_read_store(spark, stats_dir, bstats, batch_id,
-                             retention_batches)
-                 .distinct().drop("batch_id")
+        stores = _open_stores(spark, [windows_dir, stats_dir, spans_dir],
+                              batch_id, checkpoint_dir)
+        prior = (_read_store(spark, stats_dir, stores[stats_dir], bstats,
+                             batch_id, retention_batches)
+                 .drop("batch_id")
                  .groupBy("wh").agg(F.sum("n_docs").alias("_pd"),
                                     F.sum("n_occ").alias("_po")))
         total = _persist(
@@ -734,9 +675,9 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
                 "accumulation across <= max_df documents: raise "
                 "max_occ deliberately")
         good = total.filter(F.col("_df") <= max_df)
-        cw = (_read_store(spark, windows_dir, bw, batch_id,
-                          retention_batches)
-              .distinct().drop("batch_id"))
+        cw = (_read_store(spark, windows_dir, stores[windows_dir], bw,
+                          batch_id, retention_batches)
+              .drop("batch_id"))
         a = (cw.join(good.select("wh"), "wh", "left_semi")
              .select("wh", F.col(id_col).alias("corpus_id"),
                      F.col("pos").alias("pa")))
@@ -748,11 +689,8 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
             .filter(F.col("corpus_id") != F.col("inc_id")),
             k, min_tokens, "corpus_id", "inc_id",
             "start_corpus", "start_inc")
-        # per-batch appends land in b{N} subdirs of the tiered
-        # layout (append mode: a replayed batch re-appends into
-        # its own b-dir; reads DISTINCT, compaction dropDuplicates);
         # spans are findings, compacted without the state horizon
-        _append_batch(spark, batch_id,
+        _append_batch(spark, batch_id, stores,
                       [(bw, windows_dir, 4, True),
                        (bstats, stats_dir, 1, True),
                        (spans, spans_dir, 4, False)],
@@ -768,19 +706,12 @@ def read_exact_substring_spans(spark, store_dir: str) -> DataFrame:
     mapped to match) — the batch operator's canonical orientation,
     which is what makes the unordered pair set arrival-order-invariant
     (every cross-batch pair is found exactly once, by whichever side
-    arrived later). DISTINCT drops at-least-once replay duplicates
-    between compactions."""
+    arrived later). DISTINCT, over the rows without their
+    ``batch_id``, merges a span found again from a document re-sent in
+    a later batch."""
     import os
 
-    spans_dir = os.path.join(store_dir, "spans")
-    # explicit schema: a store can legitimately hold zero spans, and
-    # schema inference dies on file-less tier dirs; recursive lookup
-    # reads the tiered layout (b{N}/ + c{lo}_{hi}/, plus any flat
-    # files — Spark's path filter hides in-flight .staging writes)
-    raw = (spark.read
-           .schema("corpus_id long, inc_id long, start_corpus long, "
-                   "start_inc long, span_tokens long, batch_id long")
-           .option("recursiveFileLookup", "true").parquet(spans_dir)
+    raw = (read_table(spark, os.path.join(store_dir, "spans"))
            .select("corpus_id", "inc_id", "start_corpus", "start_inc",
                    "span_tokens")
            .distinct())

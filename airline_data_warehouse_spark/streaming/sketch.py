@@ -50,7 +50,6 @@ from airline_data_warehouse_spark.operators.sketches import (
     CMS_DEPTH,
     CMS_WIDTH,
     countmin_build,
-    countmin_estimate,
 )
 from airline_data_warehouse_spark.streaming import start_foreach_batch
 
@@ -151,17 +150,6 @@ def read_countmin_store(spark: SparkSession, store_dir: str) -> DataFrame:
     return _read_linear_state(spark, store_dir,
                               "row int, bucket int, counter long",
                               ["row", "bucket"], "counter")
-
-def countmin_store_estimate(spark: SparkSession, store_dir: str,
-                            probes: DataFrame, token_col: str = "token",
-                            depth: int = CMS_DEPTH,
-                            width: int = CMS_WIDTH) -> DataFrame:
-    """(token, est_count) for the probes against the store's current
-    merged sketch — the query surface a monitoring/quality loop hits
-    between folds."""
-    return countmin_estimate(read_countmin_store(spark, store_dir),
-                             probes, token_col, depth, width)
-
 
 def fold_countmin_store(spark: SparkSession, store_dir: str,
                         depth: int = CMS_DEPTH,

@@ -465,15 +465,17 @@ def test_stream_dedup_store_appends_only_in_append_batch():
 
 
 def test_swaps_and_filesystem_lookups_only_in_atomic():
-    """Regrowth tripwire for the manifest-commit protocol: no table
-    `sources.atomic` manages is ever renamed (0 ``.rename(`` sites
-    there), the tiered stream-store compaction keeps its one tier
-    rename, and `sources.atomic._fs` is the package's only Hadoop
-    FileSystem lookup — a writer cannot grow a rename pair or its own
-    copy of the lookup back."""
+    """Regrowth tripwire for the manifest-commit protocol: nothing in
+    the package renames (0 ``.rename(`` sites — every managed table,
+    the stream signature/span stores included, commits through a
+    manifest), no reader lists a directory tree recursively (0
+    ``recursiveFileLookup`` — a reader opens a manifest's units), and
+    `sources.atomic._fs` is the package's only Hadoop FileSystem
+    lookup — a writer cannot grow a rename, a tree-scanning reader or
+    its own copy of the lookup back."""
     import pathlib
     pkg = pathlib.Path(__file__).parent.parent / "airline_data_warehouse_spark"
-    renames, lookups = {}, {}
+    renames, lookups, recursive = {}, {}, []
     for py in sorted(pkg.rglob("*.py")):
         code = "\n".join(line.split("#")[0]
                          for line in py.read_text().splitlines())
@@ -482,7 +484,10 @@ def test_swaps_and_filesystem_lookups_only_in_atomic():
             renames[rel] = code.count(".rename(")
         if code.count("getFileSystem("):
             lookups[rel] = code.count("getFileSystem(")
-    assert renames == {"streaming/dedup.py": 1}, renames
+        if "recursiveFileLookup" in py.read_text():
+            recursive.append(rel)
+    assert renames == {}, renames
+    assert recursive == [], recursive
     assert lookups == {"sources/atomic.py": 1}
 
 

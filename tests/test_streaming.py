@@ -615,10 +615,10 @@ def test_stream_neardup_ingest_matches_batch_incremental(spark, tmp_path):
 def test_stream_neardup_retention_and_compaction(spark, tmp_path):
     """The r07 bounded-state knobs: with retention_batches=2, a doc from
     batch 0 is no longer matched by batch 3 (outside the horizon), and
-    compaction physically drops its bands/shingles from the store while
-    coalescing the per-batch append files. A store dir stranded mid-
-    compaction-swap (only copy in the hidden backup) is healed before
-    the next batch reads it."""
+    compaction drops its bands from the store once the horizon passes
+    the whole tier holding them. A commit that crashed before its
+    manifest leaves an orphan directory no read sees, collected by the
+    next commit."""
     import json as jsonlib
     import os
 
@@ -631,9 +631,13 @@ def test_stream_neardup_retention_and_compaction(spark, tmp_path):
     filler = [
         "totally unrelated filler text about warehouse inventory counts",
         "another unrelated filler document mentioning quarterly reports",
+        "a third filler line on airport gate assignments and crew rosters",
+        "fourth filler: loyalty tier upgrades for frequent flyer members",
+        "fifth filler: baggage carousel delays at the regional terminal",
     ]
     batches = [[(1, base)], [(2, filler[0])], [(3, filler[1])],
-               [(4, base + " tail")]]  # near-dups doc 1, but 3 batches later
+               [(4, base + " tail")],  # near-dups doc 1, 3 batches later
+               [(5, filler[2])], [(6, filler[3])], [(7, filler[4])]]
 
     in_dir = tmp_path / "ret_in"
     in_dir.mkdir()
@@ -643,51 +647,40 @@ def test_stream_neardup_retention_and_compaction(spark, tmp_path):
     q = start_neardup_ingest(src, store,
                              checkpoint_dir=str(tmp_path / "ret_ckpt"),
                              retention_batches=2, compact_every=2)
+
+    def bands():
+        return read_table(spark, f"{store}/bands")
+
     try:
         for i, batch in enumerate(batches):
             if i == 3:
-                # crash the tier protocol mid-compaction: a stranded
-                # dot-hidden staging dir must stay invisible to the
-                # next batch's reads and be swept at the next
-                # compaction (the tiered crash story, r15)
+                # the compaction at batch 2 kept batch 0: a retry of
+                # batch 2 still matches it, so it is in tier [0, 2]
+                assert bands().filter("doc_id = 1").count() > 0
+                # a commit that crashed before its manifest: its
+                # directory is invisible to every read ...
+                orphan = os.path.join(store, "bands", "commit=%05d" % (
+                    at.manifest(spark, f"{store}/bands")["version"] + 1))
                 (spark.createDataFrame([(0, 0, "x", 0)],
                                        "doc_id long, band int, "
                                        "band_key string, batch_id long")
-                 .write.mode("overwrite")
-                 .parquet(os.path.join(store, "bands", ".c9_9.staging")))
+                 .write.parquet(orphan))
+                assert bands().filter("doc_id = 0").count() == 0
             drop_file(in_dir, f"b{i}.json", "".join(
                 jsonlib.dumps({"doc_id": d, "text": tx_}) + "\n"
                 for d, tx_ in batch))
             q.processAllAvailable()
+            if i == 3:
+                # ... and batch 3's commit collects it
+                assert not os.path.exists(orphan)
     finally:
         q.stop()
 
     pairs = {(r["inc_id"], r["corpus_id"])
              for r in spark.read.parquet(f"{store}/pairs").collect()}
     assert pairs == set()  # doc 1 fell outside the 2-batch horizon
-
-    def bands():
-        return (spark.read.option("recursiveFileLookup", "true")
-                .parquet(f"{store}/bands"))
-
-    # compaction at batch 2 keeps batch 0: a retry of batch 2 still
-    # matches it, so it folds into tier c0_2
-    assert bands().filter("doc_id = 1").count() > 0
-    # the stranded staging's planted row never reached any read (doc 0
-    # appears nowhere in the recursive read)
-    assert bands().filter("doc_id = 0").count() == 0
-    # ... and the next compaction sweeps the crashed staging dir
-    from airline_data_warehouse_spark.streaming.dedup import (
-        _tier_compact,
-    )
-
-    _tier_compact(spark, f"{store}/bands", 3, retention_batches=2)
-    assert not os.path.exists(
-        os.path.join(store, "bands", ".c9_9.staging"))
-    # batch-0 state goes once the horizon passes the whole c0_2 tier
-    # (a tier straddling it stays); batch 3's doc 4 stays
-    assert bands().filter("doc_id = 1").count() > 0
-    _tier_compact(spark, f"{store}/bands", 5, retention_batches=2)
+    # batch-0 state went once the horizon passed the whole [0, 2] tier
+    # (the compaction at batch 6, horizon 3); batch 3's doc 4 stays
     assert bands().filter("doc_id = 1").count() == 0
     assert bands().filter("doc_id = 4").count() > 0
 
@@ -699,14 +692,15 @@ def test_read_store_retention_keeps_last_n_batches(spark, tmp_path):
     from airline_data_warehouse_spark.streaming.dedup import _read_store
 
     store = str(tmp_path / "store")
-    (spark.createDataFrame([(b * 10, b) for b in range(3)],
-                           "doc_id long, batch_id int")
-     .write.parquet(store))
+    for b in range(3):
+        _store_append(spark, store, b, spark.createDataFrame(
+            [(b * 10,)], "doc_id long"))
     like = spark.createDataFrame([], "doc_id long")
+    m = at.manifest(spark, store)
 
     def batches(n):
         return sorted(r["batch_id"] for r in
-                      _read_store(spark, store, like, 3, n).collect())
+                      _read_store(spark, store, m, like, 3, n).collect())
 
     assert batches(1) == [2]
     assert batches(2) == [1, 2]
@@ -808,8 +802,7 @@ def test_stream_neardup_corrupt_store_fails_batch(spark, tmp_path):
 
     # the failed batch appended NOTHING: doc 2's shingles are absent
     # (a silent skip would have appended them while dropping its pairs)
-    shingles = (spark.read.option("recursiveFileLookup", "true")
-                .parquet(f"{store}/shingles"))
+    shingles = read_table(spark, f"{store}/shingles")
     assert shingles.filter("doc_id = 2").count() == 0
 
 
@@ -864,8 +857,7 @@ def test_stream_semantic_ingest_flags_embedding_neardups(spark, tmp_path):
     assert got[(5, 1)] == round(1 / math.sqrt(1 + 0.01 ** 2), 6)
     # the poisoned vector was excluded at entry, never stored
     stored = {r["vec_id"] for r in
-              spark.read.option("recursiveFileLookup", "true")
-              .parquet(f"{store}/vectors").collect()}
+              read_table(spark, f"{store}/vectors").collect()}
     assert stored == {1, 2, 3, 4, 5}
 
 
@@ -1003,13 +995,11 @@ def test_stream_retention_collects_batch_built_store_files(
         spark, tmp_path, monkeypatch):
     """A stream continuing a `cascade_store_build` store reads the
     build's rows as batch -1, so once the retention horizon reaches -1
-    the tiered compaction deletes the build's root-level part files, as
-    it deletes a tier wholly below the horizon. Before, they stayed
-    forever. With ``retention_batches=2`` batches 0 and 1 still see the
-    build (doc 1 re-sent as 1001 is ``exact``/1) and the compaction at
-    batch 2 collects it; the verdicts equal a run whose compaction never lists
-    the root files (the old behaviour), which keeps them."""
-    import glob
+    the tiered compaction drops the build's [-1, -1] unit from every
+    store, as it drops a tier wholly below the horizon. With
+    ``retention_batches=2`` batches 0 and 1 still see the build (doc 1
+    re-sent as 1001 is ``exact``/1) and the compaction at batch 2 drops
+    it; the verdicts equal a run that never compacts, which keeps it."""
     import json as jsonlib
     import random
 
@@ -1052,19 +1042,19 @@ def test_stream_retention_collects_batch_built_store_files(
         verdicts = sorted(
             (r["doc_id"], r["verdict"], r["partner_id"], r["batch_id"])
             for r in spark.read.parquet(f"{store}/verdicts").collect())
-        return verdicts, {d: glob.glob(f"{store}/{d}/*.parquet")
-                          for d in _CASCADE_STORES}
+        return verdicts, {
+            d: sorted(at.manifest(spark, f"{store}/{d}")["batches"].values())
+            for d in _CASCADE_STORES}
 
-    fixed, fixed_files = run("fixed")
+    fixed, fixed_units = run("fixed")
     assert fixed[0] == (1001, "exact", 1, 0)
-    assert fixed_files == {d: [] for d in _CASCADE_STORES}
+    assert fixed_units == {d: [[0, 1], [2, 2]] for d in _CASCADE_STORES}
 
-    real = sd._tier_list
-    monkeypatch.setattr(sd, "_tier_list",
-                        lambda spark_, path: (*real(spark_, path)[:5], []))
-    unfixed, unfixed_files = run("unfixed")
+    monkeypatch.setattr(sd, "_tier_compact", lambda *a, **k: None)
+    unfixed, unfixed_units = run("unfixed")
     assert fixed == unfixed
-    assert all(unfixed_files[d] for d in _CASCADE_STORES)
+    assert unfixed_units == {d: [[-1, -1], [0, 0], [1, 1], [2, 2]]
+                             for d in _CASCADE_STORES}
 
 
 def _run_ingests(spark, root, ingests: dict, batches: list) -> None:
@@ -1095,13 +1085,17 @@ def _run_ingests(spark, root, ingests: dict, batches: list) -> None:
 
 
 def _store_rows(spark, store_dir) -> dict:
-    """Distinct rows of every dir of a store (tiered or flat)."""
+    """Rows of every dir of a store: a signature/span store through its
+    manifest, an output log as plain parquet."""
     import os
 
-    return {name: sorted(map(str, spark.read
-                             .option("recursiveFileLookup", "true")
-                             .parquet(os.path.join(store_dir, name))
-                             .distinct().collect()))
+    def rows(path):
+        if at.manifest(spark, path) is None:
+            return spark.read.parquet(path)
+        return read_table(spark, path)
+
+    return {name: sorted(map(str, rows(os.path.join(store_dir, name))
+                             .collect()))
             for name in sorted(os.listdir(store_dir))}
 
 
@@ -2069,15 +2063,60 @@ def test_stream_exact_substring_matches_batch_cross_cut(spark, tmp_path):
                   if r["doc_a"] % 3 != r["doc_b"] % 3)
     assert got == want and got, "stream = batch cross-batch cut"
 
-    # at-least-once replay: duplicate span rows dedup at read — the
-    # dup lands as a FLAT file in the tiered dir (recursive reads see
-    # flat files and b/c subdirs alike)
+    # the same span found again from a document re-sent in a later
+    # batch merges with the first finding on read
     spans_dir = f"{work}/store/spans"
-    (spark.read.option("recursiveFileLookup", "true").parquet(spans_dir)
-     .limit(1).write.mode("append").parquet(spans_dir))
+    _store_append(spark, spans_dir, 9, read_table(spark, spans_dir)
+                  .limit(1).drop("batch_id"))
     again = sorted(map(tuple, read_exact_substring_spans(
         spark, f"{work}/store").collect()))
     assert again == got
+
+
+INGEST_JOBS = 17
+
+
+def test_exact_substring_ingest_job_budget(spark, tmp_path):
+    """One warm `start_exact_substring_ingest` micro-batch with the
+    default knobs (the curation workload's ingest) launches at most
+    INGEST_JOBS Spark jobs, counted under the query's run id: the
+    window and hashstats frames, the accumulated-df health check and
+    the windows, hashstats and spans appends."""
+    import json as jsonlib
+    import random
+
+    from airline_data_warehouse_spark.streaming.dedup import (
+        read_exact_substring_spans,
+        start_exact_substring_ingest,
+    )
+    from tests.conftest import group_jobs
+
+    rng = random.Random(13)
+    words = [f"w{i}" for i in range(60)]
+    docs = [" ".join(rng.choice(words) for _ in range(40))
+            for _ in range(6)]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    src = (spark.readStream.schema("doc_id long, text string")
+           .option("maxFilesPerTrigger", 1).json(str(in_dir)))
+    q = start_exact_substring_ingest(src, str(tmp_path / "store"),
+                                     checkpoint_dir=str(tmp_path / "ck"))
+
+    def send(name, rows):
+        drop_file(in_dir, name, "".join(
+            jsonlib.dumps({"doc_id": d, "text": t}) + "\n" for d, t in rows))
+        q.processAllAvailable()
+
+    try:
+        send("b0.json", list(enumerate(docs[:3], 1)))
+        warm = group_jobs(spark, str(q.runId))
+        send("b1.json", [(4, docs[3]), (5, docs[4]), (6, docs[0])])
+        n = group_jobs(spark, str(q.runId)) - warm
+    finally:
+        q.stop()
+    assert n <= INGEST_JOBS, n
+    assert {(r["doc_a"], r["doc_b"]) for r in read_exact_substring_spans(
+        spark, str(tmp_path / "store")).collect()} == {(1, 6)}
 
 
 def test_stream_exact_substring_max_occ_guard(spark, tmp_path):
@@ -2210,12 +2249,48 @@ def _tier_dir_listing(path):
     return out
 
 
+def _store_append(spark, store, bid, frame):
+    """Batch ``bid``'s append of ``frame`` to the signature store
+    ``store``, as an ingest micro-batch makes it (`_append_batch`: a
+    replay of a committed batch is skipped)."""
+    from airline_data_warehouse_spark.streaming.dedup import _append_batch
+
+    _append_batch(spark, bid, {store: at.manifest(spark, store)},
+                  [(frame, store, 1, True)], None)
+
+
+def _wh_append(spark, store, bid, vals):
+    _store_append(spark, store, bid, spark.createDataFrame(
+        [(v,) for v in vals], "wh long"))
+
+
+def _wh_rows(spark, store):
+    """Every (wh, batch_id) row of the store, duplicates kept."""
+    return sorted((r["wh"], r["batch_id"])
+                  for r in read_table(spark, store).collect())
+
+
+def _plant_orphan(spark, store, rows):
+    """A commit that crashed before its manifest: ``rows`` written into
+    the next version's directory, no manifest naming it."""
+    import os
+
+    taken = [int(d.split("=")[1]) for d in os.listdir(store)
+             if d.startswith("commit=")]
+    path = "%s/commit=%05d" % (store, max(taken) + 1)
+    spark.createDataFrame(rows, "wh long, batch_id int").write.parquet(path)
+    return path
+
+
+def _ranges(spark, store):
+    return sorted(at.manifest(spark, store)["batches"].values())
+
+
 def test_tier_compaction_rewrites_only_active_tier(spark, tmp_path):
-    """VERDICT r14 item 2's contract: a compaction consolidates ONLY
-    the b{N} appends since the last one — the files of an existing
-    tier are byte-for-byte untouched (same names, sizes, mtimes), so
-    cumulative write volume is linear in the stream, not
-    O(N²/compact_every)."""
+    """A compaction consolidates ONLY the units appended since the last
+    one — the files of an existing tier are byte-for-byte untouched
+    (same names, sizes, mtimes), so cumulative write volume is linear
+    in the stream, not O(N²/compact_every)."""
     import os
 
     from airline_data_warehouse_spark.streaming.dedup import (
@@ -2223,86 +2298,109 @@ def test_tier_compaction_rewrites_only_active_tier(spark, tmp_path):
     )
 
     store = str(tmp_path / "tiered")
-
-    def append(bid, vals):
-        (spark.createDataFrame([(v, bid) for v in vals],
-                               "wh long, batch_id long")
-         .coalesce(1).write.mode("append").parquet(f"{store}/b{bid}"))
-
-    append(1, [10, 11]); append(2, [20, 21])
+    _wh_append(spark, store, 1, [10, 11])
+    _wh_append(spark, store, 2, [20, 21])
     _tier_compact(spark, store, 2)
-    assert sorted(os.listdir(store)) == ["c1_2"]
-    first = _tier_dir_listing(f"{store}/c1_2")
-    mtimes = {f: os.path.getmtime(f"{store}/c1_2/{f}") for f in first}
+    m = at.manifest(spark, store)
+    assert m["batches"] == {m["units"][0]: [1, 2]}
+    assert m["compacted_through"] == 2
+    tier = f"{store}/{m['units'][0]}"
+    first = _tier_dir_listing(tier)
+    mtimes = {f: os.path.getmtime(f"{tier}/{f}") for f in first}
 
-    append(3, [30]); append(4, [40, 41, 42])
+    _wh_append(spark, store, 3, [30])
+    _wh_append(spark, store, 4, [40, 41, 42])
     _tier_compact(spark, store, 4)
-    assert sorted(os.listdir(store)) == ["c1_2", "c3_4"]
-    assert _tier_dir_listing(f"{store}/c1_2") == first, \
-        "existing tier rewritten — compaction must touch only b-dirs"
-    assert all(os.path.getmtime(f"{store}/c1_2/{f}") == m
-               for f, m in mtimes.items())
-    got = sorted(r["wh"] for r in spark.read
-                 .option("recursiveFileLookup", "true").parquet(store)
-                 .collect())
-    assert got == [10, 11, 20, 21, 30, 40, 41, 42]
+    assert _ranges(spark, store) == [[1, 2], [3, 4]]
+    assert m["units"][0] in at.manifest(spark, store)["units"]
+    assert _tier_dir_listing(tier) == first, \
+        "existing tier rewritten — compaction must touch only new units"
+    assert all(os.path.getmtime(f"{tier}/{f}") == t
+               for f, t in mtimes.items())
+    assert [wh for wh, _ in _wh_rows(spark, store)] == \
+        [10, 11, 20, 21, 30, 40, 41, 42]
 
 
 def test_tier_compaction_crash_windows_and_retention(spark, tmp_path):
-    """The tier protocol's crash story: a crashed staging write is
-    dot-hidden from readers and swept on the next call; b-dirs at or
-    below the watermark (a crash between the tier rename and the
-    b-dir deletes, or a replayed batch) are swept WITHOUT re-merging —
-    reads dedup meanwhile; with a retention horizon, tiers entirely
-    below it are garbage-collected at dir granularity."""
+    """The store commit's crash story: a commit that crashed before its
+    manifest leaves an orphan directory no read sees, collected by the
+    next commit; a replayed append of a committed batch is skipped, so
+    every row is there exactly once with no DISTINCT; with a retention
+    horizon, tiers entirely below it leave the live set in the
+    compaction's commit."""
     import os
-    import shutil
 
     from airline_data_warehouse_spark.streaming.dedup import (
         _tier_compact,
     )
 
     store = str(tmp_path / "tiered")
-
-    def append(bid, vals):
-        (spark.createDataFrame([(v, bid) for v in vals],
-                               "wh long, batch_id long")
-         .coalesce(1).write.mode("append").parquet(f"{store}/b{bid}"))
-
-    append(1, [10]); append(2, [20])
+    _wh_append(spark, store, 1, [10])
+    _wh_append(spark, store, 2, [20])
     _tier_compact(spark, store, 2)
 
-    # crash window A: staging written, rename never happened — hidden
-    # from readers, deleted by the next compaction
-    (spark.createDataFrame([(99, 9)], "wh long, batch_id long")
-     .write.mode("overwrite").parquet(f"{store}/.c3_3.staging"))
-    rows = spark.read.option("recursiveFileLookup", "true") \
-        .parquet(store).collect()
-    assert sorted(r["wh"] for r in rows) == [10, 20], \
-        "staging dir must be invisible to readers"
-
-    # crash window B: tier renamed in, b-dirs not yet deleted (replay
-    # twin: a re-created pre-watermark b-dir) — duplicate rows dedup
-    # at read; the next compaction sweeps them without a new tier
-    shutil.copytree(f"{store}/c1_2", f"{store}/b2")
-    dup = spark.read.option("recursiveFileLookup", "true") \
-        .parquet(store).dropDuplicates().collect()
-    assert sorted(r["wh"] for r in dup) == [10, 20]
+    orphan = _plant_orphan(spark, store, [(99, 9)])
+    assert _wh_rows(spark, store) == [(10, 1), (20, 2)], \
+        "an uncommitted directory must be invisible to readers"
+    # a replay of batch 2 (its append and compaction both committed)
+    _wh_append(spark, store, 2, [20])
     _tier_compact(spark, store, 2)
-    assert not os.path.exists(f"{store}/.c3_3.staging")
-    assert not os.path.exists(f"{store}/b2")
-    assert sorted(os.listdir(store)) == ["c1_2"]
+    assert _wh_rows(spark, store) == [(10, 1), (20, 2)]
+    assert _ranges(spark, store) == [[1, 2]]
 
-    # retention horizon: a tier entirely below it is dropped at dir
-    # granularity; the active tier keeps only in-horizon rows
-    append(7, [70]); append(8, [80])
+    # retention horizon: a tier entirely below it leaves the live set;
+    # the active tier keeps only in-horizon rows
+    _wh_append(spark, store, 7, [70])
+    assert not os.path.exists(orphan), "the next commit collects it"
+    _wh_append(spark, store, 8, [80])
     _tier_compact(spark, store, 8, retention_batches=4)
-    assert sorted(os.listdir(store)) == ["c7_8"], \
-        "tier c1_2 (hi=2 <= horizon=4) must be garbage-collected"
-    kept = sorted(r["wh"] for r in spark.read
-                  .option("recursiveFileLookup", "true").parquet(store)
-                  .collect())
-    assert kept == [70, 80]
+    assert _ranges(spark, store) == [[7, 8]], \
+        "tier [1, 2] (hi=2 <= horizon=3) must be dropped"
+    assert _wh_rows(spark, store) == [(70, 7), (80, 8)]
+
+
+def test_store_ahead_of_checkpoint_raises(spark, tmp_path):
+    """A store holding a batch past the one a query is about to run is
+    ahead of that query's checkpoint (here: a fresh checkpoint on a
+    live store). The batch fails naming the store and the checkpoint
+    instead of reading the store's future and appending its batch
+    twice; the store is left as it was."""
+    import json as jsonlib
+
+    from pyspark.errors import StreamingQueryException
+
+    from airline_data_warehouse_spark.streaming.dedup import (
+        start_neardup_ingest,
+    )
+
+    store = str(tmp_path / "store")
+
+    def run(ckpt, name, docs):
+        in_dir = tmp_path / name
+        in_dir.mkdir()
+        for i, (d, t) in enumerate(docs):
+            drop_file(in_dir, f"b{i}.json",
+                      jsonlib.dumps({"doc_id": d, "text": t}) + "\n")
+        src = (spark.readStream.schema("doc_id long, text string")
+               .option("maxFilesPerTrigger", 1).json(str(in_dir)))
+        q = start_neardup_ingest(src, store, checkpoint_dir=ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run(str(tmp_path / "ck1"), "in1",
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "iota kappa lambda mu nu xi omicron pi rho")])
+    before = _ranges(spark, f"{store}/bands")
+    assert before == [[0, 0], [1, 1]]
+    ckpt2 = str(tmp_path / "ck2")
+    with pytest.raises(StreamingQueryException,
+                       match=r"already holds batch 1, past batch 0"
+                             r".*ck2"):
+        run(ckpt2, "in2", [(3, "sigma tau upsilon phi chi psi omega")])
+    assert _ranges(spark, f"{store}/bands") == before
+    assert _ranges(spark, f"{store}/shingles") == before
 
 
 def test_verify_spans_against_silver_drops_forged_span(spark):
@@ -2337,65 +2435,42 @@ def test_verify_spans_against_silver_drops_forged_span(spark):
 def test_tier_compaction_size_tiered_fold(spark, tmp_path):
     """max_tiers bounds tier-count growth: above the bound, the
     adjacent pair with the smallest combined bytes folds into one
-    (content preserved, range-union name); a fold crash that leaves
-    the merged tier AND its sources (containment) is swept — never
-    re-merged — on the next call."""
+    (content preserved, range-union unit) in one commit; a fold that
+    crashed before its manifest leaves the content as it was, and the
+    next commit collects its orphan."""
     import os
-    import shutil
 
     from airline_data_warehouse_spark.streaming.dedup import (
         _tier_compact,
     )
 
     store = str(tmp_path / "tiered")
-
-    def append(bid, vals):
-        (spark.createDataFrame([(v, bid) for v in vals],
-                               "wh long, batch_id long")
-         .coalesce(1).write.mode("append").parquet(f"{store}/b{bid}"))
-
-    # build 4 tiers of one batch each
     for bid in (1, 2, 3, 4):
-        append(bid, [bid * 10, bid * 10 + 1])
+        _wh_append(spark, store, bid, [bid * 10, bid * 10 + 1])
         _tier_compact(spark, store, bid, max_tiers=None)
-    assert sorted(os.listdir(store)) == ["c1_1", "c2_2", "c3_3", "c4_4"]
+    assert _ranges(spark, store) == [[1, 1], [2, 2], [3, 3], [4, 4]]
+    want = _wh_rows(spark, store)
 
+    # a fold that crashed before its manifest: the merged rows sit in
+    # an orphan directory, the sources are still the live units
+    orphan = _plant_orphan(spark, store, want[:4])
+    assert _wh_rows(spark, store) == want
     # max_tiers=3: one fold merges one adjacent pair -> 3 tiers
     _tier_compact(spark, store, 4, max_tiers=3)
-    tiers = sorted(os.listdir(store))
-    assert len(tiers) == 3 and any("_" in t and t[1] != t[-1]
-                                   for t in tiers), tiers
-    got = sorted(r["wh"] for r in spark.read
-                 .option("recursiveFileLookup", "true").parquet(store)
-                 .collect())
-    assert got == [10, 11, 20, 21, 30, 31, 40, 41]
-
-    # fold-crash twin: merged tier present AND sources present
-    # (containment) -> next call deletes the contained sources only
-    merged = next(t for t in tiers if t[1] != t[-1])
-    lo, hi = merged[1:].split("_")
-    shutil.copytree(f"{store}/{merged}", f"{store}/c{lo}_{lo}")
-    shutil.copytree(f"{store}/{merged}", f"{store}/c{hi}_{hi}")
-    _tier_compact(spark, store, 4, max_tiers=5)
-    after = sorted(os.listdir(store))
-    assert merged in after
-    assert f"c{lo}_{lo}" not in after and f"c{hi}_{hi}" not in after
-    still = sorted(r["wh"] for r in spark.read
-                   .option("recursiveFileLookup", "true").parquet(store)
-                   .collect())
-    assert still == got
+    ranges = _ranges(spark, store)
+    assert len(ranges) == 3 and any(lo != hi for lo, hi in ranges), ranges
+    assert _wh_rows(spark, store) == want
+    assert not os.path.exists(orphan)
 
 
 def test_tier_protocol_randomized_crash_fuzz(spark, tmp_path):
-    """Seeded randomized exercise of the tier protocol: an arbitrary
-    interleaving of appends, compactions (varying max_tiers), replay
-    re-appends, and injected crash artifacts (stray staging dirs,
-    re-created pre-watermark b-dirs) must always read back EXACTLY
-    the appended row multiset (distinct) — content is never lost and
-    never invented, whatever the crash/fold history."""
-    import os
+    """Seeded randomized exercise of the store commit protocol: an
+    arbitrary interleaving of appends, compactions (varying
+    max_tiers), replays of the last batch and orphan commits (a crash
+    before the manifest) must always read back EXACTLY the appended
+    row multiset — content is never lost, never invented and never
+    duplicated, whatever the crash/fold history."""
     import random
-    import shutil
 
     from airline_data_warehouse_spark.streaming.dedup import (
         _tier_compact,
@@ -2404,60 +2479,34 @@ def test_tier_protocol_randomized_crash_fuzz(spark, tmp_path):
     for seed in (7, 23):
         rnd = random.Random(seed)
         store = str(tmp_path / f"fuzz{seed}")
-        model = set()
-        next_bid, last_bid = 1, 0
-
-        def read_back():
-            if not os.path.exists(store):
-                return set()
-            return {(r["wh"], r["batch_id"]) for r in
-                    spark.read.option("recursiveFileLookup", "true")
-                    .parquet(store).collect()}
+        model, last = [], None
 
         for _step in range(12):
             op = rnd.choice(["append", "append", "compact", "replay",
-                             "staging_crash", "fold_crash"])
+                             "orphan"])
             if op == "append":
-                rows = [(rnd.randrange(10_000) * 100 + next_bid,
-                         next_bid) for _ in range(rnd.randint(1, 4))]
-                (spark.createDataFrame(rows, "wh long, batch_id long")
-                 .coalesce(1).write.mode("append")
-                 .parquet(f"{store}/b{next_bid}"))
-                model.update(rows)
-                last_bid, next_bid = next_bid, next_bid + 1
-            elif op == "compact" and model:
-                _tier_compact(spark, store, last_bid,
+                bid = 1 if last is None else last[0] + 1
+                vals = [rnd.randrange(10_000) * 100 + bid
+                        for _ in range(rnd.randint(1, 4))]
+                _wh_append(spark, store, bid, vals)
+                model += [(v, bid) for v in vals]
+                last = (bid, vals)
+            elif op == "compact" and last:
+                _tier_compact(spark, store, last[0],
                               max_tiers=rnd.choice([None, 1, 2, 3]))
-            elif op == "replay" and model:
-                # re-append a random already-appended row into its
-                # original b-dir (at-least-once duplicate)
-                wh, bid = rnd.choice(sorted(model))
-                (spark.createDataFrame([(wh, bid)],
-                                       "wh long, batch_id long")
-                 .coalesce(1).write.mode("append")
-                 .parquet(f"{store}/b{bid}"))
-            elif op == "staging_crash" and os.path.exists(store):
-                (spark.createDataFrame([(-1, -1)],
-                                       "wh long, batch_id long")
-                 .write.mode("overwrite")
-                 .parquet(f"{store}/.c998_999.staging"))
-            elif op == "fold_crash" and os.path.exists(store):
-                tiers = [d for d in os.listdir(store)
-                         if d.startswith("c") and "_" in d]
-                if tiers:
-                    # duplicate a tier under a contained range — the
-                    # post-rename/pre-delete fold crash shape
-                    t = rnd.choice(tiers)
-                    lo = t[1:].split("_")[0]
-                    dup = f"{store}/c{lo}_{lo}"
-                    if not os.path.exists(dup) and f"c{lo}_{lo}" != t:
-                        shutil.copytree(f"{store}/{t}", dup)
-            # UNFILTERED equality: the injected staging rows carry
-            # batch_id = -1 and a correct protocol NEVER surfaces
-            # them — filtering them out here would mask exactly the
-            # staging-visibility regression this op injects
-            got = read_back()
-            assert got == model, (seed, _step, op, got ^ model)
-        # final full compact drains every artifact
-        _tier_compact(spark, store, last_bid, max_tiers=1)
-        assert read_back() == model
+            elif op == "replay" and last:
+                # at-least-once: the last batch runs again on the same
+                # input after its append committed
+                _wh_append(spark, store, *last)
+            elif op == "orphan" and last:
+                # UNFILTERED equality below: the orphan rows carry
+                # batch_id = -1 and a correct protocol NEVER surfaces
+                # them
+                _plant_orphan(spark, store, [(-1, -1)])
+            got = _wh_rows(spark, store) if last else []
+            assert got == sorted(model), (seed, _step, op)
+        # a final full compact keeps the content
+        if last:
+            _tier_compact(spark, store, last[0], max_tiers=1)
+            assert _wh_rows(spark, store) == sorted(model)
+            assert len(at.manifest(spark, store)["units"]) == 1

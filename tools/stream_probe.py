@@ -33,9 +33,22 @@ def _avg(xs: list[float]) -> float | None:
     return round(sum(xs) / len(xs), 3) if xs else None
 
 
-def dir_stats(path: str) -> tuple[int, int]:
+def dir_stats(spark, path: str) -> tuple[int, int]:
+    """(parquet files, bytes) under ``path``. A managed table
+    (sources/atomic.py) counts only the units its latest manifest
+    names: the units a compaction consumed stay on disk while a
+    retained version still names them, and are not the store's size."""
+    from airline_data_warehouse_spark.sources.atomic import manifest
+
     files = bytes_ = 0
-    for root, _dirs, names in os.walk(path):
+    for root, dirs, names in os.walk(path):
+        if "_manifests" in dirs:
+            dirs[:] = []
+            m = manifest(spark, root)
+            for u in m["units"] if m else []:
+                f, b = dir_stats(spark, os.path.join(root, u))
+                files, bytes_ = files + f, bytes_ + b
+            continue
         for n in names:
             if n.endswith(".parquet"):
                 files += 1
@@ -66,8 +79,8 @@ def run_config(spark, docs_json: list[str], label: str, workdir: str,
             t0 = time.time()
             q.processAllAvailable()
             dt = time.time() - t0
-            files, nbytes = dir_stats(os.path.join(store, "bands"))
-            sfiles, sbytes = dir_stats(os.path.join(store, "shingles"))
+            files, nbytes = dir_stats(spark, os.path.join(store, "bands"))
+            sfiles, sbytes = dir_stats(spark, os.path.join(store, "shingles"))
             per_batch.append({"batch": i, "sec": round(dt, 3),
                               "band_files": files,
                               "state_mb": round((nbytes + sbytes) / 1e6, 2)})
@@ -115,7 +128,7 @@ def run_ingest(spark, payloads: list[str], label: str, workdir: str,
             dt = time.time() - t0
             files = nbytes = 0
             for sub in state_subdirs:
-                fs, bs = dir_stats(os.path.join(store, sub))
+                fs, bs = dir_stats(spark, os.path.join(store, sub))
                 files += fs
                 nbytes += bs
             per_batch.append({"batch": i, "sec": round(dt, 3),
@@ -367,8 +380,8 @@ def run_index(spark, sf_dir: str, n_batches: int, workdir: str,
             t0 = time.time()
             q.processAllAvailable()
             dt = time.time() - t0
-            files, nbytes = dir_stats(idx)
-            log_files, _ = dir_stats(os.path.join(idx, "append_log"))
+            files, nbytes = dir_stats(spark, idx)
+            log_files, _ = dir_stats(spark, os.path.join(idx, "append_log"))
             per_batch.append({"batch": i, "sec": round(dt, 3),
                               "index_files": files,
                               "log_files": log_files,
