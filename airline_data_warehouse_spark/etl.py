@@ -8,21 +8,24 @@ DataFrame plans:
     then keep-first by standardized key) → two filters, clean and dirty
     → upsert.
 
-Each processor returns a `Tagged`: every input row tagged once, and its
-two filters — clean (shaped to the target table) and dirty (the raw
-input columns plus ``error_reason``, for the quarantine JSON payload).
-It unpacks as ``(clean, dirty)``. No per-row network calls: the
-reference's row-wise country / airport lookups become broadcast joins
-(E1 lifecycle, SURVEY §3).
+Each processor returns a `Tagged`: every input row tagged once, and the
+shaping of its two filters — clean (shaped to the target table) and
+dirty (the raw input columns plus ``error_reason``, for the quarantine
+JSON payload), both derived from the tagged rows. It unpacks as
+``(clean, dirty)``; `Tagged.materialize` computes the rows once, in the
+one action that also observes the file's counts, so every later read of
+either filter starts from the computed rows. No per-row network calls:
+the reference's row-wise country / airport lookups become broadcast
+joins (E1 lifecycle, SURVEY §3).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from airline_data_warehouse_spark.functions import cleaning as C
@@ -47,19 +50,38 @@ def _is_dirty() -> Column:
 class Tagged:
     """One file after its one tagging pass: ``rows`` is every input row
     with its ``error_reason`` (NULL when clean, else why it was rejected
-    or dropped), and ``clean`` / ``dirty`` are its two filters. Unpacks
-    as ``(clean, dirty)``."""
+    or dropped); ``clean`` and ``dirty`` are its two filters, derived
+    from ``rows`` through the clean columns and the helper columns the
+    dirty payload drops. Unpacks as ``(clean, dirty)``."""
     rows: DataFrame
-    clean: DataFrame
-    dirty: DataFrame
+    clean_cols: tuple[Column | str, ...]
+    helpers: tuple[str, ...]
+
+    @property
+    def clean(self) -> DataFrame:
+        return self.rows.filter(_is_clean()).select(*self.clean_cols)
+
+    @property
+    def dirty(self) -> DataFrame:
+        return self.rows.filter(_is_dirty()).drop(*self.helpers)
 
     def __iter__(self) -> Iterator[DataFrame]:
         return iter((self.clean, self.dirty))
 
-    def counts(self) -> tuple[int, int, int]:
-        """``(total, clean, dirty)`` from one aggregate action."""
-        return tuple(self.rows.agg(
-            F.count(F.lit(1)), F.count_if(_is_clean()), F.count_if(_is_dirty())).first())
+    def materialize(self) -> tuple[Tagged, tuple[int, int, int]]:
+        """(this file with its rows computed once, ``(total, clean,
+        dirty)``): one action, a local checkpoint that observes the three
+        counts as it computes the rows. No caller releases the computed
+        rows: their blocks are freed once the last frame derived from
+        them is garbage-collected."""
+        seen = Observation()
+        rows = self.rows.observe(
+            seen, F.count(F.lit(1)).alias("total"),
+            F.count_if(_is_clean()).alias("clean"),
+            F.count_if(_is_dirty()).alias("dirty")).localCheckpoint()
+        counts = seen.get
+        return replace(self, rows=rows), (counts["total"], counts["clean"],
+                                          counts["dirty"])
 
 
 def _tag(df: DataFrame, reason: Column, key: str | None = None,
@@ -78,12 +100,6 @@ def _tag(df: DataFrame, reason: Column, key: str | None = None,
     return tagged.withColumn("error_reason", F.coalesce(F.col("error_reason"), dup))
 
 
-def _filters(rows: DataFrame, clean_cols: list[Column | str],
-             helpers: list[str]) -> Tagged:
-    return Tagged(rows, rows.filter(_is_clean()).select(*clean_cols),
-                  rows.filter(_is_dirty()).drop(*helpers))
-
-
 def process_passengers(raw: DataFrame) -> Tagged:
     """smartFileProcessor.js:225-253 + keep-first dedup by standardized key
     (scripts/uploadPassengers.js:120-170). Rejects: unstandardizable key;
@@ -92,12 +108,12 @@ def process_passengers(raw: DataFrame) -> Tagged:
     rows = _tag(raw.withColumn("_std_key", std_key),
                 F.when(std_key.isNull(), "Invalid passenger key"),
                 "_std_key", "Duplicate passenger key")
-    return _filters(rows, [
+    return Tagged(rows, (
         F.col("_std_key").alias("passenger_key"),
         F.trim("FullName").alias("full_name"),
         C.standardize_email(F.col("FullName"), F.col("Email")).alias("email"),
         C.standardize_loyalty_status(F.col("LoyaltyStatus")).alias("loyalty_status"),
-    ], ["_std_key"])
+    ), ("_std_key",))
 
 
 def process_airports(raw: DataFrame) -> Tagged:
@@ -107,12 +123,12 @@ def process_airports(raw: DataFrame) -> Tagged:
     rows = _tag(raw.withColumn("_key", key),
                 F.when(key.isNull() | (F.length(key) != 3), "Invalid airport key"),
                 "_key", "Duplicate airport key")
-    return _filters(rows, [
+    return Tagged(rows, (
         F.col("_key").alias("airport_key"),
         F.trim("AirportName").alias("airport_name"),
         F.trim("City").alias("city"),
         C.standardize_country(F.col("Country")).alias("country"),
-    ], ["_key"])
+    ), ("_key",))
 
 
 def process_airlines(raw: DataFrame) -> Tagged:
@@ -120,11 +136,11 @@ def process_airlines(raw: DataFrame) -> Tagged:
     dropped (the reference returns dirtyData: [] here — parity kept)."""
     key = F.trim(F.col("AirlineKey"))
     rows = _tag(raw, F.when(F.coalesce(key, F.lit("")) == "", _DROPPED))
-    return _filters(rows, [
+    return Tagged(rows, (
         F.upper(key).alias("airline_key"),
         F.trim("AirlineName").alias("airline_name"),
         C.na_to_null(F.col("Alliance")).alias("alliance"),
-    ], [])
+    ), ())
 
 
 def process_flights(raw: DataFrame) -> Tagged:
@@ -135,12 +151,12 @@ def process_flights(raw: DataFrame) -> Tagged:
     missing = (key.isNull() | (key == "") | origin.isNull() | (origin == "")
                | dest.isNull() | (dest == ""))
     rows = _tag(raw, F.when(missing, "Missing required flight data"))
-    return _filters(rows, [
+    return Tagged(rows, (
         key.alias("flight_key"),
         origin.alias("origin_airport_key"),
         dest.alias("destination_airport_key"),
         F.trim("AircraftType").alias("aircraft_type"),
-    ], [])
+    ), ())
 
 
 def repair_airport_dim(dim_airport: DataFrame, flights: DataFrame) -> DataFrame:
@@ -187,7 +203,7 @@ def process_sales(raw: DataFrame, source_type: str) -> Tagged:
               .withColumn("_date", date)
               .withColumn("_txn", C.synth_transaction_id(pick("TransactionID"), prefix)))
     rows = _tag(staged, reason, "_txn", "Duplicate transaction ID")
-    return _filters(rows, [
+    return Tagged(rows, (
         F.col("_txn").alias("transaction_id"),
         C.date_key_of(F.col("_date")).alias("date_key"),
         F.col("_pax").alias("passenger_key"),
@@ -205,7 +221,7 @@ def process_sales(raw: DataFrame, source_type: str) -> Tagged:
         # cross-file ties deterministically (first occurrence wins);
         # dropped from the final fact there
         F.col("_line_no"),
-    ], ["_pax", "_flight", "_date", "_txn"])
+    ), ("_pax", "_flight", "_date", "_txn"))
 
 
 def union_sales_dedup(*sales: DataFrame) -> Tagged:
@@ -222,7 +238,7 @@ def union_sales_dedup(*sales: DataFrame) -> Tagged:
                 .withColumn("_file_order", F.col("sales_source") != "travel_agency"),
                 F.lit(None).cast("string"), "transaction_id",
                 "Duplicate transaction ID (cross-file)", ("_file_order", "_line_no"))
-    return _filters(rows, fact_cols, ["_file_order", "_line_no"])
+    return Tagged(rows, tuple(fact_cols), ("_file_order", "_line_no"))
 
 
 PROCESSORS = {

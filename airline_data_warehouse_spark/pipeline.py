@@ -1,8 +1,8 @@
 """The E1 lifecycle end-to-end (SURVEY §3): a directory of arbitrary
 CSVs → detect → one tagging pass per file (rule reasons, then keep-first
-dedup) → clean/dirty filters and one count aggregate → cross-file sales
-dedup → upsert into the warehouse → dimension repair → quarantine →
-analytics view.
+dedup), computed once by the action that also counts it → clean/dirty
+filters of the computed rows → cross-file sales dedup → upsert into the
+warehouse → dimension repair → quarantine → analytics view.
 
 This is the reference's upload flow (`processMultipleFiles`,
 smartFileProcessor.js:485-500 + processFile :124-200) as one callable:
@@ -54,8 +54,10 @@ class PipelineResult:
 def process_files(spark: SparkSession, csv_paths: list[str]) -> PipelineResult:
     """Detect + process every file; accumulate per-table clean frames
     (upserted in path order, source-wins) and quarantine rows. Each
-    file's (total, clean, dirty) comes from one aggregate over its tagged
-    rows; nothing after the file loop runs a Spark job."""
+    file's tagged rows are computed once, by one local checkpoint that
+    also observes its (total, clean, dirty); every frame in the result
+    reads from those rows, not from the CSV, and stays readable for as
+    long as it is held. Nothing after the file loop runs a Spark job."""
     # null-on-failure cleaning semantics under any caller session
     spark.conf.set("spark.sql.ansi.enabled", "false")
     result = PipelineResult()
@@ -69,8 +71,8 @@ def process_files(spark: SparkSession, csv_paths: list[str]) -> PipelineResult:
             result.files.append(FileResult(name, None, None, success=False,
                                            error="Cannot detect file type"))
             continue
-        tagged = etl.PROCESSORS[sig.file_type](raw)
-        total, n_clean, n_dirty = tagged.counts()
+        tagged, (total, n_clean, n_dirty) = \
+            etl.PROCESSORS[sig.file_type](raw).materialize()
         result.files.append(FileResult(
             name, sig.file_type, sig.target_table, total_records=total,
             clean_records=n_clean, dirty_records=n_dirty))

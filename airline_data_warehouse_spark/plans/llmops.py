@@ -4249,17 +4249,22 @@ def _content_keyed_store(sf_dir: str, prefix: str) -> str:
     of the r9 shape that baked the fingerprint into the dir name and
     abandoned an orphan tree on every regeneration (ADVICE r09).
     (name, size, mtime_ns) per parquet file is the same modification
-    signal Spark's own file-index caching trusts."""
+    signal Spark's own file-index caching trusts. The source of the
+    modules that write the stores keys the fingerprint too, so a store
+    written by other code — whose on-disk format may differ — is stale
+    even over the same snapshots."""
     import hashlib as _hl
     import os as _os
     import shutil as _sh
     import tempfile as _tf
 
-    # the on-disk layout version keys the fingerprint too: a store
-    # written before the manifest-commit layout (sources/atomic.py) —
-    # for the cascade store, before its frames became managed tables —
-    # is stale even over the same source files
-    h = _hl.md5(b"manifest-commit layout; managed cascade stores;")
+    from airline_data_warehouse_spark.sources import atomic as _atomic
+    from airline_data_warehouse_spark.streaming import dedup as _stream_dedup
+
+    h = _hl.md5()
+    for writer in (_atomic, _stream_dedup, dd, sim):
+        with open(writer.__file__, "rb") as f:
+            h.update(f.read())
     for table in ("documents", "embeddings"):
         p = _os.path.join(sf_dir, f"{table}.parquet")
         entries = ([(p, _os.stat(p))] if _os.path.isfile(p) else

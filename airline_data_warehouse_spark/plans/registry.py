@@ -158,6 +158,9 @@ _REVALIDATE: tuple[str, ...] = (
     # batch-built store through read_table)
     "stream_exact_substring_read",    # spans/windows/hashstats manifests
     "stream_exact_substring_verified",  # same ingest, verified read
+    # eligibility_merge_batch (streaming/status.py) builds its three
+    # flips as one select in the fact's column order
+    "stream_merge_eligibility",       # one select, no withColumn chain
 )
 
 

@@ -23,14 +23,35 @@ from airline_data_warehouse_spark.schemas import (
     FileSignature,
     raw_string_schema,
 )
+from airline_data_warehouse_spark.sources.atomic import _fs
 
 
 def read_headers(spark: SparkSession, path: str) -> list[str]:
-    """S2 — peek at the header row only (one-row text read, no full scan)."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return []
-    return [h.strip() for h in first[0]["value"].split(",")]
+    """S2 — peek at the header row only, on the driver: no Spark job.
+
+    Reads the first line of the file as ``spark.read.text(path)`` would:
+    through the path's Hadoop FileSystem (`sources.atomic._fs`, so
+    non-local paths work), decompressed by the codec Hadoop picks from
+    the file name (a ``.csv.gz`` reads as text), split by Hadoop's
+    ``LineReader`` (``\\n``, ``\\r`` or ``\\r\\n``), decoded as UTF-8,
+    with a leading UTF-8 byte-order mark skipped as the text source
+    skips it. An empty file has no header row."""
+    jvm = spark._jvm
+    hpath, fs = _fs(spark, path)
+    file = hpath(path)
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+        spark._jsc.hadoopConfiguration()).getCodec(file)
+    stream = fs.open(file)
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        line = jvm.org.apache.hadoop.io.Text()
+        if not jvm.org.apache.hadoop.util.LineReader(stream).readLine(line):
+            return []
+        first = line.toString().removeprefix("\ufeff")
+    finally:
+        stream.close()
+    return [h.strip() for h in first.split(",")]
 
 
 def detect_file_type(headers: list[str]) -> FileSignature | None:
@@ -97,6 +118,8 @@ def read_csv(spark: SparkSession, path: str, columns: list[str],
 
 def read_detected(spark: SparkSession, path: str) -> tuple[FileSignature | None, DataFrame | None]:
     """Full smart-source path: peek headers → detect → schema-bound read.
+    Launches no Spark job: the peek reads on the driver and the read is
+    lazy, with its schema given.
 
     Headerless detection: if no signature matches the header row AND the
     first line looks like data (no alphabetic header tokens beyond quotes),

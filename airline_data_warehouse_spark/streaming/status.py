@@ -186,20 +186,22 @@ def eligibility_merge_batch(fact: DataFrame, status_batch: DataFrame) -> DataFra
     """T5 — the foreachBatch MERGE body: any flight in the batch whose
     delay exceeds the threshold flips is_eligible_insurance and records
     the delay on its fact rows (server.js:162-171). Eligible-key set is
-    tiny per batch → broadcast left join, fact never shuffles."""
+    tiny per batch → broadcast left join, fact never shuffles. One
+    select in the fact's column order: the three flips in place, every
+    other column as it was."""
     eligible = (status_batch.filter(F.col("delay_minutes") > INSURANCE_DELAY_MINUTES)
                 .groupBy("flight_key")
                 .agg(F.max("delay_minutes").alias("_new_delay"),
                      F.lit("delayed").alias("_new_status")))
+    flips = {
+        "is_eligible_insurance": F.when(F.col("_new_delay").isNotNull(), F.lit(True))
+                                  .otherwise(F.col("is_eligible_insurance")),
+        "delay_minutes": F.coalesce(F.col("_new_delay"), F.col("delay_minutes")),
+        "flight_status": F.coalesce(F.col("_new_status"), F.col("flight_status")),
+    }
     return (fact.join(F.broadcast(eligible), "flight_key", "left")
-                .withColumn("is_eligible_insurance",
-                            F.when(F.col("_new_delay").isNotNull(), F.lit(True))
-                             .otherwise(F.col("is_eligible_insurance")))
-                .withColumn("delay_minutes",
-                            F.coalesce(F.col("_new_delay"), F.col("delay_minutes")))
-                .withColumn("flight_status",
-                            F.coalesce(F.col("_new_status"), F.col("flight_status")))
-                .drop("_new_delay", "_new_status"))
+                .select(*[flips[c].alias(c) if c in flips else F.col(c)
+                          for c in fact.columns]))
 
 
 def eligibility_path(fact_path: str) -> str:

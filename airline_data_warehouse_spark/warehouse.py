@@ -79,7 +79,7 @@ def read_fact(spark: SparkSession, fact_path: str) -> DataFrame:
     eligible = eligibility_table(spark, fact_path)
     if eligible is None:
         return base
-    return eligibility_merge_batch(base, eligible).select(*base.columns)
+    return eligibility_merge_batch(base, eligible)
 
 
 def _fold_eligibility(spark: SparkSession, fact_path: str) -> None:

@@ -6,6 +6,7 @@ repair → analytics view."""
 
 from __future__ import annotations
 
+import gzip
 from decimal import Decimal
 
 import pytest
@@ -90,6 +91,39 @@ def test_detection(spark, fixture_dir):
     assert detect_file_type(["SomethingElse"]) is None
     # fuzzy fallback: header mentions passenger but misses the exact signature
     assert detect_file_type(["passenger_number", "name"]).file_type == "passengers"
+
+
+@pytest.mark.parametrize("name, data, file_type", [
+    ("empty.csv", b"", None),
+    ("header_only.csv", PASSENGERS.splitlines()[0].encode(), "passengers"),
+    ("crlf.csv", PASSENGERS.replace("\n", "\r\n").encode(), "passengers"),
+    ("cr.csv", FLIGHTS.replace("\n", "\r").encode(), "flights"),
+    ("bom.csv", b"\xef\xbb\xbf" + AIRPORTS.encode(), "airports"),
+    ("padded.csv", (" AirportKey ,  AirportName,City\t,Country  \n"
+                    + AIRPORTS.split("\n", 1)[1]).encode(), "airports"),
+    ("flights.csv.gz", gzip.compress(FLIGHTS.encode()), "flights"),
+], ids=["empty", "header-only", "crlf", "cr", "bom", "padded", "gzip"])
+def test_header_peek_matches_text_source(spark, tmp_path, monkeypatch,
+                                         name, data, file_type):
+    """`read_headers` reads the first line on the driver; it must see
+    what ``spark.read.text`` sees as the first line (line ends, a
+    byte-order mark, compression, padding), and `read_detected` must
+    pick the signature that line picks."""
+    from airline_data_warehouse_spark.sources import csv
+
+    path = tmp_path / name
+    path.write_bytes(data)
+
+    def text_headers(spark, p):
+        first = spark.read.text(p).limit(1).collect()
+        return [h.strip() for h in first[0]["value"].split(",")] if first else []
+
+    want = text_headers(spark, str(path))
+    assert csv.read_headers(spark, str(path)) == want
+    sig, _ = read_detected(spark, str(path))
+    monkeypatch.setattr(csv, "read_headers", text_headers)
+    assert sig is read_detected(spark, str(path))[0]
+    assert (sig and sig.file_type) == file_type
 
 
 def test_passengers_split(spark, fixture_dir):

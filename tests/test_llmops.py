@@ -994,12 +994,13 @@ def test_cascade_store_rebuild_crash_leaves_no_stale_marker(
     assert os.path.exists(marker)
 
 
-def test_cascade_store_path_rebuilds_in_place_not_orphans(tmp_path):
+def test_cascade_store_path_rebuilds_in_place_not_orphans(tmp_path, monkeypatch):
     """ADVICE r09: the registry's cascade-store cache dir must key on
     sf_dir alone (one dir per sf_dir, EVER) with the content fingerprint
     in a marker inside — a regenerated dataset rebuilds the store IN
     PLACE (stale contents and the `_built` marker deleted) instead of
-    abandoning an orphan adw_cascade_store_* tree per regeneration."""
+    abandoning an orphan adw_cascade_store_* tree per regeneration. An
+    edit to a module that writes the stores makes the store stale too."""
     import os
 
     from airline_data_warehouse_spark.plans.llmops import _cascade_store_path
@@ -1029,6 +1030,18 @@ def test_cascade_store_path_rebuilds_in_place_not_orphans(tmp_path):
     assert not os.path.exists(os.path.join(p2, "hashes"))
     # and the refreshed fingerprint now matches: a third call reuses
     assert _cascade_store_path(str(sf_dir)) == p2
+
+    # the source of a store writer changed (its on-disk format may have):
+    # same dir, stale contents pruned
+    from airline_data_warehouse_spark.operators import similarity
+    with open(os.path.join(p2, "_built"), "w") as f:
+        f.write("ok\n")
+    edited = tmp_path / "similarity.py"
+    with open(similarity.__file__, "rb") as f:
+        edited.write_bytes(f.read() + b"\n# another on-disk format\n")
+    monkeypatch.setattr(similarity, "__file__", str(edited))
+    assert _cascade_store_path(str(sf_dir)) == p2
+    assert not os.path.exists(os.path.join(p2, "_built"))
 
 
 def test_decontaminated_split_partitions_corpus(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from airline_data_warehouse_spark.analytics import build_airline_analytics
 from airline_data_warehouse_spark.pipeline import process_files, run_full_pipeline
 from tests.test_etl import (
     AIRLINES,
@@ -112,17 +113,24 @@ def test_single_type_sales_dedup_across_files(spark, tmp_path):
 
 
 def test_process_files_job_budget(spark, csv_dir, monkeypatch):
-    """One tagging pass per file: process_files launches at most 4 Spark
-    jobs per file (the header peek, then one aggregate over the tagged
-    rows for the file's three counts) and none after the file loop. A
-    file's jobs are those launched before its FileResult is built."""
+    """One action per file: process_files launches at most 2 Spark jobs
+    per file (the local checkpoint that computes its tagged rows and
+    observes its counts: the keep-first window's shuffle, then the
+    checkpoint) and none after the file loop. A file's jobs are those
+    launched before its FileResult is built. The header peek and the
+    schema-bound read (`read_detected`) launch none."""
     import uuid
 
     from airline_data_warehouse_spark import pipeline
-    from tests.conftest import group_jobs
+    from airline_data_warehouse_spark.sources.csv import read_detected
+    from tests.conftest import group_jobs, jobs_launched
 
     names = ["passengers.csv", "airports.csv", "airlines.csv", "flights.csv",
              "ta_sales.csv", "corporate.csv"]
+    for n in names + ["mystery.csv"]:
+        _, jobs = jobs_launched(spark, lambda: read_detected(spark, str(csv_dir / n)))
+        assert jobs == 0, f"read_detected({n}) launched {jobs} jobs"
+
     group = f"process-files-{uuid.uuid4().hex}"
     marks: list[int] = []
     file_result = pipeline.FileResult
@@ -141,5 +149,70 @@ def test_process_files_job_budget(spark, csv_dir, monkeypatch):
     total = group_jobs(spark, group)
     assert [f.success for f in result.files] == [True] * len(names)
     per_file = [b - a for a, b in zip([0] + marks[:-1], marks)]
-    assert max(per_file) <= 4, per_file
+    assert max(per_file) <= 2, per_file
     assert total - marks[-1] == 0, f"{total - marks[-1]} jobs after the file loop"
+
+
+#: Spark jobs one `run_full_pipeline` of the test drop launches into a
+#: fresh root: the per-file checkpoints, then the eight table writes,
+#: each reading checkpointed rows instead of re-reading its CSVs (50
+#: when every write re-read and re-tagged its files)
+LOAD_JOBS = 25
+
+
+def test_run_full_pipeline_job_budget(spark, csv_dir, tmp_path):
+    from tests.conftest import jobs_launched
+
+    result, jobs = jobs_launched(
+        spark, lambda: run_full_pipeline(spark, str(csv_dir), str(tmp_path / "wh")))
+    assert sum(f.success for f in result.files) == 6
+    assert jobs <= LOAD_JOBS, f"{jobs} jobs (budget {LOAD_JOBS})"
+
+
+def test_result_frames_outlive_the_load(spark, csv_dir, tmp_path):
+    """The frames a load returns read the rows it computed once: after
+    `run_full_pipeline` returns they still collect, equal to what it
+    wrote, also once Spark's cache is cleared; and each file's clean and
+    dirty counts are the rows it wrote and quarantined."""
+    from collections import Counter
+
+    from airline_data_warehouse_spark.warehouse import Warehouse
+
+    root = str(tmp_path / "wh")
+    result = run_full_pipeline(spark, str(csv_dir), root)
+    wh = Warehouse(root)
+
+    def rows(df, drop=()):
+        """The multiset of df's rows, without its timestamps (taken per
+        query) and the columns in `drop`."""
+        cols = [c for c, t in df.dtypes if t != "timestamp" and c not in drop]
+        return Counter(tuple(r) for r in df.select(*sorted(cols)).collect())
+
+    def check():
+        for name, df in result.tables.items():
+            assert rows(df) == rows(wh.table(spark, name)), name
+        assert rows(result.quarantine) == rows(wh.table(spark, "dirty_data"), ["id"])
+        written = build_airline_analytics(
+            *(wh.table(spark, n) for n in ("fact_sales", "dim_date", "dim_passenger",
+                                           "dim_flight", "dim_airport", "dim_airline")))
+        assert rows(result.analytics_view) == rows(written)
+
+    check()
+    spark.catalog.clearCache()
+    check()
+
+    fact = wh.table(spark, "fact_sales")
+    airports = wh.table(spark, "dim_airport")
+    clean = {"passengers": wh.table(spark, "dim_passenger").count(),
+             "airports": airports.filter(  # the file's rows, not placeholders
+                 airports.city != "Unknown").count(),
+             "airlines": wh.table(spark, "dim_airline").count(),
+             "flights": wh.table(spark, "dim_flight").count(),
+             "travel_agency_sales": fact.filter(
+                 fact.sales_source == "travel_agency").count(),
+             "corporate_sales": fact.filter(fact.sales_source == "corporate").count()}
+    dirty = Counter(r["source_table"] for r in wh.table(spark, "dirty_data").collect())
+    for f in result.files:
+        if f.success:
+            assert (f.clean_records, f.dirty_records) == \
+                (clean[f.file_type], dirty[f.file_type]), f
