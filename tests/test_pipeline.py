@@ -155,8 +155,7 @@ def test_process_files_job_budget(spark, csv_dir, monkeypatch):
 
 #: Spark jobs one `run_full_pipeline` of the test drop launches into a
 #: fresh root: the per-file checkpoints, then the eight table writes,
-#: each reading checkpointed rows instead of re-reading its CSVs (50
-#: when every write re-read and re-tagged its files)
+#: each reading checkpointed rows instead of re-reading its CSVs
 LOAD_JOBS = 25
 
 
